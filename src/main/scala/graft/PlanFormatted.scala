@@ -1,10 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
-/** Dev probe: write `explain("formatted")` output for a set of
+/** The plan printer: writes `explain("formatted")` output for a set of
   * registered queries to files — the optimization-round evidence
-  * format (`plans/rNN/<query>_{before,after}.txt`).
+  * format (`plans/rNN/<query>_{before,after}.txt`, docs/PLANS.md).
   * Usage: PlanFormatted <outDir> <suffix> <q1,q2,...> [sfDir]
   * e.g.  PlanFormatted plans/r16 before crawl_clean,ingest_clean
   */
@@ -14,14 +12,7 @@ object PlanFormatted {
     val suffix = args(1)
     val names = args(2).split(",").map(_.trim).filter(_.nonEmpty)
     val dir = if (args.length > 3) args(3) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      .getOrCreate()
+    val spark = GraftSession.builder(GraftSession.cores).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     for (name <- names) {

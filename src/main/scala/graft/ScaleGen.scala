@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Dev tool: generates a scaled-up synthetic twin of the driver's
@@ -40,14 +40,8 @@ object ScaleGen {
     val outDir = if (args.length > 0) args(0) else "benchdata/sf1"
     val mult = if (args.length > 1) args(1).toInt else 10
     val srcDir = "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val cores = GraftSession.cores
+    val spark = GraftSession.builder(cores).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // vocabulary + event types from the source tables (tiny collects)
@@ -79,7 +73,7 @@ object ScaleGen {
     val docSeed = when(pmod(col("id"), lit(503)) === 0, col("id") + 1)
       .when(pmod(col("id"), lit(701)) === 0, col("id") + 2)
       .otherwise(col("id"))
-    val docs = spark.range(0, nDocs, 1, cpus.toInt)
+    val docs = spark.range(0, nDocs, 1, cores)
       .select(col("id").as("doc_id"), docSeed.as("_seed"))
       .withColumn("_toks", transform(
         sequence(lit(1), (u("len", col("_seed"), 56) + 20).cast("int")),
@@ -107,7 +101,7 @@ object ScaleGen {
     val planted = pmod(col("id"), lit(211)) === 0
     val vecSeed = when(planted, col("id") + 1).otherwise(col("id"))
     val jitterScale = when(planted, lit(0.02)).otherwise(lit(0.0))
-    val embeddings = spark.range(0, nVecs, 1, cpus.toInt)
+    val embeddings = spark.range(0, nVecs, 1, cores)
       .select(col("id").as("vec_id"), vecSeed.as("_seed"),
         jitterScale.as("_js"),
         u("lab", col("id"), 10).cast("int").as("label"))
@@ -133,7 +127,7 @@ object ScaleGen {
     val nEvents = 100000L * mult
     require(nEvents < (1L << 31), s"events cap is 2^31 rows, got $nEvents")
     val usSlot = (col("id") * lit(2654435761L)).bitwiseAND(lit((1L << 41) - 1))
-    val events = spark.range(0, nEvents, 1, cpus.toInt)
+    val events = spark.range(0, nEvents, 1, cores)
       .select(col("id").as("event_id"),
         (lit(baseNs) + usSlot * lit(1000L)).as("ts"),
         u("u", col("id"), 1500L * mult).as("user_id"),
@@ -176,7 +170,7 @@ object ScaleGen {
       spark.read.parquet(s"$srcDir/$t.parquet")
         .write.mode("overwrite").parquet(s"$outDir/$t.parquet")
 
-    spark.range(0, nCust, 1, cpus.toInt).select(
+    spark.range(0, nCust, 1, cores).select(
         col("id").as("c_custkey"),
         format_string("Customer#%09d", col("id")).as("c_name"),
         u("cn", col("id"), 25).cast("int").as("c_nationkey"),
@@ -185,7 +179,7 @@ object ScaleGen {
         pick(segsLit, "seg", col("id"), 5).as("c_mktsegment"))
       .write.mode("overwrite").parquet(s"$outDir/customer.parquet")
 
-    spark.range(0, nSupp, 1, cpus.toInt).select(
+    spark.range(0, nSupp, 1, cores).select(
         col("id").as("s_suppkey"),
         format_string("Supplier#%09d", col("id")).as("s_name"),
         u("sn", col("id"), 25).cast("int").as("s_nationkey"),
@@ -193,7 +187,7 @@ object ScaleGen {
           .as("s_acctbal"))
       .write.mode("overwrite").parquet(s"$outDir/supplier.parquet")
 
-    spark.range(0, nParts, 1, cpus.toInt).select(
+    spark.range(0, nParts, 1, cores).select(
         col("id").as("p_partkey"),
         concat(pick(adjLit, "pa", col("id"), 8), lit(" "),
           pick(nounLit, "pn", col("id"), 8)).as("p_name"),
@@ -206,7 +200,7 @@ object ScaleGen {
           .as("p_retailprice"))
       .write.mode("overwrite").parquet(s"$outDir/part.parquet")
 
-    spark.range(0, nOrders, 1, cpus.toInt).select(
+    spark.range(0, nOrders, 1, cores).select(
         col("id").as("o_orderkey"),
         u("oc", col("id"), nCust).as("o_custkey"),
         pick(array(lit("F"), lit("O"), lit("P")), "os", col("id"), 3)
@@ -217,7 +211,7 @@ object ScaleGen {
         pick(prioLit, "op", col("id"), 5).as("o_orderpriority"))
       .write.mode("overwrite").parquet(s"$outDir/orders.parquet")
 
-    spark.range(0, 600000L * mult, 1, cpus.toInt).select(
+    spark.range(0, 600000L * mult, 1, cores).select(
         // uniform order assignment ≈ Poisson(4) lines per order — the
         // same shape as the driver's generator (its max is ~17 lines)
         u("lo", col("id"), nOrders).as("l_orderkey"),

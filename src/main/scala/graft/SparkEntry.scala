@@ -350,6 +350,28 @@ object SparkEntry {
   private def storeDir(dir: String, family: String): String =
     s"benchdata/stores/${new java.io.File(dir).getName}/$family"
 
+  /** Scratch dir `name` under java.io.tmpdir for the rows that
+    * round-trip through a sink, deleted at JVM exit. The path is fixed
+    * per name, not createTempDirectory: the writers overwrite it, so
+    * repeated invocations (bench warmup + timed passes, repeated verify
+    * runs) reuse one directory instead of accumulating corpus copies.
+    * On a real cluster the caller hands the sinks shared storage
+    * (s3://, hdfs://) — nothing in them is driver-local.
+    */
+  private def scratchDir(name: String): String = {
+    val d = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"), name)
+      .toFile
+    scratchDirs.add(d)
+    d.toString
+  }
+
+  private lazy val scratchDirs: java.util.Set[java.io.File] = {
+    val dirs = java.util.concurrent.ConcurrentHashMap.newKeySet[java.io.File]()
+    sys.addShutdownHook(dirs.forEach { d =>
+      org.apache.commons.io.FileUtils.deleteQuietly(d); () })
+    dirs
+  }
+
   /** Store-staleness fence: a `_SUCCESS` marker alone cannot tell a
     * store built with TODAY's parameters from one an earlier code
     * revision left behind — the probe would then run against a stale
@@ -3123,8 +3145,7 @@ object SparkEntry {
           encode(col("value"), "UTF-8").as("content"))
         .repartition(col("doc_id"))
         .sortWithinPartitions(col("doc_id"), col("name"))
-      val tmp = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"), "graft_tar_rt").toString
+      val tmp = scratchDir("graft_tar_rt")
       graft.sources.Tar.writeTarShards(members, tmp)
       graft.sources.Tar.read(s, tmp).select(
         regexp_extract(col("name"), "^(\\d+)\\.", 1)
@@ -3140,15 +3161,12 @@ object SparkEntry {
       // format) -> .warc shards -> streamed per-file parse back.
       // The oracle hash checks the round-trip: any header/payload
       // framing bug, lossy byte handling, or Content-Length drift
-      // would mismatch against the parquet original. Fixed tmp dir
-      // for the same reason as jsonl_roundtrip (repeated bench/verify
-      // invocations reuse one directory)
+      // would mismatch against the parquet original
       val d = Tables.documents(s, dir).select(
         concat(lit("http://graft.invalid/doc/"), col("doc_id"))
           .as("target_uri"),
         col("text"))
-      val tmp = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"), "graft_warc_rt").toString
+      val tmp = scratchDir("graft_warc_rt")
       graft.sources.Warc.writeWet(d, tmp)
       graft.sources.Warc.read(s, tmp).select(
         regexp_extract(col("target_uri"), "/doc/(\\d+)$", 1)
@@ -3166,8 +3184,7 @@ object SparkEntry {
         concat(lit("http://graft.invalid/doc/"), col("doc_id"))
           .as("target_uri"),
         col("text"))
-      val tmp = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"), "graft_warcgz_rt").toString
+      val tmp = scratchDir("graft_warcgz_rt")
       graft.sources.Warc.writeWet(d, tmp, gzipPerRecord = true)
       graft.sources.Warc.read(s, tmp).select(
         regexp_extract(col("target_uri"), "/doc/(\\d+)$", 1)
@@ -3194,8 +3211,7 @@ object SparkEntry {
         concat(lit("WARC/1.0\r\nContent-Length: 0\r\n\r\n" +
           "HTTP/1.1 500 fake\r\n\r\n"), col("text"))
           .cast("binary").as("body"))
-      val tmp = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"), "graft_warcresp_rt").toString
+      val tmp = scratchDir("graft_warcresp_rt")
       graft.sources.Warc.writeResponse(d, tmp)
       graft.sources.Warc.readResponses(s, tmp).select(
         regexp_extract(col("target_uri"), "/(\\d+)$", 1)
@@ -3227,8 +3243,7 @@ object SparkEntry {
         array(struct(lit("Content-Type").as("name"),
           lit("text/html; charset=utf-8").as("value"))).as("http_headers"),
         htmlFixturePage.cast("binary").as("body"))
-      val tmp = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"), "graft_warcresp_ex").toString
+      val tmp = scratchDir("graft_warcresp_ex")
       graft.sources.Warc.writeResponse(rows, tmp)
       val resp = graft.sources.Warc.readResponses(s, tmp).select(
         regexp_extract(col("target_uri"), "/doc/(\\d+)$", 1)
@@ -3260,8 +3275,7 @@ object SparkEntry {
         array(struct(lit("Content-Type").as("name"),
           lit("text/plain").as("value"))).as("http_headers"),
         col("text").cast("binary").as("body"))
-      val tmp = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"), "graft_warc_digest").toString
+      val tmp = scratchDir("graft_warc_digest")
       graft.sources.Warc.writeResponse(rows, tmp, warcinfo = true)
       graft.sources.Warc.readResponses(s, tmp)
         .select(regexp_extract(col("target_uri"), "/doc/(\\d+)$", 1)
@@ -3279,10 +3293,8 @@ object SparkEntry {
       // from the fixed repartition) AND digest presence: responses
       // carry sha1 payload digests, requests and warcinfo do not
       val d = Tables.documents(s, dir)
-      val respDir = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"), "graft_warc_types_rs").toString
-      val reqDir = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"), "graft_warc_types_rq").toString
+      val respDir = scratchDir("graft_warc_types_rs")
+      val reqDir = scratchDir("graft_warc_types_rq")
       graft.sources.Warc.writeResponse(d.select(
         concat(lit("http://graft.invalid/doc/"), col("doc_id"))
           .as("target_uri"),
@@ -3324,8 +3336,7 @@ object SparkEntry {
         array(struct(lit("Content-Type").as("name"),
           lit("text/html; charset=utf-8").as("value"))).as("http_headers"),
         htmlFixturePage.cast("binary").as("body"))
-      val tmp = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"), "graft_crawl_clean").toString
+      val tmp = scratchDir("graft_crawl_clean")
       graft.sources.Warc.writeResponse(rows, tmp, warcinfo = true)
       val resp = graft.sources.Warc.readResponses(s, tmp).select(
         regexp_extract(col("target_uri"), "/doc/(\\d+)$", 1)
@@ -3336,13 +3347,12 @@ object SparkEntry {
       // shared dir — one run's overwrite deleted files the other's
       // in-flight scan was reading. Per-JVM scoping keeps dir growth
       // bounded (overwritten per invocation within a JVM) while
-      // making cross-process interference impossible.
+      // making cross-process interference impossible; scratchDir
+      // deletes it at JVM exit.
       graft.pipeline.Pipeline.crawlClean(resp, "doc_id", "html",
         minQuality = 0.3, budget = 2048,
-        scratchDir = Some(java.nio.file.Paths.get(
-          System.getProperty("java.io.tmpdir"),
-          s"graft_crawl_clean_ex_${java.lang.ProcessHandle.current().pid()}")
-          .toString))
+        scratchDir = Some(scratchDir(
+          s"graft_crawl_clean_ex_${java.lang.ProcessHandle.current().pid()}")))
     }),
 
     "jsonl_roundtrip" -> ((s, dir) => {
@@ -3352,15 +3362,7 @@ object SparkEntry {
       // unicode in text would mismatch against the parquet original
       val d = Tables.documents(s, dir).select(col("doc_id"), col("lang"),
         col("source"), col("n_chars"), col("text"))
-      // fixed per-JVM path, NOT createTempDirectory: writeJsonl is
-      // mode("overwrite"), so repeated invocations (bench warmup + two
-      // timed passes, repeated verify runs) reuse one directory instead
-      // of accumulating gzipped corpus copies under /tmp. Local-FS path
-      // is fine here because the query's purpose is the round-trip hash
-      // gate; on a real cluster the caller hands writeJsonl shared
-      // storage (s3://, hdfs://) — nothing in the sink is driver-local.
-      val tmp = java.nio.file.Paths.get(
-        System.getProperty("java.io.tmpdir"), "graft_jsonl_rt").toString
+      val tmp = scratchDir("graft_jsonl_rt")
       graft.sources.Sinks.writeJsonl(d, tmp)
       graft.sources.Sinks.readJsonl(s, tmp, d.schema)
         .select(col("doc_id"), col("lang"), col("source"), col("n_chars"),

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -16,24 +15,7 @@ object Verify {
         val keep = args(2).split(",").toSet
         SparkEntry.queries.filter { case (k, _) => keep(k) }
       } else SparkEntry.queries
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.parquet carries TIMESTAMP(NANOS); read as epoch-nanos long
-      // (graft.sources.Tables derives the µs timestamp column)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // dimension tables stay broadcast-side past the 10x anchor
-      // (orders at zsf1 is 25 MB — a trivial broadcast on any real
-      // executor, but over the 10 MB default, which flipped q3/q5
-      // to full shuffle joins); split single-file twin tables into
-      // enough scan partitions to feed the cores
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      .config("spark.sql.files.maxPartitionBytes", "16m")
-      .getOrCreate()
+    val spark = GraftSession.builder(GraftSession.cores).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // GEOMETRY-KNEE FENCE: the dedup_minhash / dedup_clusters /
     // dedup_resolve / split_leakage_free oracles structurally bake the

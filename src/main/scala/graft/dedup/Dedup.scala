@@ -349,9 +349,10 @@ object Dedup {
     * and NEVER a broadcast of the corpus shingle frame (the planner's
     * own estimate-driven choice at the zsf10 anchor: 500k shingle
     * arrays collected and broadcast, 44 s where every candidate stage
-    * summed to 7 s).
+    * summed to 7 s). A var only so a plan fence can lower it and reach
+    * the shuffled-hash branch at test scale.
     */
-  private val LshVerifyBroadcastMaxPairs: Long = 1L << 20
+  @volatile private[graft] var LshVerifyBroadcastMaxPairs: Long = 1L << 20
 
   def minhashLsh(df: DataFrame, idCol: String, textCol: String,
                  shingleSize: Int = 3, bands: Int = 8, rowsPerBand: Int = 2,

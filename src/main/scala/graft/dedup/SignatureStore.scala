@@ -30,9 +30,9 @@ import org.apache.spark.sql.functions._
   * ([[build]] of the survivors) — the store grows with the corpus
   * without ever being rebuilt.
   *
-  * Measured (`graft.ProbeSigStore`, zsf1 twin, 1% increment): direct
-  * 2.35s vs persisted-store 1.93s per ingest. The delta IS the
-  * corpus-side signature kernel the store eliminates — O(corpus)
+  * Measured (zsf1 twin, 1% increment, by a probe removed after
+  * acd062c): direct 2.35s vs persisted-store 1.93s per ingest. The
+  * delta IS the corpus-side signature kernel the store eliminates — O(corpus)
   * md5-per-shingle work that grows linearly with the corpus while the
   * stored probe stays O(increment); at 50k docs it is ~0.4s against a
   * ~1.5s fixed floor, at 100 TB it is the entire job.

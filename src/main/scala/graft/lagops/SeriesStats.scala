@@ -222,7 +222,8 @@ object SeriesStats {
     * differed by one column, so ReuseExchange never fired) and the
     * join re-exchanged every WIDE corpus row on (series, season) into
     * a sort-merge join — 3 corpus exchanges, 2 scans, and a 7×/decade
-    * anchor slope; the window form measures ~2×/decade (StlProbe).
+    * anchor slope; the window form measures ~2×/decade (by a probe
+    * removed after acd062c).
     * An unbounded frame here is the O(partition) single-pass kind,
     * not the quadratic mid-partition-to-unboundedFollowing fence
     * class. NULL season/series values form their own window groups

@@ -203,8 +203,8 @@ object Embed {
     * random-direction embeddings (PQ's worst case — no cluster
     * structure to exploit), recall@5 vs exact measures 0.24 at
     * m=8/k=16 (32× compression), 0.30 at m=16/k=16, 0.46 at m=16/k=64
-    * (16×), 0.42 at m=32/k=16 (8×) — `graft.PqProbe` reproduces the
-    * sweep. Production embeddings cluster, so real recall runs higher
+    * (16×), 0.42 at m=32/k=16 (8×) — measured by a sweep probe removed
+    * after acd062c. Production embeddings cluster, so real recall runs higher
     * at every budget; pick m/k by the memory budget and re-rank the
     * top candidates exactly from cold storage.
     */
@@ -217,8 +217,8 @@ object Embed {
     * orthogonal-rotation subset whose FIT is replayable in plain SQL
     * (one variance aggregate + a rank window) — a full eigen-rotation
     * could not share a DuckDB oracle, and simulated offline on this
-    * corpus it buys nothing the permutation doesn't. Measured
-    * (PqProbe, sf0.001): recall@5 0.30 → 0.36 at m=16/k=16, −0.02
+    * corpus it buys nothing the permutation doesn't. Measured (sf0.001,
+    * by a probe removed after acd062c): recall@5 0.30 → 0.36 at m=16/k=16, −0.02
     * (noise) at m=8 — the synthetic embeddings are near-isotropic
     * (per-dim variance spread ~1.3×, |corr| ≤ 0.18), so only the
     * finer split has imbalance to fix; the paper's larger gains track
@@ -335,7 +335,8 @@ object Embed {
     * recall rises at identical storage (measured on the worst-case
     * random-direction twin at nprobe=nlist, isolating the encoding:
     * recall@5 0.30 vs 0.24 raw at m=8/k=16, 0.40 vs 0.30 at m=16/k=16
-    * — `graft.PqProbe`; clustered production embeddings gain more).
+    * — by a probe removed after acd062c; clustered production
+    * embeddings gain more).
     * The query side subtracts the SAME probed list's
     * centroid before ADC, so distances stay comparable; both
     * subtractions are literal-centroid projections (no extra shuffle),

@@ -395,9 +395,9 @@ object Ivf {
   }
 
   /** Literal-path fit + two-level assignment as one public call — the
-    * comparison surface IvfSpec and HierForestProbe pin
-    * [[assignHierR]] against (same output shape: `_id`, `_v`,
-    * coarse_id, list_id).
+    * comparison surface IvfSpec (and, at real geometries, a probe
+    * removed after acd062c) pins [[assignHierR]] against (same output
+    * shape: `_id`, `_v`, coarse_id, list_id).
     */
   def assignHierLiteral(df: DataFrame, idCol: String, vecCol: String,
                         nlist: Int, iters: Int, fitSamplePct: Int,

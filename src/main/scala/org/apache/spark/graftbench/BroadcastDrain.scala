@@ -7,7 +7,7 @@ import org.apache.spark.storage.BroadcastBlockId
   * synchronously removes every broadcast block from the local
   * BlockManager between timed queries.
   *
-  * Why it exists: `Bench`/`ScaleBench` time ~170 queries inside ONE
+  * Why it exists: `Bench` times ~200 queries inside ONE
   * JVM. RDD/localCheckpoint blocks are already drained per query
   * (`getPersistentRDDs` + unpersist), but broadcast blocks are not
   * RDDs — each broadcast-hash-join and literal-heavy plan pins
@@ -45,9 +45,9 @@ object BroadcastDrain {
   }
 }
 
-/** Dev-probe utility: block until the listener bus has delivered all
-  * queued events (the API is `private[spark]`), so per-query
-  * stage/task metric counters read complete totals.
+/** Bench utility: block until the listener bus has delivered all
+  * queued events (the API is `private[spark]`), so per-row job, stage
+  * and task counters read complete totals.
   */
 object ListenerSync {
   def waitUntilEmpty(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()

@@ -1,6 +1,9 @@
 package graft.plans
 
 import graft.{SparkEntry, TestSpark}
+import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, JoinStrategyHint, LogicalPlan, ResolvedHint, SHUFFLE_HASH}
+import org.apache.spark.sql.execution.{LogicalRDD, QueryExecution, SparkPlan}
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Physical-plan regressions for the registered driver queries: the shapes
@@ -18,6 +21,41 @@ class PlanAuditSpec extends AnyFunSuite {
 
   private def opCount(p: String, op: String): Int =
     p.linesIterator.count(_.matches(s".*(\\*\\(\\d+\\) )?$op( |\\[).*"))
+
+  /** Executed plans of the eager `localCheckpoint` jobs `build` runs. A
+    * checkpointed frame is an ExistingRDD leaf in the row's own plan,
+    * so its shuffles and scans are audited here, as they ran before
+    * the checkpoint.
+    */
+  private def checkpointPlans(build: => Any): Seq[SparkPlan] = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+          durationNs: Long): Unit =
+        if (funcName == "localCheckpoint") { seen.add(qe.executedPlan); () }
+      override def onFailure(funcName: String, qe: QueryExecution,
+          exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      build
+      org.apache.spark.graftbench.ListenerSync.waitUntilEmpty(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    seen.asScala.toSeq
+  }
+
+  /** The subtrees of `plan` under a join-strategy hint of `strategy`. */
+  private def hinted(plan: LogicalPlan,
+      strategy: JoinStrategyHint): Seq[LogicalPlan] = plan.collect {
+    case h: ResolvedHint if h.hints.strategy.contains(strategy) => h.child
+  }
+
+  /** A frame built only from checkpointed rows: the verify's counted
+    * candidate sliver, never a scan whose size the planner estimates.
+    */
+  private def fromCheckpointOnly(p: LogicalPlan): Boolean =
+    p.collectLeaves().forall(_.isInstanceOf[LogicalRDD])
 
   test("q5_region_revenue broadcasts every dimension side") {
     assert(opCount(plan("q5_region_revenue"), "BroadcastHashJoin") >= 3)
@@ -164,7 +202,8 @@ class PlanAuditSpec extends AnyFunSuite {
     // form this fences against recomputed the entire scan→shuffle→
     // window pipeline (ReuseExchange never fired) and re-exchanged
     // every wide corpus row on (series, season) into an SMJ —
-    // 3 exchanges, 2 scans, 7×/decade at the anchors (StlProbe).
+    // 3 exchanges, 2 scans, 7×/decade at the anchors (measured by a
+    // probe removed after acd062c).
     val p = plan("stl_seasonal")
     assert(opCount(p, "Exchange") == 1, s"expected exactly 1 exchange:\n$p")
     assert(opCount(p, "Window") == 2, s"expected 2 window ops:\n$p")
@@ -210,21 +249,23 @@ class PlanAuditSpec extends AnyFunSuite {
   test("dedup_minhash band exchanges carry no shingle arrays") {
     // same payload discipline as the ANN audit: only (doc_id, band,
     // bucket) may ride the LSH shuffles; shingle arrays re-join for the
-    // few candidate pairs
+    // few candidate pairs. The candidate pairs are checkpointed (their
+    // count picks the verify join's strategy), so the band-bucket join
+    // runs inside the checkpoint's eager job: audit that job's plan
     val conf = spark.conf
     val prevAqe = conf.get("spark.sql.adaptive.enabled", "true")
     val prevBc = conf.get("spark.sql.autoBroadcastJoinThreshold")
     conf.set("spark.sql.adaptive.enabled", "false")
     conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
-      val plan = SparkEntry.queries("dedup_minhash")(spark, dir)
-        .queryExecution.executedPlan
-      val bandExchanges = plan.collect {
+      val plans = checkpointPlans(SparkEntry.queries("dedup_minhash")(spark, dir))
+      val bandExchanges = plans.flatMap(_.collect {
         case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
             if e.outputPartitioning.toString.contains("band") ||
               e.outputPartitioning.toString.contains("bucket") => e
-      }
-      assert(bandExchanges.nonEmpty, "expected a shuffled band-bucket join")
+      })
+      assert(bandExchanges.nonEmpty,
+        s"expected a shuffled band-bucket join:\n${plans.mkString("\n")}")
       for (e <- bandExchanges; attr <- e.output)
         assert(!attr.dataType.isInstanceOf[org.apache.spark.sql.types.ArrayType],
           s"band exchange carries array column ${attr.name}")
@@ -279,18 +320,40 @@ class PlanAuditSpec extends AnyFunSuite {
     }
   }
 
-  test("ngram_jaccard carries no broadcast hint") {
-    // every frame in this operator is per-document, so an explicit
-    // broadcast() hint (round 1 broadcast O(n_docs) set sizes) is always
-    // a scale regression. Size-based broadcasts the planner picks at
-    // test SF are fine — those adapt away on a real corpus. The df-cap
-    // probe's shuffle_hash hint is the opposite: it FORBIDS broadcast
-    // off a bad estimate (the spanPairs lesson), so only broadcast
-    // hints are fenced.
-    val analyzed = SparkEntry.queries("ngram_jaccard")(spark, dir)
-      .queryExecution.analyzed.toString
-    assert(!analyzed.toLowerCase.matches("(?s).*resolvedhint[^\\n]*broadcast.*"),
-      s"broadcast hint in ngram_jaccard:\n$analyzed")
+  test("ngram_jaccard broadcasts only the counted candidate sliver") {
+    // every corpus frame in this operator is per-document, so a
+    // broadcast() hint on one of them (round 1 broadcast O(n_docs) set
+    // sizes) is always a scale regression. The one broadcast allowed is
+    // the verify's candidate sliver, checkpointed and COUNTED against
+    // Dedup.LshVerifyBroadcastMaxPairs; past that bound the sliver
+    // builds a shuffled-hash join instead. The df-cap probe's
+    // shuffle_hash hint is the opposite of a broadcast: it FORBIDS one
+    // off a bad estimate (the spanPairs lesson).
+    val under = SparkEntry.queries("ngram_jaccard")(spark, dir)
+      .queryExecution.analyzed
+    val bc = hinted(under, BROADCAST)
+    assert(bc.nonEmpty, s"expected the candidate-sliver broadcast:\n$under")
+    assert(bc.forall(fromCheckpointOnly),
+      s"broadcast hint on a frame other than the counted candidates:\n$under")
+    // lowering the bound below the count takes the shuffled-hash branch
+    val conf = spark.conf
+    val prevAqe = conf.get("spark.sql.adaptive.enabled", "true")
+    val prevBound = graft.dedup.Dedup.LshVerifyBroadcastMaxPairs
+    conf.set("spark.sql.adaptive.enabled", "false")
+    graft.dedup.Dedup.LshVerifyBroadcastMaxPairs = -1L
+    try {
+      val df = SparkEntry.queries("ngram_jaccard")(spark, dir)
+      val over = df.queryExecution.analyzed
+      assert(hinted(over, BROADCAST).isEmpty,
+        s"broadcast hint past the bound:\n$over")
+      assert(hinted(over, SHUFFLE_HASH).exists(fromCheckpointOnly),
+        s"expected the candidate side's shuffle_hash hint:\n$over")
+      val p = df.queryExecution.executedPlan.toString
+      assert(p.contains("ShuffledHashJoin"), p)
+    } finally {
+      graft.dedup.Dedup.LshVerifyBroadcastMaxPairs = prevBound
+      conf.set("spark.sql.adaptive.enabled", prevAqe)
+    }
   }
 
   test("topk_ngrams plans a distributed top-k, not a global sort") {
@@ -489,6 +552,19 @@ class PlanAuditSpec extends AnyFunSuite {
       s"expected the shingle_hashes store parquet scan:\n$p")
     assert(p.contains("ExistingRDD"),
       s"expected the checkpointed candidate-pairs leaf:\n$p")
+    // the checkpoint jobs behind those leaves, as they ran: exactly one
+    // signs (the increment, from its documents scan); the others probe
+    // the SIGNATURES store parquet and read no document text
+    val ckpts = checkpointPlans(SparkEntry.queries("dedup_minhash_probe")(spark, dir))
+      .map(_.toString)
+    val (signing, probing) = ckpts.partition(_.contains("minhashsigexpr"))
+    assert(signing.size == 1, s"expected one increment-signing job:\n$ckpts")
+    assert(probing.exists(c => c.linesIterator.exists(l =>
+      l.contains(storePath) && l.contains("signatures"))),
+      s"expected the banded probe of the signatures store:\n$ckpts")
+    for (c <- probing)
+      assert(!c.contains("documents.parquet"),
+        s"document scan in a candidate checkpoint:\n$c")
     // ZERO signing kernels in the timed plan: the increment signs once
     // inside its checkpoint's eager job (plan forks would otherwise
     // re-run MinHashSigExpr per branch), and the corpus's hashes are

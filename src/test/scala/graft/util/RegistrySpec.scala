@@ -31,4 +31,8 @@ class RegistrySpec extends AnyFunSuite {
       s"queries.size=${graft.SparkEntry.queries.size}: update SURVEY.md " +
         "§2.5, README.md, and this fence together")
   }
+
+  test("SparkEntry.entry returns rows at sf0.001") {
+    assert(graft.SparkEntry.entry(graft.TestSpark.spark).count() > 0)
+  }
 }

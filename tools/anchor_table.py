@@ -1,5 +1,5 @@
 #!/usr/bin/env python3
-"""Build the BASELINE.md three-point anchor table from three ScaleBench
+"""Build the BASELINE.md three-point anchor table from three graft.Bench
 logs (zsf0.1, zsf1, zsf10). Usage:
   python3 tools/anchor_table.py /tmp/sweep_zsf01.log /tmp/sweep_zsf1.log /tmp/sweep_zsf10.log
 Prints the markdown table rows sorted by query name, plus totals and

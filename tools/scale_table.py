@@ -1,10 +1,10 @@
 #!/usr/bin/env python3
-"""Merge two ScaleBench outputs (sf0.1 + a ScaleGen dir) into the
+"""Merge two graft.Bench outputs (sf0.1 + a ScaleGen dir) into the
 BASELINE.md markdown ratio table. Usage:
   python3 tools/scale_table.py <sf01_log> <sf1_log>
 Reads the `SCALEBENCH {json}` lines each log prints (two-pass min per
 query) and emits the `| query | sf0.1 s | sf1 s | ratio | rows ... |`
-rows in ScaleBench.queryNames order.
+rows in graft.Bench's (sorted query name) order.
 """
 import json
 import re
@@ -23,7 +23,7 @@ def parse(path):
 
 def main():
     a, b = parse(sys.argv[1]), parse(sys.argv[2])
-    # first log's emission order = ScaleBench.queryNames order
+    # first log's emission order = graft.Bench's sorted query order
     order = [q for q in a if q in b]
     print("| query | sf0.1 s | sf1 s | ratio | rows sf0.1 | rows sf1 |")
     print("| --- | --- | --- | --- | --- | --- |")

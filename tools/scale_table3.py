@@ -1,5 +1,5 @@
 #!/usr/bin/env python3
-"""Merge three full-surface ScaleBench logs (zsf0.1 / zsf1 / zsf10)
+"""Merge three full-surface graft.Bench logs (zsf0.1 / zsf1 / zsf10)
 into the BASELINE.md three-point anchor table with gc columns.
 Usage: python3 tools/scale_table3.py <z01_log> <z1_log> <z10_log>
 """
