@@ -341,11 +341,12 @@ object SparkEntry {
   private val minhashClusterCtes = minhashPairCtes + closureCtes("mpairs")
 
   /** Repo-local cache dir for the persisted-store probe queries, keyed
-    * by the sf dir so sf0.01 (correctness) and sf0.1 (bench) never
-    * share a store. First invocation of a `_probe` query builds and
-    * writes the store here (the bench's warmup pass); timed passes
-    * only read it — the row measures the O(increment) probe, which is
-    * the operator the stored family exists for.
+    * by the sf dir's basename so sf0.01 (correctness) and sf0.1
+    * (bench) never share a store (same-named dirs are told apart by
+    * the [[ensureStore]] fence). First invocation of a `_probe` query
+    * builds and writes the store here (the bench's warmup pass); timed
+    * passes only read it — the row measures the O(increment) probe,
+    * which is the operator the stored family exists for.
     */
   private def storeDir(dir: String, family: String): String =
     s"benchdata/stores/${new java.io.File(dir).getName}/$family"
@@ -373,21 +374,26 @@ object SparkEntry {
   }
 
   /** Store-staleness fence: a `_SUCCESS` marker alone cannot tell a
-    * store built with TODAY's parameters from one an earlier code
-    * revision left behind — the probe would then run against a stale
-    * store while the oracle replays the new fit, a confusing hash
-    * mismatch. Every store family records its geometry/fit constants
-    * (and a layout version) in a `store.params` file; any mismatch
-    * wipes the family dir and rebuilds. The params string is the
-    * single source of truth a row's registered entry passes — change
-    * an entry's constants and the store self-heals on next touch.
+    * store built with TODAY's parameters over TODAY's data from one an
+    * earlier code revision, or other data, left behind — the probe
+    * would then run against a stale store while the oracle replays the
+    * new fit, a confusing hash mismatch. Every store family records a
+    * fence in a `store.params` file: its geometry/fit constants (and a
+    * layout version) plus [[dataFence]] of the sf dir; any mismatch
+    * wipes the family dir and rebuilds it through `build(storeDir)`.
+    * The params string is the single source of truth a row's
+    * registered entry passes — change an entry's constants, or the
+    * data under the sf dir, and the store self-heals on next touch.
+    * Returns the family dir.
     */
-  private def ensureStore(sd: String, marker: String, params: String)
-                         (build: => Unit): Unit = {
+  private def ensureStore(dir: String, family: String, marker: String,
+                          params: String)(build: String => Unit): String = {
+    val sd = storeDir(dir, family)
+    val fence = s"$params\n${dataFence(dir)}"
     val pf = new java.io.File(sd, "store.params")
     val fresh = new java.io.File(sd, marker).exists() && pf.exists() && {
       val src = scala.io.Source.fromFile(pf, "UTF-8")
-      try src.mkString == params finally src.close()
+      try src.mkString == fence finally src.close()
     }
     if (!fresh) {
       def rm(f: java.io.File): Unit = {
@@ -396,11 +402,30 @@ object SparkEntry {
       }
       val sdf = new java.io.File(sd)
       if (sdf.exists()) rm(sdf)
-      build
+      build(sd)
       sdf.mkdirs()
       val w = new java.io.FileWriter(pf)
-      try w.write(params) finally w.close()
+      try w.write(fence) finally w.close()
     }
+    sd
+  }
+
+  /** What a store was built from: the sf dir's canonical path and a
+    * sorted `relative-path length mtime` line per file under it. Two
+    * sf dirs that share a basename (and so a [[storeDir]]), or a twin
+    * regenerated in place, get different fences.
+    */
+  private def dataFence(dir: String): String = {
+    import scala.jdk.CollectionConverters._
+    val root = new java.io.File(dir).getCanonicalFile
+    val files =
+      if (!root.isDirectory) Nil
+      else scala.util.Using.resource(java.nio.file.Files.walk(root.toPath)) {
+        _.iterator().asScala.map(_.toFile).filter(_.isFile).map { f =>
+          s"${root.toPath.relativize(f.toPath)} ${f.length} ${f.lastModified}"
+        }.toList
+      }
+    (root.getPath +: files.sorted).mkString("\n")
   }
 
   /** One params string per store family (shared by every row that
@@ -423,12 +448,6 @@ object SparkEntry {
   private val BloomLinesAbParams =
     "v1 corpus=%10<7 incA=%10in7,8 keys=distinct-line-xxhash64 " +
       "fpp=0.03 appended"
-  private val ImageStoreParams =
-    "v1 corpus=bkt<70 fp=dhash"
-  private val VideoStoreParams =
-    "v1 corpus=bkt<70 step=2 fp=clip_dhash"
-  private val AudioStoreParams =
-    "v1 corpus=bkt<70 fp=afp"
   private val VecIndexParams =
     "v4 corpus=all hier tls=32 nprobe=4 m=8 k=16 iters=1 pct=60 dim=64 " +
       "res=1 part=mod256 sorted"
@@ -474,102 +493,205 @@ object SparkEntry {
   private val SemanticTargetListSize = 32
   private val SemanticFitPct = 60
 
-  /** The image modality's 8-byte fingerprint frame: decode + dHash
-    * once in the partition-scoped codec contract, keep decodable rows
-    * — shared by the in-DAG media rows, the store builds, and the
-    * probe increments so the kernel definition can never drift.
+  /** One media modality: its pair rows' name tag
+    * (`pair_neardup{pairTag}`), its persisted fingerprint store (family
+    * dir + params), its fingerprint column, the decode + fingerprint
+    * kernel `features`, the synthetic fixture `gen(ids, base, twins)`
+    * (base media of `ids` and/or their perturbed twins, id + 10⁷, of
+    * the md5-chosen ~5%), and the DuckDB twin of fixture + kernel:
+    * `duckFixture` CTEs ending in `duckSrc(media_id, hcol)`, with
+    * `duckMb` its md5-bucket CTE. [[mediaRows]] registers each
+    * modality's seven rows and their oracles from it.
     */
-  private def imageSig(imgs: DataFrame): DataFrame =
-    graft.multimodal.Multimodal.dhashFeatures(imgs)
-      .filter(col("decodable"))
-      .select(col("media_id"), col("dhash"))
+  private final case class Modality(
+      name: String, pairTag: String, family: String, params: String,
+      hcol: String, features: DataFrame => DataFrame,
+      gen: (DataFrame, Boolean, Boolean) => DataFrame,
+      duckFixture: String, duckSrc: String, duckMb: String) {
 
-  /** The video modality's clip fingerprint frame (demux, sample
-    * frames 0,2,4,6, per-frame dHash, majority vote).
-    */
-  private def videoSig(clips: DataFrame): DataFrame =
-    graft.multimodal.Multimodal.videoDhashFeatures(clips, step = 2)
-      .filter(col("decodable"))
-      .select(col("media_id"), col("clip_dhash"))
+    /** The 8-byte fingerprint frame: decode + fingerprint once in the
+      * partition-scoped codec contract, keep decodable rows — shared by
+      * the in-DAG rows, the store build and the probe increments, so
+      * the kernel definition can never drift.
+      */
+    def sig(media: DataFrame): DataFrame =
+      features(media).filter(col("decodable"))
+        .select(col("media_id"), col(hcol))
 
-  /** The audio modality's fingerprint frame (SPI decode, ch-0 window
-    * sums, multiplicative per-window mix bits).
-    */
-  private def audioSig(wavs: DataFrame): DataFrame =
-    graft.multimodal.Multimodal.audioFingerprintFeatures(wavs)
-      .filter(col("decodable"))
-      .select(col("media_id"), col("afp"))
+    /** Corpus side: base media of the bucket<70 ids. */
+    def corpusFps(ids: DataFrame): DataFrame =
+      sig(gen(ids.filter(docBucket < 70), true, false))
 
-  /** The pair rule's PROBE core, parameterized over the media
-    * modality (the caption side is always the minhash
-    * SignatureStore): the shared text fixture (increment = bucket≥70
-    * docs + the bucket<5 twin pairs' re-posted captions) probes the
-    * persisted signature store, the caller-built increment
-    * fingerprint frame probes the persisted media store, and the
-    * pair rule composes the two verified-candidate sets. One
-    * definition → the image/audio/video probe rows can never drift
-    * apart on the rule.
+    /** Increment side: fresh base media (bucket ≥ `from`) plus ALL
+      * perturbed twins. Ids split BEFORE the generator, so the
+      * encode + decode kernel runs once per side.
+      */
+    def incFps(ids: DataFrame, from: Int = 70): DataFrame =
+      sig(gen(ids.filter(docBucket >= from), true, false)
+        .unionByName(gen(ids, false, true)))
+  }
+
+  private def docBucket: Column = graft.util.Sampling.md5Bucket(col("doc_id"))
+
+  private def mediaIds(s: SparkSession, dir: String): DataFrame =
+    Tables.documents(s, dir).select(col("doc_id"))
+
+  /** image: PNG decode → dHash (9×8 luma gradient); video: RIFF/AVI
+    * demux → dHash of sampled frames 0,2,4,6 → majority vote; audio:
+    * WAV SPI decode → ch-0 window sums → multiplicative mix bits.
     */
-  private def pairProbeStored(s: SparkSession, dir: String,
-                              incFps: DataFrame, mediaSd: String,
-                              hcol: String): DataFrame = {
-    val d = Tables.documents(s, dir)
-    val bucket = graft.util.Sampling.md5Bucket(col("doc_id"))
-    val twinTexts = d.filter(bucket < 5)
+  private lazy val Modalities: Seq[Modality] = Seq(
+    Modality("image", "", "media_image", "v1 corpus=bkt<70 fp=dhash",
+      "dhash", Multimodal.dhashFeatures,
+      Multimodal.syntheticImagesNearDup(_, "doc_id", _, _),
+      duckDhashCtes, "dh", "mb"),
+    Modality("video", "_video", "media_video",
+      "v1 corpus=bkt<70 step=2 fp=clip_dhash", "clip_dhash",
+      Multimodal.videoDhashFeatures(_, step = 2),
+      Multimodal.syntheticAvisNearDup(_, "doc_id", _, _),
+      duckVideoDhashCtes, "vdh", "vmb"),
+    Modality("audio", "_audio", "media_audio", "v1 corpus=bkt<70 fp=afp",
+      "afp", Multimodal.audioFingerprintFeatures,
+      Multimodal.syntheticWavsNearDup(_, "doc_id", _, _),
+      duckAudioFpCtes, "afh", "amb"))
+
+  /** A registered row with its DuckDB oracle. */
+  private final case class Row(name: String,
+                               build: (SparkSession, String) => DataFrame,
+                               oracle: String)
+
+  /** The seven rows of every media modality, under the names the
+    * registry has always carried (`image_neardup`, …,
+    * `pair_neardup_video_probe_updated`). Hamming rows band the 64-bit
+    * fingerprint into four 16-bit keys, cap buckets at 64 and verify
+    * `bit_count(xor) ≤ 3` on the probe row; only fingerprints cross the
+    * shuffle, payloads decode once and never move.
+    *  - `X_neardup`: batch pairs; each planted twin lands at Hamming
+    *    0–1 and MUST pair.
+    *  - `X_neardup_incremental`: the daily-ingest decision — each twin
+    *    flagged against its original; only the increment's band keys
+    *    broadcast, the corpus fingerprint stream never shuffles.
+    *  - `X_neardup_probe`: the same decision against the persisted
+    *    MediaStore (corpus decoded once, on first invocation — the
+    *    bench warmup); the timed row pays O(increment) decode + band
+    *    probes and never reads corpus payloads (plan-fenced in
+    *    PlanAuditSpec). The parquet round-trip changes the physics, not
+    *    the answer — same oracle as the incremental row.
+    *  - `X_neardup_probe_updated`: the A/B ingest loop
+    *    ([[mediaUpdatedStored]]).
+    *  - `pair_neardup{tag}`: the cross-modal pair rule
+    *    (Dedup.pairNearDupIncremental) — an incoming (caption, media)
+    *    pair drops iff BOTH its caption is a MinHash near-dup AND its
+    *    media a Hamming near-dup of the SAME prior pair; either side
+    *    alone is fresh training signal. Pair id = doc_id; twin pairs
+    *    re-post the caption and perturb the media.
+    *  - `pair_neardup{tag}_probe`: both sides against their persisted
+    *    stores ([[pairProbeStored]]), decision-identical — same oracle.
+    *  - `pair_neardup{tag}_probe_updated`: the pair A/B loop
+    *    ([[pairUpdatedStored]]).
+    */
+  private lazy val mediaRows: Seq[Row] = Modalities.flatMap { m =>
+    import m.{duckFixture => fx, duckMb => mb, duckSrc => src, hcol}
+    val incOracle = mediaIncrementalOracleFrom(fx, src, hcol, mb)
+    val pairOracle = pairNeardupOracleFrom(fx, src, hcol, mb)
+    val pair = s"pair_neardup${m.pairTag}"
+    Seq(
+      Row(s"${m.name}_neardup", (s, dir) =>
+        Dedup.hammingPairs(m.sig(m.gen(mediaIds(s, dir), true, true)),
+          "media_id", hcol, maxHamming = 3, maxBucket = 64),
+        hammingPairsOracleFrom(fx, src, hcol)),
+      Row(s"${m.name}_neardup_incremental", (s, dir) => {
+        val ids = mediaIds(s, dir)
+        Dedup.hammingIncremental(m.incFps(ids), m.corpusFps(ids),
+          "media_id", hcol, maxHamming = 3, maxBucket = 64)
+      }, incOracle),
+      Row(s"${m.name}_neardup_probe", (s, dir) => {
+        val sd = ensureMediaStore(s, dir, m)
+        Dedup.hammingIncremental(m.incFps(mediaIds(s, dir)),
+          graft.dedup.MediaStore.read(s, sd),
+          "media_id", hcol, maxHamming = 3, maxBucket = 64)
+      }, incOracle),
+      Row(s"${m.name}_neardup_probe_updated",
+        (s, dir) => mediaUpdatedStored(s, dir, m),
+        mediaUpdatedOracleFrom(fx, src, hcol, mb)),
+      Row(pair, (s, dir) => {
+        val d = Tables.documents(s, dir)
+        val ids = d.select(col("doc_id"))
+        Dedup.pairNearDupIncremental(pairIncTexts(d, 70),
+          d.filter(docBucket < 70).select(col("doc_id"), col("text")),
+          m.incFps(ids), m.corpusFps(ids),
+          "doc_id", "text", "media_id", hcol,
+          shingleSize = 3, bands = 8, rowsPerBand = 2, threshold = 0.5,
+          maxHamming = 3, maxBucket = 64)
+      }, pairOracle),
+      Row(s"${pair}_probe", (s, dir) => pairProbeStored(s, dir, m),
+        pairOracle),
+      Row(s"${pair}_probe_updated", (s, dir) => pairUpdatedStored(s, dir, m),
+        pairNeardupUpdatedOracleFrom(fx, src, hcol, mb)))
+  }
+
+  /** The pair rows' caption increment: the docs of bucket ≥ `from`
+    * plus the bucket<5 twin pairs' re-posted captions (id + 10⁷,
+    * trailing " repost").
+    */
+  private def pairIncTexts(d: DataFrame, from: Int): DataFrame = {
+    val twinTexts = d.filter(docBucket < 5)
       .select((col("doc_id") + lit(10000000L)).as("doc_id"),
         concat(col("text"), lit(" repost")).as("text"))
-    val incTexts = d.filter(bucket >= 70)
+    d.filter(docBucket >= from)
       .select(col("doc_id"), col("text")).unionByName(twinTexts)
-    Dedup.pairNearDupStored(incTexts,
+  }
+
+  /** The pair rule's PROBE core (the caption side is always the
+    * minhash SignatureStore): the caption increment probes the
+    * persisted signature store, the modality's increment fingerprints
+    * probe its persisted media store, and the pair rule composes the
+    * two verified-candidate sets.
+    */
+  private def pairProbeStored(s: SparkSession, dir: String,
+                              m: Modality): DataFrame = {
+    val incFps = m.incFps(mediaIds(s, dir))
+    val mediaSd = ensureMediaStore(s, dir, m)
+    Dedup.pairNearDupStored(pairIncTexts(Tables.documents(s, dir), 70),
       graft.dedup.SignatureStore.read(s, ensureMinhashStore(s, dir)),
       incFps, graft.dedup.MediaStore.read(s, mediaSd),
-      "doc_id", "text", "media_id", hcol,
+      "doc_id", "text", "media_id", m.hcol,
       shingleSize = 3, bands = 8, rowsPerBand = 2, threshold = 0.5,
       maxHamming = 3, maxBucket = 64)
   }
 
-  /** The pair rule's A/B LOOP core, parameterized over the media
-    * modality — the `pair_neardup_probe_updated` layered-two-store
-    * design with the modality-specific pieces injected: `sig` maps
-    * raw media to its (media_id, fingerprint) frame, `gen(ids, base,
-    * twins)` is the synthetic fixture. Layer 0 = both persisted
-    * stores minus the twin-source pairs (bucket < 5); increment A =
-    * those base pairs, probed and ACCEPTED pairs appended to BOTH
-    * sides as checkpointed fingerprint frames (never text — the
-    * ingest_clean fingerprint-checkpoint convention); increment B =
-    * fresh pairs (bucket ≥ 85) + ALL twin pairs. Every twin's base
-    * lives only in the accepted-A layer, so each caught twin
-    * certifies the cross-increment append on both modalities.
+  /** The pair rule's A/B LOOP core — the layered two-store design.
+    * Layer 0 = both persisted stores minus the twin-source pairs
+    * (bucket < 5); increment A = those base pairs, probed and ACCEPTED
+    * pairs appended to BOTH sides as checkpointed fingerprint frames
+    * (never text — the ingest_clean fingerprint-checkpoint convention);
+    * increment B = fresh pairs (bucket ≥ 85) + ALL twin pairs. Every
+    * twin's base lives only in the accepted-A layer, so each caught
+    * twin certifies the cross-increment append on both modalities; a B
+    * pair duplicating an accepted A pair on caption or media alone
+    * still survives.
     */
   private def pairUpdatedStored(s: SparkSession, dir: String,
-                                sig: DataFrame => DataFrame,
-                                gen: (DataFrame, Boolean, Boolean) => DataFrame,
-                                mediaSd: String, hcol: String): DataFrame = {
+                                m: Modality): DataFrame = {
+    val hcol = m.hcol
+    val mediaSd = ensureMediaStore(s, dir, m)
     val d = Tables.documents(s, dir)
     val ids = d.select(col("doc_id"))
-    val bucket = graft.util.Sampling.md5Bucket(col("doc_id"))
     val tStore = graft.dedup.SignatureStore.read(s,
       ensureMinhashStore(s, dir))
     val tStore0 = graft.dedup.SignatureStore.Store(
-      tStore.banded.filter(
-        graft.util.Sampling.md5Bucket(col("doc_id")) >= 5),
-      tStore.shingleHashes.filter(
-        graft.util.Sampling.md5Bucket(col("doc_id")) >= 5))
+      tStore.banded.filter(docBucket >= 5),
+      tStore.shingleHashes.filter(docBucket >= 5))
     val mStore0 = graft.dedup.MediaStore.read(s, mediaSd)
       .filter(graft.util.Sampling.md5Bucket(col("media_id")) >= 5)
-    val incTextsA = d.filter(bucket < 5)
+    val incTextsA = d.filter(docBucket < 5)
       .select(col("doc_id"), col("text"))
     // NOT checkpointed: its only consumer is the hamming leg, whose
     // own banded checkpoint pays the decode once (r16 shipped a
     // redundant second checkpoint job here)
-    val incFpsA = sig(gen(ids.filter(bucket < 5), true, false))
-    val twinTexts = d.filter(bucket < 5)
-      .select((col("doc_id") + lit(10000000L)).as("doc_id"),
-        concat(col("text"), lit(" repost")).as("text"))
-    val incTextsB = d.filter(bucket >= 85)
-      .select(col("doc_id"), col("text")).unionByName(twinTexts)
-    val incFpsB = sig(gen(ids.filter(bucket >= 85), true, false)
-      .unionByName(gen(ids, false, true)))
+    val incFpsA = m.sig(m.gen(ids.filter(docBucket < 5), true, false))
+    val incTextsB = pairIncTexts(d, 85)
+    val incFpsB = m.incFps(ids, 85)
     // ALL FOUR increment-side checkpoint builds fired concurrently
     // (guide §2.6): the two B frames are store-independent — B's
     // media decode and caption signing (the row's only real kernel
@@ -618,31 +740,29 @@ object SparkEntry {
     Dedup.pairCompose(incIdsB, tverB, mverB)
   }
 
-  /** The single-modality media A/B LOOP core (the
-    * `video_neardup_probe_updated` layered-corpus design), shared by
-    * the image/audio/video `_updated` rows: probe the twin-source
-    * bases (bucket < 5) against store-minus-those-ids, lazy-append
-    * the is_new survivors, probe fresh bases (bucket ≥ 85) + ALL
-    * twins. r17 shape: the A and B banded fingerprint checkpoints are
-    * fired CONCURRENTLY (B's decode is store-independent — guide
-    * §2.6), the standalone decoded-frame checkpoint is gone (the
-    * banded checkpoint pays the decode once), and the accepted-A
-    * media rows derive from band 0 of the A checkpoint
-    * (Dedup.acceptedMediaFromBanded) — decisions identical, pinned by
-    * the unchanged per-modality oracles.
+  /** The single-modality media A/B LOOP core: probe the twin-source
+    * bases (bucket < 5) against the persisted store minus those ids
+    * (an 8-byte-row filter on the store scan, no re-decode),
+    * lazy-append the is_new survivors, then probe fresh bases
+    * (bucket ≥ 85) + ALL twins. Every twin's original lives only in
+    * the accepted-A layer, so a twin is caught iff the cross-increment
+    * append worked. The persisted base never mutates mid-query
+    * (MediaStore.appendWrite is the between-runs compaction). The A
+    * and B banded fingerprint checkpoints are fired CONCURRENTLY (B's
+    * decode is store-independent — guide §2.6), the banded checkpoint
+    * pays the decode once, and the accepted-A media rows derive from
+    * band 0 of the A checkpoint (Dedup.acceptedMediaFromBanded).
     */
   private def mediaUpdatedStored(s: SparkSession, dir: String,
-                                 sig: DataFrame => DataFrame,
-                                 gen: (DataFrame, Boolean, Boolean) => DataFrame,
-                                 mediaSd: String, hcol: String): DataFrame = {
-    val ids = Tables.documents(s, dir).select(col("doc_id"))
-    val bucket = graft.util.Sampling.md5Bucket(col("doc_id"))
+                                 m: Modality): DataFrame = {
+    val hcol = m.hcol
+    val mediaSd = ensureMediaStore(s, dir, m)
+    val ids = mediaIds(s, dir)
     val store = graft.dedup.MediaStore.read(s, mediaSd)
     val corpus0 = store.filter(
       graft.util.Sampling.md5Bucket(col("media_id")) >= 5)
-    val fpsA = sig(gen(ids.filter(bucket < 5), true, false))
-    val incB = sig(gen(ids.filter(bucket >= 85), true, false)
-      .unionByName(gen(ids, false, true)))
+    val fpsA = m.sig(m.gen(ids.filter(docBucket < 5), true, false))
+    val incB = m.incFps(ids, 85)
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
     import scala.concurrent.duration.Duration
@@ -671,60 +791,49 @@ object SparkEntry {
     * (the r13 ADVICE duplication risk, closed structurally). Each
     * returns the family dir, building at most once per sf dir.
     */
-  private def ensureBloomStore(s: SparkSession, dir: String): String = {
-    val d = Tables.documents(s, dir)
-    val bucket = graft.util.Sampling.md5Bucket(col("doc_id"))
-    val sd = storeDir(dir, "bloom")
-    ensureStore(sd, "fingerprints/_SUCCESS", BloomDocsParams) {
+  private def ensureBloomStore(s: SparkSession, dir: String): String =
+    ensureStore(dir, "bloom", "fingerprints/_SUCCESS", BloomDocsParams) { sd =>
       val (st, meta) = graft.dedup.BloomStore.build(
-        d.filter(bucket < 70), "doc_id", "text")
+        Tables.documents(s, dir).filter(docBucket < 70), "doc_id", "text")
       graft.dedup.BloomStore.write(st, meta, sd)
     }
-    sd
-  }
 
   /** bloom_ab: corpus build PLUS the A-increment probe + appendWrite
     * at setup time (the `_updated` warmup convention — the persisted
     * state is deterministic, so B-probe decisions and the meta's
     * grown actualN replay exactly).
     */
-  private def ensureBloomAbStore(s: SparkSession, dir: String): String = {
-    val d = Tables.documents(s, dir)
-    val bucket = graft.util.Sampling.md5Bucket(col("doc_id"))
-    val sd = storeDir(dir, "bloom_ab")
-    ensureStore(sd, "fingerprints/_SUCCESS", BloomAbParams) {
+  private def ensureBloomAbStore(s: SparkSession, dir: String): String =
+    ensureStore(dir, "bloom_ab", "fingerprints/_SUCCESS", BloomAbParams) { sd =>
+      val d = Tables.documents(s, dir)
       val (st, meta) = graft.dedup.BloomStore.build(
-        d.filter(bucket < 70), "doc_id", "text")
+        d.filter(docBucket < 70), "doc_id", "text")
       graft.dedup.BloomStore.write(st, meta, sd)
       val probeA = Dedup.exactIncrementalBloom(
-        d.filter(bucket >= 70 && bucket < 85), st, "doc_id", "text")
+        d.filter(docBucket >= 70 && docBucket < 85), st, "doc_id", "text")
       graft.dedup.BloomStore.appendWrite(
         probeA.filter(col("is_new")).select(col("fingerprint")),
         st, meta, sd)
     }
-    sd
-  }
 
   private def linesFixture(s: SparkSession, dir: String): DataFrame =
     graft.textops.LineDedup.multilineFixture(
       Tables.documents(s, dir), "doc_id", "text")
 
-  private def ensureBloomLinesStore(s: SparkSession, dir: String): String = {
-    val d = linesFixture(s, dir)
-    val sd = storeDir(dir, "bloom_lines")
-    ensureStore(sd, "fingerprints/_SUCCESS", BloomLinesParams) {
+  private def ensureBloomLinesStore(s: SparkSession, dir: String): String =
+    ensureStore(dir, "bloom_lines", "fingerprints/_SUCCESS",
+        BloomLinesParams) { sd =>
       val (st, meta) = graft.dedup.BloomStore.buildLines(
-        d.filter(pmod(col("doc_id"), lit(10)) < 7), "text")
+        linesFixture(s, dir).filter(pmod(col("doc_id"), lit(10)) < 7),
+        "text")
       graft.dedup.BloomStore.write(st, meta, sd)
     }
-    sd
-  }
 
-  private def ensureBloomLinesAbStore(s: SparkSession, dir: String): String = {
-    val d = linesFixture(s, dir)
-    val m10 = pmod(col("doc_id"), lit(10))
-    val sd = storeDir(dir, "bloom_lines_ab")
-    ensureStore(sd, "fingerprints/_SUCCESS", BloomLinesAbParams) {
+  private def ensureBloomLinesAbStore(s: SparkSession, dir: String): String =
+    ensureStore(dir, "bloom_lines_ab", "fingerprints/_SUCCESS",
+        BloomLinesAbParams) { sd =>
+      val d = linesFixture(s, dir)
+      val m10 = pmod(col("doc_id"), lit(10))
       val (st, meta) = graft.dedup.BloomStore.buildLines(
         d.filter(m10 < 7), "text")
       graft.dedup.BloomStore.write(st, meta, sd)
@@ -735,32 +844,23 @@ object SparkEntry {
         .select(xxhash64(col("_ln")).as("fingerprint")).distinct()
       graft.dedup.BloomStore.appendWrite(acc, st, meta, sd)
     }
-    sd
-  }
 
-  private def ensureMinhashStore(s: SparkSession, dir: String): String = {
-    val d = Tables.documents(s, dir)
-    val bucket = graft.util.Sampling.md5Bucket(col("doc_id"))
-    val sd = storeDir(dir, "minhash")
-    ensureStore(sd, "signatures/_SUCCESS", MinhashStoreParams) {
+  private def ensureMinhashStore(s: SparkSession, dir: String): String =
+    ensureStore(dir, "minhash", "signatures/_SUCCESS",
+        MinhashStoreParams) { sd =>
       graft.dedup.SignatureStore.write(
-        graft.dedup.SignatureStore.build(d.filter(bucket < 70),
+        graft.dedup.SignatureStore.build(
+          Tables.documents(s, dir).filter(docBucket < 70),
           "doc_id", "text", shingleSize = 3, bands = 8, rowsPerBand = 2), sd)
     }
-    sd
-  }
 
-  private def ensureSpansStore(s: SparkSession, dir: String): String = {
-    val d = Tables.documents(s, dir)
-    val bucket = graft.util.Sampling.md5Bucket(col("doc_id"))
-    val sd = storeDir(dir, "spans")
-    ensureStore(sd, "span_fps/_SUCCESS", SpansStoreParams) {
+  private def ensureSpansStore(s: SparkSession, dir: String): String =
+    ensureStore(dir, "spans", "span_fps/_SUCCESS", SpansStoreParams) { sd =>
       graft.dedup.SignatureStore.writeSpans(
-        graft.dedup.SignatureStore.buildSpans(d.filter(bucket < 70),
+        graft.dedup.SignatureStore.buildSpans(
+          Tables.documents(s, dir).filter(docBucket < 70),
           "doc_id", "text", k = 8, w = 4), sd)
     }
-    sd
-  }
 
   /** spans base PLUS the A-increment's accepted (doc_id, fp) delta
     * files (`appendSpansWrite` at setup — the delta-append daily form
@@ -770,8 +870,7 @@ object SparkEntry {
     val sd = ensureSpansStore(s, dir)
     if (!new java.io.File(s"$sd/span_deltas/_SUCCESS").exists()) {
       val d = Tables.documents(s, dir)
-      val bucket = graft.util.Sampling.md5Bucket(col("doc_id"))
-      val incA = d.filter(bucket >= 70 && bucket < 85)
+      val incA = d.filter(docBucket >= 70 && docBucket < 85)
       val probeA = Dedup.spanIncrementalStored(incA,
         graft.dedup.SignatureStore.readSpans(s, sd),
         "doc_id", "text", k = 8, w = 4, minShared = 5, maxDf = 16)
@@ -783,73 +882,39 @@ object SparkEntry {
     sd
   }
 
-  private def ensureSemanticStore(s: SparkSession, dir: String): String = {
-    val e = Tables.embeddings(s, dir)
-    val bucket = graft.util.Sampling.md5Bucket(col("vec_id"))
-    val sd = storeDir(dir, "semantic")
-    ensureStore(sd, "forest/_SUCCESS", SemanticStoreParams) {
+  private def ensureSemanticStore(s: SparkSession, dir: String): String =
+    ensureStore(dir, "semantic", "forest/_SUCCESS", SemanticStoreParams) { sd =>
+      val e = Tables.embeddings(s, dir)
       graft.simops.SemanticStore.write(
-        graft.simops.SemanticStore.build(e.filter(bucket < 70),
+        graft.simops.SemanticStore.build(
+          e.filter(graft.util.Sampling.md5Bucket(col("vec_id")) < 70),
           "vec_id", "embedding", targetListSize = SemanticTargetListSize,
           iters = 1, fitSamplePct = SemanticFitPct), sd)
     }
-    sd
-  }
 
-  private def ensureMediaImageStore(s: SparkSession, dir: String): String = {
-    val ids = Tables.documents(s, dir).select(col("doc_id"))
-    val bucket = graft.util.Sampling.md5Bucket(col("doc_id"))
-    val sd = storeDir(dir, "media_image")
-    ensureStore(sd, "fingerprints/_SUCCESS", ImageStoreParams) {
-      graft.dedup.MediaStore.write(imageSig(
-        Multimodal.syntheticImagesNearDup(ids.filter(bucket < 70),
-          "doc_id", twins = false)), sd)
+  /** The modality's persisted (media_id, fingerprint) store: the
+    * corpus side's fingerprints, decoded once.
+    */
+  private def ensureMediaStore(s: SparkSession, dir: String,
+                               m: Modality): String =
+    ensureStore(dir, m.family, "fingerprints/_SUCCESS", m.params) { sd =>
+      graft.dedup.MediaStore.write(m.corpusFps(mediaIds(s, dir)), sd)
     }
-    sd
-  }
 
-  private def ensureMediaVideoStore(s: SparkSession, dir: String): String = {
-    val ids = Tables.documents(s, dir).select(col("doc_id"))
-    val bucket = graft.util.Sampling.md5Bucket(col("doc_id"))
-    val sd = storeDir(dir, "media_video")
-    ensureStore(sd, "fingerprints/_SUCCESS", VideoStoreParams) {
-      graft.dedup.MediaStore.write(videoSig(
-        Multimodal.syntheticAvisNearDup(ids.filter(bucket < 70),
-          "doc_id", twins = false)), sd)
-    }
-    sd
-  }
-
-  private def ensureMediaAudioStore(s: SparkSession, dir: String): String = {
-    val ids = Tables.documents(s, dir).select(col("doc_id"))
-    val bucket = graft.util.Sampling.md5Bucket(col("doc_id"))
-    val sd = storeDir(dir, "media_audio")
-    ensureStore(sd, "fingerprints/_SUCCESS", AudioStoreParams) {
-      graft.dedup.MediaStore.write(audioSig(
-        Multimodal.syntheticWavsNearDup(ids.filter(bucket < 70),
-          "doc_id", twins = false)), sd)
-    }
-    sd
-  }
-
-  private def ensureVecIndexStore(s: SparkSession, dir: String): String = {
-    val emb = Tables.embeddings(s, dir)
-    val sd = storeDir(dir, "vecindex")
-    ensureStore(sd, "codes/_SUCCESS", VecIndexParams) {
+  private def ensureVecIndexStore(s: SparkSession, dir: String): String =
+    ensureStore(dir, "vecindex", "codes/_SUCCESS", VecIndexParams) { sd =>
       graft.simops.VectorIndexStore.write(
-        graft.simops.VectorIndexStore.build(emb, "vec_id", "embedding",
+        graft.simops.VectorIndexStore.build(Tables.embeddings(s, dir),
+          "vec_id", "embedding",
           targetListSize = SemanticTargetListSize, m = 8, k = 16,
           iters = 1, fitSamplePct = 60, dim = 64), sd)
       invalidateVecIndex(sd)
     }
-    sd
-  }
 
-  private def ensureVecIndexAbStore(s: SparkSession, dir: String): String = {
-    val emb = Tables.embeddings(s, dir)
-    val bucket = graft.util.Sampling.md5Bucket(col("vec_id"))
-    val sd = storeDir(dir, "vecindex_ab")
-    ensureStore(sd, "codes/_SUCCESS", VecIndexAbParams) {
+  private def ensureVecIndexAbStore(s: SparkSession, dir: String): String =
+    ensureStore(dir, "vecindex_ab", "codes/_SUCCESS", VecIndexAbParams) { sd =>
+      val emb = Tables.embeddings(s, dir)
+      val bucket = graft.util.Sampling.md5Bucket(col("vec_id"))
       val st = graft.simops.VectorIndexStore.build(
         emb.filter(bucket < 70), "vec_id", "embedding",
         targetListSize = SemanticTargetListSize, m = 8, k = 16,
@@ -871,8 +936,6 @@ object SparkEntry {
       graft.simops.VectorIndexStore.compact(s, sd)
       invalidateVecIndex(sd)
     }
-    sd
-  }
 
   /** `embeddings` UNION a deterministic near-copy of the md5-chosen
     * ~5% of vectors: id offset +10⁷ (disjoint from any corpus id),
@@ -1255,7 +1318,8 @@ object SparkEntry {
   }
 
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    Map[String, (SparkSession, String) => DataFrame](
 
     // ---- reference lag-matrix family (SURVEY §2.1 O1-O9) ----
     "lag_1d" -> ((s, dir) => {
@@ -2255,12 +2319,7 @@ object SparkEntry {
       val bucket = graft.util.Sampling.md5Bucket(col("doc_id"))
       val incA = d.filter(bucket >= 70 && bucket < 85)
       val incB = d.filter(bucket >= 85)
-      val sd = storeDir(dir, "spans")
-      ensureStore(sd, "span_fps/_SUCCESS", SpansStoreParams) {
-        graft.dedup.SignatureStore.writeSpans(
-          graft.dedup.SignatureStore.buildSpans(d.filter(bucket < 70),
-            "doc_id", "text", k = 8, w = 4), sd)
-      }
+      val sd = ensureSpansStore(s, dir)
       val store0 = graft.dedup.SignatureStore.readSpans(s, sd)
       // increment B's winnow checkpoint is store-independent — built
       // concurrently with the whole A phase (guide §2.6)
@@ -3470,364 +3529,6 @@ object SparkEntry {
           col("b_sum"))
     }),
 
-    "image_neardup" -> ((s, dir) => {
-      // image-CONTENT near-dedup: real PNG decode → dHash (9×8 luma
-      // gradient) → the SimHash Hamming-band machinery. The fixture
-      // plants re-encoded perturbed twins (id+10⁷, one channel of one
-      // pixel shifted) for the md5-chosen ~5% of ids; each twin lands
-      // at Hamming 0–1 from its original and MUST pair. Only the
-      // 8-byte fingerprint crosses the shuffle — payloads decode once,
-      // in the partition-scoped-codec contract, and never move.
-      val ids = Tables.documents(s, dir).select(col("doc_id"))
-      val sig = Multimodal.dhashFeatures(
-          Multimodal.syntheticImagesNearDup(ids, "doc_id"))
-        .filter(col("decodable"))
-        .select(col("media_id"), col("dhash"))
-      Dedup.hammingPairs(sig, "media_id", "dhash", maxHamming = 3,
-        maxBucket = 64)
-    }),
-
-    "video_neardup" -> ((s, dir) => {
-      // video-CONTENT near-dedup — the composition round 8 left on
-      // the shelf: real RIFF/AVI frame demux → per-sampled-frame
-      // dHash (9×8 luma-gradient grid, exact integer arithmetic on
-      // the DIB bytes) → MAJORITY-vote clip fingerprint → the shared
-      // Hamming-band machinery. The fixture plants perturbed
-      // re-encoded twin clips (id+10⁷, one channel of one pixel
-      // shifted in every frame) for the md5-chosen ~5% of ids; each
-      // twin's clip fp lands at Hamming 0–1 and MUST pair. Frame
-      // sampling is real (step=2 → frames 0,2,4,6) and the oracle
-      // replays exactly those frames; only the 8-byte clip
-      // fingerprint crosses the shuffle — payloads demux once, in
-      // the per-partition contract, and never move.
-      val ids = Tables.documents(s, dir).select(col("doc_id"))
-      val sig = Multimodal.videoDhashFeatures(
-          Multimodal.syntheticAvisNearDup(ids, "doc_id"), step = 2)
-        .filter(col("decodable"))
-        .select(col("media_id"), col("clip_dhash"))
-      Dedup.hammingPairs(sig, "media_id", "clip_dhash", maxHamming = 3,
-        maxBucket = 64)
-    }),
-
-    "video_neardup_incremental" -> ((s, dir) => {
-      // the daily-ingest decision for the video modality — the clip
-      // twin of image_neardup_incremental: corpus = base clips of
-      // bucket<70 ids (demuxed + majority-fingerprinted once, at
-      // "ingest time"); increment = fresh base clips (bucket>=70)
-      // plus the perturbed twins — each twin must come back flagged
-      // against its original. Ids split BEFORE the generator so the
-      // assemble+demux kernel runs exactly once per side; only the
-      // increment's banded keys broadcast, the corpus fingerprint
-      // stream never shuffles, Hamming verify on the probe row.
-      val ids = Tables.documents(s, dir).select(col("doc_id"))
-      val bucket = graft.util.Sampling.md5Bucket(col("doc_id"))
-      val corpus = videoSig(Multimodal.syntheticAvisNearDup(
-        ids.filter(bucket < 70), "doc_id", twins = false))
-      val inc = videoSig(Multimodal.syntheticAvisNearDup(
-          ids.filter(bucket >= 70), "doc_id", twins = false)
-        .unionByName(Multimodal.syntheticAvisNearDup(
-          ids, "doc_id", base = false)))
-      Dedup.hammingIncremental(inc, corpus, "media_id", "clip_dhash",
-        maxHamming = 3, maxBucket = 64)
-    }),
-
-    "video_neardup_probe" -> ((s, dir) => {
-      // the PROBE-ONLY form for the video modality (the
-      // dedup_minhash_probe convention, closing the last modality
-      // without a persisted ingest store): the corpus's clip
-      // fingerprints were demuxed + majority-voted ONCE at "corpus
-      // ingest time" (first invocation builds the MediaStore — the
-      // bench's warmup pass), so the timed row measures what a daily
-      // video ingest actually pays: O(increment) demux + broadcast
-      // band probes against the stored 8-byte frame. The corpus
-      // payloads are NEVER read — the store scan is the only
-      // corpus-derived input (plan-fenced in PlanAuditSpec). Decision
-      // identical to video_neardup_incremental — same oracle.
-      val ids = Tables.documents(s, dir).select(col("doc_id"))
-      val bucket = graft.util.Sampling.md5Bucket(col("doc_id"))
-      val sd = ensureMediaVideoStore(s, dir)
-      val inc = videoSig(Multimodal.syntheticAvisNearDup(
-          ids.filter(bucket >= 70), "doc_id", twins = false)
-        .unionByName(Multimodal.syntheticAvisNearDup(
-          ids, "doc_id", base = false)))
-      Dedup.hammingIncremental(inc, graft.dedup.MediaStore.read(s, sd),
-        "media_id", "clip_dhash", maxHamming = 3, maxBucket = 64)
-    }),
-
-    "video_neardup_probe_updated" -> ((s, dir) => {
-      // the video daily-ingest LOOP closed (the _updated convention,
-      // the dedup_semantic_probe_updated in-memory-append shape — the
-      // persisted base never mutates mid-query; MediaStore.appendWrite
-      // is the between-runs compaction, exercised in MultimodalSpec
-      // and the streaming sink): increment A = the base clips of the
-      // twin-source ids (bucket < 5), probed against the store MINUS
-      // those ids (the layered-corpus view — an 8-byte-row filter on
-      // the store scan, no re-demux); A's is_new survivors append
-      // lazily; increment B = fresh base clips (bucket >= 85) + ALL
-      // perturbed twins. Every twin's base now lives ONLY in the
-      // accepted-A layer, so a twin is caught iff the cross-increment
-      // append worked — the planted A/B signal.
-      mediaUpdatedStored(s, dir, videoSig,
-        (i, base, twins) => Multimodal.syntheticAvisNearDup(
-          i, "doc_id", base = base, twins = twins),
-        ensureMediaVideoStore(s, dir), "clip_dhash")
-    }),
-
-    "image_neardup_incremental" -> ((s, dir) => {
-      // the daily-ingest decision for the image modality: corpus =
-      // base images of bucket<70 ids (decoded + dHashed once, at
-      // "ingest time"); increment = fresh base images (bucket>=70)
-      // plus the perturbed twins — each twin must come back flagged
-      // against its original. Each SIDE's ids are split BEFORE the
-      // generator, so the encode+decode kernel runs exactly once per
-      // side (filtering the decoded frame instead re-decodes every
-      // image once per consumer). Only the increment's banded frame
-      // is broadcast; the corpus fingerprint stream never shuffles,
-      // and the Hamming verify is bit_count(xor) on the probe row
-      // itself (no payload fetch)
-      val ids = Tables.documents(s, dir).select(col("doc_id"))
-      val bucket = graft.util.Sampling.md5Bucket(col("doc_id"))
-      val corpus = imageSig(Multimodal.syntheticImagesNearDup(
-        ids.filter(bucket < 70), "doc_id", twins = false))
-      val inc = imageSig(Multimodal.syntheticImagesNearDup(
-          ids.filter(bucket >= 70), "doc_id", twins = false)
-        .unionByName(Multimodal.syntheticImagesNearDup(
-          ids, "doc_id", base = false)))
-      Dedup.hammingIncremental(inc, corpus, "media_id", "dhash",
-        maxHamming = 3, maxBucket = 64)
-    }),
-
-    "image_neardup_probe" -> ((s, dir) => {
-      // the PROBE-ONLY form for the image modality: the corpus's
-      // dHashes were decoded ONCE at "corpus ingest time" (first
-      // invocation builds the MediaStore — the bench's warmup pass),
-      // so the timed row measures what a daily image ingest actually
-      // pays: O(increment) decode + broadcast band probes against the
-      // stored (media_id, dhash) frame — the corpus payloads are
-      // NEVER read again (plan-fenced in PlanAuditSpec). This is the
-      // r12-verdict gap closed: image_neardup_incremental re-decodes
-      // the corpus in-DAG every probe; at deployment scale the decode
-      // is the entire job. Decision identical to
-      // image_neardup_incremental — same oracle.
-      val ids = Tables.documents(s, dir).select(col("doc_id"))
-      val bucket = graft.util.Sampling.md5Bucket(col("doc_id"))
-      val sd = ensureMediaImageStore(s, dir)
-      val inc = imageSig(Multimodal.syntheticImagesNearDup(
-          ids.filter(bucket >= 70), "doc_id", twins = false)
-        .unionByName(Multimodal.syntheticImagesNearDup(
-          ids, "doc_id", base = false)))
-      Dedup.hammingIncremental(inc, graft.dedup.MediaStore.read(s, sd),
-        "media_id", "dhash", maxHamming = 3, maxBucket = 64)
-    }),
-
-    "image_neardup_probe_updated" -> ((s, dir) => {
-      // the image daily-ingest LOOP closed — the video_neardup_probe_updated
-      // design on the dHash modality (see that row's comment for the
-      // layered-corpus construction): probe the twin-source bases
-      // (bucket < 5) against store-minus-those-ids, append the is_new
-      // survivors in memory, then probe fresh bases (bucket >= 85) +
-      // ALL twins; every twin's base lives only in the accepted-A
-      // layer, so each caught twin certifies the cross-increment
-      // append.
-      mediaUpdatedStored(s, dir, imageSig,
-        (i, base, twins) => Multimodal.syntheticImagesNearDup(
-          i, "doc_id", base = base, twins = twins),
-        ensureMediaImageStore(s, dir), "dhash")
-    }),
-
-    "pair_neardup" -> ((s, dir) => {
-      // cross-modal PAIRED dedup — the LAION-class image-text-pair
-      // ingest decision (Dedup.pairNearDupIncremental): an incoming
-      // pair drops iff BOTH its caption is a MinHash near-dup AND its
-      // image is a Hamming near-dup of the SAME prior pair; text-only
-      // and image-only matches survive (either side alone is fresh
-      // training signal). Pairs ride the shared fixtures: pair id =
-      // doc_id, text = the document, image = its synthetic image; the
-      // planted twin pairs (md5 bucket < 5, id +10⁷) re-encode the
-      // image perturbed AND re-post the caption with a trailing token
-      // — each twin must come back flagged against its source pair,
-      // while a fresh text near-dup alone cannot drop a pair. Both
-      // corpus sides stream map-side (increment keys broadcast); the
-      // verdict join is candidate-bounded.
-      val d = Tables.documents(s, dir)
-      val ids = d.select(col("doc_id"))
-      val bucket = graft.util.Sampling.md5Bucket(col("doc_id"))
-      val twinTexts = d.filter(bucket < 5)
-        .select((col("doc_id") + lit(10000000L)).as("doc_id"),
-          concat(col("text"), lit(" repost")).as("text"))
-      val incTexts = d.filter(bucket >= 70)
-        .select(col("doc_id"), col("text")).unionByName(twinTexts)
-      val corTexts = d.filter(bucket < 70).select(col("doc_id"), col("text"))
-      val incImgs = imageSig(Multimodal.syntheticImagesNearDup(
-          ids.filter(bucket >= 70), "doc_id", twins = false)
-        .unionByName(Multimodal.syntheticImagesNearDup(
-          ids, "doc_id", base = false)))
-      val corImgs = imageSig(Multimodal.syntheticImagesNearDup(
-        ids.filter(bucket < 70), "doc_id", twins = false))
-      Dedup.pairNearDupIncremental(incTexts, corTexts, incImgs, corImgs,
-        "doc_id", "text", "media_id", "dhash",
-        shingleSize = 3, bands = 8, rowsPerBand = 2, threshold = 0.5,
-        maxHamming = 3, maxBucket = 64)
-    }),
-
-    "pair_neardup_probe" -> ((s, dir) => {
-      // the pair rule's DEPLOYMENT shape (the _probe convention
-      // applied to the composition): the text side probes the
-      // persisted minhash SignatureStore (corpus signed once at its
-      // own ingest — corpus TEXT never read), the image side probes
-      // the persisted MediaStore fingerprints (corpus payloads never
-      // decoded); the timed row pays O(increment) signing + decode +
-      // two broadcast band probes + the candidate-bounded pair join.
-      // Same stores, same params as the per-modality probe rows (the
-      // shared ensure-helpers), decisions identical to pair_neardup —
-      // same oracle; plan-fenced in PlanAuditSpec.
-      val ids = Tables.documents(s, dir).select(col("doc_id"))
-      val bucket = graft.util.Sampling.md5Bucket(col("doc_id"))
-      val incImgs = imageSig(Multimodal.syntheticImagesNearDup(
-          ids.filter(bucket >= 70), "doc_id", twins = false)
-        .unionByName(Multimodal.syntheticImagesNearDup(
-          ids, "doc_id", base = false)))
-      pairProbeStored(s, dir, incImgs, ensureMediaImageStore(s, dir),
-        "dhash")
-    }),
-
-    "pair_neardup_audio_probe" -> ((s, dir) => {
-      // the pair rule's DEPLOYMENT shape on the AUDIO modality
-      // (clip-caption corpora): decisions identical to
-      // pair_neardup_audio — the text side probes the persisted
-      // minhash store, the clip side the persisted (media_id, afp)
-      // store, corpus text never signed and corpus clips never
-      // decoded (plan-fenced). Shares pair_neardup_audio's oracle.
-      val ids = Tables.documents(s, dir).select(col("doc_id"))
-      val bucket = graft.util.Sampling.md5Bucket(col("doc_id"))
-      val incAuds = audioSig(Multimodal.syntheticWavsNearDup(
-          ids.filter(bucket >= 70), "doc_id", twins = false)
-        .unionByName(Multimodal.syntheticWavsNearDup(
-          ids, "doc_id", base = false)))
-      pairProbeStored(s, dir, incAuds, ensureMediaAudioStore(s, dir),
-        "afp")
-    }),
-
-    "pair_neardup_video_probe" -> ((s, dir) => {
-      // the VIDEO pair probe (clip-dHash side against the persisted
-      // media_video store) — with audio this closes the deployment
-      // shape across every pair modality. Shares pair_neardup_video's
-      // oracle.
-      val ids = Tables.documents(s, dir).select(col("doc_id"))
-      val bucket = graft.util.Sampling.md5Bucket(col("doc_id"))
-      val incVids = videoSig(Multimodal.syntheticAvisNearDup(
-          ids.filter(bucket >= 70), "doc_id", twins = false)
-        .unionByName(Multimodal.syntheticAvisNearDup(
-          ids, "doc_id", base = false)))
-      pairProbeStored(s, dir, incVids, ensureMediaVideoStore(s, dir),
-        "clip_dhash")
-    }),
-
-    "pair_neardup_probe_updated" -> ((s, dir) => {
-      // the PAIR family's daily-ingest LOOP closed (the _updated
-      // convention, the image_neardup_probe_updated layered-corpus
-      // design applied to the composition): layer 0 = BOTH persisted
-      // stores minus the twin-source pairs (bucket < 5); increment A =
-      // those base pairs (original caption + base image), probed under
-      // the PAIR rule and accepted (is_new) pairs appended to BOTH
-      // sides — SignatureStore.append for the captions, the
-      // fingerprint union for the images (O(increment), no store
-      // rebuild); increment B = fresh pairs (bucket >= 85) + ALL twin
-      // pairs (re-posted caption + perturbed image). Every twin's base
-      // pair lives only in the accepted-A layer, so each caught twin
-      // certifies the cross-increment append ON BOTH MODALITIES — a B
-      // pair duplicating an ACCEPTED A pair on caption or image alone
-      // still survives. Oracle: the two-layer pair replay
-      // (pairNeardupUpdatedOracle, the dedup_bloom_probe_updated
-      // shape). Core in [[pairUpdatedStored]], shared with the
-      // audio/video twins.
-      pairUpdatedStored(s, dir, imageSig,
-        (ids, base, twins) => Multimodal.syntheticImagesNearDup(
-          ids, "doc_id", base = base, twins = twins),
-        ensureMediaImageStore(s, dir), "dhash")
-    }),
-
-    "pair_neardup_audio_probe_updated" -> ((s, dir) => {
-      // the pair A/B loop on the AUDIO modality — the layered
-      // two-store design with the clip fingerprint family as the
-      // Hamming side; every twin's base pair lives only in the
-      // accepted-A layer, so each catch certifies the cross-increment
-      // append on caption AND clip. Oracle: the two-layer pair replay
-      // over the audio fixture (pairNeardupAudioUpdatedOracle).
-      pairUpdatedStored(s, dir, audioSig,
-        (ids, base, twins) => Multimodal.syntheticWavsNearDup(
-          ids, "doc_id", base = base, twins = twins),
-        ensureMediaAudioStore(s, dir), "afp")
-    }),
-
-    "pair_neardup_video_probe_updated" -> ((s, dir) => {
-      // the VIDEO pair A/B loop (clip-dHash side) — completes the
-      // probe + updated lifecycle for every pair modality the engine
-      // ships. Oracle: the two-layer pair replay over the clip-dHash
-      // fixture (pairNeardupVideoUpdatedOracle).
-      pairUpdatedStored(s, dir, videoSig,
-        (ids, base, twins) => Multimodal.syntheticAvisNearDup(
-          ids, "doc_id", base = base, twins = twins),
-        ensureMediaVideoStore(s, dir), "clip_dhash")
-    }),
-
-    "pair_neardup_audio" -> ((s, dir) => {
-      // the pair rule is MODALITY-GENERIC: pairNearDupIncremental
-      // takes any (id, fingerprint) frame for its Hamming side, so the
-      // audio-caption composition (podcast/clip-caption corpora) is
-      // one registration — same text fixture and twin structure as
-      // pair_neardup, the media side the audio fingerprint family
-      // (SPI decode → ch-0 window sums → multiplicative mix bits).
-      // A twin pair = re-posted caption + first-sample-perturbed clip;
-      // drop iff BOTH sides flag the SAME prior pair.
-      val d = Tables.documents(s, dir)
-      val ids = d.select(col("doc_id"))
-      val bucket = graft.util.Sampling.md5Bucket(col("doc_id"))
-      val twinTexts = d.filter(bucket < 5)
-        .select((col("doc_id") + lit(10000000L)).as("doc_id"),
-          concat(col("text"), lit(" repost")).as("text"))
-      val incTexts = d.filter(bucket >= 70)
-        .select(col("doc_id"), col("text")).unionByName(twinTexts)
-      val corTexts = d.filter(bucket < 70).select(col("doc_id"), col("text"))
-      val incAuds = audioSig(Multimodal.syntheticWavsNearDup(
-          ids.filter(bucket >= 70), "doc_id", twins = false)
-        .unionByName(Multimodal.syntheticWavsNearDup(
-          ids, "doc_id", base = false)))
-      val corAuds = audioSig(Multimodal.syntheticWavsNearDup(
-        ids.filter(bucket < 70), "doc_id", twins = false))
-      Dedup.pairNearDupIncremental(incTexts, corTexts, incAuds, corAuds,
-        "doc_id", "text", "media_id", "afp",
-        shingleSize = 3, bands = 8, rowsPerBand = 2, threshold = 0.5,
-        maxHamming = 3, maxBucket = 64)
-    }),
-
-    "pair_neardup_video" -> ((s, dir) => {
-      // the third pair modality (video-caption — clip/caption corpora):
-      // same composition, the Hamming side over the video clip-dHash
-      // family (AVI demux → frame-step dHash fold). With audio this
-      // completes the rule across every fingerprinted media modality
-      // the engine ships — one registration each, zero new machinery.
-      val d = Tables.documents(s, dir)
-      val ids = d.select(col("doc_id"))
-      val bucket = graft.util.Sampling.md5Bucket(col("doc_id"))
-      val twinTexts = d.filter(bucket < 5)
-        .select((col("doc_id") + lit(10000000L)).as("doc_id"),
-          concat(col("text"), lit(" repost")).as("text"))
-      val incTexts = d.filter(bucket >= 70)
-        .select(col("doc_id"), col("text")).unionByName(twinTexts)
-      val corTexts = d.filter(bucket < 70).select(col("doc_id"), col("text"))
-      val incVids = videoSig(Multimodal.syntheticAvisNearDup(
-          ids.filter(bucket >= 70), "doc_id", twins = false)
-        .unionByName(Multimodal.syntheticAvisNearDup(
-          ids, "doc_id", base = false)))
-      val corVids = videoSig(Multimodal.syntheticAvisNearDup(
-        ids.filter(bucket < 70), "doc_id", twins = false))
-      Dedup.pairNearDupIncremental(incTexts, corTexts, incVids, corVids,
-        "doc_id", "text", "media_id", "clip_dhash",
-        shingleSize = 3, bands = 8, rowsPerBand = 2, threshold = 0.5,
-        maxHamming = 3, maxBucket = 64)
-    }),
-
     "vecindex_liststats" -> ((s, dir) => {
       // the capstats row for the SERVING index's list geometry (the
       // dedup_semantic_liststats convention): a hot IVF list is a slow
@@ -3858,14 +3559,9 @@ object SparkEntry {
       // here if a probe row has not run yet — same family dirs, same
       // params), so the row costs three 8-byte-column scans, zero
       // decodes.
-      val ids = Tables.documents(s, dir).select(col("doc_id"))
-      val bucket = graft.util.Sampling.md5Bucket(col("doc_id"))
-      val sdi = ensureMediaImageStore(s, dir)
-      val sdv = ensureMediaVideoStore(s, dir)
-      val sda = ensureMediaAudioStore(s, dir)
-      def statsOf(modality: String, sd: String, hcol: String) =
-        graft.dedup.MediaStore.read(s, sd)
-          .select(col(hcol).as("_h"))
+      Modalities.map { m =>
+        graft.dedup.MediaStore.read(s, ensureMediaStore(s, dir, m))
+          .select(col(m.hcol).as("_h"))
           .select(posexplode(array((0 until 4).map { b =>
             shiftright(col("_h"), b * 16).bitwiseAND(0xFFFFL)
           }: _*)).as(Seq("band", "key")))
@@ -3874,11 +3570,9 @@ object SparkEntry {
           .agg(count(lit(1)).as("n_buckets"),
             max(col("_n")).as("max_bucket"),
             sum(when(col("_n") > 64, 1L).otherwise(0L)).as("over_cap"))
-          .select(lit(modality).as("modality"), col("n_buckets"),
+          .select(lit(m.name).as("modality"), col("n_buckets"),
             col("max_bucket"), col("over_cap"))
-      statsOf("image", sdi, "dhash")
-        .unionByName(statsOf("video", sdv, "clip_dhash"))
-        .unionByName(statsOf("audio", sda, "afp"))
+      }.reduce(_ unionByName _)
     }),
 
     "store_capstats" -> ((s, dir) => {
@@ -3919,100 +3613,25 @@ object SparkEntry {
           (col("_b") + col("_d")).as("n_rows"),
           col("_d").as("n_appended"),
           (col("_d") > 0).cast("long").as("due_compact"))
-      metaRow("bloom", ensureBloomStore(s, dir))
-        .unionByName(metaRow("bloom_ab", ensureBloomAbStore(s, dir)))
-        .unionByName(metaRow("bloom_lines", ensureBloomLinesStore(s, dir)))
-        .unionByName(metaRow("bloom_lines_ab",
-          ensureBloomLinesAbStore(s, dir)))
-        .unionByName(cntRow("minhash", SignatureStore.read(s,
-          ensureMinhashStore(s, dir)).banded, lit(false)))
-        .unionByName(spansRow)
-        .unionByName(cntRow("semantic", graft.simops.SemanticStore.read(s,
-          ensureSemanticStore(s, dir)).assigned, lit(false)))
-        .unionByName(cntRow("media_image",
-          MediaStore.read(s, ensureMediaImageStore(s, dir)), lit(false)))
-        .unionByName(cntRow("media_video",
-          MediaStore.read(s, ensureMediaVideoStore(s, dir)), lit(false)))
-        .unionByName(cntRow("media_audio",
-          MediaStore.read(s, ensureMediaAudioStore(s, dir)), lit(false)))
-        .unionByName(cntRow("vecindex",
-          openVecIndex(s, ensureVecIndexStore(s, dir)).coded,
-          lit(false)))
-        .unionByName(cntRow("vecindex_ab",
+      (Seq(metaRow("bloom", ensureBloomStore(s, dir)),
+        metaRow("bloom_ab", ensureBloomAbStore(s, dir)),
+        metaRow("bloom_lines", ensureBloomLinesStore(s, dir)),
+        metaRow("bloom_lines_ab", ensureBloomLinesAbStore(s, dir)),
+        cntRow("minhash", SignatureStore.read(s,
+          ensureMinhashStore(s, dir)).banded, lit(false)),
+        spansRow,
+        cntRow("semantic", graft.simops.SemanticStore.read(s,
+          ensureSemanticStore(s, dir)).assigned, lit(false))) ++
+        Modalities.map(m => cntRow(m.family,
+          MediaStore.read(s, ensureMediaStore(s, dir, m)), lit(false))) ++
+        Seq(cntRow("vecindex",
+          openVecIndex(s, ensureVecIndexStore(s, dir)).coded, lit(false)),
+        cntRow("vecindex_ab",
           openVecIndex(s, ensureVecIndexAbStore(s, dir)).coded,
-          graft.util.Sampling.md5Bucket(col("vec_id")) >= 70))
-    }),
-
-    "audio_neardup" -> ((s, dir) => {
-      // audio-CONTENT near-dedup — the third media modality joins the
-      // Hamming machinery: real WAV assemble → real javax.sound SPI
-      // decode → ch-0 window sums → multiplicative per-window mix
-      // bits (64-bit fingerprint; the gradient-hash design collapsed
-      // under the fixture's id-translation structure — see
-      // Multimodal.audioFpOf). The fixture plants re-encoded
-      // perturbed twin clips (id+10⁷, frame-0 ch-0 sample shifted
-      // +1000 wrapped) for the md5-chosen ~5% of ids; each twin lands
-      // at Hamming 0–1 and MUST pair. Only the 8-byte fingerprint
-      // crosses the shuffle — payloads decode once, in the
-      // partition-scoped SPI contract, and never move.
-      val ids = Tables.documents(s, dir).select(col("doc_id"))
-      val sig = audioSig(Multimodal.syntheticWavsNearDup(ids, "doc_id"))
-      Dedup.hammingPairs(sig, "media_id", "afp", maxHamming = 3,
-        maxBucket = 64)
-    }),
-
-    "audio_neardup_incremental" -> ((s, dir) => {
-      // the daily-ingest decision for the audio modality — the
-      // image_neardup_incremental shape: corpus = base clips of
-      // bucket<70 ids (decoded + fingerprinted once); increment =
-      // fresh base clips (bucket>=70) + ALL perturbed twins, each
-      // twin flagged against its original; only the increment's
-      // banded keys broadcast, the corpus fingerprint stream never
-      // shuffles.
-      val ids = Tables.documents(s, dir).select(col("doc_id"))
-      val bucket = graft.util.Sampling.md5Bucket(col("doc_id"))
-      val corpus = audioSig(Multimodal.syntheticWavsNearDup(
-        ids.filter(bucket < 70), "doc_id", twins = false))
-      val inc = audioSig(Multimodal.syntheticWavsNearDup(
-          ids.filter(bucket >= 70), "doc_id", twins = false)
-        .unionByName(Multimodal.syntheticWavsNearDup(
-          ids, "doc_id", base = false)))
-      Dedup.hammingIncremental(inc, corpus, "media_id", "afp",
-        maxHamming = 3, maxBucket = 64)
-    }),
-
-    "audio_neardup_probe" -> ((s, dir) => {
-      // the PROBE-ONLY store form for the audio modality (the
-      // image_neardup_probe convention, same MediaStore machinery):
-      // corpus fingerprints decoded ONCE at corpus-ingest time, the
-      // timed row pays O(increment) decode + broadcast band probes;
-      // corpus payloads never re-read (plan-fenced). Decision
-      // identical to audio_neardup_incremental — same oracle.
-      val ids = Tables.documents(s, dir).select(col("doc_id"))
-      val bucket = graft.util.Sampling.md5Bucket(col("doc_id"))
-      val sd = ensureMediaAudioStore(s, dir)
-      val inc = audioSig(Multimodal.syntheticWavsNearDup(
-          ids.filter(bucket >= 70), "doc_id", twins = false)
-        .unionByName(Multimodal.syntheticWavsNearDup(
-          ids, "doc_id", base = false)))
-      Dedup.hammingIncremental(inc, graft.dedup.MediaStore.read(s, sd),
-        "media_id", "afp", maxHamming = 3, maxBucket = 64)
-    }),
-
-    "audio_neardup_probe_updated" -> ((s, dir) => {
-      // the audio A/B ingest LOOP closed — the
-      // video_neardup_probe_updated layered-corpus design on the
-      // audio fingerprint: probe the twin-source bases (bucket < 5)
-      // against store-minus-those-ids, lazy-append the is_new
-      // survivors, probe fresh bases (bucket >= 85) + ALL twins;
-      // every twin's original lives only in the accepted-A layer, so
-      // each caught twin certifies the cross-increment append.
-      mediaUpdatedStored(s, dir, audioSig,
-        (i, base, twins) => Multimodal.syntheticWavsNearDup(
-          i, "doc_id", base = base, twins = twins),
-        ensureMediaAudioStore(s, dir), "afp")
+          graft.util.Sampling.md5Bucket(col("vec_id")) >= 70)))
+        .reduce(_ unionByName _)
     })
-  )
+  ) ++ mediaRows.map(r => r.name -> r.build)
 
   /** DuckDB oracle SQL, one per SQL-expressible query, same column names.
     * MinHash and SimHash use an md5 hash family precisely so their whole
@@ -5707,15 +5326,6 @@ object SparkEntry {
       s"""WITH vbase AS ($htmlExtractMainOracle)
          SELECT doc_id, main_len, main_fp FROM vbase""",
 
-    "video_neardup_incremental" -> videoNeardupIncrementalOracle,
-
-    // the probe-only store row is decision-identical to the in-DAG
-    // incremental (the parquet fingerprint round-trip changes the
-    // physics a bench row measures, never the answer) — same oracle
-    "video_neardup_probe" -> videoNeardupIncrementalOracle,
-
-    "video_neardup_probe_updated" -> videoNeardupUpdatedOracle,
-
     "seq_pack" ->
       // the distributed two-pass prefix sum equals this single global
       // window by construction (base + within-bucket prefix telescopes)
@@ -6251,74 +5861,6 @@ object SparkEntry {
            8::INTEGER AS width, 8::INTEGER AS height, r_sum, g_sum, b_sum
          FROM pooled""",
 
-    "image_neardup" ->
-      // the fixture pixels in closed form (quadratic-residue channels),
-      // perturbed twins included; the Spark side REALLY encodes and
-      // REALLY decodes each PNG before hashing, so a hash-green row
-      // pins codec round-trip + luma + dHash + banding all at once
-      s"""WITH $duckDhashCtes,
-         dbanded AS (SELECT media_id, dhash, b,
-             (dhash >> (b * 16)) & 65535 AS key
-           FROM dh, (SELECT unnest(generate_series(0, 3)) AS b)),
-         dcapped AS (SELECT b, key, media_id, dhash FROM dbanded
-           QUALIFY count(*) OVER (PARTITION BY b, key) <= 64),
-         dp AS (SELECT DISTINCT x.media_id AS doc_a, y.media_id AS doc_b,
-               bit_count(xor(x.dhash, y.dhash)) AS hamming
-               FROM dcapped x JOIN dcapped y USING (b, key)
-               WHERE x.media_id < y.media_id)
-         SELECT doc_a, doc_b, hamming FROM dp WHERE hamming <= 3""",
-
-    "video_neardup" ->
-      // the fixture clips in closed form (per-frame quadratic-residue
-      // pixels, every-frame perturbed twins, frames 0,2,4,6 sampled);
-      // the Spark side REALLY assembles and REALLY demuxes each AVI
-      // container before hashing, so a hash-green row pins chunk
-      // walking + bottom-up DIB addressing + frame sampling + luma +
-      // per-frame dHash + the majority vote + banding all at once
-      s"""WITH $duckVideoDhashCtes,
-         vbanded AS (SELECT media_id, clip_dhash, b,
-             (clip_dhash >> (b * 16)) & 65535 AS key
-           FROM vdh, (SELECT unnest(generate_series(0, 3)) AS b)),
-         vcapped AS (SELECT b, key, media_id, clip_dhash FROM vbanded
-           QUALIFY count(*) OVER (PARTITION BY b, key) <= 64),
-         vp AS (SELECT DISTINCT x.media_id AS doc_a, y.media_id AS doc_b,
-               bit_count(xor(x.clip_dhash, y.clip_dhash)) AS hamming
-               FROM vcapped x JOIN vcapped y USING (b, key)
-               WHERE x.media_id < y.media_id)
-         SELECT doc_a, doc_b, hamming FROM vp WHERE hamming <= 3""",
-
-    "image_neardup_incremental" -> imageNeardupIncrementalOracle,
-
-    "pair_neardup" -> pairNeardupOracle,
-
-    // the stored form decides identically (each side's persisted
-    // probe is decision-identical by its family's contract) — same
-    // replay
-    "pair_neardup_probe" -> pairNeardupOracle,
-
-    // the pair family's closed A/B loop: two-layer replay — accepted
-    // layer-A pairs join BOTH corpora before layer B probes
-    "pair_neardup_probe_updated" -> pairNeardupUpdatedOracle,
-
-    // the pair rule on the audio modality — same composition, the
-    // Hamming side over the audio fingerprint fixture
-    "pair_neardup_audio" -> pairNeardupAudioOracle,
-
-    // ...and on the video modality (clip-dHash fixture) — with audio
-    // this covers every fingerprinted media family
-    "pair_neardup_video" -> pairNeardupVideoOracle,
-
-    // the stored probe forms decide identically to their in-DAG
-    // twins (each side's persisted probe is decision-identical by
-    // its family's contract) — same replays
-    "pair_neardup_audio_probe" -> pairNeardupAudioOracle,
-    "pair_neardup_video_probe" -> pairNeardupVideoOracle,
-
-    // the audio/video pair A/B loops: the two-layer replay
-    // parameterized over each modality's fingerprint fixture
-    "pair_neardup_audio_probe_updated" -> pairNeardupAudioUpdatedOracle,
-    "pair_neardup_video_probe_updated" -> pairNeardupVideoUpdatedOracle,
-
     "vecindex_liststats" ->
       // the serving index's list-size distribution replayed from the
       // full-corpus HIER fit at count-derived geometry (asgh = every
@@ -6333,47 +5875,35 @@ object SparkEntry {
                     THEN 1 ELSE 0 END) AS BIGINT) AS over_2x_avg
          FROM ls, tot GROUP BY tot.nv, tot.nl""",
 
-    // same shared-oracle contract as the video probe row
-    "image_neardup_probe" -> imageNeardupIncrementalOracle,
-
-    "image_neardup_probe_updated" -> imageNeardupUpdatedOracle,
-
-    "media_band_capstats" ->
-      // the three fixture fingerprint chains replayed in closed form
-      // over the store slice (bucket<70 base media), then the band
+    "media_band_capstats" -> {
+      // each modality's fixture fingerprint chain replayed in closed
+      // form over the store slice (bucket<70 base media), then the band
       // geometry: distinct (band,key) buckets, the largest, and how
       // many exceed the 64 cap — integer-only, one row per modality
-      s"""WITH $duckDhashCtes, $duckVideoDhashCtes, $duckAudioFpCtes,
-         icor AS (SELECT dh.dhash AS h FROM dh
-                  JOIN mb ON mb.doc_id = dh.media_id
-                  WHERE dh.media_id < 10000000 AND mb.bkt < 70),
-         vcor AS (SELECT vdh.clip_dhash AS h FROM vdh
-                  JOIN vmb ON vmb.doc_id = vdh.media_id
-                  WHERE vdh.media_id < 10000000 AND vmb.bkt < 70),
-         acor AS (SELECT afh.afp AS h FROM afh
-                  JOIN amb ON amb.doc_id = afh.media_id
-                  WHERE afh.media_id < 10000000 AND amb.bkt < 70),
-         ib AS (SELECT b, (h >> (b * 16)) & 65535 AS key FROM icor,
+      def key(m: Modality) = m.name.take(1)
+      val cors = Modalities.map { m =>
+        import m.{duckMb => mb, duckSrc => src}
+        s"""${key(m)}cor AS (SELECT $src.${m.hcol} AS h FROM $src
+                  JOIN $mb ON $mb.doc_id = $src.media_id
+                  WHERE $src.media_id < 10000000 AND $mb.bkt < 70)"""
+      }
+      val bands = Modalities.map(key).map(k =>
+        s"""${k}b AS (SELECT b, (h >> (b * 16)) & 65535 AS key FROM ${k}cor,
                 (SELECT unnest(generate_series(0, 3)) AS b)),
-         ig AS (SELECT b, key, count(*) AS n FROM ib GROUP BY 1, 2),
-         vb AS (SELECT b, (h >> (b * 16)) & 65535 AS key FROM vcor,
-                (SELECT unnest(generate_series(0, 3)) AS b)),
-         vg AS (SELECT b, key, count(*) AS n FROM vb GROUP BY 1, 2),
-         ab AS (SELECT b, (h >> (b * 16)) & 65535 AS key FROM acor,
-                (SELECT unnest(generate_series(0, 3)) AS b)),
-         ag AS (SELECT b, key, count(*) AS n FROM ab GROUP BY 1, 2)
-         SELECT 'image' AS modality, count(*)::BIGINT AS n_buckets,
+         ${k}g AS (SELECT b, key, count(*) AS n FROM ${k}b GROUP BY 1, 2)""")
+      val unions = Modalities.tail.map(m => s"""
+         UNION ALL
+         SELECT '${m.name}', count(*)::BIGINT, max(n)::BIGINT,
+           CAST(sum(CASE WHEN n > 64 THEN 1 ELSE 0 END) AS BIGINT)
+           FROM ${key(m)}g""").mkString
+      val first = Modalities.head
+      s"""WITH ${Modalities.map(_.duckFixture).mkString(", ")},
+         ${(cors ++ bands).mkString(",\n         ")}
+         SELECT '${first.name}' AS modality, count(*)::BIGINT AS n_buckets,
            max(n)::BIGINT AS max_bucket,
            CAST(sum(CASE WHEN n > 64 THEN 1 ELSE 0 END) AS BIGINT)
-             AS over_cap FROM ig
-         UNION ALL
-         SELECT 'video', count(*)::BIGINT, max(n)::BIGINT,
-           CAST(sum(CASE WHEN n > 64 THEN 1 ELSE 0 END) AS BIGINT)
-           FROM vg
-         UNION ALL
-         SELECT 'audio', count(*)::BIGINT, max(n)::BIGINT,
-           CAST(sum(CASE WHEN n > 64 THEN 1 ELSE 0 END) AS BIGINT)
-           FROM ag""",
+             AS over_cap FROM ${key(first)}g$unions"""
+    },
 
     "store_capstats" -> {
       // every persisted-store count replayed from the base tables:
@@ -6383,6 +5913,8 @@ object SparkEntry {
       // banded minhash rows (8 per corpus doc), winnow base + accepted
       // delta rows, assignment/codes counts for the vector stores
       val pct = duckMd5Pct("doc_id")
+      val media = Modalities.map(m => s"\n         UNION ALL SELECT " +
+        s"'${m.family}', nd.n, 0::BIGINT, 0::BIGINT FROM nd").mkString
       s"""WITH $lineFixtureCtes,
          l AS (SELECT doc_id, ls, i, ls[i] AS line
                FROM ml, unnest(generate_series(1, len(ls))) AS t(i)),
@@ -6440,40 +5972,12 @@ object SparkEntry {
          UNION ALL SELECT 'minhash', 8 * nd.n, 0::BIGINT, 0::BIGINT FROM nd
          UNION ALL SELECT 'spans', nspan.n + nsdelta.n, nsdelta.n,
            (nsdelta.n > 0)::BIGINT FROM nspan, nsdelta
-         UNION ALL SELECT 'semantic', nec.n, 0::BIGINT, 0::BIGINT FROM nec
-         UNION ALL SELECT 'media_image', nd.n, 0::BIGINT, 0::BIGINT FROM nd
-         UNION ALL SELECT 'media_video', nd.n, 0::BIGINT, 0::BIGINT FROM nd
-         UNION ALL SELECT 'media_audio', nd.n, 0::BIGINT, 0::BIGINT FROM nd
+         UNION ALL SELECT 'semantic', nec.n, 0::BIGINT, 0::BIGINT FROM nec$media
          UNION ALL SELECT 'vecindex', ne.n, 0::BIGINT, 0::BIGINT FROM ne
          UNION ALL SELECT 'vecindex_ab', ne.n, ne.n - nec.n, 0::BIGINT
            FROM ne, nec"""
-    },
-
-    "audio_neardup" ->
-      // the fixture samples in closed form (two-prime quadratic
-      // residues), perturbed twins included; the Spark side REALLY
-      // assembles and REALLY SPI-decodes each WAV before hashing, so a
-      // hash-green row pins the PCM16 round trip + window sums + mix
-      // bits + banding all at once
-      s"""WITH $duckAudioFpCtes,
-         aband AS (SELECT media_id, afp, b,
-             (afp >> (b * 16)) & 65535 AS key
-           FROM afh, (SELECT unnest(generate_series(0, 3)) AS b)),
-         acapped AS (SELECT b, key, media_id, afp FROM aband
-           QUALIFY count(*) OVER (PARTITION BY b, key) <= 64),
-         ap AS (SELECT DISTINCT x.media_id AS doc_a, y.media_id AS doc_b,
-               bit_count(xor(x.afp, y.afp)) AS hamming
-               FROM acapped x JOIN acapped y USING (b, key)
-               WHERE x.media_id < y.media_id)
-         SELECT doc_a, doc_b, hamming FROM ap WHERE hamming <= 3""",
-
-    "audio_neardup_incremental" -> audioNeardupIncrementalOracle,
-
-    // probe-only store row, decision-identical by construction
-    "audio_neardup_probe" -> audioNeardupIncrementalOracle,
-
-    "audio_neardup_probe_updated" -> audioNeardupUpdatedOracle
-  )
+    }
+  ) ++ mediaRows.map(r => r.name -> r.oracle)
 
   /** Replays the HTML cleaning contract literally, same step order:
     * block drops → tag strip → entity decode (`&amp;` last) →
@@ -6694,16 +6198,28 @@ object SparkEntry {
            WHERE a.x < 8 GROUP BY 1)"""
   }
 
-  /** [[graft.dedup.Dedup.hammingIncremental]] replayed over a media
-    * fixture's closed-form fingerprints: corpus = base media of
-    * bucket<70 ids; increment = fresh base media (bucket>=70) + ALL
-    * perturbed twins; banded keys, matched-slice bucket cap, exact
-    * `bit_count(xor)` verify, best = lowest Hamming then lowest corpus
-    * id. One builder for both modalities (`src`/`hcol` name the
-    * fixture's fingerprint CTE and column, `mb` its md5-bucket CTE) —
-    * and for both the in-DAG incremental rows and their `_probe` store
-    * twins, which are decision-identical by construction.
+  /** [[graft.dedup.Dedup.hammingPairs]] replayed over a media
+    * fixture's closed-form fingerprints (`src(media_id, hcol)`, base
+    * media + perturbed twins): four 16-bit band keys, buckets capped at
+    * 64, pairs verified at Hamming ≤ 3. The Spark side REALLY encodes
+    * and REALLY decodes each payload before fingerprinting, so a
+    * hash-green row pins the codec round trip + fingerprint + banding
+    * all at once.
     */
+  private def hammingPairsOracleFrom(fixture: String, src: String,
+                                     hcol: String): String =
+    s"""WITH $fixture,
+         hband AS (SELECT media_id, $hcol, b,
+             ($hcol >> (b * 16)) & 65535 AS key
+           FROM $src, (SELECT unnest(generate_series(0, 3)) AS b)),
+         hcapped AS (SELECT b, key, media_id, $hcol FROM hband
+           QUALIFY count(*) OVER (PARTITION BY b, key) <= 64),
+         hp AS (SELECT DISTINCT x.media_id AS doc_a, y.media_id AS doc_b,
+               bit_count(xor(x.$hcol, y.$hcol)) AS hamming
+               FROM hcapped x JOIN hcapped y USING (b, key)
+               WHERE x.media_id < y.media_id)
+         SELECT doc_a, doc_b, hamming FROM hp WHERE hamming <= 3"""
+
   /** The verified-candidate half of the media incremental replay
     * (`xband` … `xver(inc_id, dup_id, hamming)`) — shared by the
     * per-modality incremental oracles and the `pair_neardup`
@@ -6731,6 +6247,16 @@ object SparkEntry {
                FROM xinc i JOIN xcap m USING (b, key)
                WHERE i.inc_id <> m.dup_id)"""
 
+  /** [[graft.dedup.Dedup.hammingIncremental]] replayed over a media
+    * fixture's closed-form fingerprints: corpus = base media of
+    * bucket<70 ids; increment = fresh base media (bucket>=70) + ALL
+    * perturbed twins; banded keys, matched-slice bucket cap, exact
+    * `bit_count(xor)` verify, best = lowest Hamming then lowest corpus
+    * id. One builder for every modality (`src`/`hcol` name the
+    * fixture's fingerprint CTE and column, `mb` its md5-bucket CTE) —
+    * and for both the in-DAG incremental rows and their `_probe` store
+    * twins, which are decision-identical by construction.
+    */
   private def mediaIncrementalOracleFrom(fixture: String, src: String,
                                          hcol: String, mb: String): String =
     s"""WITH $fixture,
@@ -6779,22 +6305,6 @@ object SparkEntry {
          FROM (SELECT p.doc_id FROM ptx p JOIN sb USING (doc_id)
                WHERE sb.sbucket >= 70 OR p.doc_id >= 10000000) i
          LEFT JOIN pbest ON pbest.inc_id = i.doc_id"""
-
-  private lazy val pairNeardupOracle: String =
-    pairNeardupOracleFrom(duckDhashCtes, "dh", "dhash", "mb")
-
-  /** The pair rule on the AUDIO modality (`pair_neardup_audio`):
-    * identical composition, the Hamming side over the audio
-    * fingerprint fixture — the rule is modality-generic.
-    */
-  private lazy val pairNeardupAudioOracle: String =
-    pairNeardupOracleFrom(duckAudioFpCtes, "afh", "afp", "amb")
-
-  /** The pair rule on the VIDEO modality (`pair_neardup_video`): the
-    * Hamming side over the clip-dHash fixture.
-    */
-  private lazy val pairNeardupVideoOracle: String =
-    pairNeardupOracleFrom(duckVideoDhashCtes, "vdh", "clip_dhash", "vmb")
 
   /** The PAIR A/B ingest loop replayed in SQL
     * (`pair_neardup_probe_updated` — the dedup_bloom_probe_updated
@@ -6880,23 +6390,6 @@ object SparkEntry {
                WHERE (sb.sbucket >= 85 AND p.doc_id < 10000000)
                   OR p.doc_id >= 10000000) i
          LEFT JOIN pbestb ON pbestb.inc_id = i.doc_id"""
-
-  private lazy val pairNeardupUpdatedOracle: String =
-    pairNeardupUpdatedOracleFrom(duckDhashCtes, "dh", "dhash", "mb")
-
-  /** The pair A/B loop on the AUDIO fixture
-    * (`pair_neardup_audio_probe_updated`) — identical two-layer
-    * replay, the Hamming side over the audio fingerprints.
-    */
-  private lazy val pairNeardupAudioUpdatedOracle: String =
-    pairNeardupUpdatedOracleFrom(duckAudioFpCtes, "afh", "afp", "amb")
-
-  /** The pair A/B loop on the VIDEO fixture
-    * (`pair_neardup_video_probe_updated`).
-    */
-  private lazy val pairNeardupVideoUpdatedOracle: String =
-    pairNeardupUpdatedOracleFrom(duckVideoDhashCtes, "vdh",
-      "clip_dhash", "vmb")
 
   /** The media A/B ingest loop replayed in SQL
     * (`image/video_neardup_probe_updated`): the persisted store minus
@@ -6993,24 +6486,6 @@ object SparkEntry {
                  ELSE 0 END)::BIGINT AS afp
            FROM awin GROUP BY 1)"""
   }
-
-  private lazy val imageNeardupIncrementalOracle: String =
-    mediaIncrementalOracleFrom(duckDhashCtes, "dh", "dhash", "mb")
-
-  private lazy val videoNeardupIncrementalOracle: String =
-    mediaIncrementalOracleFrom(duckVideoDhashCtes, "vdh", "clip_dhash", "vmb")
-
-  private lazy val imageNeardupUpdatedOracle: String =
-    mediaUpdatedOracleFrom(duckDhashCtes, "dh", "dhash", "mb")
-
-  private lazy val videoNeardupUpdatedOracle: String =
-    mediaUpdatedOracleFrom(duckVideoDhashCtes, "vdh", "clip_dhash", "vmb")
-
-  private lazy val audioNeardupIncrementalOracle: String =
-    mediaIncrementalOracleFrom(duckAudioFpCtes, "afh", "afp", "amb")
-
-  private lazy val audioNeardupUpdatedOracle: String =
-    mediaUpdatedOracleFrom(duckAudioFpCtes, "afh", "afp", "amb")
 
   /** CTE chain mirroring [[graft.simops.Similarity.nearDupPairsBanded]]
     * (numPlanes=64, bands=8, dim=64 — the plane matrix embedded

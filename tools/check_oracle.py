@@ -6,8 +6,14 @@ Usage: python3 tools/check_oracle.py <sfDir> <verifyOutDir>
 Reads each <verifyOutDir>/<name> parquet (Spark output) and runs the
 matching SQL from oracle_sql.json in DuckDB over the sfDir tables, then
 compares as unordered multisets of rows with columns sorted by name.
+
+Each result line carries `sha=`, the sha256 of the row's canonical
+Spark frame (`canon`, serialized as CSV), so two runs' outputs are
+compared by diffing that column:
+
+    diff <(awk '{print $1, $2}' run_a.txt) <(awk '{print $1, $2}' run_b.txt)
 """
-import sys, json, glob, os
+import sys, json, glob, os, hashlib
 import duckdb
 import pandas as pd
 
@@ -46,6 +52,7 @@ def main():
         con.sql(f"CREATE VIEW {t} AS FROM '{p}'")
     oracles = json.load(open(f"{out_dir}/oracle_sql.json"))
     results = {}
+    shas = {}
     for name in sorted(os.listdir(out_dir)):
         d = os.path.join(out_dir, name)
         if not os.path.isdir(d):
@@ -55,6 +62,9 @@ def main():
             results[name] = "NO_OUTPUT"
             continue
         spark_df = pd.concat([pd.read_parquet(f) for f in files])
+        a = canon(spark_df)
+        shas[name] = hashlib.sha256(
+            a.to_csv(index=False).encode()).hexdigest()
         if name not in oracles:
             results[name] = f"ROWS_ONLY rows={len(spark_df)}" + \
                 (" EMPTY!" if len(spark_df) == 0 else "")
@@ -64,7 +74,7 @@ def main():
         except Exception as e:
             results[name] = f"ORACLE_SQL_ERROR: {e}"
             continue
-        a, b = canon(spark_df), canon(duck_df)
+        b = canon(duck_df)
         if list(a.columns) != list(b.columns):
             results[name] = f"SCHEMA_MISMATCH spark={list(a.columns)} duck={list(b.columns)}"
         elif len(a) != len(b):
@@ -81,7 +91,8 @@ def main():
     width = max(len(k) for k in results)
     n_ok = sum(1 for v in results.values() if v.startswith(("OK", "ROWS_ONLY")))
     for k, v in sorted(results.items()):
-        print(f"{k:<{width}}  {v[:400]}")
+        sha = f"sha={shas.get(k, '-')}"
+        print(f"{k:<{width}}  {sha:<68}  {v[:400]}")
     print(f"\n{n_ok}/{len(results)} passing")
 
 
