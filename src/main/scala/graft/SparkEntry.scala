@@ -1136,8 +1136,8 @@ object SparkEntry {
   /** The two-probe replay of `dedup_spans_stored_updated`: probe 1
     * decides the accepted set, the store for probe 2 is the corpus
     * UNION the accepted A docs — the oracle-side mirror of
-    * [[graft.dedup.SignatureStore.appendSpans]] (df bumped, since the
-    * wcap2 count runs over the unioned membership).
+    * [[graft.dedup.SignatureStore.mergeSpanDeltas]] (df bumped, since
+    * the wcap2 count runs over the unioned membership).
     */
   private lazy val spanStoredUpdatedOracle: String =
     s"""WITH $duckWinnowFpCtes,
@@ -1300,7 +1300,9 @@ object SparkEntry {
   private val EmbNearDupBands = 4
   private val EmbNearDupThreshold = 0.9
 
-  /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
+  /** Flagship query on the sf0.001 test tables, the entry point of the
+    * contract with [[queries]] and [[oracleSql]] (RegistrySpec checks it
+    * returns rows).
     * Lag features per user joined against each user's mean: "which events
     * exceeded the user's average after rising for two steps" — the
     * value-vs-recent-history question the reference's lag matrices feed.
@@ -2110,7 +2112,7 @@ object SparkEntry {
       // join + ONE combinable per-doc aggregate. The fixture weight
       // table is the corpus's own top-2000 tokens (md5-fold weights
       // — both engines replay it), standing in for a trained model's
-      // file (Classifier.weightsFromFile is the external path);
+      // weight table (any (token, weight) frame scores the same way);
       // integer micro-unit score, OOV tokens weigh 0
       val d = Tables.documents(s, dir)
       graft.textops.Classifier.scoreLinear(d, "doc_id", "text",
@@ -2229,8 +2231,8 @@ object SparkEntry {
       // pairs and the hottest f grows linearly on Zipf text, so an
       // ABSOLUTE cap is what keeps candidate volume linear at 100 TB
       // (a relative cap re-admits the quadratic term). Jaccard is then
-      // measured over DISTINCTIVE shingles; the uncapped form stays as
-      // ngramJaccard/ngramJaccardPrefix (equivalence-tested trio), and
+      // measured over DISTINCTIVE shingles; the uncapped form is
+      // ngramJaccard (equivalence-tested against maxDf = 0), and
       // ngram_df_capstats makes the dropped mass visible
       Dedup.ngramJaccardSortedPrefix(Tables.documents(s, dir), "doc_id",
         "text", shingleSize = 3, threshold = 0.8, maxDf = 16)),
@@ -2306,7 +2308,7 @@ object SparkEntry {
     "dedup_spans_stored_updated" -> ((s, dir) => {
       // the span-store twin of dedup_minhash_stored_updated — the
       // passage-level daily-ingest loop CLOSED: probe increment A,
-      // appendSpans the accepted docs (df BUMPED on colliding
+      // merge the accepted docs' span deltas (df BUMPED on colliding
       // fingerprints, not left stale), probe increment B against the
       // updated store — a B doc re-serving a passage an ACCEPTED A doc
       // introduced is caught
@@ -2336,7 +2338,7 @@ object SparkEntry {
       // plan; decisions unchanged. The accepted DELTA rows derive from
       // the A probe's own winnow checkpoint (broadcast id filter) —
       // r16 re-winnowed the accepted slice inside the B plan
-      // (appendSpans over the raw accepted docs); winnowing is per-row
+      // (spanDeltaRows over the raw accepted docs); winnowing is per-row
       // deterministic, so the rows are identical (pinned in DedupSpec)
       val accIds = probeA.filter(col("is_new")).select(col("doc_id"))
         .localCheckpoint()

@@ -132,6 +132,11 @@ object Dedup {
     * each is referenced once per hash function, and a multi-referenced
     * non-cheap alias is what stops CollapseProject from inlining the
     * md5 transform into every element of the signature array.
+    *
+    * No registered row calls it: the rows sign through the fused
+    * [[graft.functions.MinHashSigExpr]] kernel. It stays as the
+    * Column-form spec that kernel is equivalence-tested against
+    * (BatchKernelSpec, KernelPropertiesSpec).
     */
   def minhashSignatureFromHalves(h1: Column, h2: Column,
                                  numHashes: Int): Column =
@@ -1132,8 +1137,9 @@ object Dedup {
     *
     * At corpus scales where the candidate join's quadratic term dominates
     * (one ubiquitous shingle = one quadratic bucket — nothing caps it
-    * here), use [[ngramJaccardPrefix]]: identical output
-    * (equivalence-tested), prefix-pruned index.
+    * here), use [[ngramJaccardSortedPrefix]]: identical output
+    * (equivalence-tested), prefix-pruned index. Kept as the brute-force
+    * side of that equivalence test.
     */
   def ngramJaccard(df: DataFrame, idCol: String, textCol: String,
                    shingleSize: Int = 3, threshold: Double = 0.2): DataFrame = {
@@ -1157,75 +1163,28 @@ object Dedup {
         round(col("_j"), 6).as("jaccard"))
   }
 
-  /** n-gram Jaccard with PREFIX FILTERING (the AllPairs/PPJoin principle):
-    * under any consistent global ordering of shingles, two sets with
-    * Jaccard ≥ t must share an element within their first
-    * `n − ⌈t·n⌉ + 1` shingles — so only those prefixes are indexed and
-    * joined. Rarest-first ordering puts prefixes in the smallest inverted
-    * buckets; at t = 0.8 the index shrinks ~5× and the candidate join
-    * ~25×. Candidates verify EXACTLY on the full shingle arrays, so the
-    * hashed prefix can only add candidates, never corrupt results —
-    * output identical to [[ngramJaccard]] (equivalence-tested).
-    *
-    * The scale path: worth its two extra stages (frequency join + per-doc
-    * window) once the corpus is large enough that candidate volume, not
-    * fixed stage cost, dominates — i.e., exactly the 100 TB regime.
-    */
-  def ngramJaccardPrefix(df: DataFrame, idCol: String, textCol: String,
-                         shingleSize: Int = 3,
-                         threshold: Double = 0.2): DataFrame = {
-    require(threshold >= 0.0 && threshold <= 1.0,
-      s"threshold in [0,1], got $threshold")  // t=0 ⇒ full index (no pruning)
-    val tokenized = graft.util.Par.spread(df)
-      .select(col(idCol).as("doc_id"),
-        TextOps.tokens(lower(col(textCol))).as("_toks"))
-    val withSh = tokenized.select(col("doc_id"),
-      TextOps.shinglesFromTokens(col("_toks"), shingleSize).as("sh"))
-    val occ = withSh.select(col("doc_id"),
-      explode_outer(graft.functions.XxSortedHashesExpr(col("sh"))).as("h"))
-
-    val hashed = withSh.select(col("doc_id"),
-      graft.functions.XxSortedHashesExpr(col("sh")).as("_hs"))
-
-    // global order = (frequency asc, hash): rarest shingles first, so
-    // prefixes land in the smallest inverted-index buckets
-    val freq = occ.groupBy("h").agg(count(lit(1)).as("cnt"))
-    val wDoc = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("doc_id")).orderBy(col("cnt"), col("h"))
-    val wDocAll = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("doc_id"))
-    val prefix = occ.join(freq, "h")
-      .withColumn("_rn", row_number().over(wDoc))
-      .withColumn("_n", count(lit(1)).over(wDocAll))
-      .filter(col("_rn") <=
-        col("_n") - ceil(lit(threshold) * col("_n")) + 1)
-      .select(col("doc_id"), col("h"))
-
-    val cand = prefix.as("x").join(prefix.as("y"), Seq("h"))
-      .filter(col("x.doc_id") < col("y.doc_id"))
-      .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-      .dropDuplicates("doc_a", "doc_b")
-
-    verifyCandidates(cand, hashed, threshold)
-  }
-
   /** Prefix-filtered n-gram Jaccard with the prefix computed INSIDE the
     * shingle array: the consistent global order the AllPairs bound needs
     * is plain xxhash64 order, so each document's prefix is just the
     * `n − ⌈t·n⌉ + 1` smallest hashes of its own array —
     * `array_sort` + `slice`, a pure projection. Zero shuffles touch the
-    * posting list before the candidate self-join (vs. three in
-    * [[ngramJaccardPrefix]]: frequency groupBy, frequency join, per-doc
-    * window), and candidates verify exactly, so output is identical to
-    * both other forms (equivalence-tested).
+    * posting list before the candidate self-join (a rarest-first global
+    * order would need three: frequency groupBy, frequency join, per-doc
+    * window), and candidates verify exactly, so with `maxDf = 0` the
+    * output is identical to [[ngramJaccard]] (equivalence-tested).
     *
     * Trade vs. rarest-first: a shingle of corpus frequency f lands in a
     * random ~(1−t) fraction of its documents' prefixes, so a hot-shingle
     * bucket still holds ~(1−t)·f postings — a (1−t)⁻² ≈ 25× pair
     * reduction at t = 0.8, but not the near-total exclusion rarest-first
-    * ordering gives. This is the default engine path; reach for
-    * [[ngramJaccardPrefix]] when a corpus is both huge AND dominated by
-    * a few ubiquitous shingles.
+    * ordering gives; `maxDf` is the cap for corpora dominated by a few
+    * ubiquitous shingles.
+    *
+    * INPUT CONTRACT: `idCol` must be unique in `df` (one text per id),
+    * as for [[minhashLsh]]: [[verifyCandidates]] stitches each pair's two
+    * hash arrays back with a one-row-per-role aggregation, so duplicate
+    * ids collapse to an arbitrary representative. Not checked at run
+    * time: a check would cost a job.
     */
   def ngramJaccardSortedPrefix(df: DataFrame, idCol: String,
                                textCol: String, shingleSize: Int = 3,
@@ -1318,6 +1277,11 @@ object Dedup {
     * to xxhash64 collisions within a pair's union (P ≈ |union|²/2⁶⁴ —
     * vanishing, and the same contract the plain inverted-index form
     * already has).
+    *
+    * INPUT CONTRACT: `hashed` has one row per `doc_id` (the caller's ids
+    * are unique). With a duplicate id the role stitch below keeps an
+    * arbitrary one of its arrays, where a double join would emit every
+    * combination. Not checked at run time: a check would cost a job.
     */
   private def verifyCandidates(cand: DataFrame, hashed: DataFrame,
                                threshold: Double): DataFrame = {

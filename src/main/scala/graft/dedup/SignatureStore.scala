@@ -170,23 +170,6 @@ object SignatureStore {
   def readSpans(spark: SparkSession, dir: String): DataFrame =
     spark.read.parquet(s"$dir/span_fps")
 
-  /** Span-store append. Unlike the minhash store, the span store
-    * DENORMALIZES each fingerprint's corpus df onto every row, so an
-    * append must also BUMP the df of existing rows whose fp the
-    * increment re-serves — otherwise the boilerplate cap goes stale as
-    * the corpus grows. Implemented as [[mergeSpanDeltas]] over the
-    * increment's freshly-winnowed rows: the result is EXACTLY
-    * [[buildSpans]] of the unioned corpus, without touching corpus
-    * text (equivalence pinned in DedupSpec). O(store) per call — a
-    * literal daily append uses the delta path instead
-    * ([[appendSpansWrite]] + [[Dedup.spanIncrementalStoredDelta]]
-    * probes + [[compactSpans]] at compaction cadence).
-    */
-  def appendSpans(storeFps: DataFrame, accepted: DataFrame, idCol: String,
-                  textCol: String, k: Int = 8, w: Int = 4): DataFrame = {
-    mergeSpanDeltas(storeFps, spanDeltaRows(accepted, idCol, textCol, k, w))
-  }
-
   /** The increment's bare `(doc_id, fp)` winnow rows — the DELTA unit
     * of the span store's append-only path (no df: document frequency
     * is a CORPUS property that goes stale the moment the next delta
@@ -202,8 +185,10 @@ object SignatureStore {
   /** Persisted span append, the `appendWrite` twin for the span store:
     * write ONLY the increment's (doc_id, fp) rows as parquet deltas
     * under `dir/span_deltas` — O(increment) work, NO rewrite of the
-    * O(corpus) base store (the literal-daily-append cost
-    * [[appendSpans]]'s full-store df bump carries). Probes against
+    * O(corpus) base store (the cost an in-place append pays: the span
+    * store DENORMALIZES each fingerprint's corpus df onto every row, so
+    * a merged append must also bump the df of existing rows). Probes
+    * against
     * base+deltas go through [[Dedup.spanIncrementalStoredDelta]];
     * [[compactSpans]] folds the deltas back into the denormalized base
     * at compaction cadence, restoring the single-scan pushed-predicate
@@ -230,8 +215,8 @@ object SignatureStore {
   }
 
   /** Merge bare delta rows into a denormalized base store frame —
-    * EXACTLY [[buildSpans]] of the unioned corpus (the [[appendSpans]]
-    * equivalence, pinned in DedupSpec), computed from stored rows
+    * EXACTLY [[buildSpans]] of the unioned corpus (df of existing rows
+    * bumped, not left stale; pinned in DedupSpec), computed from stored rows
     * without touching corpus text. Cost: two scans of the 8-byte-row
     * base (df bump + base-df lookup for delta fps) — the compaction
     * unit, not the per-probe unit.

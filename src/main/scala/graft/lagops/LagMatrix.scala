@@ -206,8 +206,9 @@ object Lead {
   * Plan shape: all `window` lag terms share ONE WindowSpec, so
   * Catalyst's CollapseWindow evaluates the whole weighted matrix in a
   * single Window pass over one (series-key) exchange — the planner
-  * analogue of reading W lag-matrix columns at once (the same
-  * property LagMatrixSpec pins for the plain lag family).
+  * analogue of reading W lag-matrix columns at once (pinned for both
+  * `ewma` and the plain lag family by PlanAuditSpec "lag_2d_partitioned
+  * collapses all lags into one Window pass").
   */
 object Ewma {
   /** @param maxTailMass loudest-possible guard on the truncation
@@ -294,7 +295,10 @@ object Rolling {
 }
 
 /** Method-call sugar mirroring the reference's `CreateLagMatrix` trait
-  * (`src/lib.rs:258-440`): `df.lagMatrix(...)` etc.
+  * (`src/lib.rs:258-440`): `df.lagMatrix(...)` etc. No registered row
+  * calls it; it stays as the port of the paper's own extension trait
+  * (README's Usage block imports it), and SyntaxSpec pins that each
+  * method returns the object API's rows.
   */
 object implicits {
   implicit final class LagOps(private val df: DataFrame) extends AnyVal {

@@ -19,7 +19,10 @@ final case class ColumnMajor(seriesLength: Int) extends MatrixLayout
   */
 object SeriesInput {
 
-  /** 1-D series → `(t: long, value: double)`. */
+  /** 1-D series → `(t: long, value: double)`. No registered row calls
+    * it (rows read parquet); it stays as the port of the reference's
+    * 1-D input surface, pinned in SeriesInputSpec.
+    */
   def fromSeq(spark: SparkSession, data: Seq[Double]): DataFrame = {
     import spark.implicits._
     data.zipWithIndex.map { case (v, i) => (i.toLong, v) }.toDF("t", "value")

@@ -110,46 +110,6 @@ object Multimodal {
     }
   }
 
-  /** Resize: REAL decode→scale→re-encode through [[resizeImage]] when
-    * the payload is a decodable image; non-image payloads (audio/video
-    * — no codec in this environment) keep the deterministic stand-in
-    * bytes. Same pipeline shape either way: per-row narrow transform,
-    * payload never shuffled.
-    */
-  def resize(ds: Dataset[MediaRecord], w: Int, h: Int): Dataset[MediaRecord] = {
-    import ds.sparkSession.implicits._
-    ds.mapPartitions { it =>
-      it.map { r =>
-        resizeImage(r.content, w, h) match {
-          case Some(png) =>
-            r.copy(content = png, width = Some(w), height = Some(h))
-          case None =>
-            // STUB (non-image): stand-in bytes = digest of (content, box)
-            val fake = md5Hex(r.content ++ s"${w}x$h".getBytes("UTF-8"))
-              .getBytes("UTF-8")
-            r.copy(content = fake, width = Some(w), height = Some(h))
-        }
-      }
-    }
-  }
-
-  /** Frame sampling stub: splits the payload into `n` contiguous chunks
-    * standing in for decoded frames. The real version calls the codec per
-    * partition; schema (media_id, frame_no, frame_bytes) and the
-    * shuffle-free shape are what the pipeline depends on.
-    */
-  def sampleFrames(ds: Dataset[MediaRecord], n: Int): DataFrame = {
-    import ds.sparkSession.implicits._
-    ds.flatMap { r =>
-      val step = math.max(1, r.content.length / n)
-      (0 until n).iterator.map { i =>
-        val from = math.min(i * step, r.content.length)
-        val until = math.min(from + step, r.content.length)
-        (r.media_id, i, r.content.slice(from, until))
-      }
-    }.toDF("media_id", "frame_no", "frame_bytes")
-  }
-
   // ---- REAL image codec (JDK javax.imageio — no native libraries) ----
 
   /** Decode an image payload with the JDK's ImageIO and return exact
@@ -215,34 +175,6 @@ object Multimodal {
     if (img == null) None else Some(statsOf(img))
   }
 
-  /** Decode → scale → re-encode (PNG) with the JDK codec: the REAL
-    * resize for image payloads. Returns `None` for undecodable bytes.
-    * Bilinear interpolation; output dimensions are exact, output bytes
-    * deterministic for a given JDK (pin exact pixel expectations only
-    * on lossless inputs and dimension/geometry assertions otherwise).
-    */
-  def resizeImage(bytes: Array[Byte], w: Int, h: Int): Option[Array[Byte]] =
-    readImage(bytes).map { src =>
-      resizeEncode(src, w, h)
-    }
-
-  private def resizeEncode(src: java.awt.image.BufferedImage, w: Int,
-                           h: Int): Array[Byte] = {
-    {
-      val dst = new java.awt.image.BufferedImage(w, h,
-        java.awt.image.BufferedImage.TYPE_INT_RGB)
-      val g = dst.createGraphics()
-      try {
-        g.setRenderingHint(java.awt.RenderingHints.KEY_INTERPOLATION,
-          java.awt.RenderingHints.VALUE_INTERPOLATION_BILINEAR)
-        g.drawImage(src, 0, 0, w, h, null)
-      } finally g.dispose()
-      val bos = new java.io.ByteArrayOutputStream()
-      javax.imageio.ImageIO.write(dst, "png", bos)
-      bos.toByteArray
-    }
-  }
-
   /** Bilinear-resize a decoded image in memory (no PNG re-encode /
     * re-decode round trip — the [[dhashOf]] path pays two needless
     * codec passes otherwise). */
@@ -296,7 +228,9 @@ object Multimodal {
   }
 
   /** Render the deterministic 8×8 RGB fixture image for an id and
-    * encode it as a REAL PNG via ImageIO. Pixel (x, y) of image `id`
+    * encode it as a REAL PNG via ImageIO — a single-image test fixture
+    * (MultimodalSpec); the rows build frames with [[syntheticImages]].
+    * Pixel (x, y) of image `id`
     * has channels
     * `r = (id·31 + x·7 + y·13) mod 256`,
     * `g = (id·17 + x·11 + y·3) mod 256`,
@@ -408,7 +342,9 @@ object Multimodal {
   }
 
   /** Perceptual hash of an arbitrary image payload: decode, bilinear
-    * resize to the canonical 9×8 luma grid, [[dhash64]]. `None` for
+    * resize to the canonical 9×8 luma grid, [[dhash64]]. The scalar
+    * fixture MultimodalSpec checks [[dhashFeatures]] against; no
+    * registered row calls it. `None` for
     * undecodable bytes. The resize makes re-encoded/rescaled
     * duplicates land within small Hamming distance — the property
     * [[graft.dedup.Dedup.hammingPairs]] turns into candidate pairs.
@@ -1311,8 +1247,8 @@ object Multimodal {
     * pixel is the floor-mean of its fx×fy source block, per channel.
     * This is the standard thumbnailing kernel for shrink-only resizes
     * (OpenCV's INTER_AREA at integer ratios) implemented in plain
-    * integer arithmetic, so unlike the JDK's bilinear
-    * [[resizeImage]] its output is EXACTLY replayable in SQL — which
+    * integer arithmetic, so unlike the JDK's bilinear scaling
+    * ([[scaleTo]]) its output is EXACTLY replayable in SQL — which
     * is what lets the registered resize row hash-verify real resized
     * pixels instead of only asserting geometry.
     */

@@ -684,9 +684,20 @@ object Pipeline {
       case (acc, (stratum, p)) => when(strata === stratum, lit(p)).otherwise(acc)
     }
 
-  /** [[corpusClean]]'s stage 1, exposed so plan audits can inspect it:
-    * the survivors checkpoint inside [[corpusClean]] truncates lineage,
-    * hiding this stage from the composite query's executed plan.
+  /** The pre-checkpoint stage of [[corpusClean]]: gate → narrow
+    * projection → fingerprint dedup → stratified sample. Exposed so the
+    * plan audit can pin its shuffle payload (the composite's survivors
+    * checkpoint truncates lineage, hiding this stage from its plan).
+    *
+    * Everything downstream of the gate needs only (id, stratum,
+    * quality, n_tokens, fingerprint) — so the two text derivatives are
+    * computed IN the scan stage and the text is projected away BEFORE
+    * the dedup exchange. The fingerprint window then shuffles five
+    * narrow columns instead of document bodies: at 100 TB that is the
+    * difference between shuffling ids and shuffling the corpus.
+    * (Token counts are computed for dup docs that dedup then drops —
+    * a narrow per-row cost, bounded by the dup rate, traded for a
+    * corpus-sized reduction in shuffle bytes.)
     *
     * Spread BEFORE the narrow hash stage: quality scoring, content
     * fingerprinting, and token counting all run in the scan stage, so
@@ -694,14 +705,37 @@ object Pipeline {
     * on one core (no-op at scale, where the source has many splits).
     * The gate filter carries the noPushdown guard for the same reason:
     * pushdown would substitute the full quality expression back into
-    * the one-split scan below the spread exchange.
+    * the one-split scan below the spread exchange (PlanAuditSpec
+    * "corpus_clean's quality gate stays fenced above the spread
+    * exchange").
     */
-  def qualityGate(docs: DataFrame, idCol: String, strataCol: String,
-                  textCol: String, minQuality: Double): DataFrame =
-    graft.util.Par.spread(docs)
+  def cleanedNarrow(docs: DataFrame, idCol: String, textCol: String,
+                    strataCol: String, minQuality: Double,
+                    pctByStratum: Map[String, Int],
+                    defaultPct: Int): DataFrame = {
+    // ONE gate-kernel pass feeds both the quality filter and the token
+    // count: the struct is materialized as a column BELOW the filter, so
+    // `n_tokens` above it is a free field extraction, not a second scan
+    // of the text (projections don't collapse across the Filter, so a
+    // gate that scored inline and counted tokens after it would run the
+    // kernel twice).
+    val gated = graft.util.Par.spread(docs)
       .select(col(idCol), col(strataCol), col(textCol),
-        TextOps.qualityScore(col(textCol)).as("quality"))
+        TextOps.gateStats(col(textCol)).as("_ts"))
+      .withColumn("quality", TextOps.qualityScoreFrom(col("_ts")))
       .filter(graft.util.Par.noPushdown(col("quality") >= minQuality))
+    val narrow = gated.select(col(idCol), col(strataCol), col("quality"),
+      col("_ts").getField("n_tokens").cast("long").as("n_tokens"),
+      TextOps.fingerprint(col(textCol)).as("_fp"))
+    val w = Window
+      .partitionBy(col("_fp")).orderBy(col(idCol))
+    narrow
+      .withColumn("_rn", row_number().over(w))
+      .filter(col("_rn") === 1)
+      .drop("_fp", "_rn")
+      .filter(md5Bucket(col(idCol)) <
+        pctFor(col(strataCol), pctByStratum, defaultPct))
+  }
 
   /** The WHOLE corpus-preparation pipeline as ONE DAG — the operators
     * above composed the way a real pretraining data build runs them:
@@ -722,48 +756,6 @@ object Pipeline {
     * data shuffles are the dedup fingerprint exchange, the pack-bucket
     * window exchange, and the final id join.
     */
-  /** The pre-checkpoint stage of [[corpusClean]]: gate → narrow
-    * projection → fingerprint dedup → stratified sample. Exposed so the
-    * plan audit can pin its shuffle payload (the composite's survivors
-    * checkpoint truncates lineage, hiding this stage from its plan).
-    *
-    * Everything downstream of the gate needs only (id, stratum,
-    * quality, n_tokens, fingerprint) — so the two text derivatives are
-    * computed IN the scan stage and the text is projected away BEFORE
-    * the dedup exchange. The fingerprint window then shuffles five
-    * narrow columns instead of document bodies: at 100 TB that is the
-    * difference between shuffling ids and shuffling the corpus.
-    * (Token counts are computed for dup docs that dedup then drops —
-    * a narrow per-row cost, bounded by the dup rate, traded for a
-    * corpus-sized reduction in shuffle bytes.)
-    */
-  def cleanedNarrow(docs: DataFrame, idCol: String, textCol: String,
-                    strataCol: String, minQuality: Double,
-                    pctByStratum: Map[String, Int],
-                    defaultPct: Int): DataFrame = {
-    // ONE gate-kernel pass feeds both the quality filter and the token
-    // count: the struct is materialized as a column BELOW the filter, so
-    // `n_tokens` above it is a free field extraction, not a second scan
-    // of the text (projections don't collapse across the Filter, so the
-    // inline-qualityGate form would run the kernel twice).
-    val gated = graft.util.Par.spread(docs)
-      .select(col(idCol), col(strataCol), col(textCol),
-        TextOps.gateStats(col(textCol)).as("_ts"))
-      .withColumn("quality", TextOps.qualityScoreFrom(col("_ts")))
-      .filter(graft.util.Par.noPushdown(col("quality") >= minQuality))
-    val narrow = gated.select(col(idCol), col(strataCol), col("quality"),
-      col("_ts").getField("n_tokens").cast("long").as("n_tokens"),
-      TextOps.fingerprint(col(textCol)).as("_fp"))
-    val w = Window
-      .partitionBy(col("_fp")).orderBy(col(idCol))
-    narrow
-      .withColumn("_rn", row_number().over(w))
-      .filter(col("_rn") === 1)
-      .drop("_fp", "_rn")
-      .filter(md5Bucket(col(idCol)) <
-        pctFor(col(strataCol), pctByStratum, defaultPct))
-  }
-
   def corpusClean(docs: DataFrame, idCol: String, textCol: String,
                   strataCol: String, minQuality: Double,
                   pctByStratum: Map[String, Int], defaultPct: Int,

@@ -450,28 +450,6 @@ object Embed {
     math.min(math.max(want, minNlist.toLong), maxNlist.toLong).toInt
   }
 
-  /** [[semanticDedup]] with nlist derived from the corpus size: ONE
-    * cheap count action (a column-pruned scan — parquet answers it
-    * from footer metadata) picks nlist = [[autoNlist]](N), so the
-    * operator self-tunes as the corpus grows instead of shipping a
-    * fixed cluster count. The count is the same class of bounded
-    * driver action the index fit already performs.
-    *
-    * NOTE: the FLAT assignment here is O(n·nlist·dim) — fine while
-    * nlist is small, but at the autoNlist contract nlist grows with
-    * the corpus, making flat assignment O(n²·dim/targetListSize).
-    * Past a few thousand lists use [[semanticDedupHier]] (the
-    * registered `dedup_semantic` path): same decision rule, two-level
-    * assignment at O(n·√nlist·dim).
-    */
-  def semanticDedupAuto(df: DataFrame, idCol: String, vecCol: String,
-                        threshold: Double, targetListSize: Int = 32,
-                        iters: Int = 1,
-                        fitSamplePct: Int = 100): DataFrame =
-    semanticDedup(df, idCol, vecCol, threshold,
-      nlist = autoNlist(df.select(col(idCol)).count(), targetListSize),
-      iters = iters, fitSamplePct = fitSamplePct)
-
   def semanticDedup(df: DataFrame, idCol: String, vecCol: String,
                     threshold: Double, nlist: Int = 16, iters: Int = 1,
                     fitSamplePct: Int = 100): DataFrame = {

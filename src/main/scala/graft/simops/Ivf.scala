@@ -1,9 +1,8 @@
 package graft.simops
 
 import graft.functions.VectorOps
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** IVF (inverted-file) approximate nearest neighbor — the second scale
   * path next to hyperplane LSH ([[Similarity.lshTopK]]).
@@ -119,22 +118,6 @@ object Ivf {
           if (r.isNullAt(i)) 0.0 else r.getDouble(i)))).sortBy(_._1)
     }
     cents
-  }
-
-  /** (list_id, centroid array<double>) as a DataFrame — deterministic for
-    * a fixed input (see the rounding note in [[fitSeq]]).
-    */
-  def fitCentroids(df: DataFrame, idCol: String, vecCol: String,
-                   nlist: Int, iters: Int = 2,
-                   fitSamplePct: Int = 100): DataFrame = {
-    val spark = df.sparkSession
-    val schema = StructType(Seq(
-      StructField("list_id", IntegerType, nullable = false),
-      StructField("centroid", ArrayType(DoubleType), nullable = false)))
-    val rows = new java.util.ArrayList[Row]()
-    fitSeq(df, idCol, vecCol, nlist, iters, fitSamplePct)
-      .foreach { case (lid, c) => rows.add(Row(lid, c)) }
-    spark.createDataFrame(rows, schema)
   }
 
   /** All-centroid cosine sims for `v` as one codegen'd kernel call
@@ -393,33 +376,6 @@ object Ivf {
         first(col("_v")).as("_v"),
         coalesce(max_by(col("sub_id"), col("_ord")), lit(0)).as("sub_id"))
   }
-
-  /** Literal-path fit + two-level assignment as one public call — the
-    * comparison surface IvfSpec (and, at real geometries, a probe
-    * removed after acd062c) pins [[assignHierR]] against (same output
-    * shape: `_id`, `_v`, coarse_id, list_id).
-    */
-  def assignHierLiteral(df: DataFrame, idCol: String, vecCol: String,
-                        nlist: Int, iters: Int, fitSamplePct: Int,
-                        knownCount: Long = -1L): DataFrame = {
-    val h = fitHier(df, idCol, vecCol, nlist, iters, fitSamplePct,
-      knownCount)
-    graft.util.Par.spread(df).select(col(idCol).as("_id"),
-      col(vecCol).cast("array<double>").as("_v"))
-      .withColumn("_sims", simsCol(h.coarse, col("_v")))
-      .withColumn("coarse_id", nearestList(h.coarse, col("_sims")))
-      .drop("_sims")
-      .withColumn("list_id", h.listIdCol(col("_v"), col("coarse_id")))
-  }
-
-  /** [[fitHierR]] + [[assignHierR]] as one call — the relational twin
-    * of [[assignHierLiteral]].
-    */
-  def assignHierRelational(df: DataFrame, idCol: String, vecCol: String,
-                           nlist: Int, iters: Int, fitSamplePct: Int,
-                           knownCount: Long = -1L): DataFrame =
-    assignHierR(df, idCol, vecCol,
-      fitHierR(df, idCol, vecCol, nlist, iters, fitSamplePct, knownCount))
 
   /** Full two-level relational assignment: literal coarse argmax
     * (pure projection) then [[assignSubR]]; output mirrors the

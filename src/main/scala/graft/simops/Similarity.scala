@@ -218,7 +218,8 @@ object Similarity {
     * The DuckDB oracle reproduces the SAME banded semantics — the plane
     * matrix is embedded literally in the generated SQL (see
     * SparkEntry.oracleSql) — so the driver hash-checks this operator
-    * exactly even though it is approximate vs. [[nearDupPairs]].
+    * exactly even though it is approximate vs. the exact all-pairs
+    * scan.
     *
     * PRECONDITION: `idCol` must be unique — candidate pairs dedup as
     * bare id pairs before vectors re-join by id (see [[lshTopK]]); a
@@ -267,25 +268,6 @@ object Similarity {
         col("n").as("na")), "id_a")
       .join(vecs.select(col("id").as("id_b"), col("v").as("vb"),
         col("n").as("nb")), "id_b")
-      .withColumn("sim", round(
-        cosinePre(dot(col("va"), col("vb")), col("na"), col("nb")), 4))
-      .filter(col("sim") >= threshold)
-      .select(col("id_a"), col("id_b"), col("sim"))
-  }
-
-  /** Embedding-cosine near-duplicate pairs, all-pairs form: exact O(n²)
-    * pair scan — norms are hoisted (n, not n², norm computations) and
-    * each pair is one codegen'd dot. Kept as the small-input oracle twin
-    * and recall yardstick for [[nearDupPairsBanded]]; the banded form is
-    * the one registered for the 100 TB path.
-    */
-  def nearDupPairs(df: DataFrame, idCol: String, vecCol: String,
-                   threshold: Double): DataFrame = {
-    val a = df.select(col(idCol).as("id_a"), col(vecCol).as("va"),
-      norm(col(vecCol)).as("na"))
-    val b = df.select(col(idCol).as("id_b"), col(vecCol).as("vb"),
-      norm(col(vecCol)).as("nb"))
-    a.join(b, col("id_a") < col("id_b"))
       .withColumn("sim", round(
         cosinePre(dot(col("va"), col("vb")), col("na"), col("nb")), 4))
       .filter(col("sim") >= threshold)

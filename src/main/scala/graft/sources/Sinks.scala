@@ -2,24 +2,20 @@ package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{DataStreamWriter, OutputMode}
 
 /** Write-side helpers — the handoff from the engine to downstream
-  * consumers (training readers, checkpointed streams).
+  * consumers: JSONL corpora, and the task-commit protocol the raw WARC
+  * and tar shard writers share.
   *
   * The scale rules these encode:
-  *   - ONE exchange per write: cluster (repartition on the shard key)
-  *     and order (sortWithinPartitions) in the same pass the writer
-  *     consumes, so layout costs a single shuffle, never a global sort.
+  *   - ONE exchange per write: a sharded write clusters (repartition on
+  *     the shard key) in the same pass the writer consumes, so layout
+  *     costs a single shuffle, never a global sort.
   *   - `partitionBy` on a LOW-cardinality derived shard, never on a raw
   *     id (a million-value partition column is a million directories —
   *     a filesystem DoS at 100 TB).
-  *   - `maxRecordsPerFile` guards the skewed-shard case: a hot shard
-  *     splits into more files instead of one multi-GB object.
   */
 object Sinks {
-
-  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   /** Deterministic [0, numShards) shard from a key column — md5-derived
     * (the engine's portable hash family) so re-runs and engines agree,
@@ -32,194 +28,10 @@ object Sinks {
       .cast("long"), lit(numShards.toLong)).cast("int")
   }
 
-  /** Parquet corpus sharded for parallel readers: rows cluster into
-    * `numShards` directories (`shard=NNN/`), each shard's rows sorted by
-    * `sortCols` within its files. A training loader assigns shard dirs
-    * to workers and streams each file in order — no reader-side sort.
-    */
-  def writeSharded(df: DataFrame, path: String, shardKey: String,
-                   numShards: Int, sortCols: Seq[String],
-                   maxRecordsPerFile: Long = 5000000L): Unit = {
-    val sharded = df.withColumn("shard", shardCol(col(shardKey), numShards))
-    sharded
-      .repartition(numShards, col("shard"))
-      .sortWithinPartitions(("shard" +: sortCols).map(col): _*)
-      .write
-      .option("maxRecordsPerFile", maxRecordsPerFile)
-      .partitionBy("shard")
-      .mode("overwrite")
-      .parquet(path)
-  }
-
-  /** Shard count sized to a TARGET OUTPUT FILE SIZE — the small-file-storm
-    * guard. A writer that picks `numShards` by convention (per-day, per
-    * job, "what the last team used") produces 100k tiny objects at one
-    * scale and 40 GB monsters at another; deriving it from the frame's
-    * own size estimate keeps each shard's single file near `targetBytes`
-    * (the public lakehouse guidance band is 128 MB–1 GB) at EVERY scale.
-    *
-    * The estimate is Catalyst's `optimizedPlan.stats.sizeInBytes` — the
-    * same number the broadcast planner trusts — divided by a conservative
-    * 3× for parquet-on-disk vs in-memory width (encoding + compression on
-    * text-heavy corpora). It costs no job: stats come from file sizes and
-    * column widths, not a scan.
-    *
-    * Guard: stat-less relations (in-memory ranges, some views) report the
-    * `spark.sql.defaultSizeInBytes` sentinel (Long.MaxValue by default),
-    * and joins MULTIPLY child estimates — so a garbage estimate overshoots
-    * by orders of magnitude and would saturate `maxShards`, creating the
-    * exact small-file storm this helper exists to prevent. Any estimate at
-    * or above the session's sentinel falls back to the session's shuffle
-    * parallelism (a sane write fan-out) instead of the cap, and `maxShards`
-    * itself defaults to 4096: at 512 MB/shard that already covers a 2 TB
-    * single write, and a larger job should size explicitly rather than
-    * inherit a million-directory layout from a bad estimate.
-    */
-  def shardCountFor(df: DataFrame, targetBytes: Long = 512L << 20,
-                    maxShards: Int = 4096): Int = {
-    require(targetBytes > 0, s"targetBytes must be positive, got $targetBytes")
-    val conf = df.sparkSession.sessionState.conf
-    val raw = df.queryExecution.optimizedPlan.stats.sizeInBytes
-    if (raw >= BigInt(conf.defaultSizeInBytes)) {
-      log.warn(
-        s"shardCountFor: plan stats report the defaultSizeInBytes sentinel " +
-          s"($raw); falling back to ${conf.numShufflePartitions} shards — " +
-          "pass an explicit shard count for stat-less frames")
-      conf.numShufflePartitions.min(maxShards).max(1)
-    } else {
-      val bytes = (raw / 3).min(BigInt(Long.MaxValue)).toLong.max(1L)
-      (((bytes + targetBytes - 1) / targetBytes).max(1L)
-        .min(maxShards.toLong)).toInt
-    }
-  }
-
-  /** [[writeSharded]] with the shard count derived from the frame's size
-    * estimate via [[shardCountFor]] — write governance by default: files
-    * near `targetBytes` regardless of the frame's scale, one file per
-    * shard (SinksSpec counts them).
-    */
-  def writeShardedAuto(df: DataFrame, path: String, shardKey: String,
-                       sortCols: Seq[String],
-                       targetBytes: Long = 512L << 20): Unit =
-    writeSharded(df, path, shardKey, shardCountFor(df, targetBytes), sortCols)
-
-  /** The packed-corpus writer: persist [[graft.pipeline.Pipeline.seqPack]]
-    * (or corpus_clean / corpus_shuffle) output so that each pack's
-    * documents land in ONE shard, contiguous and offset-ordered — the
-    * exact layout a sequence-assembling loader wants. Sharding on
-    * `pack_id` (not doc id) is what keeps a pack from straddling two
-    * readers.
-    */
-  def writePacked(packed: DataFrame, path: String,
-                  numShards: Int): Unit =
-    writeSharded(packed, path, "pack_id", numShards,
-      Seq("pack_id", "pack_offset"))
-
-  /** Read back a [[writeSharded]] corpus. The shard partition column
-    * comes back as its directory value; basePath keeps pruning by
-    * `shard = N` a directory-level skip (no file of a foreign shard is
-    * ever opened).
-    */
-  def readSharded(spark: org.apache.spark.sql.SparkSession,
-                  path: String): DataFrame =
-    spark.read.option("basePath", path).parquet(path)
-
-  /** Bucketed-table writer: pay the corpus's key shuffle ONCE at write
-    * time so every downstream join/aggregate on that key is
-    * exchange-free. `bucketBy(n, key)` records the bucket spec in the
-    * catalog; a scan of the table then reports
-    * `HashPartitioning(key, n)`, and Catalyst drops the Exchange for
-    * joins against any table bucketed the same way and for
-    * `groupBy(key)` aggregates. With `sortCols` each bucket's files are
-    * written key-sorted, so a sort-merge join can skip its Sort too —
-    * Spark trusts the file order only when a bucket holds ONE file
-    * (hence the `repartition` below, which also makes re-runs
-    * byte-identical) AND the reader opts in via
-    * `spark.sql.legacy.bucketedTableScan.outputOrdering=true` (since
-    * 3.0 the scan does not advertise ordering by default, SPARK-28595).
-    *
-    * This is the 100 TB answer to "we join/group on doc_id every day":
-    * the nightly build writes the corpus bucketed by doc_id, and the
-    * daily queries never shuffle it again — the same trade
-    * [[graft.dedup.SignatureStore]] makes for signatures, applied to
-    * the relational layout. (HIVE-style bucketed parquet: readable by
-    * any engine that understands the catalog's bucket spec; plain
-    * parquet readers just see the files.)
-    */
-  def writeBucketed(df: DataFrame, table: String, numBuckets: Int,
-                    bucketCols: Seq[String],
-                    sortCols: Seq[String] = Nil): Unit = {
-    require(numBuckets > 0, s"numBuckets must be positive, got $numBuckets")
-    require(bucketCols.nonEmpty, "bucketBy needs at least one column")
-    val w = df
-      .repartition(numBuckets, bucketCols.map(col): _*)
-      .write.mode("overwrite").format("parquet")
-      .bucketBy(numBuckets, bucketCols.head, bucketCols.tail: _*)
-    (if (sortCols.nonEmpty) w.sortBy(sortCols.head, sortCols.tail: _*)
-     else w).saveAsTable(table)
-  }
-
-  /** Morton (Z-order) interleave of `dims` pre-bucketed dimension
-    * columns, each already an integer in [0, 2^bitsPerDim). Bit b of
-    * dim d lands at position b·D + d, so truncating the z-value from
-    * the top splits every dimension's range evenly — the property that
-    * makes min/max data skipping work on ALL z-ordered columns at once
-    * instead of only the leading sort key.
-    */
-  def mortonCol(dims: Seq[Column], bitsPerDim: Int): Column = {
-    require(dims.nonEmpty, "mortonCol needs at least one dimension")
-    require(bitsPerDim * dims.size <= 63,
-      s"${dims.size} dims × $bitsPerDim bits overflow a long")
-    val d = dims.size
-    val terms = for {
-      (dim, di) <- dims.zipWithIndex
-      b <- 0 until bitsPerDim
-    } yield shiftleft(shiftright(dim, b).bitwiseAND(lit(1L)), b * d + di)
-    terms.reduce(_.bitwiseOR(_))
-  }
-
-  /** Z-ordered parquet layout: rows cluster by the Morton interleave of
-    * `zCols`, so a reader filtering on ANY of those columns prunes most
-    * row groups from footer min/max stats alone — multi-dimensional
-    * data skipping, where a plain sort only skips on its leading key.
-    * This is the table-layout half of what lakehouse OPTIMIZE ZORDER
-    * does, on plain parquet.
-    *
-    * Each column is first bucketed to `bitsPerDim` bits by linear
-    * min/max scaling — ONE tiny aggregate (2 doubles per column, the
-    * same fit-time-collect class as the sampled index fits) — then the
-    * frame range-partitions on the z-value (sampling job + exchange,
-    * the repartitionByRange contract) and sorts within partitions.
-    * Skewed domains waste bucket resolution under linear scaling;
-    * callers with heavy-tailed keys should pre-transform (log, rank)
-    * the column — the helper deliberately does not hide a second
-    * full-data pass to rank-normalize.
-    */
-  def writeZOrdered(df: DataFrame, path: String, zCols: Seq[String],
-                    numFiles: Int, bitsPerDim: Int = 16): Unit = {
-    require(zCols.nonEmpty, "writeZOrdered needs at least one z column")
-    require(numFiles > 0, s"numFiles must be positive, got $numFiles")
-    val stats = df.select(
-      zCols.flatMap(c => Seq(min(col(c).cast("double")).as(s"_min_$c"),
-        max(col(c).cast("double")).as(s"_max_$c"))): _*).head()
-    val buckets = (1L << bitsPerDim) - 1
-    val dims = zCols.zipWithIndex.map { case (c, i) =>
-      val (lo, hi) = (stats.getDouble(2 * i), stats.getDouble(2 * i + 1))
-      val span = if (hi > lo) hi - lo else 1.0
-      least(floor((col(c).cast("double") - lo) / span * buckets)
-        .cast("long"), lit(buckets))
-    }
-    df.withColumn("_z", mortonCol(dims, bitsPerDim))
-      .repartitionByRange(numFiles, col("_z"))
-      .sortWithinPartitions(col("_z"))
-      .drop("_z")
-      .write.mode("overwrite").parquet(path)
-  }
-
   /** JSONL (one JSON object per line) sink — the interchange format
-    * LLM-corpus tooling speaks. Same one-exchange discipline as
-    * [[writeSharded]] when `shardKey` is given (md5-derived shard dirs,
-    * gzip per part file); a bare write stays a narrow pass. JSON
+    * LLM-corpus tooling speaks. With `shardKey` the rows cluster into
+    * `numShards` md5-derived shard dirs in one exchange (gzip per part
+    * file); a bare write stays a narrow pass. JSON
     * escaping makes the round-trip exact for arbitrary text (newlines,
     * quotes, unicode) — pinned by the oracle-gated `jsonl_roundtrip`
     * query, whose hash compare would catch any lossy encode.
@@ -309,21 +121,5 @@ object Sinks {
     val p = new org.apache.hadoop.fs.Path(root, "_SUCCESS")
     val fs = p.getFileSystem(conf)
     fs.create(p, true).close()
-  }
-
-  /** Append-mode streaming parquet sink with mandatory checkpointing —
-    * exactly-once file output keyed by the checkpoint's offset log. The
-    * caller picks the trigger; the helper only refuses the footguns
-    * (no checkpoint dir → at-least-once duplicates on restart).
-    */
-  def streamToParquet(df: DataFrame, path: String,
-                      checkpointDir: String): DataStreamWriter[org.apache.spark.sql.Row] = {
-    require(checkpointDir.nonEmpty, "checkpointDir is required: without " +
-      "the offset log a restarted stream rewrites delivered batches")
-    df.writeStream
-      .outputMode(OutputMode.Append)
-      .format("parquet")
-      .option("path", path)
-      .option("checkpointLocation", checkpointDir)
   }
 }

@@ -115,32 +115,6 @@ object Tar {
     Sinks.markSuccess(conf, path)
   }
 
-  /** [[writeTarShards]] with the shard COUNT derived from a target
-    * shard size — WebDataset practice sizes shards in bytes (the
-    * public guidance band is ~100 MB–1 GB per `.tar`), not in
-    * whatever partition count the upstream job happened to have.
-    * Uses [[Sinks.shardCountFor]] (Catalyst's own size estimate, the
-    * small-file-storm / monster-shard guard at every scale), then
-    * clusters rows so all of a SAMPLE's members land in one shard
-    * consecutively: hash-repartition on the sample key (the member
-    * name's extension-stripped prefix by default — `000017.jpg` /
-    * `000017.json` → `000017`), sort within partitions by name. One
-    * exchange, the [[Sinks.writeSharded]] discipline.
-    */
-  def writeTarShardsAuto(df: DataFrame, path: String,
-                         nameCol: String = "name",
-                         contentCol: String = "content",
-                         sampleKeyCol: String = "",
-                         targetBytes: Long = 512L << 20): Unit = {
-    import org.apache.spark.sql.functions._
-    val n = Sinks.shardCountFor(df, targetBytes)
-    val key = if (sampleKeyCol.nonEmpty) col(sampleKeyCol)
-      else regexp_replace(col(nameCol), "\\.[^.]*$", "")
-    writeTarShards(
-      df.repartition(n, key).sortWithinPartitions(col(nameCol)),
-      path, nameCol, contentCol)
-  }
-
   /** Parse every `.tar` shard under `path` into the [[schema]] member
     * frame. Per-file parallel, per-member memory.
     */

@@ -181,25 +181,21 @@ object Warc {
     *
     * `gzipPerRecord = true` writes `.warc.gz` shards with ONE GZIP
     * MEMBER PER RECORD — the layout the public crawls actually
-    * distribute (member boundaries = record boundaries, so an offset
-    * index gives record-level random access without decompressing
-    * the shard). Java's gzip writes a zero MTIME, so the bytes stay
-    * deterministic.
+    * distribute (member boundaries = record boundaries). Java's gzip
+    * writes a zero MTIME, so the bytes stay deterministic.
     */
   def writeWet(df: DataFrame, path: String, uriCol: String = "target_uri",
                textCol: String = "text",
                warcDate: String = "2000-01-01T00:00:00Z",
                gzipPerRecord: Boolean = false,
-               writeIndex: Boolean = false,
                warcinfo: Boolean = false): Unit = {
     import org.apache.spark.sql.functions.col
     val rows = df.select(col(uriCol).cast("string"), col(textCol).cast("string"))
-    writeShards(rows, path, gzipPerRecord, writeIndex, warcinfo,
-        warcDate) { r =>
+    writeShards(rows, path, gzipPerRecord, warcinfo, warcDate) { r =>
       val uri = r.getString(0)
       val payload = r.getString(1).getBytes("UTF-8")
-      (uri, buildRecord("conversion", uri, warcDate, "text/plain",
-        payload, sha1Base32(payload)))
+      buildRecord("conversion", uri, warcDate, "text/plain",
+        payload, sha1Base32(payload))
     }
   }
 
@@ -220,22 +216,20 @@ object Warc {
                     bodyCol: String = "body",
                     warcDate: String = "2000-01-01T00:00:00Z",
                     gzipPerRecord: Boolean = false,
-                    writeIndex: Boolean = false,
                     warcinfo: Boolean = false): Unit = {
     import org.apache.spark.sql.functions.col
     val rows = df.select(col(uriCol).cast("string"),
       col(statusCol).cast("string"), col(headersCol),
       col(bodyCol).cast("binary"))
-    writeShards(rows, path, gzipPerRecord, writeIndex, warcinfo,
-        warcDate) { r =>
+    writeShards(rows, path, gzipPerRecord, warcinfo, warcDate) { r =>
       val uri = r.getString(0)
       val headers = r.getSeq[Row](2).map(h => (h.getString(0), h.getString(1)))
       val body = r.getAs[Array[Byte]](3)
       val envelope = buildHttpResponse(r.getString(1), headers, body)
       // digest over the HTTP BODY (the message payload), not the
       // envelope — the key public-crawl consumers dedup on at ingest
-      (uri, buildRecord("response", uri, warcDate,
-        "application/http; msgtype=response", envelope, sha1Base32(body)))
+      buildRecord("response", uri, warcDate,
+        "application/http; msgtype=response", envelope, sha1Base32(body))
     }
   }
 
@@ -252,18 +246,16 @@ object Warc {
                    headersCol: String = "http_headers",
                    warcDate: String = "2000-01-01T00:00:00Z",
                    gzipPerRecord: Boolean = false,
-                   writeIndex: Boolean = false,
                    warcinfo: Boolean = false): Unit = {
     import org.apache.spark.sql.functions.col
     val rows = df.select(col(uriCol).cast("string"),
       col(requestLineCol).cast("string"), col(headersCol))
-    writeShards(rows, path, gzipPerRecord, writeIndex, warcinfo,
-        warcDate) { r =>
+    writeShards(rows, path, gzipPerRecord, warcinfo, warcDate) { r =>
       val uri = r.getString(0)
       val headers = r.getSeq[Row](2).map(h => (h.getString(0), h.getString(1)))
       val envelope = buildHttpRequest(r.getString(1), headers)
-      (uri, buildRecord("request", uri, warcDate,
-        "application/http; msgtype=request", envelope))
+      buildRecord("request", uri, warcDate,
+        "application/http; msgtype=request", envelope)
     }
   }
 
@@ -301,27 +293,13 @@ object Warc {
   }
 
   /** The shared shard writer: one `.warc[.gz]` file per partition
-    * through the task-commit protocol, the partition-scoped reused
-    * Deflater when gzipping per record, and (optionally) a CDX-style
-    * offset-index sidecar. `recordOf` maps a row to
-    * `(target_uri, serialized record bytes)`.
-    *
-    * The sidecar (`part-NNNNN.warc.gz.cdx`, tab-separated
-    * `record_id  offset  length` lines) records each gzip MEMBER's
-    * byte span — the writer aligns members to records precisely so
-    * this index gives O(1) record-level random access ([[readAt]])
-    * without decompressing the shard, the role CDX files play for the
-    * public crawls. Index entries accumulate in task memory: tens of
-    * bytes per record, ~5 MB for a 100k-record shard — bounded by the
-    * caller's shard sizing, not the corpus.
+    * through the task-commit protocol, with the partition-scoped reused
+    * Deflater when gzipping per record. `recordOf` maps a row to its
+    * serialized record bytes.
     */
   private def writeShards(rows: DataFrame, path: String,
-      gzipPerRecord: Boolean, writeIndex: Boolean,
-      warcinfo: Boolean, warcDate: String)(
-      recordOf: Row => (String, Array[Byte])): Unit = {
-    require(!writeIndex || gzipPerRecord,
-      "offset index requires gzipPerRecord=true (member = record); a " +
-        "plain .warc shard is already seekable by byte offset")
+      gzipPerRecord: Boolean, warcinfo: Boolean, warcDate: String)(
+      recordOf: Row => Array[Byte]): Unit = {
     val spark = rows.sparkSession
     val conf = spark.sparkContext.hadoopConfiguration
     val root = new Path(path)
@@ -341,48 +319,18 @@ object Warc {
         val deflater = if (gzipPerRecord)
           new java.util.zip.Deflater(
             java.util.zip.Deflater.DEFAULT_COMPRESSION, true) else null
-        val index = if (writeIndex)
-          new scala.collection.mutable.ArrayBuffer[String]() else null
         try {
           Sinks.writeTaskFile(serConf.value.value, p) { rawOut =>
-            var offset = 0L
-            def emit(recordId: String, rec: Array[Byte]): Unit =
-              if (gzipPerRecord) {
-                val counting = new CountingOutputStream(rawOut)
-                gzipMember(rec, deflater, counting)
-                if (index != null)
-                  index += s"$recordId\t$offset\t${counting.count}"
-                offset += counting.count
-              } else rawOut.write(rec)
-            if (warcinfo) {
-              val name = p.getName
-              emit(s"<urn:md5:${md5Hex(name)}>", buildWarcinfo(name, warcDate))
-            }
-            it.foreach { r =>
-              val (uri, rec) = recordOf(r)
-              emit(s"<urn:md5:${md5Hex(uri)}>", rec)
-            }
-          }
-          if (index != null) {
-            val ip = new Path(path, f"part-$pid%05d$ext.cdx")
-            Sinks.writeTaskFile(serConf.value.value, ip) { iout =>
-              index.foreach { line =>
-                iout.write(line.getBytes("UTF-8")); iout.write('\n') }
-            }
+            def emit(rec: Array[Byte]): Unit =
+              if (gzipPerRecord) gzipMember(rec, deflater, rawOut)
+              else rawOut.write(rec)
+            if (warcinfo) emit(buildWarcinfo(p.getName, warcDate))
+            it.foreach(r => emit(recordOf(r)))
           }
         } finally if (deflater != null) deflater.end()
       }
     }
     Sinks.markSuccess(conf, path)
-  }
-
-  private final class CountingOutputStream(under: java.io.OutputStream)
-      extends java.io.OutputStream {
-    var count: Long = 0L
-    override def write(b: Int): Unit = { under.write(b); count += 1 }
-    override def write(b: Array[Byte], off: Int, len: Int): Unit = {
-      under.write(b, off, len); count += len
-    }
   }
 
   /** Write one complete gzip MEMBER (header, raw-deflate body, CRC32 +
@@ -525,60 +473,6 @@ object Warc {
     if (parts.length < 2) return null
     try Integer.valueOf(parts(1).toInt)
     catch { case _: NumberFormatException => null }
-  }
-
-  val indexSchema: StructType = StructType(Seq(
-    StructField("shard", StringType),
-    StructField("record_id", StringType),
-    StructField("offset", LongType, nullable = false),
-    StructField("length", LongType, nullable = false)))
-
-  /** Read the CDX-style offset sidecars written by
-    * `writeIndex = true`: one row per record with its shard path and
-    * gzip-member byte span. Joining this against a wanted-id list and
-    * calling [[readAt]] per hit is the O(records-wanted) random-access
-    * path; a full [[read]] pays the whole-corpus scan.
-    */
-  def readIndex(spark: SparkSession, path: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    // input_file_name() returns a PERCENT-ENCODED URI — a shard dir
-    // with spaces/%/non-ASCII would store a string that readAt's
-    // `new Path(shard)` resolves to a wrong or missing file. Decode
-    // through java.net.URI → hadoop Path (NOT url_decode, whose
-    // form-encoding rules turn a literal '+' into a space). The index
-    // frame is sidecar-sized metadata, so a UDF here is off the hot
-    // path by construction.
-    val decodeUri = udf((s: String) =>
-      if (s == null) null
-      else new Path(new java.net.URI(s)).toString)
-    spark.read.option("sep", "\t")
-      .schema("record_id STRING, offset LONG, length LONG")
-      .csv(s"$path/*.cdx")
-      .select(
-        decodeUri(regexp_replace(input_file_name(), "\\.cdx$", ""))
-          .as("shard"),
-        col("record_id"), col("offset"), col("length"))
-  }
-
-  /** Fetch ONE record from a member-per-record `.warc.gz` shard by its
-    * index span: seek to `offset`, read `length` bytes, inflate the
-    * single member, parse the one record — O(record), never O(shard).
-    * This is the consumer side of the CDX sidecar; an equality spec
-    * gates it against the streaming read.
-    */
-  def readAt(conf: org.apache.hadoop.conf.Configuration, shard: String,
-             offset: Long, length: Long): Rec = {
-    require(length <= Int.MaxValue, s"member too large: $length")
-    val p = new Path(shard)
-    val fs = p.getFileSystem(conf)
-    val in = fs.open(p)
-    val member = new Array[Byte](length.toInt)
-    try { in.seek(offset); in.readFully(member) } finally in.close()
-    val din = new DataInputStream(new java.util.zip.GZIPInputStream(
-      new java.io.ByteArrayInputStream(member)))
-    val it = parseStream(din)
-    require(it.hasNext, s"no record in member at $shard:$offset")
-    it.next()
   }
 
   private[sources] case class Rec(warcType: String, recordId: String,

@@ -1,24 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-
-final case class EventRow(event_id: Long, ts: java.sql.Timestamp,
-                          user_id: Long, event_type: String, value: Double)
-
-final case class SessionSummary(user_id: Long, session_start: java.sql.Timestamp,
-                                session_end: java.sql.Timestamp,
-                                n_events: Long, total_value: Double)
-
-final case class BurstState(first_event: Long,
-                            burst_start: java.sql.Timestamp,
-                            last_ts: java.sql.Timestamp, n: Long)
-
-final case class BurstSummary(user_id: Long, event_type: String,
-                              first_event: Long,
-                              burst_start: java.sql.Timestamp,
-                              n_collapsed: Long)
 
 /** Structured Streaming operators. Each transform is written once against a
   * DataFrame and works identically on a batch frame and a `readStream`
@@ -41,15 +24,6 @@ object StreamingOps {
         sum(col("value")).as("total_value"))
       .select(col("window.start").as("ts_hour"), col("event_type"),
         col("n_events"), col("total_value"))
-  }
-
-  /** Open a file-based stream over the same parquet the batch queries read;
-    * used by tests via the memory sink.
-    */
-  def readEventsStream(spark: SparkSession, dir: String): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    graft.sources.Tables.normalizeEvents(
-      spark.readStream.schema(schema).parquet(s"$dir/events.parquet"))
   }
 
   /** Windowed n-gram heavy hitters over a document stream — the live
@@ -87,8 +61,6 @@ object StreamingOps {
     * gaps-and-islands rewrite): lag detects session starts, a running sum
     * numbers sessions, one groupBy summarizes. Two window passes over one
     * shuffle keyed by user — fully distributed, no per-user state object.
-    * This is the batch twin of `sessionize` below; both produce the same
-    * summaries (tested).
     */
   def sessionizeBatch(events: DataFrame, gapMinutes: Long = 30): DataFrame = {
     val gapNs = gapMinutes * 60L * 1000L * 1000L * 1000L
@@ -110,377 +82,6 @@ object StreamingOps {
       .drop("_sid")
   }
   private val Window = org.apache.spark.sql.expressions.Window
-
-  /** Streaming exact dedup for a document feed — the incremental twin of
-    * [[graft.dedup.Dedup.exact]]. Batch: plain dropDuplicates on the
-    * content fingerprint. Stream: `dropDuplicatesWithinWatermark`, the
-    * bounded-state form — exact dedup against ALL history would grow
-    * state forever; the watermark bounds it to the late-data horizon,
-    * which is the standard contract for streaming ingest dedup (replays
-    * older than the watermark are handled by the downstream batch
-    * compaction pass, i.e. `dedup_exact` itself).
-    */
-  def dedupDocs(docs: DataFrame, tsCol: String,
-                watermark: String = "1 hour"): DataFrame = {
-    val fp = docs.withColumn("fingerprint",
-      graft.textops.TextOps.fingerprint(col("text")))
-    if (fp.isStreaming)
-      fp.withWatermark(tsCol, watermark)
-        .dropDuplicatesWithinWatermark("fingerprint")
-    else fp.dropDuplicates("fingerprint")
-  }
-
-  /** The streaming daily-ingest probe — foreachBatch over a document
-    * feed: each micro-batch is decided against the FIXED persisted
-    * corpus span store with
-    * [[graft.dedup.Dedup.spanIncrementalStored]] and handed to `sink`.
-    * Per-document decisions depend only on (document, store) — never
-    * on other increment documents — so the output is independent of
-    * micro-batch boundaries and equals the batch probe over the same
-    * feed (parity pinned in StreamingSpec). The stream itself keeps NO
-    * state: the store IS the state, grown outside the query by the
-    * compaction that appends accepted survivors' store rows (the
-    * [[graft.dedup.SignatureStore]] contract). At scale each
-    * micro-batch is O(increment) narrow work whose keys broadcast
-    * against the store scan — the 100 TB corpus is only ever the
-    * streamed side of a broadcast probe, exactly the batch plan's
-    * shape, once per trigger.
-    */
-  def ingestProbe(docs: DataFrame, storeFps: DataFrame,
-                  idCol: String = "doc_id", textCol: String = "text",
-                  k: Int = 8, w: Int = 4, minShared: Int = 5,
-                  maxDf: Int = 16)(sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      sink(graft.dedup.Dedup.spanIncrementalStored(batch, storeFps,
-        idCol, textCol, k, w, minShared, maxDf), batchId)
-    }
-
-  /** Streaming twin of the COMPOSITE daily-ingest decision
-    * ([[graft.pipeline.Pipeline.ingestClean]]): each micro-batch is
-    * quality-gated, then probed against the corpus for exact and near
-    * duplicates, and the sink receives one (doc_id, quality,
-    * is_new_exact, is_new_near, accepted) row per incoming doc.
-    *
-    * `corpus` is a THUNK, re-evaluated per trigger: the intended sink
-    * compacts each batch's accepted survivors back into the corpus
-    * (append their rows to the corpus path / SignatureStore), so the
-    * next micro-batch probes corpus ∪ previously-accepted — the
-    * arrival-order-wins semantics a production ingest loop runs. The
-    * query itself keeps NO state; the corpus is the state.
-    *
-    * Parity contract (pinned in StreamingSpec): with compaction, the
-    * stream decision equals the batch [[graft.pipeline.Pipeline.ingestClean]]
-    * over the whole increment whenever micro-batches split duplicate
-    * groups in id order (the batch min-id rule and the stream's
-    * earliest-arrival rule then pick the same survivor). Cross-batch
-    * NEAR-dup pairs inside one increment are the one divergence: the
-    * batch form does not test increment-vs-increment near-dups, while
-    * the compacting stream catches them — i.e. the stream is strictly
-    * stricter, never looser.
-    *
-    * Scale shape per trigger is the batch plan's: the gate is a narrow
-    * filter on the micro-batch scan, both probes broadcast
-    * increment-derived frames, and the corpus only ever streams
-    * through broadcast joins (never shuffles) — O(increment) work per
-    * trigger on a 100 TB corpus.
-    */
-  def ingestCleanProbe(docs: DataFrame, corpus: () => DataFrame,
-                       minQuality: Double,
-                       idCol: String = "doc_id", textCol: String = "text",
-                       shingleSize: Int = 3, bands: Int = 8,
-                       rowsPerBand: Int = 2, threshold: Double = 0.5,
-                       maxBucket: Int = 64)(sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      sink(graft.pipeline.Pipeline.ingestClean(batch, corpus(), idCol,
-        textCol, minQuality, shingleSize, bands, rowsPerBand, threshold,
-        maxBucket), batchId)
-    }
-
-  /** The streaming daily-ingest probe for the IMAGE modality — the
-    * [[ingestCleanProbe]] shape applied to binary payloads: each
-    * micro-batch's images are decoded and dHashed ONCE (partition-
-    * scoped codec, payload never shuffled), and the 8-byte
-    * fingerprints probe the persisted corpus fingerprint store with
-    * [[graft.dedup.Dedup.hammingIncremental]]; the sink receives one
-    * (media_id, dup_of, hamming, is_new) row per incoming image.
-    *
-    * `corpusFps` is a THUNK over the persisted (media_id, dhash)
-    * store, re-evaluated per trigger: the intended sink appends each
-    * batch's ACCEPTED fingerprints back to the store path, so the
-    * next micro-batch probes corpus ∪ previously-accepted —
-    * arrival-order-wins, exactly the text pipeline's compaction
-    * contract. The query itself keeps NO state; the store is the
-    * state (and is all the state there is — 16 bytes per corpus
-    * image, never the payloads).
-    *
-    * Parity contract (pinned in StreamingSpec): per-image decisions
-    * depend only on (image, store), so with compaction the stream
-    * equals the batch [[graft.dedup.Dedup.hammingIncremental]] run
-    * per arrival prefix, and a twin arriving AFTER its original was
-    * accepted in an earlier micro-batch is caught — the cross-batch
-    * planted-twin case. Without intra-batch twins the single-batch
-    * decision is bit-identical to the batch form.
-    *
-    * Scale shape per trigger: O(micro-batch) decode + narrow
-    * fingerprinting; only the increment's banded keys broadcast; the
-    * corpus fingerprint store streams through a broadcast join and
-    * never shuffles — the batch plan's shape, once per trigger.
-    */
-  def imageIngestProbe(media: DataFrame, corpusFps: () => DataFrame,
-                       maxHamming: Int = 3, maxBucket: Int = 64)
-      (sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    media.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      val sig = graft.multimodal.Multimodal.dhashFeatures(batch)
-        .filter(col("decodable"))
-        .select(col("media_id"), col("dhash"))
-      sink(graft.dedup.Dedup.hammingIncremental(sig, corpusFps(),
-        "media_id", "dhash", maxHamming, maxBucket), batchId)
-    }
-
-  /** The [[imageIngestProbe]] contract for the AUDIO modality: each
-    * micro-batch's clips SPI-decode + fingerprint once
-    * ([[graft.multimodal.Multimodal.audioFingerprintFeatures]] — ch-0
-    * window sums, multiplicative mix bits), and the 8-byte
-    * fingerprints probe the persisted (media_id, afp) store. Same
-    * compacting-thunk / arrival-order-wins / no-query-state
-    * semantics; parity pinned in StreamingSpec alongside the image
-    * and video twins.
-    */
-  def audioIngestProbe(media: DataFrame, corpusFps: () => DataFrame,
-                       maxHamming: Int = 3, maxBucket: Int = 64)
-      (sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    media.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      val sig = graft.multimodal.Multimodal.audioFingerprintFeatures(batch)
-        .filter(col("decodable"))
-        .select(col("media_id"), col("afp"))
-      sink(graft.dedup.Dedup.hammingIncremental(sig, corpusFps(),
-        "media_id", "afp", maxHamming, maxBucket), batchId)
-    }
-
-  /** The [[imageIngestProbe]] contract for the VIDEO modality: each
-    * micro-batch's clips demux + majority-fingerprint once
-    * ([[graft.multimodal.Multimodal.videoDhashFeatures]], frame
-    * sampling at `step`), and the 8-byte clip fingerprints probe the
-    * persisted (media_id, clip_dhash) store. Same compacting-thunk /
-    * arrival-order-wins / no-query-state semantics; parity pinned in
-    * StreamingSpec alongside the image twin.
-    */
-  def videoIngestProbe(media: DataFrame, corpusFps: () => DataFrame,
-                       step: Int = 2, maxHamming: Int = 3,
-                       maxBucket: Int = 64)
-      (sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    media.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      val sig = graft.multimodal.Multimodal.videoDhashFeatures(batch, step)
-        .filter(col("decodable"))
-        .select(col("media_id"), col("clip_dhash"))
-      sink(graft.dedup.Dedup.hammingIncremental(sig, corpusFps(),
-        "media_id", "clip_dhash", maxHamming, maxBucket), batchId)
-    }
-
-  /** The streaming twin of the cross-modal PAIR ingest decision
-    * ([[graft.dedup.Dedup.pairNearDupStored]]) — the last decision
-    * family to get its batch≡stream pair: each micro-batch of
-    * (pair id, caption, media payload) rows probes BOTH persisted
-    * corpus stores — the caption side against the MinHash
-    * [[graft.dedup.SignatureStore]], the media side (fingerprinted
-    * once per batch by the caller-supplied `sig`, the partition-scoped
-    * codec contract) against the (media_id, fingerprint) store — and
-    * the sink receives one (doc_id, dup_of, jaccard, hamming, is_new)
-    * pair decision per incoming pair: drop iff BOTH sides flag the
-    * SAME prior pair.
-    *
-    * `textStore` and `corpusFps` are THUNKS, re-evaluated per
-    * trigger: the intended sink appends each batch's ACCEPTED pairs
-    * to BOTH stores (signature rows via
-    * [[graft.dedup.SignatureStore.appendWrite]], fingerprints to the
-    * media store path), so the next micro-batch probes corpus ∪
-    * previously-accepted on both modalities — arrival-order-wins,
-    * the batch A/B loop's contract per trigger. The query itself
-    * keeps NO state; the two stores are the state.
-    *
-    * Parity contract (pinned in StreamingSpec): per-pair decisions
-    * depend only on (pair, both stores), so the first trigger is
-    * bit-identical to the batch operator, and a twin PAIR arriving
-    * after its base was accepted in an earlier micro-batch is caught
-    * on BOTH modalities — the cross-batch paired-twin case.
-    *
-    * Scale shape per trigger is the batch plan's: O(micro-batch)
-    * signing + decode, increment band keys broadcast against both
-    * store scans, the candidate-bounded pair join — the corpora
-    * never shuffle.
-    */
-  def pairIngestProbe(pairs: DataFrame,
-                      textStore: () => graft.dedup.SignatureStore.Store,
-                      corpusFps: () => DataFrame,
-                      sig: DataFrame => DataFrame, fpCol: String,
-                      idCol: String = "doc_id", textCol: String = "text",
-                      shingleSize: Int = 3, bands: Int = 8,
-                      rowsPerBand: Int = 2, threshold: Double = 0.5,
-                      maxHamming: Int = 3, maxBucket: Int = 64)
-      (sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    pairs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      sink(graft.dedup.Dedup.pairNearDupStored(
-        batch.select(col(idCol), col(textCol)), textStore(),
-        sig(batch), corpusFps(), idCol, textCol, "media_id", fpCol,
-        shingleSize, bands, rowsPerBand, threshold, maxHamming,
-        maxBucket), batchId)
-    }
-
-  /** The ingest-probe contract for the EMBEDDING modality — the last
-    * of the modality set (text spans/composite, image, video): each
-    * micro-batch of (vec_id, embedding) rows probes the corpus with
-    * [[graft.simops.Similarity.nearDupIncremental]] (the increment's
-    * hyperplane band keys broadcast; the corpus never shuffles; full
-    * vectors move only for verified candidates). The corpus is a
-    * THUNK re-evaluated per trigger so the sink's accepted-vector
-    * append gives arrival-order-wins; the query keeps no state.
-    * Unlike the fingerprint modalities the store here is the vector
-    * frame itself — banding is cheap relative to the exact-cosine
-    * verify, so nothing is precomputed.
-    */
-  def embeddingIngestProbe(vectors: DataFrame, corpus: () => DataFrame,
-                           idCol: String = "vec_id",
-                           vecCol: String = "embedding",
-                           threshold: Double = 0.9, numPlanes: Int = 64,
-                           bands: Int = 4, dim: Int = -1)
-      (sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    vectors.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      sink(graft.simops.Similarity.nearDupIncremental(batch, corpus(),
-        idCol, vecCol, threshold, numPlanes, bands, dim), batchId)
-    }
-
-  /** The SEMANTIC-modality ingest probe — completing the per-modality
-    * set (document exact/near, passage spans, lines, image, video,
-    * embedding-LSH): each micro-batch of vectors runs
-    * [[graft.simops.Embed.semanticDedupIncremental]] against the
-    * corpus thunk — the two-level autoNlist index is fitted on the
-    * corpus, the batch is assigned through the same pure-projection
-    * forest, and candidates are compared within-list only — and the
-    * sink receives the (id, list_id, dup_of, sim, is_new) decision
-    * rows. The corpus thunk re-evaluates per trigger, so sink-side
-    * compaction (append accepted vectors) gives arrival-order-wins
-    * across micro-batches; the query itself keeps no state. Per-trigger
-    * cost is the batch operator's: the corpus never shuffles — it
-    * streams through the assignment projection into a broadcast join
-    * against the batch's banded frame.
-    */
-  def semanticIngestProbe(vectors: DataFrame, corpus: () => DataFrame,
-                          idCol: String = "vec_id",
-                          vecCol: String = "embedding",
-                          threshold: Double = 0.4,
-                          targetListSize: Int = 32)
-      (sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    vectors.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      sink(graft.simops.Embed.semanticDedupIncremental(batch, corpus(),
-        idCol, vecCol, threshold, targetListSize), batchId)
-    }
-
-  /** The ingest-probe contract at LINE granularity — completing the
-    * per-granularity set (document exact/near, passage spans, lines):
-    * each micro-batch of documents runs
-    * [[graft.textops.LineDedup.dedupLinesIncremental]] against the
-    * corpus thunk — an incoming doc's line survives iff it appears
-    * nowhere in the corpus AND first within the batch — and the sink
-    * receives the cleaned (doc_id, n_lines, n_kept, text_clean) rows.
-    * The corpus is a THUNK re-evaluated per trigger so the sink's
-    * compaction (append accepted docs' lines) gives
-    * arrival-order-wins across micro-batches; the query keeps no
-    * state. Per-trigger cost is the batch operator's: increment line
-    * hashes broadcast, the corpus streams through one narrow
-    * projection and never shuffles.
-    */
-  def lineIngestProbe(docs: DataFrame, corpus: () => DataFrame,
-                      idCol: String = "doc_id", textCol: String = "text")
-      (sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      sink(graft.textops.LineDedup.dedupLinesIncremental(batch, corpus(),
-        idCol, textCol), batchId)
-    }
-
-  /** The ingest probe for the EXACT modality against the PERSISTED
-    * Bloom store — the streaming twin of `dedup_bloom_probe`,
-    * completing the batch≡stream pair for the last store family
-    * (spans, lines, image, video, embedding, semantic each have
-    * theirs): each micro-batch runs
-    * [[graft.dedup.Dedup.exactIncrementalBloom]] — fingerprints
-    * bloom-prefiltered MAP-SIDE, verify join against the store's
-    * fingerprint column, corpus text never read — and the sink
-    * receives the (doc_id, fingerprint, is_new) decision rows.
-    *
-    * `store` is a THUNK re-evaluated per trigger: the intended sink
-    * appends each batch's accepted fingerprints with
-    * [[graft.dedup.BloomStore.appendWrite]] (parquet append +
-    * same-geometry sketch merge, O(micro-batch)), so the next trigger
-    * probes corpus ∪ previously-accepted — arrival-order-wins across
-    * micro-batches, a duplicate arriving AFTER its original was
-    * accepted in an earlier batch is caught (the cross-batch case
-    * pinned in StreamingSpec). The query itself keeps NO state; the
-    * store is the state, and it is all the state there is — 16 bytes
-    * plus ~7 sketch bits per corpus document.
-    *
-    * Scale shape per trigger is the batch plan's: O(micro-batch)
-    * fingerprinting, a broadcast of only the bloom-POSITIVE
-    * fingerprints, the store streaming map-side through the verify
-    * join — once per trigger, on a corpus that never shuffles.
-    */
-  def bloomIngestProbe(docs: DataFrame,
-                       store: () => graft.dedup.BloomStore.Store,
-                       idCol: String = "doc_id", textCol: String = "text")
-      (sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    docs.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      sink(graft.dedup.Dedup.exactIncrementalBloom(batch, store(),
-        idCol, textCol), batchId)
-    }
-
-  /** The ANN-SERVING ingest probe — the streaming twin of
-    * `similarity_ivfpq_probe`, completing the batch≡stream pair for
-    * the [[graft.simops.VectorIndexStore]] family (every other store
-    * family — exact, minhash, spans, lines, semantic, image, video,
-    * audio — has its twin): each micro-batch of query vectors
-    * retrieves its top-k neighbors by ADC over the STORED PQ codes
-    * ([[graft.simops.VectorIndexStore.topK]] — query-side literal
-    * encode only; the per-trigger cost never touches the corpus), and
-    * the sink receives the (query_id, neighbor_id, adist, rank) rows.
-    *
-    * `store` is a THUNK re-evaluated per trigger: the intended sink
-    * encodes each batch's accepted vectors under the FROZEN index
-    * ([[graft.simops.VectorIndexStore.encode]]) and `appendWrite`s
-    * them (O(micro-batch), no refit), so the next trigger retrieves
-    * over corpus ∪ previously-ingested — a query arriving AFTER its
-    * near vector was ingested in an earlier batch finds it (the
-    * cross-batch case pinned in StreamingSpec). The query itself
-    * keeps NO state; the store is the state, and it is all the state
-    * there is — m code ints + a list id per stored vector.
-    */
-  def vectorServeIngestProbe(vectors: DataFrame,
-                             store: () => graft.simops.VectorIndexStore.Store,
-                             idCol: String = "vec_id",
-                             vecCol: String = "embedding",
-                             kNN: Int = 5, nprobe: Int = 4)
-      (sink: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] =
-    vectors.writeStream.foreachBatch { (batch: DataFrame, batchId: Long) =>
-      sink(graft.simops.VectorIndexStore.topK(batch, store(), idCol,
-        vecCol, kNN, nprobe), batchId)
-    }
-
-  /** Quality-gate filter (stateless): identical plan batch or stream —
-    * the shape of an inline corpus filter in a streaming ingest path.
-    */
-  def qualityFilter(docs: DataFrame, minQuality: Double): DataFrame =
-    docs.withColumn("quality",
-        graft.textops.TextOps.qualityScore(col("text")))
-      .filter(col("quality") >= minQuality)
 
   /** Stream-stream INTERVAL join (click→conversion attribution): each
     * click pairs with the same user's purchases in the following
@@ -514,125 +115,5 @@ object StreamingOps {
         col("c_uid").as("user_id"),
         (expr("purchase_ts_ns div 1000") - expr("click_ts_ns div 1000"))
           .as("gap_us"))
-  }
-
-  /** Gap-based sessionization with explicit state: the custom-state
-    * example (`mapGroupsWithState` family). State per user is one open
-    * session, and it is BOUNDED two ways — the non-negotiables for
-    * per-entity state on a long-running 1000-node job:
-    *
-    *  - `ProcessingTimeTimeout`: a user who goes quiet does not park an
-    *    open session in the state store forever — after `idleTimeout`
-    *    of no input the state times out, the open session flushes as a
-    *    summary, and the key's state is removed;
-    *  - `maxOpenEvents` eviction: a NEVER-idle user (bot traffic, a
-    *    metrics firehose keyed to one entity) would otherwise grow the
-    *    open-session list without bound — an open session reaching the
-    *    cap force-closes and emits, the max-session-length compromise
-    *    every production sessionizer makes.
-    *
-    * In batch execution timeouts never fire (there is no "later"), so
-    * the batch-parity contract is unchanged: closed sessions equal the
-    * gaps-and-islands rewrite, the open tail stays in state.
-    */
-  def sessionize(events: Dataset[EventRow], gapMinutes: Long = 30,
-                 maxOpenEvents: Int = 10000,
-                 idleTimeout: String = "1 hour")
-      : Dataset[SessionSummary] = {
-    import events.sparkSession.implicits._
-    require(maxOpenEvents >= 1, s"maxOpenEvents must be >= 1, got $maxOpenEvents")
-    val gapMs = gapMinutes * 60000L
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState[List[EventRow], SessionSummary](
-        OutputMode.Append, GroupStateTimeout.ProcessingTimeTimeout) {
-        (userId: Long, rows: Iterator[EventRow], state: GroupState[List[EventRow]]) =>
-          def summarize(s: List[EventRow]) =
-            SessionSummary(userId, s.head.ts, s.last.ts,
-              s.size.toLong, s.map(_.value).sum)
-          if (state.hasTimedOut) {
-            // idle key: flush the open session, drop the state entry
-            val open = state.getOption.getOrElse(Nil)
-            state.remove()
-            if (open.nonEmpty) Iterator.single(summarize(open))
-            else Iterator.empty
-          } else {
-            val sorted = (state.getOption.getOrElse(Nil) ++ rows.toList)
-              .sortBy(e => (StreamingLag.tsNanos(e.ts), e.event_id))
-            // split into gap-delimited sessions; keep the open tail as state
-            val sessions = scala.collection.mutable.ListBuffer[List[EventRow]]()
-            var cur = List.empty[EventRow]
-            sorted.foreach { e =>
-              if (cur.nonEmpty && e.ts.getTime - cur.head.ts.getTime > gapMs) {
-                sessions += cur.reverse; cur = Nil
-              }
-              cur = e :: cur
-            }
-            // eviction cap: an over-long open session closes NOW
-            if (cur.size > maxOpenEvents) { sessions += cur.reverse; cur = Nil }
-            if (cur.isEmpty) state.remove()
-            else {
-              state.update(cur.reverse)
-              state.setTimeoutDuration(idleTimeout)
-            }
-            sessions.iterator.map(summarize)
-          }
-      }
-  }
-
-  /** Streaming twin of [[graft.lagops.EventAnalytics.debounce]]: the
-    * at-least-once ingest dedup AT the ingest point, where it saves the
-    * most — a retried producer's duplicates never reach storage. State
-    * per (user, type) is ONE open burst summary, O(1) regardless of
-    * burst length (only first id, start, last-seen, count — never the
-    * event list), bounded two ways like [[sessionize]]:
-    * `ProcessingTimeTimeout` flushes and removes idle keys, and a burst
-    * older than `maxBurstNs` force-closes so a never-quiet key (metrics
-    * firehose) still emits and re-arms instead of holding one eternal
-    * burst.
-    *
-    * Closed bursts emit in Append mode; the open burst stays in state.
-    * Batch parity: closed bursts equal the batch operator's output
-    * minus each key's LAST burst (the open tail) — pinned in
-    * StreamingSpec.
-    */
-  def debounce(events: Dataset[EventRow], gapNs: Long,
-               maxBurstNs: Long = 86400L * 2 * 1000000000L,
-               idleTimeout: String = "1 hour"): Dataset[BurstSummary] = {
-    import events.sparkSession.implicits._
-    require(gapNs > 0, s"gapNs must be positive, got $gapNs")
-    require(maxBurstNs >= gapNs, "maxBurstNs must be >= gapNs")
-    events.groupByKey(e => (e.user_id, e.event_type))
-      .flatMapGroupsWithState[BurstState, BurstSummary](
-        OutputMode.Append, GroupStateTimeout.ProcessingTimeTimeout) {
-        case ((uid, etype), rows, state) =>
-          def summ(b: BurstState) =
-            BurstSummary(uid, etype, b.first_event, b.burst_start, b.n)
-          if (state.hasTimedOut) {
-            val open = state.getOption
-            state.remove()
-            open.iterator.map(summ)
-          } else {
-            val sorted = rows.toList
-              .sortBy(e => (StreamingLag.tsNanos(e.ts), e.event_id))
-            val closed = scala.collection.mutable.ListBuffer[BurstState]()
-            var cur = state.getOption.orNull
-            sorted.foreach { e =>
-              val tns = StreamingLag.tsNanos(e.ts)
-              val newBurst = cur == null ||
-                tns - StreamingLag.tsNanos(cur.last_ts) > gapNs ||
-                tns - StreamingLag.tsNanos(cur.burst_start) > maxBurstNs
-              if (newBurst) {
-                if (cur != null) closed += cur
-                cur = BurstState(e.event_id, e.ts, e.ts, 1L)
-              } else cur = cur.copy(last_ts = e.ts, n = cur.n + 1)
-            }
-            if (cur == null) state.remove()
-            else {
-              state.update(cur)
-              state.setTimeoutDuration(idleTimeout)
-            }
-            closed.iterator.map(summ)
-          }
-      }
   }
 }

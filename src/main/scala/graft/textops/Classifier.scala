@@ -1,6 +1,6 @@
 package graft.textops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** LEARNED-filter scoring — the fastText/DCLM-class quality
@@ -16,9 +16,8 @@ import org.apache.spark.sql.functions._
   * scope here (no labels in this corpus); what the engine owns is the
   * 100 TB-shaped scoring pass, against either
   *
-  *  - a WEIGHT TABLE the caller loads ([[weightsFromFile]] — the
-  *    standard `token weight` text format, through Hadoop's
-  *    FileSystem so hdfs:/s3a: paths work), or
+  *  - a (token, weight) WEIGHT TABLE the caller loads from a trained
+  *    model, or
   *  - the corpus's own deterministic fixture table
   *    ([[fixtureWeights]] — top-`vocab` tokens by frequency, weights
   *    derived from the md5 fold both engines replay), which is what
@@ -56,41 +55,6 @@ object Classifier {
       .orderBy(col("_cnt").desc, col("token").asc)
       .limit(vocab)
       .select(col("token"), md5Weight(col("token")).as("weight"))
-  }
-
-  /** Load a `token weight` text table (one pair per line, `#`
-    * comments allowed) through Hadoop's FileSystem — the external
-    * path for scoring with a REAL trained model's weights, the
-    * [[graft.functions.BpeVocab.fromFile]] convention. Weights must
-    * be integers (scale float weights to micro-units upstream; the
-    * scoring arithmetic is exact integer end to end).
-    */
-  def weightsFromFile(spark: SparkSession, path: String): DataFrame = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(conf)
-    val in = new java.io.BufferedReader(new java.io.InputStreamReader(
-      fs.open(p), java.nio.charset.StandardCharsets.UTF_8))
-    val rows =
-      try {
-        val out = Vector.newBuilder[(String, Long)]
-        var lineNo = 0
-        var line = in.readLine()
-        while (line != null) {
-          lineNo += 1
-          val t = line.trim
-          if (t.nonEmpty && !t.startsWith("#")) {
-            val parts = t.split("\\s+")
-            require(parts.length == 2,
-              s"$path:$lineNo: expected 'token weight', got '$t'")
-            out += ((parts(0), parts(1).toLong))
-          }
-          line = in.readLine()
-        }
-        out.result()
-      } finally in.close()
-    import spark.implicits._
-    rows.toDF("token", "weight")
   }
 
   /** DSIR-style importance scoring (Data Selection via Importance

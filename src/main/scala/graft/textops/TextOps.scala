@@ -110,12 +110,6 @@ object TextOps {
     regexp_replace(text,
       s"($cjkPadClass|$seaBaseClass$seaMarkClass*)", " $1 ")
 
-  /** [[tokens]] over [[segmentScripts]]-padded text — the multilingual
-    * tokenizer: whitespace words for space scripts, one token per
-    * ideograph/code point for the no-space blocks.
-    */
-  def tokensSegmented(text: Column): Column = tokens(segmentScripts(text))
-
   /** Whitespace token count. */
   def tokenCount(text: Column): Column = gateStats(text).getField("n_tokens")
 
@@ -339,8 +333,9 @@ object TextOps {
   }
 
   /** The relational formulation [[winnowing]] is equivalence-tested
-    * against: posexplode the k-gram hashes, running-min Window over
-    * positions, DISTINCT. Kept as the executable spec of the window
+    * against (TextOpsSpec): posexplode the k-gram hashes, running-min
+    * Window over positions, DISTINCT. No registered row calls it; it is
+    * kept as the executable spec of the window
     * semantics (full windows only; short texts truncate to one whole-
     * array window). The window-minimum step is RELATIONAL, not a nested
     * array lambda: Catalyst's filter-inference + pushdown will happily
@@ -386,7 +381,8 @@ object TextOps {
   def shinglesFromTokens(toks: Column, n: Int): Column =
     graft.functions.WordShinglesExpr(toks, n)
 
-  /** The Column-expression spec [[shinglesFromTokens]] is tested against.
+  /** The Column-expression spec [[shinglesFromTokens]] is tested against
+    * (BatchKernelSpec, KernelPropertiesSpec); no registered row calls it.
     *
     * The token expression must be a real column, not an inline expression:
     * Catalyst does no common-subexpression elimination inside
@@ -505,19 +501,5 @@ object TextOps {
       rules.map { case (n, c) => when(!c, n) }: _*)
     base.select(col(idCol), col("n_tokens"), keep.as("keep"),
       reasons.as("reasons"))
-  }
-
-  /** Full per-document stats frame. */
-  def textStats(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val t = col(textCol)
-    df.select(col(idCol),
-      length(t).as("n_chars_computed"),
-      tokenCount(t).as("n_tokens"),
-      bpeishCount(t).as("n_subword_tokens"),
-      round(punctRatio(t), 6).as("punct_ratio"),
-      round(stopwordRatio(t), 6).as("stopword_ratio"),
-      langId(t).as("lang_pred"),
-      qualityScore(t).as("quality"),
-      fingerprint(t).as("fingerprint"))
   }
 }

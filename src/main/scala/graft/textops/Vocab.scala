@@ -267,27 +267,6 @@ object Vocab {
           .as("novelty"))
   }
 
-  /** Window-form twin of [[noveltyScore]] — the df count rides the one
-    * hash-keyed exchange as a window aggregate. One fewer pass over the
-    * corpus, but every row of a hot n-gram lands in ONE window sort
-    * partition (AQE splits skewed joins, never windows), so the
-    * registered form keeps the aggregate + join. Kept for the
-    * equivalence spec.
-    */
-  private[graft] def noveltyScoreViaWindow(df: DataFrame, idCol: String,
-                                           textCol: String,
-                                           n: Int = 2): DataFrame = {
-    val grams = graft.util.Par.spread(df)
-      .select(col(idCol), explode(graft.functions.NgramXxSetExpr(
-        TextOps.tokens(lower(col(textCol))), n)).as("_gh"))
-    val wdf = Window.partitionBy(col("_gh"))
-    grams.withColumn("_df", count(lit(1)).over(wdf))
-      .groupBy(col(idCol))
-      .agg(count(lit(1)).as("n_ngrams"),
-        round(avg(when(col("_df") === 1, 1.0).otherwise(0.0)), 6)
-          .as("novelty"))
-  }
-
   /** All-built-ins twin of [[noveltyScore]] (interpreted `transform`
     * n-grams + a relational distinct exchange), kept for the
     * kernel-equivalence spec.

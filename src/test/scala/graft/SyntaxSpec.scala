@@ -1,29 +1,35 @@
 package graft
 
-import graft.lagops.LagSpec
+import graft.lagops.{LagMatrix, LagSpec, Lead, Rolling}
 import graft.sources.Tables
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The fluent surface must hit the same operators as the object API. */
+/** The method-call sugar of `graft.lagops.implicits` (the port of the
+  * reference's `CreateLagMatrix` trait) must hit the same operators as
+  * the object API.
+  */
 class SyntaxSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val dir = "/root/testdata/sf0.001"
 
-  test("series, document, and embedding syntax all resolve and run") {
-    import graft.syntax._
+  private def rows(df: DataFrame): Map[Seq[Any], Int] =
+    df.collect().toSeq.map(_.toSeq).groupBy(identity).map {
+      case (k, v) => k -> v.size }
+
+  test("lagops.implicits methods return the object API's rows") {
+    import graft.lagops.implicits._
     val ev = Tables.events(spark, dir)
-    val lagged = ev.lagMatrix("value",
-      LagSpec(Seq("ts_ns", "event_id"), Seq("user_id"), Seq(1, 2), None))
+    val spec = LagSpec(Seq("ts_ns", "event_id"), Seq("user_id"), Seq(1, 2), None)
+    val lagged = ev.lagMatrix("value", spec)
     assert(lagged.columns.contains("value_lag_2"))
     assert(lagged.count() == ev.count())
-
-    val docs = Tables.documents(spark, dir)
-    assert(docs.dedupExact("doc_id", "text").count() > 0)
-    assert(docs.withQualityScore("text").columns.contains("quality"))
-
-    val emb = Tables.embeddings(spark, dir)
-    val topk = emb.topKNeighbors(emb.filter(emb("vec_id") < 2),
-      "vec_id", "embedding", 3)
-    assert(topk.count() == 6)
+    assert(rows(lagged) == rows(LagMatrix.wide(ev, "value", spec)))
+    assert(rows(ev.lagMatrixLong("value", spec)) ==
+      rows(LagMatrix.long(ev, "value", spec)))
+    assert(rows(ev.leadMatrix("value", spec)) ==
+      rows(Lead.wide(ev, "value", spec)))
+    assert(rows(ev.rolling("value", spec, 3)) ==
+      rows(Rolling.over(ev, "value", spec, 3)))
   }
 }

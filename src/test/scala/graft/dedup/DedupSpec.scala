@@ -359,9 +359,7 @@ class DedupSpec extends AnyFunSuite {
         r.getLong(2), r.getDouble(3))).toSet
     for (t <- Seq(0.5, 0.8)) {
       val full = canon(Dedup.ngramJaccard(docs, "doc_id", "text", 3, t))
-      val pref = canon(Dedup.ngramJaccardPrefix(docs, "doc_id", "text", 3, t))
       val sort = canon(Dedup.ngramJaccardSortedPrefix(docs, "doc_id", "text", 3, t))
-      assert(full == pref, s"threshold $t (rarest-first)")
       assert(full == sort, s"threshold $t (sorted-prefix)")
       assert(full.nonEmpty)
     }
@@ -925,9 +923,10 @@ class DedupSpec extends AnyFunSuite {
       1L -> s"alpha beta gamma $passage delta epsilon",
       2L -> "unrelated corpus text about spark physical plans entirely")
     val accepted = docs(3L -> s"day one accepted text containing $passage too")
-    val appended = SignatureStore.appendSpans(
+    // the span append: the accepted docs' winnow rows merged as deltas
+    val appended = SignatureStore.mergeSpanDeltas(
       SignatureStore.buildSpans(corpus, "doc_id", "text", k = 8, w = 4),
-      accepted, "doc_id", "text", k = 8, w = 4)
+      SignatureStore.spanDeltaRows(accepted, "doc_id", "text", k = 8, w = 4))
     val rebuilt = SignatureStore.buildSpans(corpus.union(accepted),
       "doc_id", "text", k = 8, w = 4)
     def rowsOf(df: org.apache.spark.sql.DataFrame) = df.collect()
@@ -947,8 +946,8 @@ class DedupSpec extends AnyFunSuite {
     val probeA = Dedup.spanIncrementalStored(incA, store0, "doc_id", "text",
         k = 8, w = 4, minShared = 5, maxDf = 16).collect()
     assert(probeA.forall(_.getBoolean(3)), "day-1 doc must be accepted")
-    val store1 = SignatureStore.appendSpans(store0, incA, "doc_id", "text",
-      k = 8, w = 4)
+    val store1 = SignatureStore.mergeSpanDeltas(store0,
+      SignatureStore.spanDeltaRows(incA, "doc_id", "text", k = 8, w = 4))
     val incB = docs(20L -> s"day two re-serving $passage inside other words",
       21L -> "wholly fresh prose sharing no long passage with anything")
     def rowsOf(df: org.apache.spark.sql.DataFrame) = df.collect()

@@ -49,24 +49,6 @@ class MultimodalSpec extends AnyFunSuite {
       !plan.contains("MapPartitions"), plan)
   }
 
-  test("resize stub: metadata updated, deterministic content, no shuffle") {
-    val jpeg = Array(0xFF, 0xD8, 0xFF, 0xE0, 7, 8, 9).map(_.toByte)
-    val out = Multimodal.resize(media(1L -> jpeg), 224, 224).collect().head
-    assert(out.width.contains(224) && out.height.contains(224))
-    val again = Multimodal.resize(media(1L -> jpeg), 224, 224).collect().head
-    assert(out.content.toSeq == again.content.toSeq)
-  }
-
-  test("frame sampling: n contiguous chunks per record") {
-    val vid = (0 until 100).map(_.toByte).toArray
-    val frames = Multimodal.sampleFrames(media(5L -> vid), 4)
-      .orderBy("frame_no").collect()
-    assert(frames.length == 4)
-    assert(frames.map(_.getInt(1)).toSeq == Seq(0, 1, 2, 3))
-    val recon = frames.flatMap(_.getAs[Array[Byte]]("frame_bytes"))
-    assert(recon.toSeq == vid.toSeq) // 100/4 divides evenly → lossless
-  }
-
   test("feature counts reconstruct exactly from the normalized histogram") {
     // the registered multimodal_features query exports round(f·n_bytes)
     // as the per-bucket count — pin that the float round-trip is
@@ -212,7 +194,12 @@ class MultimodalSpec extends AnyFunSuite {
     val png = Multimodal.syntheticPng(5L, 32, 32)
     val h1 = Multimodal.dhashOf(png).get
     assert(Multimodal.dhashOf(png).contains(h1))
-    val reenc = Multimodal.resizeImage(png, 32, 32).get // decode+re-encode
+    val reenc = {                                       // decode+re-encode
+      val bos = new java.io.ByteArrayOutputStream()
+      javax.imageio.ImageIO.write(javax.imageio.ImageIO.read(
+        new java.io.ByteArrayInputStream(png)), "png", bos)
+      bos.toByteArray
+    }
     val h2 = Multimodal.dhashOf(reenc).get
     assert(java.lang.Long.bitCount(h1 ^ h2) <= 3,
       s"re-encoded image drifted to hamming ${java.lang.Long.bitCount(h1 ^ h2)}")
@@ -291,22 +278,6 @@ class MultimodalSpec extends AnyFunSuite {
     // BufferedImage resize branch and still fingerprints
     val big = Multimodal.syntheticAvi(4L, nFrames = 4, w = 16, h = 16)
     assert(Multimodal.aviClipDhash(big, step = 2).isDefined)
-  }
-
-  test("resize runs the real codec on images: decoded dims match the box") {
-    val png = Multimodal.syntheticPng(9L, 32, 32)
-    val out = Multimodal.resize(media(9L -> png), 16, 16).collect().head
-    assert(out.width.contains(16) && out.height.contains(16))
-    // the output is itself a decodable PNG of the requested geometry
-    val st = Multimodal.decodeImage(out.content).get
-    assert(st.width == 16 && st.height == 16)
-    // downscale of a smooth gradient stays in the source color range
-    assert(st.r_sum >= 0 && st.r_sum <= 255L * 16 * 16)
-    // non-image payloads keep the deterministic stub path
-    val stub = Multimodal.resize(media(1L -> "abc".getBytes("UTF-8")), 4, 4)
-      .collect().head
-    assert(Multimodal.decodeImage(stub.content).isEmpty)
-    assert(stub.width.contains(4))
   }
 
   test("REAL video round-trip: AVI assemble then demux is pixel-exact, frames sample correctly") {

@@ -63,6 +63,9 @@ class PlanAuditSpec extends AnyFunSuite {
 
   test("lag_2d_partitioned collapses all lags into one Window pass") {
     assert(opCount(plan("lag_2d_partitioned"), "Window") == 1)
+    // ewma reads its `window` lag terms through one WindowSpec: the same
+    // single Window pass (the property Ewma's scaladoc cites)
+    assert(opCount(plan("ewma"), "Window") == 1)
   }
 
   test("embedding_neardup has no nested-loop pair scan") {
@@ -120,17 +123,21 @@ class PlanAuditSpec extends AnyFunSuite {
     // DataFilters, and a one-split local source would then evaluate it
     // single-threaded below the spread repartition (measured 4.9s of a
     // 11.6s query at 10x sf0.1). PlanFence pins it above the exchange.
-    // Audited on the exposed stage: corpus_clean's survivors checkpoint
+    // Audited on the exposed stage corpus_clean runs (corpusClean ->
+    // cleanedNarrow, at the row's parameters): its survivors checkpoint
     // truncates lineage, so the composite plan never shows this stage.
     val docs = graft.sources.Tables.documents(spark, dir)
     val p = graft.pipeline.Pipeline
-      .qualityGate(docs, "doc_id", "lang", "text", 0.3)
+      .cleanedNarrow(docs, "doc_id", "text", "lang", 0.3,
+        Map("en" -> 80, "zh" -> 50), 25)
       .queryExecution.executedPlan.toString
     assert(p.contains("planfenceexpr"), s"gate fence missing:\n$p")
     val lines = p.linesIterator.toSeq
-    val exchangeAt = lines.indexWhere(_.contains("Exchange"))
+    // the spread is the round-robin exchange; the fingerprint window's
+    // hash exchange sits ABOVE the filter and proves nothing
+    val spreadAt = lines.indexWhere(_.contains("RoundRobinPartitioning"))
     val filterAt = lines.indexWhere(_.contains("planfenceexpr"))
-    assert(exchangeAt >= 0 && filterAt >= 0 && exchangeAt > filterAt,
+    assert(spreadAt >= 0 && filterAt >= 0 && spreadAt > filterAt,
       s"gate filter not above the spread exchange:\n$p")
     val scans = lines.filter(_.contains("DataFilters"))
     assert(scans.forall(!_.toLowerCase.contains("length")),
@@ -395,10 +402,6 @@ class PlanAuditSpec extends AnyFunSuite {
     val pt = plan("tfidf_terms")
     assert(pt.contains("ShuffledHashJoin"), pt)
     assert(pt.contains("hashpartitioning(_th"), pt)
-    val docs = graft.sources.Tables.documents(spark, dir)
-    val pw = graft.textops.Vocab.noveltyScoreViaWindow(docs, "doc_id", "text")
-      .queryExecution.executedPlan.toString
-    assert(pw.contains("ngramxxsetexpr"), pw)
   }
 
   test("n-gram df joins stay AQE-splittable under skew (no forced broadcast)") {

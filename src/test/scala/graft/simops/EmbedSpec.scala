@@ -178,22 +178,6 @@ class EmbedSpec extends AnyFunSuite {
     assert(Embed.autoNlist(Long.MaxValue, 32) == (1 << 20)) // max clamp
   }
 
-  test("semanticDedupAuto equals semanticDedup at the derived nlist") {
-    import spark.implicits._
-    val rng = new scala.util.Random(11)
-    val vecs = (0 until 64).map { i =>
-      (i.toLong, Seq.fill(8)(rng.nextFloat() * 2 - 1)) }
-      .toDF("vec_id", "embedding")
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getBoolean(2))).sortBy(_._1).toSeq
-    val auto = rows(Embed.semanticDedupAuto(vecs, "vec_id", "embedding",
-      threshold = 0.8, targetListSize = 16))
-    val explicit = rows(Embed.semanticDedup(vecs, "vec_id", "embedding",
-      threshold = 0.8, nlist = Embed.autoNlist(64, 16)))
-    assert(auto == explicit)
-    assert(auto.length == 64)
-  }
-
   test("opqVarPermutation: valid permutation, one rank-octile dim per subspace") {
     import spark.implicits._
     val rng = new scala.util.Random(5)

@@ -6,6 +6,21 @@ import org.scalatest.funsuite.AnyFunSuite
 class IvfSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
+  /** Two-level assignment through the literal forest — the plan the
+    * hier operators inline — in the relational path's output shape
+    * (`_id`, `_v`, coarse_id, list_id).
+    */
+  private def assignLiteral(df: org.apache.spark.sql.DataFrame,
+                            h: Ivf.HierIndex) = {
+    import org.apache.spark.sql.functions.col
+    df.select(col("vec_id").as("_id"),
+        col("embedding").cast("array<double>").as("_v"))
+      .withColumn("_sims", Ivf.simsCol(h.coarse, col("_v")))
+      .withColumn("coarse_id", Ivf.nearestList(h.coarse, col("_sims")))
+      .drop("_sims")
+      .withColumn("list_id", h.listIdCol(col("_v"), col("coarse_id")))
+  }
+
   private def corpus(n: Int, dim: Int, seed: Int) = {
     import spark.implicits._
     val rng = new scala.util.Random(seed)
@@ -16,17 +31,18 @@ class IvfSpec extends AnyFunSuite {
 
   test("centroids: nlist lists, vector-length centroids") {
     val df = corpus(200, 8, 3)
-    val c = Ivf.fitCentroids(df, "vec_id", "embedding", nlist = 8, iters = 2)
-      .collect()
+    val c = Ivf.fitSeq(df, "vec_id", "embedding", nlist = 8, iters = 2,
+      fitSamplePct = 100)
     assert(c.length == 8)
-    assert(c.forall(_.getSeq[Double](1).length == 8))
+    assert(c.forall(_._2.length == 8))
   }
 
   test("fit on an empty candidate frame fails with a clear error") {
     import spark.implicits._
     val empty = Seq.empty[(Long, Array[Float])].toDF("vec_id", "embedding")
     val e = intercept[IllegalArgumentException] {
-      Ivf.fitCentroids(empty, "vec_id", "embedding", nlist = 4)
+      Ivf.fitSeq(empty, "vec_id", "embedding", nlist = 4, iters = 2,
+        fitSamplePct = 100)
     }
     assert(e.getMessage.contains("empty candidate frame"))
   }
@@ -64,12 +80,10 @@ class IvfSpec extends AnyFunSuite {
     val recall = ivf.intersect(brute).size.toDouble / brute.size
     info(f"IVF recall@5, 60%% sampled fit (nlist=16, nprobe=4): $recall%.3f")
     assert(recall >= 0.3, s"sampled-fit recall $recall")
-    val c1 = Ivf.fitCentroids(emb, "vec_id", "embedding", nlist = 16,
-      iters = 1, fitSamplePct = 60).collect().map(r =>
-      (r.getInt(0), r.getSeq[Double](1))).toSeq.sortBy(_._1)
-    val c2 = Ivf.fitCentroids(emb, "vec_id", "embedding", nlist = 16,
-      iters = 1, fitSamplePct = 60).collect().map(r =>
-      (r.getInt(0), r.getSeq[Double](1))).toSeq.sortBy(_._1)
+    val c1 = Ivf.fitSeq(emb, "vec_id", "embedding", nlist = 16,
+      iters = 1, fitSamplePct = 60).sortBy(_._1)
+    val c2 = Ivf.fitSeq(emb, "vec_id", "embedding", nlist = 16,
+      iters = 1, fitSamplePct = 60).sortBy(_._1)
     assert(c1 == c2, "sampled fit must be bit-reproducible")
   }
 
@@ -104,12 +118,13 @@ class IvfSpec extends AnyFunSuite {
     // every vector to the same list
     val df = corpus(800, 16, 11)
     for (pct <- Seq(100, 60)) {
-      val lit0 = Ivf.assignHierLiteral(df, "vec_id", "embedding",
-          nlist = 36, iters = 2, fitSamplePct = pct)
+      val lit0 = assignLiteral(df, Ivf.fitHier(df, "vec_id", "embedding",
+          nlist = 36, iters = 2, fitSamplePct = pct))
         .select("_id", "list_id").collect()
         .map(r => r.getLong(0) -> r.getInt(1)).toMap
-      val rel = Ivf.assignHierRelational(df, "vec_id", "embedding",
-          nlist = 36, iters = 2, fitSamplePct = pct)
+      val rel = Ivf.assignHierR(df, "vec_id", "embedding",
+          Ivf.fitHierR(df, "vec_id", "embedding", nlist = 36, iters = 2,
+            fitSamplePct = pct))
         .select("_id", "list_id").collect()
         .map(r => r.getLong(0) -> r.getInt(1)).toMap
       assert(rel.size == 800 && lit0.size == 800)

@@ -57,7 +57,7 @@ class SimilaritySpec extends AnyFunSuite {
   test("near-dup pairs: only pairs above threshold, ids ordered") {
     val df = vecs(
       0L -> Seq(1f, 0f), 1L -> Seq(0.99f, 0.14f), 2L -> Seq(0f, 1f))
-    val out = Similarity.nearDupPairs(df, "vec_id", "embedding", 0.9)
+    val out = Similarity.nearDupPairsBanded(df, "vec_id", "embedding", 0.9)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(out == Set((0L, 1L)))
   }

@@ -4,211 +4,13 @@ import graft.TestSpark
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Sink-side scale patterns: bucketed co-located joins and partitioned
-  * writes with partition pruning — the storage layouts a 100 TB
-  * deployment leans on, exercised end-to-end through real writes.
+/** Sink-side contracts: the exact JSONL round-trip, the raw-file task
+  * commit, and partitioned writes with partition pruning — exercised
+  * end-to-end through real writes.
   */
 class SinksSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val src = "/root/testdata/sf0.001"
-
-  test("bucketed tables join with zero exchanges and zero sorts") {
-    // warehouse dir is a temp dir set statically in TestSpark
-    val li = Tables.lineitem(spark, src)
-    val o = Tables.orders(spark, src)
-    Sinks.writeBucketed(li, "li_b", 8, Seq("l_orderkey"), Seq("l_orderkey"))
-    Sinks.writeBucketed(o, "o_b", 8, Seq("o_orderkey"), Seq("o_orderkey"))
-    // bucket-compatible layout: the join itself needs no shuffle — with
-    // broadcast disabled it must plan a SortMergeJoin over bucket scans
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    val orderingKey = "spark.sql.legacy.bucketedTableScan.outputOrdering"
-    val prevOrdering = spark.conf.get(orderingKey)
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      // sort elision needs the reader opt-in (SPARK-28595) plus the one
-      // file per bucket writeBucketed's repartition guarantees
-      spark.conf.set(orderingKey, "true")
-      val joined = spark.table("li_b").join(spark.table("o_b"),
-        col("l_orderkey") === col("o_orderkey"))
-        .groupBy("o_orderstatus").count()
-      val plan = joined.queryExecution.executedPlan.toString
-      assert(plan.contains("SortMergeJoin"), plan)
-      // a non-bucketed layout would shuffle both sides on the join keys
-      assert(!plan.contains("Exchange hashpartitioning(l_orderkey") &&
-        !plan.contains("Exchange hashpartitioning(o_orderkey"),
-        s"bucketed join should not re-shuffle its inputs:\n$plan")
-      // writeBucketed's repartition leaves ONE file per bucket, so the
-      // sortBy order is usable and the merge join needs no Sort either
-      assert(!plan.contains("Sort [l_orderkey") &&
-        !plan.contains("Sort [o_orderkey"),
-        s"sorted buckets should elide the SMJ sorts:\n$plan")
-      assert(joined.count() > 0)
-      // aggregates on the bucket key skip their exchange too
-      val agg = spark.table("li_b").groupBy("l_orderkey")
-        .agg(sum("l_quantity"))
-      val aggPlan = agg.queryExecution.executedPlan.toString
-      assert(!aggPlan.contains("Exchange hashpartitioning(l_orderkey"),
-        s"groupBy(bucket key) should not shuffle:\n$aggPlan")
-      assert(agg.count() > 0)
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
-      spark.conf.set(orderingKey, prevOrdering)
-      spark.sql("DROP TABLE li_b"); spark.sql("DROP TABLE o_b")
-    }
-  }
-
-  test("writePacked round-trips: packs stay whole, offset-ordered within shards") {
-    val docs = Tables.documents(spark, src)
-    val packed = graft.pipeline.Pipeline.seqPack(docs, "doc_id", "text",
-      budget = 2048)
-    val out = java.nio.file.Files.createTempDirectory("graft_packed").toString
-    Sinks.writePacked(packed, out, numShards = 4)
-    val back = Sinks.readSharded(spark, out)
-    // content round-trips exactly (modulo the added shard column)
-    val a = packed.orderBy("doc_id").collect().map(_.toSeq).toSeq
-    val b = back.drop("shard").select(packed.columns.map(col): _*)
-      .orderBy("doc_id").collect().map(_.toSeq).toSeq
-    assert(a == b)
-    // a pack never straddles shards: one shard per pack_id
-    val straddle = back.groupBy("pack_id")
-      .agg(countDistinct("shard").as("n")).filter(col("n") > 1).count()
-    assert(straddle == 0, "a pack must land in exactly one shard")
-    // shard assignment is the deterministic md5 fold, not hashpartitioning
-    val bad = back.withColumn("expect",
-      Sinks.shardCol(col("pack_id"), 4))
-      .filter(col("shard") =!= col("expect")).count()
-    assert(bad == 0)
-    // shard pruning reaches the scan as a partition filter
-    val pruned = back.filter(col("shard") === 1)
-    assert(pruned.queryExecution.executedPlan.toString
-      .contains("PartitionFilters"), "shard filter must prune directories")
-    // within each file, rows are (pack_id, pack_offset)-sorted: the
-    // loader contract — verify per input file via monotone offsets
-    import spark.implicits._
-    val files = back
-      .select(input_file_name().as("f"), col("pack_id"), col("pack_offset"))
-      .as[(String, Long, Long)].collect().groupBy(_._1)
-    files.foreach { case (f, rows) =>
-      val got = rows.map(r => (r._2, r._3)).toSeq
-      assert(got == got.sorted, s"rows in $f are not pack-ordered")
-    }
-  }
-
-  test("file-size governance: auto shard count tracks the size estimate, one file per shard") {
-    val docs = Tables.documents(spark, src)
-    // shardCountFor scales inversely with the target and never hits 0
-    val small = Sinks.shardCountFor(docs, targetBytes = 16L << 10)
-    val big = Sinks.shardCountFor(docs, targetBytes = 512L << 20)
-    assert(small >= big, s"smaller target must mean >= shards ($small vs $big)")
-    assert(big >= 1)
-    // a frame 10x the rows gets proportionally more shards at a fixed
-    // small target (stats scale with size, so governance scales too)
-    val docs10 = (0 until 10).map(_ => docs).reduce(_ union _)
-    val small10 = Sinks.shardCountFor(docs10, targetBytes = 16L << 10)
-    assert(small10 > small, s"10x rows must raise the shard count ($small10 vs $small)")
-    // the auto writer emits exactly ONE parquet file per shard dir — the
-    // no-small-file-storm contract (a hot shard may split via
-    // maxRecordsPerFile, but at this size each shard is one file)
-    val out = java.nio.file.Files.createTempDirectory("graft_auto").toString
-    Sinks.writeShardedAuto(docs, out, "doc_id", Seq("doc_id"),
-      targetBytes = 64L << 10)
-    val shardDirs = new java.io.File(out).listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("shard="))
-    assert(shardDirs.length == Sinks.shardCountFor(docs, 64L << 10))
-    shardDirs.foreach { d =>
-      val files = d.listFiles().filter(_.getName.endsWith(".parquet"))
-      assert(files.length == 1,
-        s"${d.getName} has ${files.length} files — small-file storm")
-    }
-    // round-trip intact
-    assert(Sinks.readSharded(spark, out).count() == docs.count())
-  }
-
-  test("shardCountFor: defaultSizeInBytes sentinel falls back, never storms") {
-    // a LogicalRDD-backed frame has no stats — Catalyst reports the
-    // spark.sql.defaultSizeInBytes sentinel (Long.MaxValue); naive
-    // ceil-division would saturate maxShards and recreate the exact
-    // small-file storm the helper guards against
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("id",
-        org.apache.spark.sql.types.LongType)))
-    val statless = spark.createDataFrame(
-      spark.sparkContext.parallelize(Seq(org.apache.spark.sql.Row(1L))),
-      schema)
-    val raw = statless.queryExecution.optimizedPlan.stats.sizeInBytes
-    assert(raw >= BigInt(spark.sessionState.conf.defaultSizeInBytes),
-      s"precondition: expected sentinel stats, got $raw")
-    val n = Sinks.shardCountFor(statless)
-    assert(n == spark.sessionState.conf.numShufflePartitions,
-      s"sentinel must fall back to shuffle parallelism, got $n")
-    // and a join of sentinel frames (estimates MULTIPLY) stays sane too
-    val joined = statless.join(statless.withColumnRenamed("id", "id2"),
-      statless("id") === org.apache.spark.sql.functions.col("id2"))
-    assert(Sinks.shardCountFor(joined) <= 4096)
-  }
-
-  test("streamToParquet: checkpointed append sink delivers each batch once") {
-    import spark.implicits._
-    val input = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[Long](spark)
-    val out = java.nio.file.Files.createTempDirectory("graft_ssink").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_sckpt").toString
-    val q = Sinks.streamToParquet(
-      input.toDF().withColumnRenamed("value", "v"), out, ckpt).start()
-    try {
-      input.addData(1L, 2L, 3L)
-      q.processAllAvailable()
-      input.addData(4L, 5L)
-      q.processAllAvailable()
-      val got = spark.read.parquet(out).as[Long].collect().sorted.toSeq
-      assert(got == Seq(1L, 2L, 3L, 4L, 5L))
-    } finally q.stop()
-    // the helper refuses a missing checkpoint dir outright
-    val e = intercept[IllegalArgumentException] {
-      Sinks.streamToParquet(input.toDF(), out, "")
-    }
-    assert(e.getMessage.contains("checkpoint"))
-  }
-
-  test("z-ordered layout clusters EVERY z column, not just the leading one") {
-    val out = java.nio.file.Files.createTempDirectory("graft_zord").toString
-    val ev = Tables.events(spark, src)
-      .select(col("event_id"), col("user_id"), col("value"))
-    Sinks.writeZOrdered(ev, out, Seq("user_id", "value"), numFiles = 16)
-    // per-file spans: a plain sort clusters only its leading key; the
-    // morton layout must shrink the average per-file span of BOTH
-    // columns well below the global span
-    val files = new java.io.File(out).listFiles()
-      .filter(_.getName.endsWith(".parquet")).map(_.toString)
-    assert(files.length == 16, s"expected 16 files, got ${files.length}")
-    def avgSpanFrac(c: String): Double = {
-      val g = ev.agg(min(col(c)).cast("double"),
-        max(col(c)).cast("double")).head()
-      val global = g.getDouble(1) - g.getDouble(0)
-      val spans = files.map { f =>
-        val r = spark.read.parquet(f).agg(min(col(c)).cast("double"),
-          max(col(c)).cast("double")).head()
-        r.getDouble(1) - r.getDouble(0)
-      }
-      spans.sum / spans.length / global
-    }
-    val (uFrac, vFrac) = (avgSpanFrac("user_id"), avgSpanFrac("value"))
-    assert(uFrac < 0.5 && vFrac < 0.5,
-      f"z-order should cluster both dims: user=$uFrac%.2f value=$vFrac%.2f")
-    // round-trip: no rows lost, no z column leaked into the schema
-    val back = spark.read.parquet(out)
-    assert(back.columns.toSeq == Seq("event_id", "user_id", "value"))
-    assert(back.count() == ev.count())
-  }
-
-  test("mortonCol interleaves bits exactly") {
-    import spark.implicits._
-    // dims (x=0b11, y=0b01) at 2 bits → z = y1 x1 y0 x0 = 0b0111
-    val r = Seq((3L, 1L)).toDF("x", "y")
-      .select(Sinks.mortonCol(Seq(col("x"), col("y")), 2).as("z"))
-      .head().getLong(0)
-    assert(r == 7L, s"expected 0b0111, got $r")
-  }
 
   test("jsonl round-trip is exact on adversarial text; sharded form prunes") {
     import spark.implicits._

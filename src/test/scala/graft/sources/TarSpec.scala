@@ -56,44 +56,6 @@ class TarSpec extends AnyFunSuite {
     assert(got("7.cls") == "label7")
   }
 
-  test("writeTarShardsAuto: shards sized to target bytes, samples stay whole") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("tar_auto").toString
-    // 400 samples × 2 members × ~1KB payload ≈ 800KB of content;
-    // a 128KB target should produce a handful of shards, not 1, not 100
-    val df = (0 until 400).flatMap { i =>
-      val key = f"s$i%06d"
-      Seq((s"$key.txt", Array.fill[Byte](1000)('t')),
-          (s"$key.cls", Array.fill[Byte](16)('c')))
-    }.toDF("name", "content").repartition(16) // caller partitioning is ignored
-    // the derived count IS the contract (Catalyst's size estimate over
-    // the target; for in-memory frames the estimate is schema-default
-    // per-row bytes — parquet-backed frames carry real file sizes)
-    val want = Sinks.shardCountFor(df, 16L << 10)
-    Tar.writeTarShardsAuto(df, dir, targetBytes = 16L << 10)
-    val shards = new java.io.File(dir).listFiles()
-      .filter(_.getName.endsWith(".tar")).sortBy(_.getName)
-    assert(shards.length == want && want >= 2 && want <= 32,
-      s"got ${shards.length} shards, derived $want")
-    // hash-clustering balances the shards: no shard dwarfs another
-    val sizes = shards.map(_.length)
-    assert(sizes.max <= sizes.min * 3, sizes.toSeq.toString)
-    // every sample's two members sit in ONE shard, consecutively
-    shards.foreach { f =>
-      val names = parse(java.nio.file.Files.readAllBytes(f.toPath)).map(_._1)
-      names.grouped(2).foreach { pair =>
-        assert(pair.length == 2 && pair(0).stripSuffix(".cls") ==
-          pair(1).stripSuffix(".txt"), pair.toString)
-      }
-    }
-    // nothing lost, and the frame reads back whole
-    assert(Tar.read(spark, dir).count() == 800)
-    // GNU-tar interop holds on the auto-sharded output too
-    import scala.sys.process._
-    assume(("which tar" #> new java.io.File("/dev/null")).! == 0)
-    assert(Seq("tar", "-tf", shards.head.getPath).!!.linesIterator.nonEmpty)
-  }
-
   test("interop: the system GNU tar lists and extracts our shards") {
     import scala.sys.process._
     assume(("which tar" #> new java.io.File("/dev/null")).! == 0)

@@ -141,57 +141,6 @@ class WarcSpec extends AnyFunSuite {
       .where(col("warc_type") === "response").count() == 2)
   }
 
-  test("offset index: readAt fetches ONE member ≡ the streamed record") {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("warc_cdx").toString
-    val df = (1L to 50L).map(i => (s"http://x/$i", s"doc $i body"))
-      .toDF("target_uri", "text").repartition(2)
-    Warc.writeWet(df, dir, gzipPerRecord = true, writeIndex = true)
-    val cdx = new java.io.File(dir).listFiles()
-      .filter(_.getName.endsWith(".cdx"))
-    assert(cdx.length == 2, cdx.map(_.getName).toSeq)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val idx = Warc.readIndex(spark, dir).collect()
-    assert(idx.length == 50)
-    // every index row resolves to the identical record the stream sees
-    val streamed = Warc.read(spark, dir)
-      .select(col("record_id"), col("target_uri"),
-        col("content").cast("string"))
-      .collect().map(r => r.getString(0) -> (r.getString(1), r.getString(2)))
-      .toMap
-    idx.foreach { r =>
-      val rec = Warc.readAt(conf, r.getString(0), r.getLong(2), r.getLong(3))
-      assert(rec.recordId == r.getString(1))
-      val (uri, text) = streamed(rec.recordId)
-      assert(rec.targetUri == uri)
-      assert(new String(rec.content, "UTF-8") == text)
-    }
-    // writeIndex without member-per-record gzip is a caller error
-    intercept[IllegalArgumentException] {
-      Warc.writeWet(df, dir + "_bad", writeIndex = true)
-    }
-  }
-
-  test("readIndex decodes the shard URI: spaces/% in the dir still readAt") {
-    import spark.implicits._
-    // input_file_name() returns a PERCENT-ENCODED URI — before the
-    // decode fix, a shard dir with a space (or a literal '%') stored
-    // a shard string readAt resolved to a missing file
-    val base = java.nio.file.Files.createTempDirectory("warc enc %40").toString
-    val df = (1L to 10L).map(i => (s"http://x/$i", s"doc $i body"))
-      .toDF("target_uri", "text").repartition(1)
-    Warc.writeWet(df, base, gzipPerRecord = true, writeIndex = true)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val idx = Warc.readIndex(spark, base).collect()
-    assert(idx.length == 10)
-    idx.foreach { r =>
-      val shard = r.getString(0)
-      assert(!shard.contains("%20"), s"shard still percent-encoded: $shard")
-      val rec = Warc.readAt(conf, shard, r.getLong(2), r.getLong(3))
-      assert(rec.recordId == r.getString(1))
-    }
-  }
-
   test("base32 matches RFC 4648 §10 test vectors; sha1 digest is 32 chars unpadded") {
     val vectors = Seq(
       "" -> "", "f" -> "MY======", "fo" -> "MZXQ====",

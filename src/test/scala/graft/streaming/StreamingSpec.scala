@@ -2,12 +2,29 @@ package graft.streaming
 
 import graft.TestSpark
 import graft.sources.Tables
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 class StreamingSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val dir = "/root/testdata/sf0.001"
+
+  /** The ingest-probe shape: every micro-batch of `feed` is decided by
+    * a batch operator against the stores as they stand at that trigger
+    * (`decide` re-reads them), and the decision rows go to `sink`,
+    * which compacts accepted rows back into the stores. The stream
+    * keeps no state of its own; the stores are the state.
+    */
+  private def probe(feed: DataFrame)(decide: DataFrame => DataFrame)(
+      sink: (DataFrame, Long) => Unit) =
+    feed.writeStream.foreachBatch { (b: DataFrame, id: Long) =>
+      sink(decide(b), id)
+    }
+
+  /** (media_id, fingerprint) rows of the decodable media. */
+  private def fingerprints(features: DataFrame, fpCol: String) =
+    features.filter(col("decodable")).select(col("media_id"), col(fpCol))
 
   test("ingestProbe: micro-batched stored probe equals the batch decision") {
     import spark.implicits._
@@ -44,7 +61,8 @@ class StreamingSpec extends AnyFunSuite {
     val out = scala.collection.mutable.ArrayBuffer
       .empty[org.apache.spark.sql.Row]
     var batches = 0
-    val q = StreamingOps.ingestProbe(stream, store) { (df, _) =>
+    val q = probe(stream)(graft.dedup.Dedup.spanIncrementalStored(_, store,
+        "doc_id", "text")) { (df, _) =>
       out.synchronized { out ++= df.collect(); batches += 1 }
     }.start()
     try q.processAllAvailable() finally q.stop()
@@ -99,8 +117,8 @@ class StreamingSpec extends AnyFunSuite {
 
     val out = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
     var batches = 0
-    val q = StreamingOps.ingestCleanProbe(stream,
-        () => spark.read.parquet(corpusDir), minQ) { (df, _) =>
+    val q = probe(stream)(graft.pipeline.Pipeline.ingestClean(_,
+        spark.read.parquet(corpusDir), "doc_id", "text", minQ)) { (df, _) =>
       val rows = df.collect()
       out.synchronized { out ++= rows; batches += 1 }
       // compaction: accepted survivors join the corpus before the next
@@ -155,8 +173,8 @@ class StreamingSpec extends AnyFunSuite {
     val out = scala.collection.mutable.ArrayBuffer
       .empty[org.apache.spark.sql.Row]
     var batches = 0
-    val q = StreamingOps.lineIngestProbe(stream,
-        () => spark.read.parquet(corpusDir)) { (df, _) =>
+    val q = probe(stream)(graft.textops.LineDedup.dedupLinesIncremental(_,
+        spark.read.parquet(corpusDir), "doc_id", "text")) { (df, _) =>
       val rows = df.collect()
       out.synchronized { out ++= rows; batches += 1 }
       // compaction: the cleaned accepted docs join the corpus before
@@ -211,8 +229,8 @@ class StreamingSpec extends AnyFunSuite {
     val out = scala.collection.mutable.ArrayBuffer
       .empty[org.apache.spark.sql.Row]
     var batches = 0
-    val q = StreamingOps.bloomIngestProbe(stream,
-        () => BloomStore.read(spark, sd)._1) { (df, _) =>
+    val q = probe(stream)(Dedup.exactIncrementalBloom(_,
+        BloomStore.read(spark, sd)._1, "doc_id", "text")) { (df, _) =>
       val rows = df.collect()
       out.synchronized { out ++= rows; batches += 1 }
       // compaction: accepted fingerprints append to the persisted
@@ -267,8 +285,9 @@ class StreamingSpec extends AnyFunSuite {
     val out = scala.collection.mutable.ArrayBuffer
       .empty[(Long, Long, Int)]
     var batches = 0
-    val q = StreamingOps.vectorServeIngestProbe(stream,
-        () => VectorIndexStore.read(spark, sd), kNN = 3, nprobe = 4) {
+    val q = probe(stream)(VectorIndexStore.topK(_,
+        VectorIndexStore.read(spark, sd), "vec_id", "embedding", kNN = 3,
+        nprobe = 4)) {
       (df, _) =>
         out.synchronized {
           out ++= df.collect().map(r =>
@@ -329,8 +348,9 @@ class StreamingSpec extends AnyFunSuite {
     val out = scala.collection.mutable.ArrayBuffer
       .empty[org.apache.spark.sql.Row]
     var batches = 0
-    val q = StreamingOps.audioIngestProbe(stream,
-        () => spark.read.parquet(storeDir)) { (df, _) =>
+    val q = probe(stream)(b => graft.dedup.Dedup.hammingIncremental(
+        fingerprints(graft.multimodal.Multimodal.audioFingerprintFeatures(b),
+          "afp"), spark.read.parquet(storeDir), "media_id", "afp")) { (df, _) =>
       val rows = df.collect()
       out.synchronized { out ++= rows; batches += 1 }
       val accepted = rows.filter(_.getBoolean(3)).map(_.getLong(0))
@@ -391,8 +411,9 @@ class StreamingSpec extends AnyFunSuite {
     val out = scala.collection.mutable.ArrayBuffer
       .empty[org.apache.spark.sql.Row]
     var batches = 0
-    val q = StreamingOps.imageIngestProbe(stream,
-        () => spark.read.parquet(storeDir)) { (df, _) =>
+    val q = probe(stream)(b => graft.dedup.Dedup.hammingIncremental(
+        fingerprints(graft.multimodal.Multimodal.dhashFeatures(b), "dhash"),
+        spark.read.parquet(storeDir), "media_id", "dhash")) { (df, _) =>
       val rows = df.collect()
       out.synchronized { out ++= rows; batches += 1 }
       // compaction: accepted fingerprints join the store before the
@@ -485,9 +506,11 @@ class StreamingSpec extends AnyFunSuite {
     val out = scala.collection.mutable.ArrayBuffer
       .empty[org.apache.spark.sql.Row]
     var batches = 0
-    val q = StreamingOps.pairIngestProbe(stream,
-        () => graft.dedup.SignatureStore.read(spark, textSd),
-        () => spark.read.parquet(mediaSd), sig, "dhash") { (df, _) =>
+    val q = probe(stream)(b => graft.dedup.Dedup.pairNearDupStored(
+        b.select(col("doc_id"), col("text")),
+        graft.dedup.SignatureStore.read(spark, textSd), sig(b),
+        spark.read.parquet(mediaSd), "doc_id", "text", "media_id",
+        "dhash")) { (df, _) =>
       val rows = df.collect()
       out.synchronized { out ++= rows; batches += 1 }
       // compaction: ACCEPTED pairs join BOTH stores before the next
@@ -566,8 +589,10 @@ class StreamingSpec extends AnyFunSuite {
     val out = scala.collection.mutable.ArrayBuffer
       .empty[org.apache.spark.sql.Row]
     var batches = 0
-    val q = StreamingOps.videoIngestProbe(stream,
-        () => spark.read.parquet(storeDir)) { (df, _) =>
+    val q = probe(stream)(b => graft.dedup.Dedup.hammingIncremental(
+        fingerprints(graft.multimodal.Multimodal.videoDhashFeatures(b, 2),
+          "clip_dhash"), spark.read.parquet(storeDir), "media_id",
+        "clip_dhash")) { (df, _) =>
       val rows = df.collect()
       out.synchronized { out ++= rows; batches += 1 }
       val accepted = rows.filter(_.getBoolean(3)).map(_.getLong(0))
@@ -616,8 +641,9 @@ class StreamingSpec extends AnyFunSuite {
     val out = scala.collection.mutable.ArrayBuffer
       .empty[org.apache.spark.sql.Row]
     var batches = 0
-    val q = StreamingOps.embeddingIngestProbe(stream,
-        () => spark.read.parquet(corpusDir), dim = 64) { (df, _) =>
+    val q = probe(stream)(graft.simops.Similarity.nearDupIncremental(_,
+        spark.read.parquet(corpusDir), "vec_id", "embedding", 0.9,
+        bands = 4, dim = 64)) { (df, _) =>
       val rows = df.collect()
       out.synchronized { out ++= rows; batches += 1 }
       val accepted = rows.filter(_.getBoolean(3)).map(_.getLong(0))
@@ -664,8 +690,8 @@ class StreamingSpec extends AnyFunSuite {
     val out = scala.collection.mutable.ArrayBuffer
       .empty[org.apache.spark.sql.Row]
     var batches = 0
-    val q = StreamingOps.semanticIngestProbe(stream,
-        () => spark.read.parquet(corpusDir), threshold = 0.99) { (df, _) =>
+    val q = probe(stream)(graft.simops.Embed.semanticDedupIncremental(_,
+        spark.read.parquet(corpusDir), "vec_id", "embedding", 0.99)) { (df, _) =>
       val rows = df.collect()
       out.synchronized { out ++= rows; batches += 1 }
       val accepted = rows.filter(_.getBoolean(4)).map(_.getLong(0))
@@ -718,8 +744,20 @@ class StreamingSpec extends AnyFunSuite {
     // gate BEFORE dedup: duplicate fingerprints can carry different raw
     // text (normalization) and so different quality — dedup-first would
     // keep an arbitrary survivor and make the kept SET nondeterministic
-    val batchKept = StreamingOps.dedupDocs(
-        StreamingOps.qualityFilter(docs, 0.3), "ingest_ts")
+    // the quality gate and the content fingerprint are plain columns,
+    // so one plan serves batch and stream; the stream bounds its dedup
+    // state with the watermark
+    def gateDedup(df: DataFrame) = {
+      val fp = df.withColumn("quality",
+          graft.textops.TextOps.qualityScore(col("text")))
+        .filter(col("quality") >= 0.3)
+        .withColumn("fingerprint", graft.textops.TextOps.fingerprint(col("text")))
+      if (fp.isStreaming)
+        fp.withWatermark("ingest_ts", "1 hour")
+          .dropDuplicatesWithinWatermark("fingerprint")
+      else fp.dropDuplicates("fingerprint")
+    }
+    val batchKept = gateDedup(docs)
       .select("fingerprint").collect().map(_.getString(0)).toSet
 
     val tmp = java.nio.file.Files
@@ -727,8 +765,7 @@ class StreamingSpec extends AnyFunSuite {
     docs.write.mode("overwrite").parquet(tmp)
     val schema = spark.read.parquet(tmp).schema
     val stream = spark.readStream.schema(schema).parquet(tmp)
-    val q = StreamingOps.dedupDocs(
-        StreamingOps.qualityFilter(stream, 0.3), "ingest_ts")
+    val q = gateDedup(stream)
       .select("fingerprint")
       .writeStream.outputMode("append")
       .format("memory").queryName("dd_test").start()
@@ -821,254 +858,5 @@ class StreamingSpec extends AnyFunSuite {
       assert(!vals.contains("2024-01-01 07:00:00"))
       assert(vals.get("2024-01-01 10:00:00").contains(3.0))
     } finally q.stop()
-  }
-
-  test("streaming lag equals batch LagMatrix on the same data") {
-    import spark.implicits._
-    import graft.lagops.{LagMatrix, LagSpec}
-    val ev = Tables.events(spark, dir)
-      .select(col("event_id"), col("ts"), col("user_id"),
-        col("event_type"), col("value")).as[EventRow]
-    val streamed = StreamingLag.lagged(ev, Seq(1, 3)).collect()
-      .map(l => l.event_id -> l.lags.toSeq).toMap
-    val batch = LagMatrix.wide(Tables.events(spark, dir), "value",
-        LagSpec(Seq("ts_ns", "event_id"), Seq("user_id"), Seq(1, 3), None))
-      .collect().map { r =>
-        val id = r.getLong(r.fieldIndex("event_id"))
-        id -> Seq(
-          if (r.isNullAt(r.fieldIndex("value_lag_1"))) None
-          else Some(r.getDouble(r.fieldIndex("value_lag_1"))),
-          if (r.isNullAt(r.fieldIndex("value_lag_3"))) None
-          else Some(r.getDouble(r.fieldIndex("value_lag_3"))))
-      }.toMap
-    assert(streamed.size == batch.size)
-    assert(streamed == batch)
-  }
-
-  test("streaming anomaly z equals the batch rolling-z on the same data") {
-    import spark.implicits._
-    val ev = Tables.events(spark, dir)
-      .select(col("event_id"), col("ts"), col("user_id"),
-        col("event_type"), col("value")).as[EventRow]
-    val streamed = StreamingAnomaly.anomalies(ev, window = 8,
-        threshold = 2.5).collect()
-      .map(a => a.event_id -> (a.base_n, a.z, a.is_anomaly)).toMap
-    val batch = graft.lagops.SeriesStats.anomalies(
-        Tables.events(spark, dir), "value",
-        graft.lagops.LagSpec(Seq("ts_ns", "event_id"), Seq("user_id"),
-          Seq(1)), window = 8, threshold = 2.5)
-      .collect().map { r =>
-        val id = r.getLong(r.fieldIndex("event_id"))
-        val z = if (r.isNullAt(r.fieldIndex("z"))) None
-          else Some(r.getDouble(r.fieldIndex("z")))
-        id -> ((r.getLong(r.fieldIndex("base_n")), z,
-          r.getBoolean(r.fieldIndex("is_anomaly"))))
-      }.toMap
-    assert(streamed.size == batch.size)
-    assert(streamed == batch)
-  }
-
-  test("streaming anomaly: a spike mid-stream flags across micro-batches") {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val mem = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[EventRow]
-    val q = StreamingAnomaly.anomalies(mem.toDS(), window = 4,
-        threshold = 3.0)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("anom_stream").start()
-    def awaitRows(n: Long): Unit = {
-      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
-      while (spark.table("anom_stream").count() < n) {
-        assert(System.nanoTime() < deadline, "timed out waiting for sink rows")
-        assert(q.exception.isEmpty, s"query failed: ${q.exception}")
-        Thread.sleep(100)
-      }
-    }
-    try {
-      def e(id: Long, v: Double) =
-        EventRow(id, new java.sql.Timestamp(id * 1000L), 9L, "m", v)
-      // baseline in batch 1, spike arrives in batch 2: the ring state
-      // carries the history across the micro-batch boundary
-      mem.addData(e(1, 10.0), e(2, 11.0), e(3, 9.0), e(4, 10.0))
-      mem.addData(e(5, 60.0), e(6, 10.5))
-      awaitRows(6)
-      val rows = spark.table("anom_stream").as[AnomalyEvent].collect()
-        .map(a => a.event_id -> a).toMap
-      assert(rows(5).is_anomaly, s"spike must flag: ${rows(5)}")
-      assert(rows.filterNot(_._1 == 5L).values.forall(!_.is_anomaly),
-        s"only the spike flags: ${rows.values.toSeq.sortBy(_.event_id)}")
-      // head rows have no/undefined baseline
-      assert(rows(1L).z.isEmpty && rows(2L).z.isEmpty)
-    } finally q.stop()
-  }
-
-  test("streaming debounce equals batch debounce minus each key's open tail") {
-    import spark.implicits._
-    val ev = Tables.events(spark, dir)
-      .select(col("event_id"), col("ts"), col("user_id"),
-        col("event_type"), col("value")).as[EventRow]
-    val gap = 3600L * 1000000000L
-    val streamed = StreamingOps.debounce(ev, gap).collect()
-      .map(b => (b.user_id, b.event_type, b.first_event, b.n_collapsed))
-      .toSet
-    val batch = graft.lagops.EventAnalytics.debounce(
-        Tables.events(spark, dir), Seq("user_id", "event_type"), "ts_ns",
-        "event_id", Seq("ts_ns", "event_id"), gap)
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2),
-        r.getLong(3), r.getLong(4)))
-    // the open tail: each key's LAST burst stays in state, never emits
-    val lastPerKey = batch.groupBy(t => (t._1, t._2))
-      .view.mapValues(_.maxBy(_._4)).toMap
-    val closed = batch.filterNot(t => lastPerKey((t._1, t._2)) == t)
-      .map(t => (t._1, t._2, t._3, t._5)).toSet
-    assert(streamed.nonEmpty && streamed == closed)
-  }
-
-  test("debounce streaming: a burst spanning micro-batches emits once, first id wins") {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val mem = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[EventRow]
-    // gap 100ms: A(0) B(50) [batch 1] then C(80) continues the burst
-    // across the micro-batch boundary, D(10s) breaks it → exactly one
-    // emission, carrying batch-1's first id and the merged count
-    val q = StreamingOps.debounce(mem.toDS(), gapNs = 100L * 1000000L)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("deb_span").start()
-    def awaitRows(n: Long): Unit = {
-      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
-      while (spark.table("deb_span").count() < n) {
-        assert(System.nanoTime() < deadline, "timed out waiting for sink rows")
-        assert(q.exception.isEmpty, s"query failed: ${q.exception}")
-        Thread.sleep(100)
-      }
-    }
-    try {
-      def e(id: Long, ms: Long) =
-        EventRow(id, new java.sql.Timestamp(ms), 7L, "click", 1.0)
-      mem.addData(e(1L, 0L), e(2L, 50L))
-      mem.addData(e(3L, 80L), e(4L, 10000L))
-      awaitRows(1)
-      val b = spark.table("deb_span").as[BurstSummary].collect().head
-      assert(b.first_event == 1L && b.n_collapsed == 3L,
-        s"expected merged burst (first=1, n=3), got $b")
-    } finally q.stop()
-  }
-
-  test("debounce: maxBurstNs force-closes a never-quiet key's burst") {
-    import spark.implicits._
-    // 20 events 50ms apart, all inside the 100ms gap: uncapped they are
-    // ONE open burst (nothing emits in batch execution); capped at
-    // 200ms the burst force-closes repeatedly and emits
-    val ev = (0 until 20).map(i => EventRow(i.toLong,
-      new java.sql.Timestamp(50L * i), 7L, "click", 1.0)).toDS()
-    val uncapped = StreamingOps.debounce(ev, 100L * 1000000L).collect()
-    assert(uncapped.isEmpty)
-    val capped = StreamingOps.debounce(ev, 100L * 1000000L,
-      maxBurstNs = 200L * 1000000L).collect()
-    assert(capped.length >= 3, s"expected repeated force-closes, got " +
-      s"${capped.mkString(", ")}")
-    assert(capped.head.first_event == 0L)
-  }
-
-  test("lagged streaming: idle key's ring evicts, returning user restarts") {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val mem = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[EventRow]
-    val q = StreamingLag.lagged(mem.toDS(), Seq(1), idleTimeout = "1 second")
-      .writeStream.outputMode("append").format("memory")
-      .queryName("lag_evict").start()
-    def awaitRows(n: Long): Unit = {
-      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
-      while (spark.table("lag_evict").count() < n) {
-        assert(System.nanoTime() < deadline, "timed out waiting for sink rows")
-        assert(q.exception.isEmpty, s"query failed: ${q.exception}")
-        Thread.sleep(100)
-      }
-    }
-    try {
-      mem.addData(EventRow(1L, new java.sql.Timestamp(1000L), 7L, "c", 5.0))
-      awaitRows(1)
-      // let the 1s idle timeout fire (ProcessingTimeTimeout queries keep
-      // scheduling batches, so the eviction runs during the quiet gap) —
-      // generous margin so the assert is about semantics, not scheduling
-      Thread.sleep(4000)
-      mem.addData(EventRow(2L, new java.sql.Timestamp(2000L), 7L, "c", 9.0))
-      awaitRows(2)
-      val byId = spark.table("lag_evict").as[LaggedEvent]
-        .collect().map(l => l.event_id -> l.lags.toSeq).toMap
-      assert(byId(1L) == Seq(None))
-      // evicted ring: the returning user starts fresh — lag_1 is None,
-      // NOT Some(5.0) as an unbounded state store would answer
-      assert(byId(2L) == Seq(None))
-    } finally q.stop()
-  }
-
-  test("sessionize: maxOpenEvents evicts a never-idle key's open session") {
-    import spark.implicits._
-    // 20 events 1s apart (all inside the 30-min gap) for one user: the
-    // uncapped operator parks all 20 in the open tail and emits nothing;
-    // with the cap at 8 the over-long open session force-closes and
-    // emits instead of growing state without bound
-    val ev = (0 until 20).map(i => EventRow(i.toLong,
-      new java.sql.Timestamp(1000L * i), 7L, "click", 1.0)).toDS()
-    val uncapped = StreamingOps.sessionize(ev, 30).collect()
-    assert(uncapped.isEmpty)
-    val evicted = StreamingOps.sessionize(ev, 30, maxOpenEvents = 8).collect()
-    assert(evicted.length == 1 && evicted.head.n_events == 20)
-  }
-
-  test("sessionize streaming: open-session state bounded across micro-batches") {
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val mem = org.apache.spark.sql.execution.streaming.runtime
-      .MemoryStream[EventRow]
-    val q = StreamingOps.sessionize(mem.toDS(), 30, maxOpenEvents = 5)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("sess_evict").start()
-    // a ProcessingTimeTimeout query ALWAYS schedules another batch (that
-    // is how timeouts get a chance to fire), so `noNewData` is never
-    // signalled and processAllAvailable would block forever — poll the
-    // sink for the expected emission instead, the StreamTest idiom.
-    def awaitRows(n: Long): Unit = {
-      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
-      while (spark.table("sess_evict").count() < n) {
-        assert(System.nanoTime() < deadline, "timed out waiting for sink rows")
-        assert(q.exception.isEmpty, s"query failed: ${q.exception}")
-        Thread.sleep(100)
-      }
-    }
-    try {
-      // two micro-batches of 4 in-gap events for ONE user. Without the
-      // cap the open list would grow 4 -> 8 across state versions; with
-      // the cap at 5 the second batch's 8-event open session evicts
-      // (emits one 8-event summary) instead of persisting.
-      mem.addData((0 until 4).map(i => EventRow(i.toLong,
-        new java.sql.Timestamp(1000L * i), 7L, "c", 1.0)))
-      mem.addData((4 until 8).map(i => EventRow(i.toLong,
-        new java.sql.Timestamp(1000L * i), 7L, "c", 1.0)))
-      awaitRows(1)
-      val emitted = spark.table("sess_evict").as[SessionSummary].collect()
-      assert(emitted.map(_.n_events).toSeq == Seq(8L))
-    } finally q.stop()
-  }
-
-  test("stateful sessionize emits sessions consistent with batch rewrite") {
-    import spark.implicits._
-    val ev = Tables.events(spark, dir)
-      .select(col("event_id"), col("ts"), col("user_id"),
-        col("event_type"), col("value")).as[EventRow]
-    val stateful = StreamingOps.sessionize(ev, 30).collect()
-      .map(s => (s.user_id, s.session_start.getTime, s.n_events)).toSet
-    val batch = StreamingOps.sessionizeBatch(Tables.events(spark, dir), 30)
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1) / 1000L, r.getLong(3))).toSet
-    // batch mode emits all sessions; the stateful operator keeps each
-    // user's open tail in state — so stateful ⊆ batch, and the closed
-    // sessions must agree exactly
-    assert(stateful.nonEmpty)
-    assert(stateful.subsetOf(batch))
   }
 }

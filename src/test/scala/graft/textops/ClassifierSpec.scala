@@ -55,16 +55,6 @@ class ClassifierSpec extends AnyFunSuite {
     assert(w == w2)
   }
 
-  test("weightsFromFile round-trips the token-weight text format") {
-    val p = java.nio.file.Files.createTempFile("weights", ".txt")
-    java.nio.file.Files.writeString(p,
-      "# fastText-exported unigram weights (micro-scaled)\n" +
-        "alpha 120\nbeta  -40\n\ngamma 7\n")
-    val w = Classifier.weightsFromFile(spark, p.toString)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(w == Map("alpha" -> 120L, "beta" -> -40L, "gamma" -> 7L))
-  }
-
   test("scoring plan: weight table broadcasts, one combinable aggregate, no corpus-wide shuffle beyond doc partials") {
     import spark.implicits._
     val d = docs((1L to 50L).map(i => i -> s"tok$i alpha beta"): _*)

@@ -20,7 +20,7 @@ class TextOpsSpec extends AnyFunSuite {
   test("segmentScripts: one token per no-space-script code point") {
     def toks(t: String): Seq[String] = {
       import spark.implicits._
-      Seq(t).toDF("t").select(TextOps.tokensSegmented(col("t")))
+      Seq(t).toDF("t").select(TextOps.tokens(TextOps.segmentScripts(col("t"))))
         .collect().head.getSeq[String](0)
     }
     // Han + kana segment per code point; Latin words stay words

@@ -186,12 +186,11 @@ class VocabSpec extends AnyFunSuite {
     }
   }
 
-  test("noveltyScore kernel form equals the window and all-built-ins twins") {
+  test("noveltyScore kernel form equals the all-built-ins twin") {
     val d = graft.sources.Tables.documents(spark, "/root/testdata/sf0.001")
     def m(x: org.apache.spark.sql.DataFrame) =
       x.collect().map(r => r.getLong(0) -> (r.getLong(1), r.getDouble(2))).toMap
     val a = m(Vocab.noveltyScore(d, "doc_id", "text"))
-    assert(a == m(Vocab.noveltyScoreViaWindow(d, "doc_id", "text")))
     assert(a == m(Vocab.noveltyScoreViaJoin(d, "doc_id", "text")))
   }
 
