@@ -211,7 +211,9 @@ object BloomStore {
     * the verify join; no false negatives can appear), so every
     * intermediate state still probes correctly. Cost is one scan of
     * the key-sized store, never the corpus — run on the compaction
-    * cadence, not per ingest.
+    * cadence, not per ingest. No row compacts (`dedup_bloom_probe_updated`
+    * times the grown store); DedupSpec "BloomStore appendWrite grows
+    * actualN; compact restores geometry ..." pins it.
     */
   def compact(spark: SparkSession, dir: String,
               fpp: Double = DefaultFpp): Meta = {

@@ -502,16 +502,7 @@ object Dedup {
                          maxBucket: Int = 64): DataFrame = {
     val (incIds, verified) = minhashIncrementalVerified(incoming, corpus,
       idCol, textCol, shingleSize, bands, rowsPerBand, threshold, maxBucket)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("inc_id"))
-      .orderBy(col("jaccard").desc, col("dup_id").asc)
-    val best = verified
-      .withColumn("_rn", row_number().over(w)).filter(col("_rn") === 1)
-      .select(col("inc_id").cast("long").as("doc_id"),
-        col("dup_id").cast("long").as("dup_of"), col("jaccard"))
-    incIds.join(broadcast(best), Seq("doc_id"), "left")
-      .select(col("doc_id"), col("dup_of"), col("jaccard"),
-        col("dup_of").isNull.as("is_new"))
+    minhashBestDecision(incIds, verified)
   }
 
   /** The two frames behind [[minhashIncremental]]'s decision, exposed
@@ -545,12 +536,8 @@ object Dedup {
     // banded view re-derives lazily from the checkpointed sig — 8 md5s
     // per doc per fork, never a MinHashSigExpr re-run. The CORPUS side
     // stays lazy — corpus-sized frames are never checkpointed.
-    val incSig = shingleSetsOf(graft.util.Par.spread(incoming), idCol,
-        textCol, shingleSize)
-      .select(col("doc_id"), col("sh"),
-        graft.functions.MinHashSigExpr(col("sh"), bands * rowsPerBand)
-          .as("sig"))
-      .localCheckpoint()
+    val incSig = minhashIncSig(incoming, idCol, textCol, shingleSize,
+      bands, rowsPerBand)
     val incSh = incSig.select(col("doc_id"), col("sh"))
     val incBanded = bandKeysFromSig(incSig, bands, rowsPerBand)
     val incKeys = incBanded.select(col("band"), col("bucket")).distinct()
@@ -629,9 +616,9 @@ object Dedup {
                                rowsPerBand: Int = 2,
                                threshold: Double = 0.5,
                                maxBucket: Int = 64): DataFrame = {
-    val (incIds, verified) = minhashIncrementalStoredVerified(incoming,
-      store, idCol, textCol, shingleSize, bands, rowsPerBand, threshold,
-      maxBucket)
+    val (incIds, verified) = minhashStoredProbeFromSig(
+      minhashIncSig(incoming, idCol, textCol, shingleSize, bands,
+        rowsPerBand), store, bands, rowsPerBand, threshold, maxBucket)
     minhashBestDecision(incIds, verified)
   }
 
@@ -653,49 +640,6 @@ object Dedup {
         col("dup_of").isNull.as("is_new"))
   }
 
-  /** The stored probe's id list + full verified candidate set — the
-    * [[minhashIncrementalVerified]] contract against a PERSISTED
-    * [[SignatureStore]], for pair-rule composition
-    * (`pair_neardup_probe`). Jaccard here runs over the stored 8-byte
-    * hash arrays (equal to string-set Jaccard up to vanishing 64-bit
-    * collisions — the store's documented contract), so decisions are
-    * identical to the in-DAG form.
-    *
-    * BROADCAST BOUND: same |increment| × bands × maxBucket invariant as
-    * [[minhashIncrementalVerified]] — the broadcast hints on the verify
-    * joins are safe exactly because candidate pairs are
-    * increment-bounded; corpus-sized "increments" must be split.
-    */
-  private[graft] def minhashIncrementalStoredVerified(
-      incoming: DataFrame, store: SignatureStore.Store,
-      idCol: String, textCol: String,
-      shingleSize: Int, bands: Int, rowsPerBand: Int,
-      threshold: Double, maxBucket: Int): (DataFrame, DataFrame) = {
-    val (incIds, verified, _) = minhashIncrementalStoredVerifiedSig(
-      incoming, store, idCol, textCol, shingleSize, bands, rowsPerBand,
-      threshold, maxBucket)
-    (incIds, verified)
-  }
-
-  /** [[minhashIncrementalStoredVerified]] plus the increment's fused
-    * signature checkpoint (`doc_id`, `sh`, `sig`) — the `_updated`
-    * rows derive the accepted-layer store frames from it
-    * ([[acceptedLayerFromSig]]) instead of re-signing the accepted
-    * slice in two more checkpoint jobs.
-    */
-  private[graft] def minhashIncrementalStoredVerifiedSig(
-      incoming: DataFrame, store: SignatureStore.Store,
-      idCol: String, textCol: String,
-      shingleSize: Int, bands: Int, rowsPerBand: Int,
-      threshold: Double, maxBucket: Int)
-      : (DataFrame, DataFrame, DataFrame) = {
-    val incSig = minhashIncSig(incoming, idCol, textCol, shingleSize,
-      bands, rowsPerBand)
-    val (incIds, verified) = minhashStoredProbeFromSig(incSig, store,
-      bands, rowsPerBand, threshold, maxBucket)
-    (incIds, verified, incSig)
-  }
-
   /** The increment's fused signature checkpoint (`doc_id`, `sh`,
     * `sig`) — ONE eager job running the shingle AND signature kernels
     * exactly once (see minhashIncrementalVerified). Store-independent,
@@ -715,7 +659,13 @@ object Dedup {
   /** The stored probe over an already-checkpointed fused signature
     * frame: band-key broadcast probe of the stored banded frame,
     * bucket cap, candidate pairing, exact verify on the stored hash
-    * arrays. Returns (incIds, verified).
+    * arrays. Returns (incIds, verified) — the
+    * [[minhashIncrementalVerified]] contract against a PERSISTED
+    * [[SignatureStore]], with decisions identical to the in-DAG form.
+    *
+    * BROADCAST BOUND: same |increment| × bands × maxBucket invariant as
+    * [[minhashIncrementalVerified]]; corpus-sized "increments" must be
+    * split.
     */
   private[graft] def minhashStoredProbeFromSig(incSig: DataFrame,
       store: SignatureStore.Store, bands: Int, rowsPerBand: Int,
@@ -871,8 +821,9 @@ object Dedup {
                          idCol: String, hashCol: String,
                          maxHamming: Int = 3,
                          maxBucket: Int = 64): DataFrame = {
-    val (incIds, verified) = hammingIncrementalVerified(incoming, corpus,
-      idCol, hashCol, maxHamming, maxBucket)
+    val (incIds, verified) = hammingProbeFromBanded(
+      hammingBandedCkpt(incoming, idCol, hashCol), corpus, idCol, hashCol,
+      maxHamming, maxBucket)
     hammingBestDecision(incIds, verified, idCol)
   }
 
@@ -893,38 +844,6 @@ object Dedup {
         col("dup_of").isNull.as("is_new"))
   }
 
-  /** The frames behind [[hammingIncremental]], exposed for composition
-    * (the media half of [[pairNearDupIncremental]]): the increment's
-    * distinct ids and EVERY verified candidate pair
-    * `(inc_id, dup_id, hamming ≤ maxHamming)`.
-    */
-  private[graft] def hammingIncrementalVerified(
-      incoming: DataFrame, corpus: DataFrame,
-      idCol: String, hashCol: String,
-      maxHamming: Int, maxBucket: Int): (DataFrame, DataFrame) = {
-    val (incIds, verified, _) = hammingIncrementalVerifiedBanded(incoming,
-      corpus, idCol, hashCol, maxHamming, maxBucket)
-    (incIds, verified)
-  }
-
-  /** [[hammingIncrementalVerified]] plus the increment's checkpointed
-    * banded frame `(inc_id, _h_inc_id, band, key)` — the fingerprint
-    * values ride it (band 0 holds one row per id), so `_updated`
-    * callers derive the accepted media layer from it
-    * ([[acceptedMediaFromBanded]]) instead of checkpointing the
-    * decoded fingerprint frame a second time.
-    */
-  private[graft] def hammingIncrementalVerifiedBanded(
-      incoming: DataFrame, corpus: DataFrame,
-      idCol: String, hashCol: String,
-      maxHamming: Int, maxBucket: Int)
-      : (DataFrame, DataFrame, DataFrame) = {
-    val incB = hammingBandedCkpt(incoming, idCol, hashCol)
-    val (incIds, verified) = hammingProbeFromBanded(incB, corpus, idCol,
-      hashCol, maxHamming, maxBucket)
-    (incIds, verified, incB)
-  }
-
   private def bandedFp(df0: DataFrame, idCol: String, hashCol: String,
       id: String): DataFrame =
     df0.select(col(idCol).as(id), col(hashCol).as(s"_h_$id"))
@@ -933,8 +852,11 @@ object Dedup {
           shiftright(col(s"_h_$id"), b * 16).bitwiseAND(0xFFFFL)
         }: _*)).as(Seq("band", "key")))
 
-  /** The increment's checkpointed banded fingerprint frame — ONE eager
-    * job paying the decode lineage once. Corpus-independent, so an
+  /** The increment's checkpointed banded fingerprint frame
+    * `(inc_id, _h_inc_id, band, key)` — ONE eager job paying the decode
+    * lineage once. The fingerprint values ride it (band 0 holds one row
+    * per id), so `_updated` callers derive the accepted media layer
+    * from it ([[acceptedMediaFromBanded]]). Corpus-independent, so an
     * `_updated` caller can build increment B's frame concurrently
     * with the whole A phase (guide §2.6).
     */
@@ -943,7 +865,10 @@ object Dedup {
     bandedFp(incoming, idCol, hashCol, "inc_id").localCheckpoint()
 
   /** The Hamming probe over an already-checkpointed banded increment
-    * frame. Returns (incIds, verified).
+    * frame — the frames behind [[hammingIncremental]], exposed for
+    * composition (the media half of [[pairNearDupIncremental]]).
+    * Returns (incIds: the increment's distinct ids, verified: EVERY
+    * candidate pair `(inc_id, dup_id, hamming ≤ maxHamming)`).
     */
   private[graft] def hammingProbeFromBanded(incB: DataFrame,
       corpus: DataFrame, idCol: String, hashCol: String,
@@ -1020,15 +945,16 @@ object Dedup {
                              maxBucket: Int = 64): DataFrame = {
     // independent modality legs built on two threads — their eager
     // bounded-checkpoint jobs overlap (guide §2.6, see
-    // pairNearDupStoredFrames)
+    // pairNearDupStored)
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
     import scala.concurrent.duration.Duration
     val tF = Future(minhashIncrementalVerified(incTexts, corTexts,
       idCol, textCol, shingleSize, bands, rowsPerBand, threshold,
       maxBucket))
-    val mF = Future(hammingIncrementalVerified(incFps, corFps,
-      fpIdCol, fpCol, maxHamming, maxBucket))
+    val mF = Future(hammingProbeFromBanded(
+      hammingBandedCkpt(incFps, fpIdCol, fpCol), corFps, fpIdCol, fpCol,
+      maxHamming, maxBucket))
     val (incIds, tver) = Await.result(tF, Duration.Inf)
     val (_, mver) = Await.result(mF, Duration.Inf)
     pairCompose(incIds, tver, mver)
@@ -1051,30 +977,7 @@ object Dedup {
                         shingleSize: Int = 3, bands: Int = 8,
                         rowsPerBand: Int = 2, threshold: Double = 0.5,
                         maxHamming: Int = 3,
-                        maxBucket: Int = 64): DataFrame =
-    pairNearDupStoredFrames(incTexts, textStore, incFps, corFps, idCol,
-      textCol, fpIdCol, fpCol, shingleSize, bands, rowsPerBand, threshold,
-      maxHamming, maxBucket).decision
-
-  /** [[pairNearDupStored]]'s decision plus the two increment-side
-    * checkpointed frames it already built (the text leg's fused
-    * (doc_id, sh, sig) and the media leg's banded fingerprints) — the
-    * `_updated` loop derives both accepted-layer stores from these
-    * instead of re-signing / re-decoding the accepted slice into
-    * three additional checkpoint jobs.
-    */
-  private[graft] final case class PairStoredFrames(
-      decision: DataFrame, textSig: DataFrame, mediaBanded: DataFrame)
-
-  private[graft] def pairNearDupStoredFrames(incTexts: DataFrame,
-                        textStore: SignatureStore.Store,
-                        incFps: DataFrame, corFps: DataFrame,
-                        idCol: String, textCol: String,
-                        fpIdCol: String, fpCol: String,
-                        shingleSize: Int, bands: Int,
-                        rowsPerBand: Int, threshold: Double,
-                        maxHamming: Int,
-                        maxBucket: Int): PairStoredFrames = {
+                        maxBucket: Int = 64): DataFrame = {
     // the two modality legs are independent until pairCompose, and
     // each runs eager bounded-checkpoint jobs at build time (text:
     // fused signature + candidate pairs; media: decode + banding).
@@ -1085,14 +988,15 @@ object Dedup {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.ExecutionContext.Implicits.global
     import scala.concurrent.duration.Duration
-    val tF = Future(minhashIncrementalStoredVerifiedSig(
-      incTexts, textStore, idCol, textCol, shingleSize, bands,
-      rowsPerBand, threshold, maxBucket))
-    val mF = Future(hammingIncrementalVerifiedBanded(incFps, corFps,
-      fpIdCol, fpCol, maxHamming, maxBucket))
-    val (incIds, tver, incSig) = Await.result(tF, Duration.Inf)
-    val (_, mver, incB) = Await.result(mF, Duration.Inf)
-    PairStoredFrames(pairCompose(incIds, tver, mver), incSig, incB)
+    val tF = Future(minhashStoredProbeFromSig(
+      minhashIncSig(incTexts, idCol, textCol, shingleSize, bands,
+        rowsPerBand), textStore, bands, rowsPerBand, threshold, maxBucket))
+    val mF = Future(hammingProbeFromBanded(
+      hammingBandedCkpt(incFps, fpIdCol, fpCol), corFps, fpIdCol, fpCol,
+      maxHamming, maxBucket))
+    val (incIds, tver) = Await.result(tF, Duration.Inf)
+    val (_, mver) = Await.result(mF, Duration.Inf)
+    pairCompose(incIds, tver, mver)
   }
 
   /** The shared pair-rule tail: join the two modalities' verified
@@ -1609,10 +1513,7 @@ object Dedup {
                       w: Int = 4, minShared: Int = 5,
                       maxDf: Int = 16): DataFrame = {
     require(minShared >= 1, s"minShared must be >= 1, got $minShared")
-    val incFps = graft.textops.TextOps
-      .winnowing(graft.util.Par.spread(incoming), idCol, textCol, k, w)
-      .select(col(idCol).cast("long").as("inc_id"), col("fp"))
-      .localCheckpoint()
+    val incFps = spanIncFps(incoming, idCol, textCol, k, w)
     val incKeys = incFps.select(col("fp")).distinct()
     val corFps = graft.textops.TextOps
       .winnowing(graft.util.Par.spread(corpus), idCol, textCol, k, w)
@@ -1629,16 +1530,7 @@ object Dedup {
       .groupBy(col("inc_id"), col("dup_id"))
       .agg(count(lit(1)).as("n_shared"))
       .filter(col("n_shared") >= minShared)
-    val w2 = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("inc_id"))
-      .orderBy(col("n_shared").desc, col("dup_id").asc)
-    val best = shared
-      .withColumn("_rn", row_number().over(w2)).filter(col("_rn") === 1)
-      .select(col("inc_id"), col("dup_id").as("dup_of"), col("n_shared"))
-    incoming.select(col(idCol).cast("long").as("inc_id"))
-      .join(broadcast(best), Seq("inc_id"), "left")
-      .select(col("inc_id").as("doc_id"), col("dup_of"), col("n_shared"),
-        col("dup_of").isNull.as("is_new"))
+    spanBestDecision(incoming, idCol, shared)
   }
 
   /** [[spanIncremental]] against a PERSISTED winnow-fingerprint store
@@ -1678,6 +1570,24 @@ object Dedup {
       .select(col(idCol).cast("long").as("inc_id"), col("fp"))
       .localCheckpoint()
 
+  /** The shared decision tail of the three span incremental forms:
+    * best match per incoming doc (most shared fingerprints, lowest
+    * corpus id), every incoming doc surfaced with its is_new verdict.
+    */
+  private def spanBestDecision(incoming: DataFrame, idCol: String,
+      shared: DataFrame): DataFrame = {
+    val w2 = org.apache.spark.sql.expressions.Window
+      .partitionBy(col("inc_id"))
+      .orderBy(col("n_shared").desc, col("dup_id").asc)
+    val best = shared
+      .withColumn("_rn", row_number().over(w2)).filter(col("_rn") === 1)
+      .select(col("inc_id"), col("dup_id").as("dup_of"), col("n_shared"))
+    incoming.select(col(idCol).cast("long").as("inc_id"))
+      .join(broadcast(best), Seq("inc_id"), "left")
+      .select(col("inc_id").as("doc_id"), col("dup_of"), col("n_shared"),
+        col("dup_of").isNull.as("is_new"))
+  }
+
   /** The stored span probe over an already-checkpointed increment
     * fingerprint frame (see [[spanIncrementalStored]]).
     */
@@ -1693,16 +1603,7 @@ object Dedup {
       .groupBy(col("inc_id"), col("dup_id"))
       .agg(count(lit(1)).as("n_shared"))
       .filter(col("n_shared") >= minShared)
-    val w2 = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("inc_id"))
-      .orderBy(col("n_shared").desc, col("dup_id").asc)
-    val best = shared
-      .withColumn("_rn", row_number().over(w2)).filter(col("_rn") === 1)
-      .select(col("inc_id"), col("dup_id").as("dup_of"), col("n_shared"))
-    incoming.select(col(idCol).cast("long").as("inc_id"))
-      .join(broadcast(best), Seq("inc_id"), "left")
-      .select(col("inc_id").as("doc_id"), col("dup_of"), col("n_shared"),
-        col("dup_of").isNull.as("is_new"))
+    spanBestDecision(incoming, idCol, shared)
   }
 
   /** [[spanIncrementalStored]] against a base store PLUS append-only
@@ -1730,10 +1631,7 @@ object Dedup {
                                  minShared: Int = 5,
                                  maxDf: Int = 16): DataFrame = {
     require(minShared >= 1, s"minShared must be >= 1, got $minShared")
-    val incFps = graft.textops.TextOps
-      .winnowing(graft.util.Par.spread(incoming), idCol, textCol, k, w)
-      .select(col(idCol).cast("long").as("inc_id"), col("fp"))
-      .localCheckpoint()
+    val incFps = spanIncFps(incoming, idCol, textCol, k, w)
     val incKeys = incFps.select(col("fp")).distinct()
     // delta rows carrying probed fps (delta-sized; forks three ways)
     val dMat = deltaFps.select(col("doc_id").as("dup_id"), col("fp"))
@@ -1761,16 +1659,7 @@ object Dedup {
       .groupBy(col("inc_id"), col("dup_id"))
       .agg(count(lit(1)).as("n_shared"))
       .filter(col("n_shared") >= minShared)
-    val w2 = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("inc_id"))
-      .orderBy(col("n_shared").desc, col("dup_id").asc)
-    val best = shared
-      .withColumn("_rn", row_number().over(w2)).filter(col("_rn") === 1)
-      .select(col("inc_id"), col("dup_id").as("dup_of"), col("n_shared"))
-    incoming.select(col(idCol).cast("long").as("inc_id"))
-      .join(broadcast(best), Seq("inc_id"), "left")
-      .select(col("inc_id").as("doc_id"), col("dup_of"), col("n_shared"),
-        col("dup_of").isNull.as("is_new"))
+    spanBestDecision(incoming, idCol, shared)
   }
 
   /** EXACT substring-duplication spans, the published gold standard for

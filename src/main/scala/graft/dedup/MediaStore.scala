@@ -47,7 +47,10 @@ object MediaStore {
     * existing data, the store grows with the corpus without ever
     * re-decoding it. A retried ingest that appends the same media
     * twice is healed by [[compact]]; duplicate rows never change a
-    * probe decision (the Hamming verify is per-pair), only bytes.
+    * probe decision (the Hamming verify is per-pair), only bytes. No
+    * row calls it or [[compact]] (the `_updated` rows union in-DAG);
+    * MultimodalSpec "MediaStore: stored probe equals the in-DAG
+    * incremental; ..." pins both.
     */
   def appendWrite(acceptedFps: DataFrame, dir: String): Unit =
     acceptedFps.write.mode("append").parquet(s"$dir/fingerprints")

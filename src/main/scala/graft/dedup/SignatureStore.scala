@@ -78,7 +78,12 @@ object SignatureStore {
     * tomorrow's probe sees today's accepted documents without the
     * O(corpus) rebuild the `_stored`/`_probe` family exists to avoid.
     * O(increment) work — the union is lazy and the increment side is
-    * the only new computation.
+    * the only new computation. No row calls it (the `_updated` rows
+    * derive the accepted layer from the probe's own checkpoint,
+    * [[Dedup.acceptedLayerFromSig]]); it is the reference those rows'
+    * loop is tested against in DedupSpec "store append closes the
+    * ingest loop" and "pair A/B loop: a B pair duplicating an ACCEPTED
+    * A pair ...".
     */
   def append(store: Store, accepted: DataFrame, idCol: String,
              textCol: String, shingleSize: Int = 3, bands: Int = 8,
@@ -91,7 +96,11 @@ object SignatureStore {
   /** Persisted twin of [[append]]: write ONLY the increment's rows into
     * the store directory (parquet append — new files, no rewrite of
     * existing data). A retried ingest that appends the same doc twice
-    * is healed by [[compact]].
+    * is healed by [[compact]]. No row calls it or [[compact]] (the
+    * `_updated` rows union in-DAG); the store-lifecycle contract is
+    * pinned by DedupSpec "persisted appendWrite grows the store;
+    * compact heals a double append" and StreamingSpec's
+    * `pairIngestProbe` cross-batch test.
     */
   def appendWrite(inc: Store, dir: String): Unit = {
     inc.banded.write.mode("append").parquet(s"$dir/signatures")
@@ -244,6 +253,9 @@ object SignatureStore {
     * base (one [[mergeSpanDeltas]] pass + the rename-aside swap of
     * [[compact]]), then drop the delta directory. Restores the
     * single-scan parquet-pushed-df probe; run at compaction cadence.
+    * No row compacts (`dedup_spans_probe_updated` times the delta
+    * probe); DedupSpec "span delta path: ... compactSpans heals" pins
+    * it.
     */
   def compactSpans(spark: SparkSession, dir: String): Unit = {
     val base = readSpans(spark, dir)

@@ -14,7 +14,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   * per row).
   *
   * Accumulation is sequential left-to-right in double precision — the
-  * exact fold order the DuckDB oracle mirrors (SparkEntry.duckCosine), so
+  * exact fold order the DuckDB oracle mirrors (SimopsRows.duckCosine), so
   * results stay bit-identical across engines.
   */
 object VectorOpsUtil {

@@ -34,7 +34,10 @@ object ArrayLag {
   }
 
   /** Multi-lag matrix per row: one shifted-array column per lag, caller's
-    * lag order preserved (`src/lib.rs:846-865`).
+    * lag order preserved (`src/lib.rs:846-865`). No row registers it
+    * (`lag_matrix_array` times the codegen'd single-shift kernel);
+    * ArrayLagSpec "matrix: caller lag order preserved" pins the
+    * reference's lag-order contract on the array form.
     */
   def matrix(arr: Column, name: String, lags: Seq[Int],
              fill: Column): Seq[Column] =

@@ -88,13 +88,13 @@ object LagMatrix {
     }
   }
 
-  private def windowSpec(spec: LagSpec): WindowSpec = {
-    val w =
-      if (spec.seriesCols.isEmpty) Window.orderBy(spec.orderCols.map(col): _*)
-      else Window.partitionBy(spec.seriesCols.map(col): _*)
-             .orderBy(spec.orderCols.map(col): _*)
-    w
-  }
+  /** The one series window every lag-family operator runs over: the
+    * series key (if any) and the caller's order columns.
+    */
+  private[lagops] def windowSpec(spec: LagSpec): WindowSpec =
+    if (spec.seriesCols.isEmpty) Window.orderBy(spec.orderCols.map(col): _*)
+    else Window.partitionBy(spec.seriesCols.map(col): _*)
+      .orderBy(spec.orderCols.map(col): _*)
 
   /** One lag expression. With a fill, reproduce the reference's sentinel
     * semantics (`src/lib.rs:18-19`); without, Spark-native NULL heads.
@@ -171,10 +171,7 @@ object LagMatrix {
 object Lead {
   def wide(df: DataFrame, valueCol: String, spec: LagSpec): DataFrame = {
     LagMatrix.validate(df, valueCol, spec)
-    val w =
-      if (spec.seriesCols.isEmpty) Window.orderBy(spec.orderCols.map(col): _*)
-      else Window.partitionBy(spec.seriesCols.map(col): _*)
-             .orderBy(spec.orderCols.map(col): _*)
+    val w = LagMatrix.windowSpec(spec)
     val keep = (spec.seriesCols ++ spec.orderCols).distinct.map(col)
     val leadCols = spec.lags.distinct.map { k =>
       val c =
@@ -189,9 +186,6 @@ object Lead {
   }
 }
 
-/** Rolling aggregates over the same Window machinery — the natural
-  * window-adjacent extension of lagging (SURVEY.md §2.4 `rolling_agg`).
-  */
 /** Truncated exponentially-weighted moving average — the classic
   * lag-matrix APPLICATION: each output is a weighted combination of
   * the series' lag columns,
@@ -228,10 +222,7 @@ object Ewma {
       f"ewma truncated at window=$window drops (1-alpha)^W = $tailMass%.4f " +
         f"of the exponential mass (> $maxTailMass%.2f): raise window, " +
         "raise alpha, or pass a larger maxTailMass explicitly")
-    val base =
-      if (spec.seriesCols.isEmpty) Window.orderBy(spec.orderCols.map(col): _*)
-      else Window.partitionBy(spec.seriesCols.map(col): _*)
-             .orderBy(spec.orderCols.map(col): _*)
+    val base = LagMatrix.windowSpec(spec)
     val weights = (0 until window).map(j => math.pow(1.0 - alpha, j))
     def lagAt(j: Int): Column =
       if (j == 0) col(valueCol) else lag(col(valueCol), j).over(base)
@@ -264,24 +255,21 @@ object Ewma {
   */
 object Ffill {
   def over(df: DataFrame, valueCol: String, spec: LagSpec): DataFrame = {
-    val base =
-      if (spec.seriesCols.isEmpty) Window.orderBy(spec.orderCols.map(col): _*)
-      else Window.partitionBy(spec.seriesCols.map(col): _*)
-             .orderBy(spec.orderCols.map(col): _*)
+    val base = LagMatrix.windowSpec(spec)
     df.withColumn(s"${valueCol}_ffill",
       last(col(valueCol), ignoreNulls = true)
         .over(base.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
   }
 }
 
+/** Rolling aggregates over the same Window machinery — the natural
+  * window-adjacent extension of lagging (SURVEY.md §2.4 `rolling_agg`).
+  */
 object Rolling {
   def over(df: DataFrame, valueCol: String, spec: LagSpec,
            window: Int): DataFrame = {
     require(window > 0, "window must be positive")
-    val base =
-      if (spec.seriesCols.isEmpty) Window.orderBy(spec.orderCols.map(col): _*)
-      else Window.partitionBy(spec.seriesCols.map(col): _*)
-             .orderBy(spec.orderCols.map(col): _*)
+    val base = LagMatrix.windowSpec(spec)
     val w = base.rowsBetween(-(window - 1), 0)
     val keep = (spec.seriesCols ++ spec.orderCols).distinct.map(col)
     df.select(keep ++ Seq(

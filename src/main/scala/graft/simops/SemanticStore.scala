@@ -56,7 +56,10 @@ object SemanticStore {
 
   /** Append the ACCEPTED increment's assigned rows (vec_id, list_id,
     * vec — the probe's own checkpointed assignment, so no kernel
-    * re-runs) as extra store files. O(increment).
+    * re-runs) as extra store files. O(increment). No row calls it or
+    * [[compact]] (the `_updated` row unions in-DAG); AnnPropertiesSpec
+    * "SemanticStore.compact heals double-appended retries without
+    * changing decisions" pins both.
     */
   def appendWrite(acceptedAssigned: DataFrame, dir: String): Unit =
     acceptedAssigned.write.mode("append").parquet(s"$dir/assigned")

@@ -32,7 +32,9 @@ object Similarity {
   def norm(a: Column): Column = sqrt(dot(a, a))
 
   /** Cosine similarity; 0 when either vector has zero norm. Pairwise form
-    * (recomputes norms) — the batch operators below hoist norms out.
+    * (recomputes norms) — the batch operators below hoist norms out, so
+    * no row calls it; EmbedSpec's "dequantized vector preserves cosine"
+    * measures the int8 round-trip with it.
     */
   def cosine(a: Column, b: Column): Column = {
     val d = dot(a, b)
@@ -216,8 +218,8 @@ object Similarity {
     * planted near-dups in SimilaritySpec.
     *
     * The DuckDB oracle reproduces the SAME banded semantics — the plane
-    * matrix is embedded literally in the generated SQL (see
-    * SparkEntry.oracleSql) — so the driver hash-checks this operator
+    * matrix is embedded literally in the generated SQL (see the
+    * embedding rows in graft.registry.SimopsRows) — so the driver hash-checks this operator
     * exactly even though it is approximate vs. the exact all-pairs
     * scan.
     *

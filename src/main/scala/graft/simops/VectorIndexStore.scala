@@ -258,7 +258,7 @@ object VectorIndexStore {
     // meta fields by NAME, with a versioned diagnostic: a pre-v3 store
     // (3-field meta — no forest stride, no partition cap) must fail
     // with "rebuild required", not a positional out-of-bounds error
-    // (library callers have no SparkEntry store.params fence)
+    // (library callers have no registry store.params fence)
     val missing = Seq("s", "p").filterNot(metaDf.columns.contains)
     require(missing.isEmpty,
       s"stale VectorIndexStore layout at $dir: meta/ lacks " +

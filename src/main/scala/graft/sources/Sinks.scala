@@ -1,51 +1,21 @@
 package graft.sources
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.DataFrame
 
 /** Write-side helpers — the handoff from the engine to downstream
   * consumers: JSONL corpora, and the task-commit protocol the raw WARC
   * and tar shard writers share.
-  *
-  * The scale rules these encode:
-  *   - ONE exchange per write: a sharded write clusters (repartition on
-  *     the shard key) in the same pass the writer consumes, so layout
-  *     costs a single shuffle, never a global sort.
-  *   - `partitionBy` on a LOW-cardinality derived shard, never on a raw
-  *     id (a million-value partition column is a million directories —
-  *     a filesystem DoS at 100 TB).
   */
 object Sinks {
 
-  /** Deterministic [0, numShards) shard from a key column — md5-derived
-    * (the engine's portable hash family) so re-runs and engines agree,
-    * and safe to re-evaluate anywhere in the plan (no RNG, no
-    * partition-id dependence).
-    */
-  def shardCol(key: Column, numShards: Int): Column = {
-    require(numShards > 0, s"numShards must be positive, got $numShards")
-    pmod(conv(substring(md5(key.cast("string")), 1, 15), 16, 10)
-      .cast("long"), lit(numShards.toLong)).cast("int")
-  }
-
   /** JSONL (one JSON object per line) sink — the interchange format
-    * LLM-corpus tooling speaks. With `shardKey` the rows cluster into
-    * `numShards` md5-derived shard dirs in one exchange (gzip per part
-    * file); a bare write stays a narrow pass. JSON
+    * LLM-corpus tooling speaks: a narrow pass, gzip per part file. JSON
     * escaping makes the round-trip exact for arbitrary text (newlines,
     * quotes, unicode) — pinned by the oracle-gated `jsonl_roundtrip`
     * query, whose hash compare would catch any lossy encode.
     */
-  def writeJsonl(df: DataFrame, path: String, shardKey: String = "",
-                 numShards: Int = 0): Unit = {
-    val w =
-      if (shardKey.nonEmpty && numShards > 0)
-        df.withColumn("_shard", shardCol(col(shardKey), numShards))
-          .repartition(numShards, col("_shard"))
-          .write.partitionBy("_shard")
-      else df.write
-    w.mode("overwrite").option("compression", "gzip").json(path)
-  }
+  def writeJsonl(df: DataFrame, path: String): Unit =
+    df.write.mode("overwrite").option("compression", "gzip").json(path)
 
   /** Schema-enforced JSONL read-back. The explicit schema is mandatory:
     * schema inference is a full extra pass over 100 TB and can widen

@@ -56,7 +56,6 @@ object Tables {
   def orders(spark: SparkSession, dir: String): DataFrame = apply(spark, dir, "orders")
   def customer(spark: SparkSession, dir: String): DataFrame = apply(spark, dir, "customer")
   def part(spark: SparkSession, dir: String): DataFrame = apply(spark, dir, "part")
-  def supplier(spark: SparkSession, dir: String): DataFrame = apply(spark, dir, "supplier")
   def nation(spark: SparkSession, dir: String): DataFrame = apply(spark, dir, "nation")
   def region(spark: SparkSession, dir: String): DataFrame = apply(spark, dir, "region")
 }

@@ -176,8 +176,8 @@ object Warc {
   /** Write `(uriCol, textCol)` rows as WET-style conversion records,
     * one `.warc` shard per partition (`part-NNNNN.warc`). Idempotent
     * under task retry (deterministic names + bytes, overwrite
-    * create); the caller owns partitioning — shard with
-    * [[Sinks.shardCol]] upstream for size-targeted shards.
+    * create); the caller owns partitioning — repartition upstream for
+    * size-targeted shards.
     *
     * `gzipPerRecord = true` writes `.warc.gz` shards with ONE GZIP
     * MEMBER PER RECORD — the layout the public crawls actually

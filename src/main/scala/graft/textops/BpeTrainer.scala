@@ -28,7 +28,10 @@ import org.apache.spark.sql.functions._
   */
 object BpeTrainer {
 
-  /** Learn `numMerges` merges from `df`'s `textCol`.
+  /** Learn `numMerges` merges from `df`'s `textCol`. No row trains
+    * (merge learning is an iterative argmax with no SQL replay, so the
+    * `_bpe` rows meter with the embedded fixture table); BpeSpec's
+    * three "distributed trainer" tests pin distributed ≡ local merges.
     *
     * @param maxVocab cap on the word-frequency table collected to the
     *                 driver (top-`maxVocab` words by frequency, ties on

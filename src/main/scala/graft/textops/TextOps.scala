@@ -407,6 +407,9 @@ object TextOps {
 
   /** Convenience one-expression form — ONLY for tiny inputs/tests; real
     * pipelines must materialize tokens first (see shinglesFromTokens).
+    * No row calls it; TextOpsSpec "shingles: fewer tokens than n
+    * collapses to one joined shingle" pins shinglesFromTokens's
+    * short-doc convention through it.
     */
   def shingles(text: Column, n: Int): Column =
     shinglesFromTokens(tokens(lower(text)), n)

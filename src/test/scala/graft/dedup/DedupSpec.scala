@@ -113,9 +113,7 @@ class DedupSpec extends AnyFunSuite {
     import spark.implicits._
     val d = docs(1L -> base, 2L -> nearDup, 3L -> other,
       4L -> (base + " extra trailing tokens here"))
-    val store = SignatureStore.build(docs(10L -> other), "doc_id", "text")
-    val (_, _, sig) = Dedup.minhashIncrementalStoredVerifiedSig(
-      d, store, "doc_id", "text", 3, 8, 2, 0.5, 64)
+    val sig = Dedup.minhashIncSig(d, "doc_id", "text", 3, 8, 2)
     val accIds = Seq(1L, 3L).toDF("doc_id")
     val derived = Dedup.acceptedLayerFromSig(sig, accIds, 8, 2)
     val built = SignatureStore.build(
@@ -150,8 +148,7 @@ class DedupSpec extends AnyFunSuite {
     import spark.implicits._
     val fps = Seq((1L, 111L), (2L, 222L), (3L, 333L))
       .toDF("media_id", "fp")
-    val (_, _, banded) = Dedup.hammingIncrementalVerifiedBanded(
-      fps, Seq((9L, 999L)).toDF("media_id", "fp"), "media_id", "fp", 3, 64)
+    val banded = Dedup.hammingBandedCkpt(fps, "media_id", "fp")
     val acc = Seq(1L, 3L).toDF("media_id")
     val out = Dedup.acceptedMediaFromBanded(banded, acc, "media_id", "fp")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
