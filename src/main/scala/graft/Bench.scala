@@ -15,8 +15,9 @@ import scala.util.control.NonFatal
   *   [[GraftSession.cores]].
   *
   * Prints one `SCALEBENCH {json}` line per row (seconds, result rows,
-  * driver GC seconds, and the Spark jobs, stages, tasks and shuffle
-  * bytes written by the reported pass; the `tools/` scripts parse them),
+  * driver GC seconds, and the Spark jobs, eager jobs, stages, tasks and
+  * shuffle bytes written by the reported pass; `tools/scalebench.py`
+  * tabulates them),
   * then the full per-query contract line, then a ~200-byte summary as
   * the last line. Run it at sf0.1 and at a ScaleGen twin and the ratio
   * table shows which operators scale linearly and which are dominated
@@ -37,9 +38,11 @@ object Bench {
       if (cpus == "32") "bench.json" else s"bench_c$cpus.json"
     } else "bench_adhoc.json"
 
-  /** One timed row. `rows` is -1 when the row failed. */
+  /** One timed row. `rows` is -1 when the row failed; `eagerJobs` are
+    * the `jobs` submitted before the builder call returned.
+    */
   private[graft] final case class RowTiming(sec: Double, rows: Long,
-      gcSec: Double, jobs: Int, stages: Int, tasks: Int,
+      gcSec: Double, jobs: Int, eagerJobs: Int, stages: Int, tasks: Int,
       shuffleWriteBytes: Long) {
     def line(name: String, sfDir: String): String = {
       // per-row GC accounting: the one-JVM suite's ±30% noise is almost
@@ -49,19 +52,24 @@ object Bench {
       // seconds are real
       val gcFlag = if (sec > 1.0 && gcSec > 0.3 * sec) ",\"gc_noisy\":true" else ""
       f"""SCALEBENCH {"query":"$name","sec":$sec%.3f,"rows":$rows,""" +
-        f""""gc_sec":$gcSec%.2f,"jobs":$jobs,"stages":$stages,"tasks":$tasks,""" +
+        f""""gc_sec":$gcSec%.2f,"jobs":$jobs,"eager_jobs":$eagerJobs,""" +
+        f""""stages":$stages,"tasks":$tasks,""" +
         f""""shuffle_write_mb":${shuffleWriteBytes / 1048576.0}%.2f$gcFlag,"sf":"$sfDir"}"""
     }
   }
 
-  /** Per-row Spark counters, attached only for the row's timed window. */
+  /** Per-row Spark counters, attached only for the row's timed window.
+    * Jobs are kept by submission time, so a job counts as eager by
+    * perfbench's rule: submitted no later than the builder's return.
+    */
   private final class RowCounters extends SparkListener {
-    val jobs = new AtomicInteger(0)
+    private val jobSubmitMs = scala.collection.mutable.ArrayBuffer.empty[Long]
+    def jobTimes: Seq[Long] = synchronized(jobSubmitMs.toSeq)
     val stages = new AtomicInteger(0)
     val tasks = new AtomicInteger(0)
     val shuffleWrite = new AtomicLong(0L)
     override def onJobStart(js: SparkListenerJobStart): Unit = {
-      jobs.incrementAndGet(); ()
+      synchronized(jobSubmitMs += js.time); ()
     }
     override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
       stages.incrementAndGet()
@@ -112,17 +120,21 @@ object Bench {
       // to a bare scan count, so such rows timed the SCAN, not their
       // work. toRdd executes the real physical plan (all output
       // columns) and the RDD count just drains it.
-      val n = try SparkEntry.queries(name)(spark, dir)
-          .queryExecution.toRdd.count()
-        catch { case NonFatal(e) =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}")
-          -1L
-        }
+      var buildEndMs = Long.MaxValue
+      val n = try {
+        val df = SparkEntry.queries(name)(spark, dir)
+        buildEndMs = System.currentTimeMillis()
+        df.queryExecution.toRdd.count()
+      } catch { case NonFatal(e) =>
+        System.err.println(s"[bench] $name failed: ${e.getMessage}")
+        -1L
+      }
       val sec = (System.nanoTime() - t0) / 1e9
       val gcSec = (gcMillis() - g0) / 1e3
       ListenerSync.waitUntilEmpty(sc)
-      RowTiming(sec, n, gcSec, counters.jobs.get, counters.stages.get,
-        counters.tasks.get, counters.shuffleWrite.get)
+      val jobMs = counters.jobTimes
+      RowTiming(sec, n, gcSec, jobMs.size, jobMs.count(_ <= buildEndMs),
+        counters.stages.get, counters.tasks.get, counters.shuffleWrite.get)
     } finally sc.removeSparkListener(counters)
   }
 
@@ -144,12 +156,13 @@ object Bench {
       .getOperatingSystemMXBean.getSystemLoadAverage
     val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // untimed warmup: JIT + codegen + parquet footer caches, so the first
-    // timed query isn't charged for session start. The doc/embedding
-    // subsets drive every hot kernel family (md5 minhash, xxhash sort,
-    // hyperplane signatures, dot products) past the C2 compile
-    // threshold — without it, whichever heavy query runs first absorbs
-    // seconds of JIT, which showed up as ±15% run-to-run totals.
+    // untimed warmup: JIT + codegen + each input's inferred schema
+    // (`Tables.parquet`), so the first timed query isn't charged for
+    // session start. The doc/embedding subsets drive every hot kernel
+    // family (md5 minhash, xxhash sort, hyperplane signatures, dot
+    // products) past the C2 compile threshold — without it, whichever
+    // heavy query runs first absorbs seconds of JIT, which showed up as
+    // ±15% run-to-run totals.
     try {
       SparkEntry.queries("lag_null_fill")(spark, sfDir).count()
       val docs = graft.sources.Tables.documents(spark, sfDir).limit(600)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.util.sketch.BloomFilter
 
+import graft.sources.Tables
 import graft.textops.TextOps
 
 /** The persisted EXACT-dedup ingest index: the corpus's normalized
@@ -157,7 +158,7 @@ object BloomStore {
           "mid-crash with no recoverable sketch)")
     val in = fs.open(src)
     val bloom = try BloomFilter.readFrom(in) finally in.close()
-    (Store(spark.read.parquet(s"$dir/fingerprints"), bloom),
+    (Store(Tables.parquet(spark, s"$dir/fingerprints"), bloom),
       readMeta(dir))
   }
 
@@ -219,7 +220,7 @@ object BloomStore {
               fpp: Double = DefaultFpp): Meta = {
     SignatureStore.compactOne(spark, s"$dir/fingerprints",
       Seq("fingerprint"))
-    val fps = spark.read.parquet(s"$dir/fingerprints")
+    val fps = Tables.parquet(spark, s"$dir/fingerprints")
     val n = math.max(fps.count(), 1L)
     val bloom = fps.select(xxhash64(col("fingerprint")).as("fp64"))
       .stat.bloomFilter("fp64", n, fpp)

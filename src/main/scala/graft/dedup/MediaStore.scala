@@ -1,5 +1,6 @@
 package graft.dedup
 
+import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The persisted MEDIA fingerprint store — the artifact that closes
@@ -40,7 +41,7 @@ object MediaStore {
     fps.write.mode("overwrite").parquet(s"$dir/fingerprints")
 
   def read(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/fingerprints")
+    Tables.parquet(spark, s"$dir/fingerprints")
 
   /** Close the daily loop O(increment): append the ACCEPTED (is_new)
     * increment's fingerprints as new parquet files — no rewrite of

@@ -1,5 +1,6 @@
 package graft.dedup
 
+import graft.sources.Tables
 import graft.textops.TextOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -70,8 +71,8 @@ object SignatureStore {
   }
 
   def read(spark: SparkSession, dir: String): Store = Store(
-    banded = spark.read.parquet(s"$dir/signatures"),
-    shingleHashes = spark.read.parquet(s"$dir/shingle_hashes"))
+    banded = Tables.parquet(spark, s"$dir/signatures"),
+    shingleHashes = Tables.parquet(spark, s"$dir/shingle_hashes"))
 
   /** Close the daily-ingest loop: the ACCEPTED increment's own store
     * rows ([[build]] of the survivors) unioned onto the store, so
@@ -130,7 +131,7 @@ object SignatureStore {
     // `sortCols` clusters rows inside each partition file so parquet
     // row-group min/max statistics can prune WITHIN a bucket (the
     // within-bucket list pruning the clamp region needs)
-    val deduped = spark.read.parquet(path).dropDuplicates(keys)
+    val deduped = Tables.parquet(spark, path).dropDuplicates(keys)
     (if (partitionCols.isEmpty) deduped.write
      else deduped.repartition(partitionCols.map(col): _*)
        .sortWithinPartitions((partitionCols ++ sortCols).map(col): _*)
@@ -177,7 +178,7 @@ object SignatureStore {
     fps.write.mode("overwrite").parquet(s"$dir/span_fps")
 
   def readSpans(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"$dir/span_fps")
+    Tables.parquet(spark, s"$dir/span_fps")
 
   /** The increment's bare `(doc_id, fp)` winnow rows — the DELTA unit
     * of the span store's append-only path (no df: document frequency
@@ -213,7 +214,7 @@ object SignatureStore {
   def readSpanDeltas(spark: SparkSession, dir: String): DataFrame = {
     val p = new org.apache.hadoop.fs.Path(s"$dir/span_deltas")
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) spark.read.parquet(p.toString)
+    if (fs.exists(p)) Tables.parquet(spark, p.toString)
     else spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
       org.apache.spark.sql.types.StructType(Seq(

@@ -913,7 +913,7 @@ object Pipeline {
     val extracted = scratchDir match {
       case Some(sd) =>
         extracted0.write.mode("overwrite").parquet(sd)
-        responses.sparkSession.read.parquet(sd)
+        graft.sources.Tables.parquet(responses.sparkSession, sd)
       case None => extracted0
     }
     val kept = narrowFromExtracted(extracted, idCol, minQuality)

@@ -92,16 +92,16 @@ private[graft] object Stores {
     * regenerated in place, get different fences.
     */
   private def dataFence(dir: String): String = {
-    import scala.jdk.CollectionConverters._
-    val root = new java.io.File(dir).getCanonicalFile
-    val files =
-      if (!root.isDirectory) Nil
-      else scala.util.Using.resource(java.nio.file.Files.walk(root.toPath)) {
-        _.iterator().asScala.map(_.toFile).filter(_.isFile).map { f =>
-          s"${root.toPath.relativize(f.toPath)} ${f.length} ${f.lastModified}"
-        }.toList
-      }
-    (root.getPath +: files.sorted).mkString("\n")
+    import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+    // the raw file system: the checksummed one hides `.crc` files
+    val fs = FileSystem.getLocal(new org.apache.hadoop.conf.Configuration()).getRaw
+    val root = fs.makeQualified(new Path(new java.io.File(dir).getCanonicalPath))
+    val files = scala.collection.mutable.ArrayBuffer.empty[FileStatus]
+    if (fs.exists(root) && fs.getFileStatus(root).isDirectory) {
+      val it = fs.listFiles(root, true)
+      while (it.hasNext) files += it.next()
+    }
+    Tables.fence(root, files)
   }
 
   /** The OPENED serving index, one per store dir per session: a

@@ -1,5 +1,6 @@
 package graft.simops
 
+import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -51,8 +52,8 @@ object SemanticStore {
   }
 
   def read(spark: SparkSession, dir: String): Store = Store(
-    forest = spark.read.parquet(s"$dir/forest"),
-    assigned = spark.read.parquet(s"$dir/assigned"))
+    forest = Tables.parquet(spark, s"$dir/forest"),
+    assigned = Tables.parquet(spark, s"$dir/assigned"))
 
   /** Append the ACCEPTED increment's assigned rows (vec_id, list_id,
     * vec — the probe's own checkpointed assignment, so no kernel

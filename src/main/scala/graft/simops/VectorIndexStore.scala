@@ -1,5 +1,6 @@
 package graft.simops
 
+import graft.sources.Tables
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -252,9 +253,9 @@ object VectorIndexStore {
     * driver state) and reopen the relational halves.
     */
   def read(spark: SparkSession, dir: String): Store = {
-    val coarse = spark.read.parquet(s"$dir/coarse").collect()
+    val coarse = Tables.parquet(spark, s"$dir/coarse").collect()
       .map(r => (r.getInt(0), r.getSeq[Double](1))).toSeq.sortBy(_._1)
-    val metaDf = spark.read.parquet(s"$dir/meta")
+    val metaDf = Tables.parquet(spark, s"$dir/meta")
     // meta fields by NAME, with a versioned diagnostic: a pre-v3 store
     // (3-field meta — no forest stride, no partition cap) must fail
     // with "rebuild required", not a positional out-of-bounds error
@@ -267,7 +268,7 @@ object VectorIndexStore {
     val meta = metaDf.collect().head
     val (m, k, residual, s) = (meta.getAs[Int]("m"), meta.getAs[Int]("k"),
       meta.getAs[Boolean]("residual"), meta.getAs[Int]("s"))
-    val bookRows = spark.read.parquet(s"$dir/codebooks").collect()
+    val bookRows = Tables.parquet(spark, s"$dir/codebooks").collect()
       .map(r => (r.getInt(0), r.getInt(1), r.getSeq[Double](2).toArray))
     // per subspace: surviving original code ids SORTED, books aligned
     // by code order — exactly how Embed.fitBooks leaves them
@@ -278,8 +279,8 @@ object VectorIndexStore {
       byM.getOrElse(mi, Array.empty).sortBy(_._2).map(_._3))
     val p = meta.getAs[Int]("p")
     Store(Index(coarse, s, codes, books, m, k, residual, p),
-      spark.read.parquet(s"$dir/subs"),
-      spark.read.parquet(s"$dir/codes")
+      Tables.parquet(spark, s"$dir/subs"),
+      Tables.parquet(spark, s"$dir/codes")
         .select(col("vec_id"), col("list_id"), col("part_id"),
           col("codes")))
   }

@@ -1,7 +1,10 @@
 package graft.sources
 
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Canonical loader for the driver-generated parquet tables.
   *
@@ -45,8 +48,69 @@ object Tables {
 
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
     ensureNanosConf(spark)
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val df = parquet(spark, s"$dir/$name.parquet")
     if (name == "events") normalizeEvents(df) else df
+  }
+
+  /** `spark.read.parquet(path)` with the schema inferred once per
+    * listing. Spark's inference reads footers in a Spark job on every
+    * read, even of one file; here a path read before is read with its
+    * cached schema, which submits no job. The cache is keyed on the
+    * qualified path and the session's `spark.sql.parquet.*` and
+    * `spark.sql.legacy.parquet.*` values, and an entry holds only while
+    * the [[fence]] of the read's own file listing matches: a table
+    * rewritten in place, a store appended to or compacted, or a changed
+    * parquet setting infers again (a changed listing lists twice, once
+    * with the stale schema and once for the inference).
+    */
+  def parquet(spark: SparkSession, path: String): DataFrame = {
+    val p = new Path(path)
+    val conf = spark.conf.getAll.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.")
+    }
+    val key = (p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .makeQualified(p).toString, conf)
+    Option(schemas.get(key)).flatMap { case (fence, schema) =>
+      val df = spark.read.schema(schema).parquet(path)
+      if (listingFence(df).contains(fence)) Some(df) else None
+    }.getOrElse {
+      val df = spark.read.parquet(path)
+      listingFence(df).foreach(f => schemas.put(key, (f, df.schema)))
+      df
+    }
+  }
+
+  /** Inferred schemas by (qualified path, parquet settings): a small
+    * LRU shared by every session and thread, each entry holding the
+    * SHA-256 of the listing fence it was inferred from.
+    */
+  private val schemas = java.util.Collections.synchronizedMap(
+    new java.util.LinkedHashMap[(String, Map[String, String]), (String, StructType)](
+        16, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[
+          (String, Map[String, String]), (String, StructType)]): Boolean =
+        size > 64
+    })
+
+  /** Digest of [[fence]] over the listing the read's file index made. */
+  private def listingFence(df: DataFrame): Option[String] =
+    df.queryExecution.analyzed.collectFirst {
+      case l: LogicalRelation => l.relation
+    }.collect {
+      case HadoopFsRelation(i: PartitioningAwareFileIndex, _, _, _, _, _) =>
+        java.util.HexFormat.of.formatHex(
+          java.security.MessageDigest.getInstance("SHA-256").digest(
+            fence(i.rootPaths.head, i.allFiles()).getBytes("UTF-8")))
+    }
+
+  /** A listing as text: the root's path, then one sorted
+    * `relative-path length mtime` line per file under it.
+    */
+  private[graft] def fence(root: Path, files: Iterable[FileStatus]): String = {
+    val base = root.toUri
+    (base.getPath +: files.map { f =>
+      s"${base.relativize(f.getPath.toUri).getPath} ${f.getLen} ${f.getModificationTime}"
+    }.toSeq.sorted).mkString("\n")
   }
 
   def events(spark: SparkSession, dir: String): DataFrame = apply(spark, dir, "events")

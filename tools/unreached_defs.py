@@ -49,7 +49,9 @@ def blank(m):
 
 def code_lines(path):
     """(line number, text) of the lines outside comments, with the text
-    of one-line string literals blanked."""
+    of one-line string literals blanked. A line that starts with `.`
+    continues the previous code line (`Obj` then `.name(` on the next
+    line), so it is joined onto it."""
     res, in_block = [], False
     for i, line in enumerate(open(path, encoding="utf-8"), 1):
         s = line.strip()
@@ -61,7 +63,11 @@ def code_lines(path):
             continue
         if s.startswith(("*", "//")):
             continue
-        res.append((i, re.sub(r"//.*$", "", STRING.sub(blank, line))))
+        text = re.sub(r"//.*$", "", STRING.sub(blank, line))
+        if s.startswith(".") and res:
+            res[-1] = (res[-1][0], res[-1][1].rstrip() + text.strip())
+        else:
+            res.append((i, text))
     return res
 
 
