@@ -38,6 +38,15 @@ object Bench {
       if (cpus == "32") "bench.json" else s"bench_c$cpus.json"
     } else "bench_adhoc.json"
 
+  /** The stderr warning of an sf0.1 run at a core count other than the
+    * canonical 32, naming the artifact it writes; None otherwise.
+    */
+  private[graft] def coreWarning(sfDir: String, cpus: String,
+                                 out: String): Option[String] =
+    Option.when(artifactFor(sfDir, cpus).startsWith("bench_c"))(
+      s"[bench] warning: sf0.1 at $cpus cores, not the canonical 32: " +
+        s"not comparable to bench.json; writing $out")
+
   /** One timed row. `rows` is -1 when the row failed; `eagerJobs` are
     * the `jobs` submitted before the builder call returned.
     */
@@ -154,6 +163,14 @@ object Bench {
     // 1-min load average at start so a contaminated run is self-labeling
     val loadAvg = java.lang.management.ManagementFactory
       .getOperatingSystemMXBean.getSystemLoadAverage
+    // bench.json is the SCORED artifact (solo sf0.1 at 32 cores): an
+    // ad-hoc run at any other scale lands in bench_adhoc.json unless the
+    // caller explicitly routes it — an sf0.01 debug run and an
+    // interleaved re-run have each clobbered the scored file in past
+    // rounds
+    val out = sys.env.get("SPARK_GRAFT_BENCH_OUT")
+      .getOrElse(artifactFor(sfDir, cpus.toString))
+    coreWarning(sfDir, cpus.toString, out).foreach(System.err.println)
     val spark = GraftSession.builder(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // untimed warmup: JIT + codegen + each input's inferred schema
@@ -219,13 +236,7 @@ object Bench {
     println(line)
     // also persist the full line as an artifact: the driver's log capture
     // keeps only the stdout tail, which truncated 24 per-query rows from
-    // BENCH_r05 — the file is the durable copy of the same JSON.
-    // bench.json is the SCORED artifact (solo sf0.1): an ad-hoc run at
-    // any other scale lands in bench_adhoc.json unless the caller
-    // explicitly routes it — an sf0.01 debug run and an interleaved
-    // re-run have each clobbered the scored file in past rounds
-    val out = sys.env.get("SPARK_GRAFT_BENCH_OUT")
-      .getOrElse(artifactFor(sfDir, cpus.toString))
+    // BENCH_r05 — the file is the durable copy of the same JSON
     try java.nio.file.Files.writeString(java.nio.file.Paths.get(out), line + "\n")
     catch { case NonFatal(e) =>
       System.err.println(s"[bench] artifact write failed: ${e.getMessage}") }

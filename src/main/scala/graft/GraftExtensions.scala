@@ -1,7 +1,7 @@
 package graft
 
-import graft.functions.{ArrayShiftExpr, BpeCountExpr, BpeVocab, DotProductExpr, KgramHashesExpr, MinHashSigExpr, SimHashAgg, TextGateStatsExpr, WordShinglesExpr, XxSortedHashesExpr}
-import org.apache.spark.sql.GraftColumnBridge
+import graft.functions.{ArrayShiftExpr, DotProductExpr, KernelCall, Kernels, SimHashAgg}
+import org.apache.spark.sql.{Column, GraftColumnBridge}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
@@ -33,6 +33,19 @@ object GraftFunctions {
       s"$what must be an integer literal, got $other")
   }
 
+  private def col(e: Expression): Column = GraftColumnBridge.toColumn(e)
+
+  /** A SQL function built by a Column builder — a kernel row's, or a
+    * composed operator's — so the SQL form cannot drift from the
+    * DataFrame one.
+    */
+  private def fn(name: String)(args: PartialFunction[Seq[Expression], Column])
+      : (String, ExpressionInfo, Seq[Expression] => Expression) =
+    (name, new ExpressionInfo(classOf[KernelCall].getName, name),
+      exprs => GraftColumnBridge.toExpressionEager(args.applyOrElse(exprs,
+        (e: Seq[Expression]) => throw new IllegalArgumentException(
+          s"$name: wrong arguments (${e.size})"))))
+
   private[graft] val descriptors: Seq[(String, ExpressionInfo,
       Seq[Expression] => Expression)] = Seq(
     ("array_shift",
@@ -53,66 +66,40 @@ object GraftFunctions {
     ("simhash_agg",
       new ExpressionInfo(classOf[SimHashAgg].getName, "simhash_agg"),
       exprs => SimHashAgg(exprs.head).toAggregateExpression()),
-    ("minhash_sig",
-      new ExpressionInfo(classOf[MinHashSigExpr].getName, "minhash_sig"),
-      exprs => MinHashSigExpr(exprs(0), litInt(exprs(1), "numHashes"))),
-    ("xx_sorted_hashes",
-      new ExpressionInfo(classOf[XxSortedHashesExpr].getName, "xx_sorted_hashes"),
-      exprs => XxSortedHashesExpr(exprs(0))),
-    ("kgram_hashes",
-      new ExpressionInfo(classOf[KgramHashesExpr].getName, "kgram_hashes"),
-      exprs => KgramHashesExpr(exprs(0), litInt(exprs(1), "k"))),
-    ("word_shingles",
-      new ExpressionInfo(classOf[WordShinglesExpr].getName, "word_shingles"),
-      exprs => WordShinglesExpr(exprs(0), litInt(exprs(1), "n"))),
+    // the kernel rows with a SQL form, each named by its Kernels row
+    fn(Kernels.MinhashSig.name) { case Seq(sh, n) =>
+      Kernels.minhashSig(col(sh), litInt(n, "numHashes")) },
+    fn(Kernels.XxSortedHashes.name) { case Seq(sh) =>
+      Kernels.xxSortedHashes(col(sh)) },
+    fn(Kernels.KgramHashes.name) { case Seq(t, k) =>
+      Kernels.kgramHashes(col(t), litInt(k, "k")) },
+    fn(Kernels.WordShingles.name) { case Seq(toks, n) =>
+      Kernels.wordShingles(col(toks), litInt(n, "n")) },
     // ---- the SQL front door for the text/dedup pipeline family ----
     // text_gate_stats(text) → struct(n_tokens, n_chars, n_punct, n_stop):
     // the fused gate kernel under the same union-stopword dictionary the
     // Column API uses, so a SQL-only user computes bit-identical stats.
-    ("text_gate_stats",
-      new ExpressionInfo(classOf[TextGateStatsExpr].getName, "text_gate_stats"),
-      exprs => TextGateStatsExpr(exprs.head, graft.textops.TextOps.unionStopwords)),
-    // text_quality(text) → the composed deterministic quality score —
-    // built by the SAME Column builder as the DataFrame operator, so the
-    // SQL form can never drift from the engine's scoring arithmetic.
-    ("text_quality",
-      new ExpressionInfo(classOf[TextGateStatsExpr].getName, "text_quality"),
-      exprs => GraftColumnBridge.toExpressionEager(
-        graft.textops.TextOps.qualityScore(
-          GraftColumnBridge.toColumn(exprs.head)))),
-    // text_lang(text) → the n-gram/stopword language-ID heuristic —
-    // same composed-Column construction as text_quality.
-    ("text_lang",
-      new ExpressionInfo(classOf[TextGateStatsExpr].getName, "text_lang"),
-      exprs => GraftColumnBridge.toExpressionEager(
-        graft.textops.TextOps.langId(
-          GraftColumnBridge.toColumn(exprs.head)))),
+    fn(Kernels.TextGateStats.name) { case Seq(t) =>
+      graft.textops.TextOps.gateStats(col(t)) },
     // bpe_count(text) → total BPE token count under the fixture merge
     // table (the unit every `_bpe` budget operator meters in).
-    ("bpe_count",
-      new ExpressionInfo(classOf[BpeCountExpr].getName, "bpe_count"),
-      exprs => new BpeCountExpr(exprs.head, BpeVocab.merges)),
+    fn(Kernels.BpeCount.name) { case Seq(t) => Kernels.bpeCount(col(t)) },
+    // text_quality(text) → the composed deterministic quality score
+    fn("text_quality") { case Seq(t) =>
+      graft.textops.TextOps.qualityScore(col(t)) },
+    // text_lang(text) → the n-gram/stopword language-ID heuristic
+    fn("text_lang") { case Seq(t) => graft.textops.TextOps.langId(col(t)) },
     // html_clean(html) → the cleaned prose under the full extraction
     // contract (block drops → tag strip → entity decode &amp;-last →
-    // whitespace collapse) — the SAME Column builder the DataFrame
-    // operator uses, so the SQL form cannot drift from it.
-    ("html_clean",
-      new ExpressionInfo(classOf[TextGateStatsExpr].getName, "html_clean"),
-      exprs => GraftColumnBridge.toExpressionEager(
-        graft.textops.Html.cleanText(GraftColumnBridge.toColumn(exprs.head)))),
+    // whitespace collapse)
+    fn("html_clean") { case Seq(h) => graft.textops.Html.cleanText(col(h)) },
     // html_main(html[, minWords, maxLinkPct]) → MAIN-content text (the
-    // justext-core block scoring) via the same eager-bridge path.
-    ("html_main",
-      new ExpressionInfo(classOf[TextGateStatsExpr].getName, "html_main"),
-      exprs => exprs match {
-        case Seq(h) => GraftColumnBridge.toExpressionEager(
-          graft.textops.Html.mainText(GraftColumnBridge.toColumn(h)))
-        case Seq(h, mw, pct) => GraftColumnBridge.toExpressionEager(
-          graft.textops.Html.mainText(GraftColumnBridge.toColumn(h),
-            litInt(mw, "minWords"), litInt(pct, "maxLinkPct")))
-        case other => throw new IllegalArgumentException(
-          s"html_main(html[, minWords, maxLinkPct]) — got ${other.size} args")
-      }))
+    // justext-core block scoring)
+    fn("html_main") {
+      case Seq(h) => graft.textops.Html.mainText(col(h))
+      case Seq(h, mw, pct) => graft.textops.Html.mainText(col(h),
+        litInt(mw, "minWords"), litInt(pct, "maxLinkPct"))
+    })
 
   /** Imperative registration for sessions built without extensions. */
   def register(spark: SparkSession): Unit =

@@ -100,7 +100,7 @@ object Dedup {
     val batchKeep = inc.groupBy(col("fingerprint"))
       .agg(min(col("doc_id")).as("_keep_id"))
     val cand = batchKeep
-      .filter(graft.functions.BloomContainsExpr(
+      .filter(graft.functions.Kernels.bloomContains(
         xxhash64(col("fingerprint")), store.bloom))
       .select(col("fingerprint"))
     val hit = store.fps
@@ -134,7 +134,7 @@ object Dedup {
     * md5 transform into every element of the signature array.
     *
     * No registered row calls it: the rows sign through the fused
-    * [[graft.functions.MinHashSigExpr]] kernel. It stays as the
+    * [[graft.functions.Kernels.minhashSig]] kernel. It stays as the
     * Column-form spec that kernel is equivalence-tested against
     * (BatchKernelSpec, KernelPropertiesSpec).
     */
@@ -159,7 +159,7 @@ object Dedup {
   /** (doc_id, band, bucket) LSH band keys from a shingle frame.
     *
     * The whole signature is ONE codegen'd pass per document
-    * ([[graft.functions.MinHashSigExpr]]): md5 per shingle + all
+    * ([[graft.functions.Kernels.minhashSig]]): md5 per shingle + all
     * numHashes mins in a tight JVM loop. The staged Column-expression
     * twin ([[minhashSignatureFromHalves]] fed by per-stage aliases) is
     * the equivalence-tested spec and the template the DuckDB oracle SQL
@@ -178,14 +178,14 @@ object Dedup {
   private[dedup] def bandKeysOf(shingles: DataFrame, bands: Int,
                        rowsPerBand: Int): DataFrame =
     bandKeysFromSig(shingles.select(col("doc_id"),
-      graft.functions.MinHashSigExpr(col("sh"), bands * rowsPerBand)
+      graft.functions.Kernels.minhashSig(col("sh"), bands * rowsPerBand)
         .as("sig")), bands, rowsPerBand)
 
   /** Band keys from an ALREADY-signed frame (`doc_id`, `sig`) — the
     * seam that lets the incremental probes checkpoint shingles AND
     * signature in ONE eager job and re-derive the banded view lazily
     * (8 md5s per doc per fork instead of a second checkpoint job, and
-    * never a MinHashSigExpr re-run).
+    * never a Kernels.minhashSig re-run).
     */
   private[graft] def bandKeysFromSig(sigged: DataFrame, bands: Int,
                        rowsPerBand: Int): DataFrame =
@@ -534,7 +534,7 @@ object Dedup {
     // in a single eager job (r16 shipped TWO checkpoint jobs here; the
     // per-row fixed job latency was the pair family's floor), and the
     // banded view re-derives lazily from the checkpointed sig — 8 md5s
-    // per doc per fork, never a MinHashSigExpr re-run. The CORPUS side
+    // per doc per fork, never a Kernels.minhashSig re-run. The CORPUS side
     // stays lazy — corpus-sized frames are never checkpointed.
     val incSig = minhashIncSig(incoming, idCol, textCol, shingleSize,
       bands, rowsPerBand)
@@ -652,7 +652,7 @@ object Dedup {
     shingleSetsOf(graft.util.Par.spread(incoming), idCol,
         textCol, shingleSize)
       .select(col("doc_id"), col("sh"),
-        graft.functions.MinHashSigExpr(col("sh"), bands * rowsPerBand)
+        graft.functions.Kernels.minhashSig(col("sh"), bands * rowsPerBand)
           .as("sig"))
       .localCheckpoint()
 
@@ -711,7 +711,7 @@ object Dedup {
       .select(col("doc_id").as("dup_id"), col("hs").as("hs_b"))
       .join(broadcast(pairs), "dup_id")
       .join(broadcast(incCandSh.select(col("doc_id").as("inc_id"),
-        graft.functions.XxSortedHashesExpr(col("sh")).as("hs_a"))), "inc_id")
+        graft.functions.Kernels.xxSortedHashes(col("sh")).as("hs_a"))), "inc_id")
       .withColumn("inter",
         size(array_intersect(col("hs_a"), col("hs_b"))).cast("double"))
       .withColumn("jaccard", round(col("inter") /
@@ -738,7 +738,7 @@ object Dedup {
     SignatureStore.Store(
       banded = bandKeysFromSig(acc, bands, rowsPerBand),
       shingleHashes = acc.select(col("doc_id"),
-        graft.functions.XxSortedHashesExpr(col("sh")).as("hs")))
+        graft.functions.Kernels.xxSortedHashes(col("sh")).as("hs")))
   }
 
   /** 64-bit SimHash per document via the scalable explode→groupBy path:
@@ -1053,7 +1053,7 @@ object Dedup {
     val withSh = tokenized.select(col("doc_id"),
       TextOps.shinglesFromTokens(col("_toks"), shingleSize).as("sh"))
     val sh = withSh.select(col("doc_id"), size(col("sh")).as("n_sh"),
-      explode_outer(graft.functions.XxSortedHashesExpr(col("sh"))).as("h"))
+      explode_outer(graft.functions.Kernels.xxSortedHashes(col("sh"))).as("h"))
     val pairsShared = sh.as("x").join(sh.as("y"), Seq("h"))
       .filter(col("x.doc_id") < col("y.doc_id"))
       .groupBy(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"),
@@ -1101,9 +1101,9 @@ object Dedup {
         TextOps.tokens(lower(col(textCol))).as("_toks"))
     val withSh = tokenized.select(col("doc_id"),
       TextOps.shinglesFromTokens(col("_toks"), shingleSize).as("sh"))
-    // hash + sort in one codegen'd pass (XxSortedHashesExpr)
+    // hash + sort in one codegen'd pass (Kernels.xxSortedHashes)
     val hashedAll = withSh.select(col("doc_id"),
-      graft.functions.XxSortedHashesExpr(col("sh")).as("_hs"))
+      graft.functions.Kernels.xxSortedHashes(col("sh")).as("_hs"))
     // maxDf > 0 = BOILERPLATE-BLIND mode (the spanPairs df-cap
     // convention): shingles present in more than maxDf documents are
     // dropped from the SETS themselves before the prefix, the
@@ -1676,7 +1676,7 @@ object Dedup {
     * The paper builds a suffix array — O(corpus) with a machine-global
     * sort. The relational formulation pays the same one corpus-sized
     * exchange but on 8-byte gram HASHES (the scan-stage kernel
-    * [[graft.functions.WordKgramXxExpr]] tokenizes and hashes in place,
+    * [[graft.functions.Kernels.wordKgramXx]] tokenizes and hashes in place,
     * so text never leaves the scan): a window count over the gram hash
     * marks duplicated positions in the SAME exchange that counts them
     * (no second scan, no self-join), and everything downstream — the
@@ -1687,7 +1687,7 @@ object Dedup {
   def substrings(df: DataFrame, idCol: String, textCol: String,
                  k: Int = 20): DataFrame =
     positionalDupRuns(df, idCol,
-      graft.functions.WordKgramXxExpr(col(textCol), k), k,
+      graft.functions.Kernels.wordKgramXx(col(textCol), k), k,
       "start_tok", "end_tok", "n_tokens")
 
   /** CHARACTER-granularity ExactSubstr — [[substrings]] with code-point
@@ -1701,7 +1701,7 @@ object Dedup {
     * `(doc_id, start_chr, end_chr, n_chars)`, `end_chr` exclusive.
     *
     * Same scale shape as the word form: the k-gram kernel
-    * ([[graft.functions.CharKgramXxExpr]]) tokenizes and hashes in the
+    * ([[graft.functions.Kernels.charKgramXx]]) tokenizes and hashes in the
     * scan stage, ONE corpus exchange on the 8-byte gram hash (a
     * character position per row — ~5× the word form's row count at
     * the same corpus, still hash-only), duplicated-position scale
@@ -1710,7 +1710,7 @@ object Dedup {
   def substringsChar(df: DataFrame, idCol: String, textCol: String,
                      k: Int = 50): DataFrame =
     positionalDupRuns(df, idCol,
-      graft.functions.CharKgramXxExpr(col(textCol), k), k,
+      graft.functions.Kernels.charKgramXx(col(textCol), k), k,
       "start_chr", "end_chr", "n_chars")
 
   /** Shared ExactSubstr machinery: positional gram hashes → corpus-wide

@@ -54,7 +54,7 @@ object SignatureStore {
     Store(
       banded = Dedup.bandKeysOf(sh, bands, rowsPerBand),
       shingleHashes = sh.select(col("doc_id"),
-        graft.functions.XxSortedHashesExpr(col("sh")).as("hs")))
+        graft.functions.Kernels.xxSortedHashes(col("sh")).as("hs")))
   }
 
   /** Persist both frames as parquet under `dir` (`signatures/`,

@@ -2,23 +2,20 @@ package graft.functions
 
 import java.security.MessageDigest
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftColumnBridge
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, UnsafeArrayData, XXH64}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.{UnsafeArrayData, XXH64}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.sketch.BloomFilter
 
 /** Batch kernels for the hot per-document array pipelines.
   *
   * Catalyst does no common-subexpression elimination inside higher-order-
   * function lambdas and evaluates lambda bodies on the INTERPRETED path —
   * so `transform(shingles, s => md5(s))` pays interpreted-eval overhead
-  * per array element, per row. These expressions replace each whole
-  * per-row array pipeline with ONE codegen'd static call running a tight
-  * JVM loop: measured 3-10× on the dedup/similarity bench queries.
+  * per array element, per row. These kernels replace each whole per-row
+  * array pipeline with ONE codegen'd static call running a tight JVM
+  * loop (a [[Kernels]] row): measured 3-10× on the dedup/similarity
+  * bench queries.
   *
   * Every kernel is BIT-IDENTICAL to the Column-expression form it
   * replaces (the HOF forms remain as equivalence-test twins), so the
@@ -387,320 +384,17 @@ object BatchKernelUtil {
     }
     sig
   }
-}
 
-/** `minhash_sig(shingles, numHashes)` — see [[BatchKernelUtil.minhashSig]]. */
-case class MinHashSigExpr(child: Expression, numHashes: Int)
-    extends UnaryExpression {
-  require(numHashes > 0, s"numHashes must be positive, got $numHashes")
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = true)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"minhash_sig needs array<string>, got $other")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    BatchKernelUtil.minhashSig(input.asInstanceOf[ArrayData], numHashes)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.BatchKernelUtil.minhashSig($c, $numHashes);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object MinHashSigExpr {
-  def apply(c: Column, numHashes: Int): Column =
-    GraftColumnBridge.toColumn(
-      new MinHashSigExpr(GraftColumnBridge.toExpression(c), numHashes))
-}
-
-/** `xx_sorted_hashes(arr)` — see [[BatchKernelUtil.xxSortedHashes]]. */
-case class XxSortedHashesExpr(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"xx_sorted_hashes needs array<string>, got $other")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    BatchKernelUtil.xxSortedHashes(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.BatchKernelUtil.xxSortedHashes($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object XxSortedHashesExpr {
-  def apply(c: Column): Column =
-    GraftColumnBridge.toColumn(
-      new XxSortedHashesExpr(GraftColumnBridge.toExpression(c)))
-}
-
-/** `kgram_hashes(text, k)` — see [[BatchKernelUtil.kgramHashes]]. */
-case class KgramHashesExpr(child: Expression, k: Int) extends UnaryExpression {
-  require(k > 0, s"k must be positive, got $k")
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"kgram_hashes needs a string, got $other")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    BatchKernelUtil.kgramHashes(input.asInstanceOf[UTF8String], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.BatchKernelUtil.kgramHashes($c, $k);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object KgramHashesExpr {
-  def apply(c: Column, k: Int): Column =
-    GraftColumnBridge.toColumn(
-      new KgramHashesExpr(GraftColumnBridge.toExpression(c), k))
-}
-
-/** `dsir_buckets(text, nBuckets)` — see [[BatchKernelUtil.dsirBuckets]]. */
-case class DsirBucketsExpr(child: Expression, nBuckets: Int)
-    extends UnaryExpression {
-  require(nBuckets >= 2, s"nBuckets must be >= 2, got $nBuckets")
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"dsir_buckets needs a string, got $other")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    BatchKernelUtil.dsirBuckets(input.asInstanceOf[UTF8String], nBuckets)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.BatchKernelUtil.dsirBuckets($c, $nBuckets);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object DsirBucketsExpr {
-  def apply(c: Column, nBuckets: Int): Column =
-    GraftColumnBridge.toColumn(
-      new DsirBucketsExpr(GraftColumnBridge.toExpression(c), nBuckets))
-}
-
-/** `winnow_fps(text, k, w)` — see [[BatchKernelUtil.winnowFps]]. */
-case class WinnowFpsExpr(child: Expression, k: Int, w: Int)
-    extends UnaryExpression {
-  require(k > 0, s"k must be positive, got $k")
-  require(w > 0, s"w must be positive, got $w")
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"winnow_fps needs a string, got $other")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    BatchKernelUtil.winnowFps(input.asInstanceOf[UTF8String], k, w)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.BatchKernelUtil.winnowFps($c, $k, $w);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object WinnowFpsExpr {
-  def apply(c: Column, k: Int, w: Int): Column =
-    GraftColumnBridge.toColumn(
-      new WinnowFpsExpr(GraftColumnBridge.toExpression(c), k, w))
-}
-
-/** `word_kgram_xx(text, k)` — see [[BatchKernelUtil.wordKgramXx]]. */
-case class WordKgramXxExpr(child: Expression, k: Int) extends UnaryExpression {
-  require(k > 0, s"k must be positive, got $k")
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"word_kgram_xx needs a string, got $other")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    BatchKernelUtil.wordKgramXx(input.asInstanceOf[UTF8String], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.BatchKernelUtil.wordKgramXx($c, $k);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object WordKgramXxExpr {
-  def apply(c: Column, k: Int): Column =
-    GraftColumnBridge.toColumn(
-      new WordKgramXxExpr(GraftColumnBridge.toExpression(c), k))
-}
-
-/** `char_kgram_xx(text, k)` — see [[BatchKernelUtil.charKgramXx]]. */
-case class CharKgramXxExpr(child: Expression, k: Int) extends UnaryExpression {
-  require(k > 0, s"k must be positive, got $k")
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"char_kgram_xx needs a string, got $other")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    BatchKernelUtil.charKgramXx(input.asInstanceOf[UTF8String], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.BatchKernelUtil.charKgramXx($c, $k);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object CharKgramXxExpr {
-  def apply(c: Column, k: Int): Column =
-    GraftColumnBridge.toColumn(
-      new CharKgramXxExpr(GraftColumnBridge.toExpression(c), k))
-}
-
-/** `word_shingles(tokens, n)` — see [[BatchKernelUtil.wordShingles]]. */
-case class WordShinglesExpr(child: Expression, n: Int) extends UnaryExpression {
-  require(n > 0, s"shingle size must be positive, got $n")
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"word_shingles needs array<string>, got $other")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    BatchKernelUtil.wordShingles(input.asInstanceOf[ArrayData], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.BatchKernelUtil.wordShingles($c, $n);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object WordShinglesExpr {
-  def apply(c: Column, n: Int): Column =
-    GraftColumnBridge.toColumn(
-      new WordShinglesExpr(GraftColumnBridge.toExpression(c), n))
-}
-
-/** `hyperplane_sig(vec)` against a fixed plane matrix — see
-  * [[BatchKernelUtil.hyperplaneSig]]. The planes ride along as a node
-  * parameter (they are index constants, not data), shipped to generated
-  * code via a codegen reference object.
-  */
-case class HyperplaneSigExpr(child: Expression, planes: Array[Array[Float]])
-    extends UnaryExpression {
-
-  override def dataType: DataType = LongType
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"hyperplane_sig needs array<float>, got $other")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    BatchKernelUtil.hyperplaneSig(input.asInstanceOf[ArrayData], planes)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val planesRef = ctx.addReferenceObj("planes", planes, "float[][]")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.BatchKernelUtil.hyperplaneSig($c, $planesRef);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object HyperplaneSigExpr {
-  def apply(c: Column, planes: Array[Array[Double]]): Column =
-    GraftColumnBridge.toColumn(
-      new HyperplaneSigExpr(GraftColumnBridge.toExpression(c),
-        planes.map(_.map(_.toFloat))))
-}
-
-/** `centroid_sims(vec)` against a fixed centroid matrix — see
-  * [[BatchKernelUtil.centroidSims]]. Centroid norms are folded on the
-  * driver with the same left-to-right summation the kernel (and
-  * [[VectorOpsUtil]]) uses, so they equal the engine-side `norm`.
-  */
-case class CentroidSimsExpr(child: Expression, cents: Array[Array[Double]])
-    extends UnaryExpression {
-
-  private lazy val cnorms: Array[Double] =
-    cents.map { c =>
-      var s = 0.0; var i = 0
-      while (i < c.length) { s += c(i) * c(i); i += 1 }
-      math.sqrt(s)
-    }
-
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"centroid_sims needs array<double>, got $other")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    BatchKernelUtil.centroidSims(input.asInstanceOf[ArrayData], cents, cnorms)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val centsRef = ctx.addReferenceObj("cents", cents, "double[][]")
-    val normsRef = ctx.addReferenceObj("cnorms", cnorms, "double[]")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.BatchKernelUtil.centroidSims($c, $centsRef, $normsRef);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object CentroidSimsExpr {
-  def apply(c: Column, cents: Array[Array[Double]]): Column =
-    GraftColumnBridge.toColumn(
-      new CentroidSimsExpr(GraftColumnBridge.toExpression(c), cents))
+  /** Membership of a 64-bit fingerprint in a fixed sketch — the
+    * ingest-time prefilter of [[graft.dedup.BloomStore]]. The sketch has
+    * NO false negatives, so filtering the broadcast side of the exact
+    * verify join to bloom-positives can never change the decision — it
+    * only shrinks the broadcast from O(increment) fingerprints to
+    * O(dups + fpp·increment). A handful of hash probes per row, no
+    * allocation.
+    */
+  def bloomContains(fp: Long, bloom: BloomFilter): Boolean =
+    bloom.mightContainLong(fp)
 }
 
 /** Product-quantization codebooks: per subspace `m`, a parallel pair of
@@ -786,119 +480,6 @@ object PqKernelUtil {
     codes(m)(bestIdx(vec.toDoubleArray(), m, books))
 }
 
-/** `pq_codes(vec)` against fixed per-subspace codebooks — one kernel
-  * call encodes all M subspaces (argmin squared-L2 per subspace, ties
-  * to the lowest code id, mirroring the DuckDB oracle's
-  * `ORDER BY d2, code` tiebreak).
-  */
-case class PqCodesExpr(child: Expression, codes: Array[Array[Int]],
-                       books: Array[Array[Array[Double]]])
-    extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"pq_codes needs array<double>, got $other")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    PqKernelUtil.pqCodes(input.asInstanceOf[ArrayData], codes, books)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val codesRef = ctx.addReferenceObj("pqcodes", codes, "int[][]")
-    val booksRef = ctx.addReferenceObj("pqbooks", books, "double[][][]")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.PqKernelUtil.pqCodes($c, $codesRef, $booksRef);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object PqCodesExpr {
-  def apply(c: Column, codes: Array[Array[Int]],
-            books: Array[Array[Array[Double]]]): Column =
-    GraftColumnBridge.toColumn(
-      new PqCodesExpr(GraftColumnBridge.toExpression(c), codes, books))
-}
-
-/** `pq_err(vec)` — total squared reconstruction error under the books'
-  * best codes; see [[PqKernelUtil.pqErr]].
-  */
-case class PqErrExpr(child: Expression, books: Array[Array[Array[Double]]])
-    extends UnaryExpression {
-
-  override def dataType: DataType = DoubleType
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"pq_err needs array<double>, got $other")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    PqKernelUtil.pqErr(input.asInstanceOf[ArrayData], books)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val booksRef = ctx.addReferenceObj("pqbooks", books, "double[][][]")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.PqKernelUtil.pqErr($c, $booksRef);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object PqErrExpr {
-  def apply(c: Column, books: Array[Array[Array[Double]]]): Column =
-    GraftColumnBridge.toColumn(
-      new PqErrExpr(GraftColumnBridge.toExpression(c), books))
-}
-
-/** `pq_assign(vec, m)` — Lloyd-pass assignment for one (exploded)
-  * subspace index under the current books.
-  */
-case class PqAssignExpr(left: Expression, right: Expression,
-                        codes: Array[Array[Int]],
-                        books: Array[Array[Array[Double]]])
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-
-  override def dataType: DataType = IntegerType
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(DoubleType, _), IntegerType) =>
-        TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"pq_assign needs (array<double>, int), got $other")
-    }
-
-  override def nullSafeEval(vec: Any, m: Any): Any =
-    PqKernelUtil.pqAssign(vec.asInstanceOf[ArrayData],
-      m.asInstanceOf[Int], codes, books)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val codesRef = ctx.addReferenceObj("pqcodes", codes, "int[][]")
-    val booksRef = ctx.addReferenceObj("pqbooks", books, "double[][][]")
-    nullSafeCodeGen(ctx, ev, (v, m) =>
-      s"${ev.value} = graft.functions.PqKernelUtil.pqAssign($v, $m, $codesRef, $booksRef);")
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-object PqAssignExpr {
-  def apply(v: Column, m: Column, codes: Array[Array[Int]],
-            books: Array[Array[Array[Double]]]): Column =
-    GraftColumnBridge.toColumn(
-      new PqAssignExpr(GraftColumnBridge.toExpression(v),
-        GraftColumnBridge.toExpression(m), codes, books))
-}
-
 /** Asymmetric-distance (ADC) kernel for PQ-compressed search: squared
   * L2 between a FULL query vector and a candidate's RECONSTRUCTION
   * (per-subspace codebook centroid for its code). `idx(m)(codeId)`
@@ -931,48 +512,6 @@ object PqAdcUtil {
     }
     total
   }
-}
-
-/** `pq_adc(query_vec, codes)` against fixed codebooks — see
-  * [[PqAdcUtil.adc]].
-  */
-case class PqAdcExpr(left: Expression, right: Expression,
-                     idx: Array[Array[Int]],
-                     books: Array[Array[Array[Double]]])
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-
-  override def dataType: DataType = DoubleType
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(DoubleType, _), ArrayType(IntegerType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"pq_adc needs (array<double>, array<int>), got $other")
-    }
-
-  override def nullSafeEval(qv: Any, codes: Any): Any =
-    PqAdcUtil.adc(qv.asInstanceOf[ArrayData],
-      codes.asInstanceOf[ArrayData], idx, books)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val idxRef = ctx.addReferenceObj("pqidx", idx, "int[][]")
-    val booksRef = ctx.addReferenceObj("pqbooks", books, "double[][][]")
-    nullSafeCodeGen(ctx, ev, (q, c) =>
-      s"${ev.value} = graft.functions.PqAdcUtil.adc($q, $c, $idxRef, $booksRef);")
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-object PqAdcExpr {
-  def apply(qv: Column, codes: Column, idx: Array[Array[Int]],
-            books: Array[Array[Array[Double]]]): Column =
-    GraftColumnBridge.toColumn(
-      new PqAdcExpr(GraftColumnBridge.toExpression(qv),
-        GraftColumnBridge.toExpression(codes), idx, books))
 }
 
 /** One-pass token/char/punct/stopword counts — see
@@ -1068,54 +607,6 @@ object TextGateStatsUtil {
   }
 }
 
-/** `text_gate_stats(text)` — see [[TextGateStatsUtil.gateStats]]. The
-  * dictionary rides the expression as a literal parameter (reference
-  * object in codegen), so the struct is a pure function of the text and
-  * common-subexpression elimination collapses repeated uses inside one
-  * projection to a single scan.
-  */
-case class TextGateStatsExpr(child: Expression, dict: Seq[String])
-    extends UnaryExpression {
-
-  @transient private lazy val dictSet = TextGateStatsUtil.buildDict(dict)
-  private val maxTokBytes = TextGateStatsUtil.maxBytes(dict)
-
-  override def dataType: DataType = TextGateStatsExpr.schema
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"text_gate_stats needs a string, got $other")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    TextGateStatsUtil.gateStats(input.asInstanceOf[UTF8String], dictSet,
-      maxTokBytes)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val dictRef = ctx.addReferenceObj("gateDict", dictSet,
-      "java.util.HashSet<org.apache.spark.unsafe.types.UTF8String>")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.TextGateStatsUtil.gateStats($c, " +
-        s"$dictRef, $maxTokBytes);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object TextGateStatsExpr {
-  val schema: StructType = StructType(Seq(
-    StructField("n_tokens", IntegerType, nullable = false),
-    StructField("n_chars", IntegerType, nullable = false),
-    StructField("n_punct", IntegerType, nullable = false),
-    StructField("n_stop", IntegerType, nullable = false)))
-
-  def apply(c: Column, dict: Seq[String]): Column =
-    GraftColumnBridge.toColumn(
-      new TextGateStatsExpr(GraftColumnBridge.toExpression(c), dict))
-}
-
 /** Word n-gram kernels — see [[WordNgramUtil]]. */
 object WordNgramUtil {
 
@@ -1174,64 +665,6 @@ object WordNgramUtil {
   }
 }
 
-/** `word_ngrams(toks, n)` — see [[WordNgramUtil.wordNgrams]]. */
-case class WordNgramsExpr(child: Expression, n: Int) extends UnaryExpression {
-  require(n >= 1, s"n must be >= 1, got $n")
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"word_ngrams needs array<string>, got $other")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    WordNgramUtil.wordNgrams(input.asInstanceOf[ArrayData], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.WordNgramUtil.wordNgrams($c, $n);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object WordNgramsExpr {
-  def apply(c: Column, n: Int): Column =
-    GraftColumnBridge.toColumn(
-      new WordNgramsExpr(GraftColumnBridge.toExpression(c), n))
-}
-
-/** `ngram_xx_set(toks, n)` — see [[WordNgramUtil.ngramXxSet]]. */
-case class NgramXxSetExpr(child: Expression, n: Int) extends UnaryExpression {
-  require(n >= 1, s"n must be >= 1, got $n")
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"ngram_xx_set needs array<string>, got $other")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    WordNgramUtil.ngramXxSet(input.asInstanceOf[ArrayData], n)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.WordNgramUtil.ngramXxSet($c, $n);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object NgramXxSetExpr {
-  def apply(c: Column, n: Int): Column =
-    GraftColumnBridge.toColumn(
-      new NgramXxSetExpr(GraftColumnBridge.toExpression(c), n))
-}
-
 /** Per-document word counts — see [[WordCountsUtil.wordCounts]]. */
 object WordCountsUtil {
 
@@ -1241,16 +674,19 @@ object WordCountsUtil {
     * this doc. Any aggregation whose grouping key contains the document
     * id is per-document work — this moves it into the scan stage, so
     * the exploded output is already (doc, term)-unique and the
-    * corpus-sized first shuffle of the tf/df family disappears.
+    * corpus-sized first shuffle of the tf/df family disappears. A NULL
+    * token is skipped: `term` is non-nullable.
     */
   def wordCounts(toks: ArrayData): ArrayData = {
     val m = toks.numElements()
     val counts = new java.util.LinkedHashMap[UTF8String, Long]()
     var i = 0
     while (i < m) {
-      val t = toks.getUTF8String(i)
-      val prev = counts.get(t)
-      counts.put(t, if (prev == null) 1L else prev + 1L)
+      if (!toks.isNullAt(i)) {
+        val t = toks.getUTF8String(i)
+        val prev = counts.get(t)
+        counts.put(t, if (prev == null) 1L else prev + 1L)
+      }
       i += 1
     }
     val out = new Array[Any](counts.size())
@@ -1264,36 +700,6 @@ object WordCountsUtil {
     }
     new GenericArrayData(out)
   }
-}
-
-/** `word_counts(toks)` — see [[WordCountsUtil.wordCounts]]. */
-case class WordCountsExpr(child: Expression) extends UnaryExpression {
-
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("term", StringType, nullable = false),
-    StructField("tf", LongType, nullable = false))), containsNull = false)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(StringType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"word_counts needs array<string>, got $other")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    WordCountsUtil.wordCounts(input.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.WordCountsUtil.wordCounts($c);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object WordCountsExpr {
-  def apply(c: Column): Column =
-    GraftColumnBridge.toColumn(
-      new WordCountsExpr(GraftColumnBridge.toExpression(c)))
 }
 
 /** Second-level (within-coarse-cell) nearest-sub-centroid assignment for
@@ -1346,61 +752,6 @@ object SubNearestUtil {
   }
 }
 
-/** `sub_nearest(vec, coarse_id)` against a fixed two-level centroid
-  * forest — see [[SubNearestUtil.nearestSub]]. The centroids ride as
-  * codegen reference objects (index constants, like
-  * [[CentroidSimsExpr]]), so generated-code size stays O(1) no matter
-  * how large `nlist` grows.
-  */
-case class SubNearestExpr(left: Expression, right: Expression,
-                          subCents: Array[Array[Array[Double]]],
-                          subIds: Array[Array[Int]])
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-
-  private lazy val subNorms: Array[Array[Double]] =
-    subCents.map(_.map { c =>
-      var s = 0.0; var i = 0
-      while (i < c.length) { s += c(i) * c(i); i += 1 }
-      math.sqrt(s)
-    })
-
-  override def dataType: DataType = IntegerType
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(DoubleType, _), IntegerType) =>
-        TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"sub_nearest needs (array<double>, int), got $other")
-    }
-
-  override def nullSafeEval(vec: Any, coarse: Any): Any =
-    SubNearestUtil.nearestSub(vec.asInstanceOf[ArrayData],
-      coarse.asInstanceOf[Int], subCents, subNorms, subIds)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val centsRef = ctx.addReferenceObj("subcents", subCents, "double[][][]")
-    val normsRef = ctx.addReferenceObj("subnorms", subNorms, "double[][]")
-    val idsRef = ctx.addReferenceObj("subids", subIds, "int[][]")
-    nullSafeCodeGen(ctx, ev, (v, c) =>
-      s"${ev.value} = graft.functions.SubNearestUtil.nearestSub(" +
-        s"$v, $c, $centsRef, $normsRef, $idsRef);")
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-object SubNearestExpr {
-  def apply(v: Column, coarseId: Column,
-            subCents: Array[Array[Array[Double]]],
-            subIds: Array[Array[Int]]): Column =
-    GraftColumnBridge.toColumn(
-      new SubNearestExpr(GraftColumnBridge.toExpression(v),
-        GraftColumnBridge.toExpression(coarseId), subCents, subIds))
-}
-
 /** `count_below(value, cuts)` — how many elements of `cuts` are
   * STRICTLY below `value`; the range-bucket assignment of
   * [[graft.lagops.EventAnalytics.distributionStats]]. Identical
@@ -1423,81 +774,7 @@ object CountBelowUtil {
   }
 }
 
-case class CountBelowExpr(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-
-  override def dataType: DataType = IntegerType
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (DoubleType, ArrayType(DoubleType, _)) =>
-        TypeCheckResult.TypeCheckSuccess
-      case other => TypeCheckResult.TypeCheckFailure(
-        s"count_below needs (double, array<double>), got $other")
-    }
-
-  override def nullSafeEval(value: Any, cuts: Any): Any =
-    CountBelowUtil.countBelow(value.asInstanceOf[Double],
-      cuts.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (v, c) =>
-      s"${ev.value} = graft.functions.CountBelowUtil.countBelow($v, $c);")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-object CountBelowExpr {
-  def apply(value: Column, cuts: Column): Column =
-    GraftColumnBridge.toColumn(
-      new CountBelowExpr(GraftColumnBridge.toExpression(value),
-        GraftColumnBridge.toExpression(cuts)))
-}
-
-/** `bloom_contains(fp64)` against a fixed membership sketch — the
-  * ingest-time prefilter of [[graft.dedup.BloomStore]]. The sketch has
-  * NO false negatives, so filtering the broadcast side of the exact
-  * verify join to bloom-positives can never change the decision — it
-  * only shrinks the broadcast from O(increment) fingerprints to
-  * O(dups + fpp·increment). The filter rides as a codegen reference
-  * object (index constant, like the centroid forests); evaluation is
-  * a handful of hash probes per row, no allocation.
-  */
-case class BloomContainsExpr(child: Expression,
-                             bloom: org.apache.spark.util.sketch.BloomFilter)
-    extends UnaryExpression {
-
-  override def dataType: DataType = BooleanType
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case LongType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"bloom_contains needs bigint, got $other")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    bloom.mightContainLong(input.asInstanceOf[Long])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val bloomRef = ctx.addReferenceObj("bloom", bloom,
-      "org.apache.spark.util.sketch.BloomFilter")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = $bloomRef.mightContainLong($c);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object BloomContainsExpr {
-  def apply(c: Column, bloom: org.apache.spark.util.sketch.BloomFilter): Column =
-    GraftColumnBridge.toColumn(
-      new BloomContainsExpr(GraftColumnBridge.toExpression(c), bloom))
-}
-
-/** Language-ID kernel — see [[LangIdExpr]]. */
+/** Language-ID kernel — see [[LangIdUtil.langId]]. */
 object LangIdUtil {
 
   final class Dict(langs: Seq[(String, Seq[String])]) extends Serializable {
@@ -1598,42 +875,4 @@ object LangIdUtil {
     }
     if (best < 0) dict.und else dict.langCodes(best)
   }
-}
-
-/** `lang_id(text)` — see [[LangIdUtil.langId]]. Bit-identical to the
-  * per-language Column pipeline it replaces (LangIdKernelSpec pins
-  * equality; the Column form stays as [[graft.textops.TextOps
-  * .langIdViaColumns]]).
-  */
-case class LangIdExpr(child: Expression, langs: Seq[(String, Seq[String])])
-    extends UnaryExpression {
-
-  @transient private lazy val dict = new LangIdUtil.Dict(langs)
-
-  override def dataType: DataType = StringType
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"lang_id needs a string, got $other")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    LangIdUtil.langId(input.asInstanceOf[UTF8String], dict)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val dictRef = ctx.addReferenceObj("langDict", dict,
-      "graft.functions.LangIdUtil.Dict")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.LangIdUtil.langId($c, $dictRef);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object LangIdExpr {
-  def apply(c: Column, langs: Seq[(String, Seq[String])]): Column =
-    GraftColumnBridge.toColumn(
-      new LangIdExpr(GraftColumnBridge.toExpression(c), langs))
 }

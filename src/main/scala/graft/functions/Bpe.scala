@@ -2,12 +2,6 @@ package graft.functions
 
 import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftColumnBridge
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Byte-pair-encoding tokenizer fixture: a deterministic merge table
@@ -16,7 +10,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * iteratively merge the most frequent adjacent symbol pair).
   *
   * The merge table — not the trainer — is the shared artifact: the
-  * Spark kernel ([[BpeCountExpr]]), the naive Scala reference
+  * Spark kernel ([[Kernels.bpeCount]]), the naive Scala reference
   * implementation the kernel is equivalence-tested against, and the
   * DuckDB oracle's recursive CTE all consume `BpeVocab.merges`, so the
   * three sides can never drift. A production deployment would load the
@@ -137,7 +131,7 @@ object BpeVocab {
     * load once on the driver (merge tables are vocabulary-sized, tens
     * of thousands of lines — KBs to low MBs), and the ranks map rides
     * to executors as a codegen reference object inside
-    * [[BpeCountExpr]], exactly like the fixture table.
+    * [[Kernels.bpeCount]], exactly like the fixture table.
     *
     * Reads through Hadoop's FileSystem so `file:/`, `hdfs:/`, `s3a:/`
     * paths all work on a cluster; bare paths resolve against the
@@ -248,7 +242,7 @@ object BpeVocab {
   }
 }
 
-/** Runtime for [[BpeCountExpr]]: tight-loop BPE symbol counting with a
+/** Runtime for [[Kernels.bpeCount]]: tight-loop BPE symbol counting with a
   * process-wide word→count memo (Zipfian corpora re-see the same words
   * constantly, so steady-state cost is one hash probe per token).
   */
@@ -380,51 +374,4 @@ object BpeKernelUtil {
     if (cache.size() < MaxCacheEntries) cache.put(word, Integer.valueOf(c))
     c
   }
-}
-
-/** `bpe_token_count(text)` — the document's total BPE token count under
-  * a fixed merge table (see [[BpeVocab]]). Codegen'd scan-stage scalar:
-  * the ranks map rides as a codegen reference object, the expression is
-  * deterministic, and repeated uses collapse via subexpression
-  * elimination — the same contract as [[TextGateStatsExpr]].
-  */
-case class BpeCountExpr(child: Expression, merges: Seq[(String, String)],
-                        byteLevel: Boolean = false)
-    extends UnaryExpression {
-
-  @transient private lazy val ranks = BpeKernelUtil.buildRanks(merges)
-
-  override def dataType: DataType = LongType
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"bpe_token_count needs a string, got $other")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    BpeKernelUtil.docCount(input.asInstanceOf[UTF8String], ranks, byteLevel)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ranksRef = ctx.addReferenceObj("bpeRanks", ranks,
-      "java.util.HashMap<String, Integer>")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.BpeKernelUtil.docCount($c, $ranksRef, $byteLevel);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object BpeCountExpr {
-  def apply(c: Column): Column = apply(c, BpeVocab.merges)
-  def apply(c: Column, merges: Seq[(String, String)]): Column =
-    GraftColumnBridge.toColumn(
-      new BpeCountExpr(GraftColumnBridge.toExpression(c), merges))
-  /** Byte-level (GPT-2-family) variant: UTF-8 bytes through
-    * [[BpeVocab.byteToUnicode]] seed the merge loop. */
-  def byteLevel(c: Column, merges: Seq[(String, String)]): Column =
-    GraftColumnBridge.toColumn(
-      new BpeCountExpr(GraftColumnBridge.toExpression(c), merges,
-        byteLevel = true))
 }

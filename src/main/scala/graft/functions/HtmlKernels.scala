@@ -2,12 +2,8 @@ package graft.functions
 
 import java.util.regex.Pattern
 
-import org.apache.spark.sql.Column
-import org.apache.spark.sql.GraftColumnBridge
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Single-pass kernel for [[graft.textops.Html.mainText]] /
@@ -180,7 +176,8 @@ object HtmlMainUtil {
     }
   }
 
-  def mainStats(html: UTF8String, minWords: Int, maxLinkPct: Int): Any = {
+  def mainStats(html: UTF8String, minWords: Int,
+                maxLinkPct: Int): InternalRow = {
     val s0 = html.toString
     val s = commentP.matcher(
       styleP.matcher(
@@ -194,50 +191,8 @@ object HtmlMainUtil {
       start = m.end
     }
     acc.region(s, start, s.length)
-    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
+    new GenericInternalRow(
       Array[Any](UTF8String.fromString(acc.main.toString),
         acc.nBlocks, acc.nKept))
   }
-}
-
-/** `html_main_stats(html, minWords, maxLinkPct)` — see
-  * [[HtmlMainUtil.mainStats]]. Output struct:
-  * (main string, n_blocks int, n_kept int).
-  */
-case class HtmlMainStatsExpr(child: Expression, minWords: Int,
-                             maxLinkPct: Int) extends UnaryExpression {
-  require(minWords >= 1 && maxLinkPct >= 0 && maxLinkPct <= 100,
-    s"bad thresholds: minWords=$minWords maxLinkPct=$maxLinkPct")
-
-  override def dataType: DataType = HtmlMainStatsExpr.schema
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"html_main_stats needs a string, got $other")
-  }
-
-  override def nullSafeEval(input: Any): Any =
-    HtmlMainUtil.mainStats(input.asInstanceOf[UTF8String], minWords,
-      maxLinkPct)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = (InternalRow) graft.functions.HtmlMainUtil.mainStats(" +
-        s"$c, $minWords, $maxLinkPct);")
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-object HtmlMainStatsExpr {
-  val schema: StructType = StructType(Seq(
-    StructField("main", StringType, nullable = false),
-    StructField("n_blocks", IntegerType, nullable = false),
-    StructField("n_kept", IntegerType, nullable = false)))
-
-  def apply(c: Column, minWords: Int, maxLinkPct: Int): Column =
-    GraftColumnBridge.toColumn(
-      new HtmlMainStatsExpr(GraftColumnBridge.toExpression(c), minWords,
-        maxLinkPct))
 }

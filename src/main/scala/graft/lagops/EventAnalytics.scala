@@ -176,7 +176,7 @@ object EventAnalytics {
     val bucketed = df
       .join(broadcast(cuts), Seq(groupCol))
       .withColumn("_b", when(col(valueCol).isNull, lit(-1))
-        .otherwise(graft.functions.CountBelowExpr(
+        .otherwise(graft.functions.Kernels.countBelow(
           col(valueCol).cast("double"), col("_cuts"))))
       .drop("_cuts")
     val counts = bucketed.groupBy(col(groupCol), col("_b"))

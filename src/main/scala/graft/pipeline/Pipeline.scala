@@ -247,7 +247,7 @@ object Pipeline {
       .select(col(idCol).as("doc_id"),
         TextOps.tokens(lower(col(textCol))).as("_toks"))
       .select(col("doc_id"),
-        explode_outer(graft.functions.XxSortedHashesExpr(
+        explode_outer(graft.functions.Kernels.xxSortedHashes(
           TextOps.shinglesFromTokens(col("_toks"), shingleSize))).as("h"))
 
   /** Driver-built Bloom filter bytes over a (small, checkpointed)
@@ -913,7 +913,10 @@ object Pipeline {
     val extracted = scratchDir match {
       case Some(sd) =>
         extracted0.write.mode("overwrite").parquet(sd)
-        graft.sources.Tables.parquet(responses.sparkSession, sd)
+        // read back with the written schema (the file reader makes it
+        // nullable, as an inferred one is): each write lists new part
+        // files, so an inferred read would pay a footer job per call
+        responses.sparkSession.read.schema(extracted0.schema).parquet(sd)
       case None => extracted0
     }
     val kept = narrowFromExtracted(extracted, idCol, minQuality)

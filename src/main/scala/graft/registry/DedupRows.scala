@@ -728,7 +728,7 @@ private[graft] object DedupRows {
       // deciding whether 16 still means 'boilerplate' on their corpus
       val d = Tables.documents(s, dir)
       val sh = d.select(col("doc_id"),
-        // WordShinglesExpr output is already per-doc distinct, so
+        // Kernels.wordShingles output is already per-doc distinct, so
         // count(*) per shingle IS its document frequency
         explode_outer(graft.textops.TextOps.shinglesFromTokens(
           graft.textops.TextOps.tokens(lower(col("text"))), 3))

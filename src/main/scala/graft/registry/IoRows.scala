@@ -292,17 +292,9 @@ private[graft] object IoRows {
         regexp_extract(col("target_uri"), "/doc/(\\d+)$", 1)
           .cast("long").as("doc_id"),
         col("body").cast("string").as("html"))
-      // scratch path scoped by PID (r16 ADVICE): two concurrent
-      // sessions on one box (a bench and a verify run) raced on the
-      // shared dir — one run's overwrite deleted files the other's
-      // in-flight scan was reading. Per-JVM scoping keeps dir growth
-      // bounded (overwritten per invocation within a JVM) while
-      // making cross-process interference impossible; scratchDir
-      // deletes it at JVM exit.
       graft.pipeline.Pipeline.crawlClean(resp, "doc_id", "html",
         minQuality = 0.3, budget = 2048,
-        scratchDir = Some(scratchDir(
-          s"graft_crawl_clean_ex_${java.lang.ProcessHandle.current().pid()}")))
+        scratchDir = Some(scratchDir("graft_crawl_clean_ex")))
     },
       // the per-stage oracles chained end to end: the shared
       // html_extract_main fixture+extraction CTEs (the WARC hop is

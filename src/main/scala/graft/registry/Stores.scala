@@ -25,26 +25,25 @@ private[graft] object Stores {
   private[registry] def storeDir(dir: String, family: String): String =
     s"benchdata/stores/${new java.io.File(dir).getName}/$family"
 
-  /** Scratch dir `name` under java.io.tmpdir for the rows that
-    * round-trip through a sink, deleted at JVM exit. The path is fixed
-    * per name, not createTempDirectory: the writers overwrite it, so
-    * repeated invocations (bench warmup + timed passes, repeated verify
-    * runs) reuse one directory instead of accumulating corpus copies.
-    * On a real cluster the caller hands the sinks shared storage
-    * (s3://, hdfs://) — nothing in them is driver-local.
+  /** Scratch dir `name` for the rows that round-trip through a sink. A
+    * name maps to one fixed path within a JVM: the writers overwrite it,
+    * so repeated invocations (bench warmup + timed passes, repeated
+    * verify runs) reuse one directory instead of accumulating corpus
+    * copies. Every path lies under [[scratchRoot]], one directory per
+    * JVM, so two JVMs on one machine never write, read or delete each
+    * other's scratch. On a real cluster the caller hands the sinks
+    * shared storage (s3://, hdfs://) — nothing in them is driver-local.
     */
-  private[registry] def scratchDir(name: String): String = {
-    val d = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"), name)
-      .toFile
-    scratchDirs.add(d)
-    d.toString
-  }
+  private[registry] def scratchDir(name: String): String =
+    new java.io.File(scratchRoot, name).toString
 
-  private lazy val scratchDirs: java.util.Set[java.io.File] = {
-    val dirs = java.util.concurrent.ConcurrentHashMap.newKeySet[java.io.File]()
-    sys.addShutdownHook(dirs.forEach { d =>
-      org.apache.commons.io.FileUtils.deleteQuietly(d); () })
-    dirs
+  /** This JVM's scratch directory under java.io.tmpdir, created on first
+    * use and deleted with its contents at JVM exit.
+    */
+  private[registry] lazy val scratchRoot: java.io.File = {
+    val d = java.nio.file.Files.createTempDirectory("graft_scratch").toFile
+    sys.addShutdownHook { org.apache.commons.io.FileUtils.deleteQuietly(d); () }
+    d
   }
 
   /** Store-staleness fence: a `_SUCCESS` marker alone cannot tell a

@@ -914,7 +914,7 @@ private[graft] object TextRows {
 
     // the REAL-tokenizer (BPE) budget family: the same operators
     // metered in the subword units a trainer actually consumes. One
-    // codegen'd scan-stage kernel (BpeCountExpr, memoized per distinct
+    // codegen'd scan-stage kernel (Kernels.bpeCount, memoized per distinct
     // word) replaces the whitespace count; everything downstream —
     // prefix sums, pack cuts, mixture rates — is unchanged plan shape.
     Row("bpe_tokens", (s, dir) =>
@@ -970,9 +970,9 @@ private[graft] object TextRows {
       // (3 bytes) as byte symbols, which the oracle replays through
       // the same literal map
       graft.util.Par.spread(Tables.documents(s, dir)).select(col("doc_id"),
-        graft.functions.BpeCountExpr.byteLevel(
+        graft.functions.Kernels.bpeCount(
           concat(col("text"), lit(" café №")),
-          graft.functions.BpeVocab.merges).as("n_bpe")),
+          graft.functions.BpeVocab.merges, byteLevel = true).as("n_bpe")),
       // the byte-level CTE chain over the same planted multi-byte
       // suffix; the byteToUnicode map is interpolated literally so the
       // pre-encoder can never drift between engines

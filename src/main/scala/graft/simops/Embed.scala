@@ -131,7 +131,7 @@ object Embed {
         element_at(col("_v"), col("m") * subDim + d + 1)), 6).as(s"_d$d"))
       val rows = sample
         .withColumn("m", explode(typedlit((0 until m).toArray)))
-        .withColumn("code", graft.functions.PqAssignExpr(
+        .withColumn("code", graft.functions.Kernels.pqAssign(
           col("_v"), col("m"), codes, books))
         .groupBy("m", "code").agg(avgs.head, avgs.tail: _*)
         .collect()
@@ -155,7 +155,7 @@ object Embed {
     * stay in cold storage for re-ranking.
     *
     * Encode is a pure codegen'd projection against literal-pinned
-    * codebooks ([[graft.functions.PqCodesExpr]] — one kernel call per
+    * codebooks ([[graft.functions.Kernels.pqCodes]] — one kernel call per
     * row for all subspaces); the fit is O(sample) like [[Ivf]]'s.
     * Codes are emitted CSV (exact ints, engine-portable), the error as
     * `sqrt(total² / dim)` rounded to 6dp — both oracle-checkable.
@@ -170,9 +170,9 @@ object Embed {
         col(vecCol).cast("array<double>").as("_v"))
       .select(col("vec_id"),
         array_join(transform(
-          graft.functions.PqCodesExpr(col("_v"), codes, books),
+          graft.functions.Kernels.pqCodes(col("_v"), codes, books),
           c => c.cast("string")), ",").as("codes_csv"),
-        round(sqrt(graft.functions.PqErrExpr(col("_v"), books)
+        round(sqrt(graft.functions.Kernels.pqErr(col("_v"), books)
           / (m * (dim / m))), 6).as("rmse"))
   }
 
@@ -294,7 +294,7 @@ object Embed {
     val idx = codeIndex(codes, k)
     val cand = graft.util.Par.spread(candidates)
       .select(col(idCol).as("neighbor_id"),
-        graft.functions.PqCodesExpr(
+        graft.functions.Kernels.pqCodes(
           col(vecCol).cast("array<double>"), codes, books).as("_codes"))
     val q = queries.select(col(idCol).as("query_id"),
       col(vecCol).cast("array<double>").as("_qv"))
@@ -302,7 +302,7 @@ object Embed {
       .partitionBy(col("query_id"))
       .orderBy(col("adist").asc, col("neighbor_id").asc)
     cand.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
-      .withColumn("adist", round(graft.functions.PqAdcExpr(
+      .withColumn("adist", round(graft.functions.Kernels.pqAdc(
         col("_qv"), col("_codes"), idx, books), 6))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= kNN)
@@ -390,7 +390,7 @@ object Embed {
       iters, 100, dim)
     val idx = codeIndex(codes, k)
     val cand = assigned.select(col("neighbor_id"), col("list_id"),
-      graft.functions.PqCodesExpr(col("_ev"), codes, books).as("_codes"))
+      graft.functions.Kernels.pqCodes(col("_ev"), codes, books).as("_codes"))
     val qp = queries
       .select(col(idCol).as("query_id"),
         col(vecCol).cast("array<double>").as("_qv"))
@@ -406,7 +406,7 @@ object Embed {
       .orderBy(col("adist").asc, col("neighbor_id").asc)
     cand.join(broadcast(qp), Seq("list_id"))
       .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("adist", round(graft.functions.PqAdcExpr(
+      .withColumn("adist", round(graft.functions.Kernels.pqAdc(
         col("_qe"), col("_codes"), idx, books), 6))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= kNN)

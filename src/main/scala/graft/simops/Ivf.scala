@@ -121,10 +121,10 @@ object Ivf {
   }
 
   /** All-centroid cosine sims for `v` as one codegen'd kernel call
-    * ([[graft.functions.CentroidSimsExpr]]); sims[i] scores cents(i).
+    * ([[graft.functions.Kernels.centroidSims]]); sims[i] scores cents(i).
     */
   private[simops] def simsCol(cents: Seq[(Int, Seq[Double])], v: Column): Column =
-    graft.functions.CentroidSimsExpr(v, cents.map(_._2.toArray).toArray)
+    graft.functions.Kernels.centroidSims(v, cents.map(_._2.toArray).toArray)
 
   /** Nearest list id for `v` — a pure projection, no shuffle. The FIRST
     * occurrence of the max sim wins; cents is sorted by list id, so ties
@@ -199,7 +199,7 @@ object Ivf {
       subCents: Array[Array[Array[Double]]], subIds: Array[Array[Int]]) {
     def listIdCol(v: Column, coarseId: Column): Column =
       coarseId * lit(s) +
-        graft.functions.SubNearestExpr(v, coarseId, subCents, subIds)
+        graft.functions.Kernels.subNearest(v, coarseId, subCents, subIds)
   }
 
   /** Hierarchical (two-level) IVF fit: C = ⌈√nlist⌉ coarse cells via
@@ -251,7 +251,7 @@ object Ivf {
       val (sc, si) = subArrays(c, subs)
       val avgs = (0 until dim).map(i => round(avg(col("_v")(i)), 6).as(s"_m$i"))
       val rows = sasg.withColumn("sub_id",
-          graft.functions.SubNearestExpr(col("_v"), col("coarse_id"), sc, si))
+          graft.functions.Kernels.subNearest(col("_v"), col("coarse_id"), sc, si))
         .groupBy("coarse_id", "sub_id").agg(avgs.head, avgs.tail: _*)
         .collect()
       subs = rows.iterator.map(r =>

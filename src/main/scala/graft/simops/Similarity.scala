@@ -111,12 +111,12 @@ object Similarity {
 
   /** Sign-bit LSH signature of `vec` against `planes`, packed into a long:
     * ONE codegen'd pass unpacks the vector once and folds every plane dot
-    * ([[graft.functions.HyperplaneSigExpr]]). The per-plane Column form
+    * ([[graft.functions.Kernels.hyperplaneSig]]). The per-plane Column form
     * below is the equivalence-tested spec (it re-unpacked the vector once
     * per plane — 64 unpacks/row for the near-dup signature).
     */
   def lshSignature(vec: Column, planes: Array[Array[Double]]): Column =
-    graft.functions.HyperplaneSigExpr(vec, planes)
+    graft.functions.Kernels.hyperplaneSig(vec, planes)
 
   /** Expanded twin of [[lshSignature]] (equivalence spec; same float
     * casts, same left-to-right double accumulation, same `> 0` rule).

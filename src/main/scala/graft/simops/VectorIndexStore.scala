@@ -185,7 +185,7 @@ object VectorIndexStore {
   private def encodeFrom(enc: DataFrame, idx: Index): DataFrame =
     enc.select(col("vec_id"), col("list_id"),
       partIdCol(col("list_id"), idx.p).as("part_id"),
-      graft.functions.PqCodesExpr(col("_ev"), idx.codes, idx.books)
+      graft.functions.Kernels.pqCodes(col("_ev"), idx.codes, idx.books)
         .as("codes"))
 
   /** Encode a frame under the FROZEN stored index — the (vec_id,
@@ -432,7 +432,7 @@ object VectorIndexStore {
         col("list_id"), col("part_id"), col("codes").as("_codes"))
     cand.join(broadcast(qp.drop("_qv")), Seq("part_id", "list_id"))
       .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("adist", round(graft.functions.PqAdcExpr(
+      .withColumn("adist", round(graft.functions.Kernels.pqAdc(
         col("_qe"), col("_codes"), idx, ix.books), 6))
   }
 

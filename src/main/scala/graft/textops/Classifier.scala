@@ -103,7 +103,7 @@ object Classifier {
     require(nBuckets >= 2, s"nBuckets must be >= 2, got $nBuckets")
     // ONE codegen'd kernel pass per row emits every feature's bucket
     // id (unigram + bigram md5 folds — [[graft.functions
-    // .DsirBucketsExpr]], bit-identical to the HOF twin
+    // .Kernels.dsirBuckets]], bit-identical to the HOF twin
     // [[dsirBucketsViaColumns]]): only 8-byte bucket ids ever explode
     // the explicit isNotNull matters for exchange reuse: the
     // attach-back left join infers isnotnull(doc_id) on ITS branch
@@ -114,7 +114,7 @@ object Classifier {
     val ex = graft.util.Par.spread(df)
       .where(col(idCol).isNotNull)
       .select(col(idCol).cast("long").as("doc_id"), isTarget.as("_t"),
-        explode(graft.functions.DsirBucketsExpr(lower(col(textCol)),
+        explode(graft.functions.Kernels.dsirBuckets(lower(col(textCol)),
           nBuckets)).as("_b"))
     // collapse the explode ONCE to (doc_id, _t, _b, count): both the
     // bucket-model aggregate and the per-doc scorer then consume the
@@ -157,7 +157,7 @@ object Classifier {
         coalesce(col("dsir_score") > col("_thr"), lit(false)).as("keep"))
   }
 
-  /** Column-expression twin of [[graft.functions.DsirBucketsExpr]],
+  /** Column-expression twin of [[graft.functions.Kernels.dsirBuckets]],
     * kept for the kernel-equivalence spec (the BatchKernels
     * convention): unigram + adjacent-bigram feature strings, each
     * folded through [[graft.util.Sampling.md5Bucket]].

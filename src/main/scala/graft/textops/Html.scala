@@ -159,7 +159,7 @@ object Html {
                maxLinkPct: Int = 30): Column = {
     require(minWords >= 1 && maxLinkPct >= 0 && maxLinkPct <= 100,
       s"bad thresholds: minWords=$minWords maxLinkPct=$maxLinkPct")
-    graft.functions.HtmlMainStatsExpr(html, minWords, maxLinkPct)
+    graft.functions.Kernels.htmlMainStats(html, minWords, maxLinkPct)
       .getField("main")
   }
 
@@ -199,7 +199,7 @@ object Html {
         regexp_extract(h, titlePattern, 1).as("title"),
         size(regexp_extract_all(h, lit(anchorPattern), lit(0)))
           .cast("long").as("n_links"),
-        graft.functions.HtmlMainStatsExpr(h, minWords, maxLinkPct)
+        graft.functions.Kernels.htmlMainStats(h, minWords, maxLinkPct)
           .as("_hm"))
       .select(col(idCol), col("title"), col("n_links"),
         col("_hm").getField("n_blocks").cast("long").as("n_blocks"),

@@ -79,7 +79,7 @@ object LineDedup {
     * `filter(lines, (x, i) => array_position(lines, x) === i + 1)`,
     * which is O(lines²) per document on the INTERPRETED path
     * (array_position rescans the array per element, and HOF lambda
-    * bodies don't codegen — the DsirBucketsExpr lesson): invisible on
+    * bodies don't codegen — the dsir_buckets kernel lesson): invisible on
     * ~6-line fixture docs, a real per-row tax on thousand-line web
     * pages. The HOF form survives as [[dedupLinesIntraHof]], the
     * equivalence-spec twin. Output:
@@ -260,7 +260,7 @@ object LineDedup {
     *     built once at corpus-ingest time) instead of re-exploding and
     *     re-hashing every corpus document;
     *  2. the membership sketch prefilters the increment's line owners
-    *     MAP-SIDE ([[graft.functions.BloomContainsExpr]]), so the
+    *     MAP-SIDE ([[graft.functions.Kernels.bloomContains]]), so the
     *     verify broadcast carries only bloom-POSITIVE line hashes —
     *     O(true boilerplate + fpp·increment lines). No false negatives
     *     (every corpus line is in the sketch), and the verify join
@@ -288,7 +288,7 @@ object LineDedup {
     // the sketch keys are xxhash64(fingerprint) where fingerprint IS
     // the 64-bit line hash (buildLines) — replay the same double hash
     val cand = owner
-      .filter(graft.functions.BloomContainsExpr(
+      .filter(graft.functions.Kernels.bloomContains(
         xxhash64(col("_h")), store.bloom))
       .select(col("_h"))
     val hit = store.fps.select(col("fingerprint").as("_h"))

@@ -127,7 +127,7 @@ object TextOps {
     * sample_mixture_bpe, …) meters in.
     */
   def bpeTokenCount(text: Column): Column =
-    graft.functions.BpeCountExpr(text)
+    graft.functions.Kernels.bpeCount(text)
 
   /** [[bpeTokenCount]] under an EXTERNAL merge table (e.g. loaded from
     * a real tokenizer's `merges.txt` via
@@ -136,7 +136,7 @@ object TextOps {
     * the model's actual subword units.
     */
   def bpeTokenCount(text: Column, merges: Seq[(String, String)]): Column =
-    graft.functions.BpeCountExpr(text, merges)
+    graft.functions.Kernels.bpeCount(text, merges)
 
   /** BPE-ish subword count: word pieces + digits + punctuation runs, the
     * usual pre-tokenizer regex family (public GPT-2 style pre-tokenizer,
@@ -180,7 +180,7 @@ object TextOps {
 
   /** Fused one-pass counts backing the token/punct/stopword/quality
     * family: struct `(n_tokens, n_chars, n_punct, n_stop)` from ONE
-    * codegen'd byte-scan ([[graft.functions.TextGateStatsExpr]]) instead
+    * codegen'd byte-scan ([[graft.functions.Kernels.textGateStats]]) instead
     * of the two `split` passes, two `regexp_replace` passes and the
     * whole-string `lower` the Column forms pay per document. The derived
     * columns below are field extractions; repeated uses inside one
@@ -190,7 +190,7 @@ object TextOps {
     * TextGateKernelSpec), so every DuckDB oracle replays unchanged.
     */
   def gateStats(text: Column): Column =
-    graft.functions.TextGateStatsExpr(text, unionStopwords)
+    graft.functions.Kernels.textGateStats(text, unionStopwords)
 
   /** Count of distinct tokens of `text` that appear in `words`. Distinct on
     * the document side so repeated filler doesn't dominate.
@@ -225,7 +225,7 @@ object TextOps {
     * marker hits at all.
     */
   def langId(text: Column): Column =
-    graft.functions.LangIdExpr(text, stopwords.toSeq.sortBy(_._1))
+    graft.functions.Kernels.langId(text, stopwords.toSeq.sortBy(_._1))
 
   /** The original per-language Column form of [[langId]], kept as the
     * kernel-equivalence twin (LangIdKernelSpec pins bit-equality): it
@@ -306,7 +306,7 @@ object TextOps {
     */
   /** Output: distinct `(idCol, fp)` rows.
     *
-    * One codegen'd kernel ([[graft.functions.WinnowFpsExpr]]) computes
+    * One codegen'd kernel ([[graft.functions.Kernels.winnowFps]]) computes
     * each document's deduplicated fingerprint set inside the scan
     * stage, and only the final fingerprints are exploded. The
     * relational twin below ([[winnowingViaWindow]]) is the
@@ -328,7 +328,7 @@ object TextOps {
                 k: Int = 8, w: Int = 4): DataFrame = {
     val src = graft.util.Par.spread(df).filter(col(textCol).isNotNull)
     src.select(col(idCol),
-      explode_outer(graft.functions.WinnowFpsExpr(col(textCol), k, w))
+      explode_outer(graft.functions.Kernels.winnowFps(col(textCol), k, w))
         .as("fp"))
   }
 
@@ -347,9 +347,9 @@ object TextOps {
   def winnowingViaWindow(df: DataFrame, idCol: String, textCol: String,
                          k: Int = 8, w: Int = 4): DataFrame = {
     val text = col(textCol)
-    // one codegen'd pass over the text (KgramHashesExpr); the HOF twin
+    // one codegen'd pass over the text (Kernels.kgramHashes); the HOF twin
     // below ([[kgramHashesExpanded]]) is the equivalence-tested spec
-    val kgramHashes = graft.functions.KgramHashesExpr(text, k)
+    val kgramHashes = graft.functions.Kernels.kgramHashes(text, k)
     // The hashing happens in the stage that reads the input, so spread a
     // small single-split source across cores first (no-op at scale).
     //
@@ -375,11 +375,11 @@ object TextOps {
   }
 
   /** Word shingles of size n: distinct, first-occurrence order, one
-    * codegen'd pass ([[graft.functions.WordShinglesExpr]]). The HOF twin
+    * codegen'd pass ([[graft.functions.Kernels.wordShingles]]). The HOF twin
     * [[shinglesFromTokensExpanded]] is the equivalence-tested spec.
     */
   def shinglesFromTokens(toks: Column, n: Int): Column =
-    graft.functions.WordShinglesExpr(toks, n)
+    graft.functions.Kernels.wordShingles(toks, n)
 
   /** The Column-expression spec [[shinglesFromTokens]] is tested against
     * (BatchKernelSpec, KernelPropertiesSpec); no registered row calls it.
@@ -398,7 +398,7 @@ object TextOps {
           sequence(lit(0), size(toks) - n),
           i => array_join(slice(toks, i + 1, lit(n)), " "))))
 
-  /** HOF twin of [[graft.functions.KgramHashesExpr]] (equivalence spec). */
+  /** HOF twin of [[graft.functions.Kernels.kgramHashes]] (equivalence spec). */
   def kgramHashesExpanded(text: Column, k: Int): Column =
     transform(
       sequence(lit(1), greatest(length(text) - k + 1, lit(1))),

@@ -22,7 +22,7 @@ object Vocab {
     * `sequence(1, 0)` yields a DESCENDING [1,0], not an empty array.
     */
   def ngrams(toks: Column, n: Int): Column =
-    graft.functions.WordNgramsExpr(toks, n)
+    graft.functions.Kernels.wordNgrams(toks, n)
 
   /** HOF-form twin of [[ngrams]], kept for the kernel-equivalence spec.
     * (The `transform` lambda runs interpreted per element — the kernel
@@ -209,7 +209,7 @@ object Vocab {
     * tokens emit no row (same contract as [[topNgrams]]).
     *
     * Scale shape: the (doc, n-gram)-distinct frame is computed per
-    * document IN THE SCAN STAGE ([[graft.functions.NgramXxSetExpr]] —
+    * document IN THE SCAN STAGE ([[graft.functions.Kernels.ngramXxSet]] —
     * the doc id is in the distinct key, so the dedup never needed a
     * corpus-sized exchange); the per-n-gram document frequency is a
     * map-side-combinable aggregate over it; the df side of the join is
@@ -230,7 +230,7 @@ object Vocab {
                    n: Int = 2): DataFrame = {
     // the (doc, hash)-DISTINCT frame has the doc id in its key, so the
     // dedup is per-document work — one kernel pass in the scan stage
-    // ([[graft.functions.NgramXxSetExpr]]), not a corpus-sized distinct
+    // ([[graft.functions.Kernels.ngramXxSet]]), not a corpus-sized distinct
     // exchange. The per-hash doc frequency stays an AGGREGATE + JOIN
     // (not a window count riding one exchange): partial aggregation
     // collapses a stopword-grade hot key to one row per map task, and
@@ -257,7 +257,7 @@ object Vocab {
     // checkpoint removal exists to avoid. AQE's skew split still
     // applies (it handles shuffled-hash joins).
     val grams = graft.util.Par.spread(df)
-      .select(col(idCol), explode(graft.functions.NgramXxSetExpr(
+      .select(col(idCol), explode(graft.functions.Kernels.ngramXxSet(
         TextOps.tokens(lower(col(textCol))), n)).as("_gh"))
     val dfreq = grams.groupBy(col("_gh")).agg(count(lit(1)).as("_df"))
     grams.join(dfreq.hint("shuffle_hash"), "_gh")
@@ -347,7 +347,7 @@ object Vocab {
     * string. Emits (doc, term, tf, df, score, rank).
     *
     * Scale shape: the (doc, term) tf counts are computed per-document
-    * in the scan stage ([[graft.functions.WordCountsExpr]] — the
+    * in the scan stage ([[graft.functions.Kernels.wordCounts]] — the
     * grouping key contains the doc id, so the corpus-sized
     * groupBy(doc, term) shuffle disappears and the exploded frame
     * arrives (doc, term)-unique); the term df is a map-side-combinable
@@ -372,7 +372,7 @@ object Vocab {
     // one hash(_th) exchange via ReuseExchange.
     val tf = graft.util.Par.spread(df)
       .select(col(idCol),
-        explode(graft.functions.WordCountsExpr(
+        explode(graft.functions.Kernels.wordCounts(
           TextOps.tokens(lower(col(textCol))))).as("_kv"))
       .select(col(idCol), col("_kv").getField("term").as("term"),
         col("_kv").getField("tf").as("tf"),

@@ -27,4 +27,10 @@ class BenchRoutingSpec extends AnyFunSuite {
     // non-canonical scale stays ad-hoc regardless of core count
     assert(Bench.artifactFor("/root/testdata/sf0.01", "8") == "bench_adhoc.json")
   }
+  test("an sf0.1 run off the canonical core count warns, naming its artifact") {
+    assert(Bench.coreWarning("/root/testdata/sf0.1", "4", "bench_c4.json")
+      .exists(_.contains("bench_c4.json")))
+    assert(Bench.coreWarning("/root/testdata/sf0.1", "32", "bench.json").isEmpty)
+    assert(Bench.coreWarning("/root/testdata/sf0.01", "4", "bench_adhoc.json").isEmpty)
+  }
 }

@@ -80,9 +80,9 @@ class BpeSpec extends AnyFunSuite {
       .toDF("doc_id", "text")
     def counts(c: org.apache.spark.sql.Column) = df.select(col("doc_id"), c)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val plain = counts(BpeCountExpr(col("text"), BpeVocab.merges).as("n"))
+    val plain = counts(Kernels.bpeCount(col("text"), BpeVocab.merges).as("n"))
     val bytes = counts(
-      BpeCountExpr.byteLevel(col("text"), BpeVocab.merges).as("n"))
+      Kernels.bpeCount(col("text"), BpeVocab.merges, byteLevel = true).as("n"))
     // pure ASCII meters identically (bytes ≡ code points there)
     assert(plain(1L) == bytes(1L))
     // é is 2 UTF-8 bytes (1 code point): +1 unmergeable symbol;

@@ -44,14 +44,14 @@ class KernelPropertiesSpec extends AnyFunSuite {
           TextOps.shinglesFromTokens(col("_t"), n).as("ks"),
           TextOps.shinglesFromTokensExpanded(col("_t"), n).as("es"))
         .select(col("ks"), col("es"),
-          MinHashSigExpr(col("ks"), 8).as("km"),
+          Kernels.minhashSig(col("ks"), 8).as("km"),
           transform(col("es"), s => md5(s)).as("_m"))
         .select(col("ks"), col("es"), col("km"),
           transform(col("_m"),
             m => conv(substring(m, 1, 15), 16, 10).cast("long")).as("_h1"),
           transform(col("_m"),
             m => conv(substring(m, 17, 14), 16, 10).cast("long")).as("_h2"),
-          XxSortedHashesExpr(col("ks")).as("kx"),
+          Kernels.xxSortedHashes(col("ks")).as("kx"),
           array_sort(transform(col("es"), s => xxhash64(s))).as("ex"))
         .select(col("ks"), col("es"), col("km"), col("kx"), col("ex"),
           graft.dedup.Dedup.minhashSignatureFromHalves(
@@ -68,7 +68,7 @@ class KernelPropertiesSpec extends AnyFunSuite {
   test("fuzz: KgramHashes == twin") {
     for (k <- Seq(1, 4, 9)) {
       val rows = corpus.select(
-        KgramHashesExpr(col("text"), k).as("kk"),
+        Kernels.kgramHashes(col("text"), k).as("kk"),
         TextOps.kgramHashesExpanded(col("text"), k).as("ek")).collect()
       rows.foreach { r =>
         assert(r.getSeq[Long](0) == r.getSeq[Long](1), s"kgram k=$k")

@@ -1,6 +1,7 @@
 package graft.plans
 
 import graft.{SparkEntry, TestSpark}
+import graft.functions.{Kernel, Kernels}
 import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, JoinStrategyHint, LogicalPlan, ResolvedHint, SHUFFLE_HASH}
 import org.apache.spark.sql.execution.{LogicalRDD, QueryExecution, SparkPlan}
 import org.apache.spark.sql.util.QueryExecutionListener
@@ -21,6 +22,14 @@ class PlanAuditSpec extends AnyFunSuite {
 
   private def opCount(p: String, op: String): Int =
     p.linesIterator.count(_.matches(s".*(\\*\\(\\d+\\) )?$op( |\\[).*"))
+
+  /** Lines of a plan string that call `kernel`: its static call prints
+    * as `static_invoke(graft.functions.<Util>.<method>(...))`.
+    */
+  private def kernelCalls(p: String, kernel: Kernel): Int = {
+    val call = s"${kernel.util.getClass.getName.stripSuffix("$")}.${kernel.method}("
+    p.linesIterator.count(_.contains(call))
+  }
 
   /** Executed plans of the eager `localCheckpoint` jobs `build` runs. A
     * checkpointed frame is an ExistingRDD leaf in the row's own plan,
@@ -385,7 +394,7 @@ class PlanAuditSpec extends AnyFunSuite {
     // shuffle keys, and a stopword-grade hot key no longer drags its
     // string payload into one reduce partition. The string survives only
     // where the output needs it (tfidf's term column). novelty's hash is
-    // computed INSIDE the scan-stage kernel (NgramXxSetExpr). The probe
+    // computed INSIDE the scan-stage kernel (Kernels.ngramXxSet). The probe
     // join is pinned ShuffledHashJoin: without the pin, the planner's
     // pre-explode estimate undersold the token-scale side and BROADCAST
     // 23M rows at the 100× anchor (the former localCheckpoint fixed the
@@ -560,7 +569,8 @@ class PlanAuditSpec extends AnyFunSuite {
     // the SIGNATURES store parquet and read no document text
     val ckpts = checkpointPlans(SparkEntry.queries("dedup_minhash_probe")(spark, dir))
       .map(_.toString)
-    val (signing, probing) = ckpts.partition(_.contains("minhashsigexpr"))
+    val (signing, probing) =
+      ckpts.partition(c => kernelCalls(c, Kernels.MinhashSig) > 0)
     assert(signing.size == 1, s"expected one increment-signing job:\n$ckpts")
     assert(probing.exists(c => c.linesIterator.exists(l =>
       l.contains(storePath) && l.contains("signatures"))),
@@ -570,14 +580,14 @@ class PlanAuditSpec extends AnyFunSuite {
         s"document scan in a candidate checkpoint:\n$c")
     // ZERO signing kernels in the timed plan: the increment signs once
     // inside its checkpoint's eager job (plan forks would otherwise
-    // re-run MinHashSigExpr per branch), and the corpus's hashes are
-    // store COLUMNS — any minhashsigexpr here means corpus re-signing
+    // re-run Kernels.minhashSig per branch), and the corpus's hashes are
+    // store COLUMNS — any minhash_sig call here means corpus re-signing
     // or a lost checkpoint, either way a probe-cost regression.
-    assert(!p.contains("minhashsigexpr"),
+    assert(kernelCalls(p, Kernels.MinhashSig) == 0,
       s"signature kernel in the timed probe plan:\n$p")
     // the one xx hash pass allowed is the increment verify attach
     // (expression display may span Project + Exchange lines)
-    assert(p.linesIterator.count(_.contains("xxsortedhashesexpr")) <= 2,
+    assert(kernelCalls(p, Kernels.XxSortedHashes) <= 2,
       s"corpus shingle-hash recompute detected:\n$p")
     // and no corpus text scan: the increment's is checkpoint-truncated,
     // so documents.parquet must not appear anywhere in the timed plan
@@ -592,7 +602,7 @@ class PlanAuditSpec extends AnyFunSuite {
     val p = plan("dedup_spans_probe")
     assert(p.linesIterator.exists(l => l.contains("stores/sf0.001/spans")),
       s"expected the span_fps store parquet scan:\n$p")
-    assert(p.linesIterator.count(_.contains("winnowfpsexpr")) <= 1,
+    assert(kernelCalls(p, Kernels.WinnowFps) <= 1,
       s"corpus re-winnowing detected:\n$p")
     // the only allowed documents scan is the increment's id-list base
     // frame — column-pruned to doc_id, never reading text
@@ -617,7 +627,7 @@ class PlanAuditSpec extends AnyFunSuite {
       l.contains("span_deltas")), s"expected the delta branch:\n$p")
     // the only winnow kernel is the increment's (checkpoint-truncated,
     // so in practice zero appear in the timed plan)
-    assert(p.linesIterator.count(_.contains("winnowfpsexpr")) <= 1,
+    assert(kernelCalls(p, Kernels.WinnowFps) <= 1,
       s"corpus re-winnowing detected:\n$p")
     // no documents text scan: base + deltas carry everything
     p.linesIterator.filter(l => l.contains("documents.parquet") &&
@@ -666,9 +676,9 @@ class PlanAuditSpec extends AnyFunSuite {
       val p = plan(name) // first call builds the store (bench warmup)
       assert(p.contains(s"stores/sf0.001/$fam"),
         s"$name: expected the $fam code store parquet scan:\n$p")
-      assert(p.toLowerCase.contains("pqadcexpr"),
+      assert(kernelCalls(p, Kernels.PqAdc) > 0,
         s"$name: expected the ADC scorer in the plan:\n$p")
-      assert(!p.toLowerCase.contains("pqcodesexpr"),
+      assert(kernelCalls(p, Kernels.PqCodes) == 0,
         s"$name: corpus PQ re-encode kernel in the timed plan:\n$p")
       // the query-batch probe frame is localCheckpointed (bounded:
       // queries × nprobe rows), so the timed ADC plan reads
@@ -710,7 +720,7 @@ class PlanAuditSpec extends AnyFunSuite {
       s"rerank must fetch vectors in exactly one keyed scan:\n$p")
     assert(p.contains("PushedFilters: [In(vec_id"),
       s"candidate fetch must push the shortlist ids:\n$p")
-    assert(!p.toLowerCase.contains("pqcodesexpr"),
+    assert(kernelCalls(p, Kernels.PqCodes) == 0,
       s"corpus PQ re-encode kernel in the timed plan:\n$p")
   }
 
@@ -849,7 +859,7 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(!p.contains("Exchange hashpartitioning") &&
       !p.contains("Exchange rangepartitioning") &&
       !p.contains("Exchange SinglePartition"), p)
-    assert(p.contains("pqcodesexpr"), p)
+    assert(kernelCalls(p, Kernels.PqCodes) > 0, p)
   }
 
   test("novelty_score: combinable aggregates only, no sort, no cartesian") {
@@ -868,7 +878,7 @@ class PlanAuditSpec extends AnyFunSuite {
     // projection — no _cv survives into the join operator
     val joinLine = p.linesIterator.find(_.contains("BroadcastHashJoin"))
     assert(joinLine.isDefined, p)
-    assert(p.contains("pqcodesexpr"), p)
+    assert(kernelCalls(p, Kernels.PqCodes) > 0, p)
   }
 
   test("q_window_stats: the data-sized rank window is re-keyed on (type, bucket)") {
@@ -895,7 +905,7 @@ class PlanAuditSpec extends AnyFunSuite {
     // coarse argmax and the within-cell sub argmax must be pure
     // projections in the plan (no per-vector join against a centroid
     // relation — that would re-shuffle the corpus as nlist grows)
-    assert(p.toLowerCase.contains("subnearestexpr"), p)
+    assert(kernelCalls(p, Kernels.SubNearest) > 0, p)
   }
 
   test("dedup_semantic_incremental: the corpus never shuffles on list keys") {
@@ -907,7 +917,7 @@ class PlanAuditSpec extends AnyFunSuite {
     val p = plan("dedup_semantic_incremental")
     assert(!p.contains("CartesianProduct") &&
       !p.contains("BroadcastNestedLoopJoin"), p)
-    assert(p.toLowerCase.contains("subnearestexpr"), p)
+    assert(kernelCalls(p, Kernels.SubNearest) > 0, p)
     assert(!p.toLowerCase.contains("hashpartitioning(list_id"),
       s"corpus-sized exchange keyed on list_id:\n$p")
     assert(opCount(p, "BroadcastHashJoin") >= 1, p)

@@ -4,7 +4,7 @@ import graft.TestSpark
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The fused main-content kernel ([[graft.functions.HtmlMainStatsExpr]])
+/** The fused main-content kernel ([[graft.functions.Kernels.htmlMainStats]])
   * must be bit-identical to the higher-order-function Column forms it
   * replaced — the DuckDB oracles replay the Column semantics in SQL
   * (block split, per-block clean, the keep rule), so any divergence here

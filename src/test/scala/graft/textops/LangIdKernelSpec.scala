@@ -4,7 +4,7 @@ import graft.TestSpark
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The fused language-ID kernel ([[graft.functions.LangIdExpr]]) must
+/** The fused language-ID kernel ([[graft.functions.Kernels.langId]]) must
   * be bit-identical to the per-language Column pipeline it replaced —
   * the DuckDB lang-ID oracles replay the marker-hit + lexicographic
   * argmax rule in SQL, so any divergence is an oracle break.

@@ -4,7 +4,7 @@ import graft.TestSpark
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The fused gate kernel ([[graft.functions.TextGateStatsExpr]]) must be
+/** The fused gate kernel ([[graft.functions.Kernels.textGateStats]]) must be
   * bit-identical to the Column-expression forms it replaced — the DuckDB
   * oracles replay the Column semantics in SQL, so any divergence here is
   * an oracle break waiting to happen.
