@@ -519,11 +519,19 @@ object PqAdcUtil {
   */
 object TextGateStatsUtil {
 
-  /** Build the lookup set once per expression instance; entries are the
-    * dictionary words exactly as given (callers pass lowercase words).
+  /** A gate dictionary. It rides in plans as a literal, so it prints as
+    * its size, not its words.
     */
-  def buildDict(words: Seq[String]): java.util.HashSet[UTF8String] = {
-    val s = new java.util.HashSet[UTF8String](words.size * 2)
+  final class Words(capacity: Int)
+      extends java.util.HashSet[UTF8String](capacity) {
+    override def toString: String = s"gate_dict(${size()} words)"
+  }
+
+  /** The lookup set: the dictionary words exactly as given (callers pass
+    * lowercase words).
+    */
+  def buildDict(words: Seq[String]): Words = {
+    val s = new Words(words.size * 2)
     words.foreach(w => s.add(UTF8String.fromString(w)))
     s
   }
@@ -679,7 +687,7 @@ object WordCountsUtil {
     */
   def wordCounts(toks: ArrayData): ArrayData = {
     val m = toks.numElements()
-    val counts = new java.util.LinkedHashMap[UTF8String, Long]()
+    val counts = new java.util.LinkedHashMap[UTF8String, java.lang.Long]()
     var i = 0
     while (i < m) {
       if (!toks.isNullAt(i)) {

@@ -248,12 +248,21 @@ object BpeVocab {
   */
 object BpeKernelUtil {
 
+  /** A merge table's pair ranks. It rides in plans as a literal, so it
+    * prints as its size: a real table has tens of thousands of merges,
+    * and every query execution keeps its plan's text.
+    */
+  final class Ranks(capacity: Int)
+      extends java.util.HashMap[String, Integer](capacity) {
+    override def toString: String = s"bpe_ranks(${size()} merges)"
+  }
+
   /** Pair-rank lookup keyed `left + '\u0001' + right` (the same key the
     * DuckDB oracle's map uses — any ambiguity from a '\u0001' inside a
     * word is mirrored bit-for-bit on both sides).
     */
-  def buildRanks(merges: Seq[(String, String)]): java.util.HashMap[String, Integer] = {
-    val m = new java.util.HashMap[String, Integer](merges.size * 2)
+  def buildRanks(merges: Seq[(String, String)]): Ranks = {
+    val m = new Ranks(merges.size * 2)
     merges.zipWithIndex.foreach { case ((l, r), i) =>
       m.put(l + "\u0001" + r, Integer.valueOf(i)) }
     m

@@ -311,6 +311,9 @@ class BatchKernelSpec extends AnyFunSuite {
       val qe = df.select(call.as("k")).queryExecution
       assert(qe.analyzed.toString.contains(s"${kernel.name}("))
       assert(qe.executedPlan.toString.contains(s".${kernel.method}("))
+      // driver-side constants print bounded (a 200-rule merge table as
+      // its size): every query execution keeps its plan's text
+      assert(qe.executedPlan.toString.length < 1000, qe.executedPlan)
     }
 
   test("kernel contract: SQL front door resolves and rejects wrong types") {
