@@ -255,6 +255,12 @@ object BpeKernelUtil {
   final class Ranks(capacity: Int)
       extends java.util.HashMap[String, Integer](capacity) {
     override def toString: String = s"bpe_ranks(${size()} merges)"
+
+    /** This table's word memo, found once per copy: the lookup hashes
+      * the whole table, and each task deserializes its own copy.
+      */
+    @transient private[BpeKernelUtil] lazy val memo =
+      caches.computeIfAbsent(this, _ => new ConcurrentHashMap[String, Integer]())
   }
 
   /** Pair-rank lookup keyed `left + '\u0001' + right` (the same key the
@@ -268,16 +274,13 @@ object BpeKernelUtil {
     m
   }
 
-  /** One memo per (ranks identity): the cache key is the word, so two
-    * different merge tables in one JVM must not share a map.
+  /** One memo per merge table, shared by equal copies: the cache key is
+    * the word, so two different merge tables in one JVM must not share a
+    * map.
     */
   private val caches =
-    new ConcurrentHashMap[java.util.HashMap[String, Integer],
-      ConcurrentHashMap[String, Integer]]()
+    new ConcurrentHashMap[Ranks, ConcurrentHashMap[String, Integer]]()
   private val MaxCacheEntries = 1 << 20
-
-  private def cacheFor(ranks: java.util.HashMap[String, Integer]) =
-    caches.computeIfAbsent(ranks, _ => new ConcurrentHashMap[String, Integer]())
 
   /** BPE token count of one word (symbol count after all merges).
     * In-place array merge, O(len²) worst case — paid once per DISTINCT
@@ -327,9 +330,8 @@ object BpeKernelUtil {
     * changes only multi-byte text, which byte-level metering counts
     * per byte-symbol instead of per code point.
     */
-  def docCount(text: UTF8String, ranks: java.util.HashMap[String, Integer],
-               byteLevel: Boolean): Long = {
-    val cache = cacheFor(ranks)
+  def docCount(text: UTF8String, ranks: Ranks, byteLevel: Boolean): Long = {
+    val cache = ranks.memo
     val nBytes = text.numBytes()
     var total = 0L
     var tokStart = -1
@@ -351,9 +353,8 @@ object BpeKernelUtil {
     total
   }
 
-  /** Binary-compat overload (the pre-byte-level signature). */
-  def docCount(text: UTF8String,
-               ranks: java.util.HashMap[String, Integer]): Long =
+  /** [[docCount]] without the byte-level pre-encoder. */
+  def docCount(text: UTF8String, ranks: Ranks): Long =
     docCount(text, ranks, byteLevel = false)
 
   private def tokenCount(text: UTF8String, start: Int, len: Int,

@@ -139,7 +139,7 @@ object Kernels {
   val LangId = Kernel("lang_id", LangIdUtil, "langId", StringType, StringType,
     obj[LangIdUtil.Dict])
   val BpeCount = Kernel("bpe_count", BpeKernelUtil, "docCount", LongType,
-    StringType, obj[java.util.HashMap[_, _]], BooleanType)
+    StringType, obj[BpeKernelUtil.Ranks], BooleanType)
   val HtmlMainStats = Kernel("html_main_stats", HtmlMainUtil, "mainStats",
     htmlMainType, StringType, IntegerType, IntegerType)
 
