@@ -156,12 +156,9 @@ object Html {
     *   5. join kept blocks with single spaces, in document order.
     */
   def mainText(html: Column, minWords: Int = 5,
-               maxLinkPct: Int = 30): Column = {
-    require(minWords >= 1 && maxLinkPct >= 0 && maxLinkPct <= 100,
-      s"bad thresholds: minWords=$minWords maxLinkPct=$maxLinkPct")
+               maxLinkPct: Int = 30): Column =
     graft.functions.Kernels.htmlMainStats(html, minWords, maxLinkPct)
       .getField("main")
-  }
 
   /** The original higher-order-function form of [[mainText]], kept as
     * the kernel-equivalence twin (HtmlKernelSpec pins bit-equality):
